@@ -67,7 +67,7 @@ def _driver_score_rank() -> dict[str, int]:
             rnd = int(path.stem.split("_r")[-1])
             for name in json.loads(path.read_text()):
                 rank[name] = max(rank.get(name, 0), rnd)
-    except Exception:
+    except (OSError, ValueError, json.JSONDecodeError):
         return {}
     return rank
 

@@ -104,7 +104,7 @@ def cmd_run(args) -> int:
         .select("url", "doc_id", "lang_pred", "ppl", "n_redactions",
                 "keep", "bucket"),
     )
-    n = out.read(spark).count()
+    n = out.count(spark)
     print(json.dumps({"run_id": args.run_id, "commits_this_invocation": commits,
                       "total_rows": n,
                       "artifacts_dir": art_dir,
@@ -207,8 +207,7 @@ def cmd_select(args) -> int:
         kept = df.join(reps, "doc_id", "left_semi")
 
     out = IcebergishTable(args.output)
-    out.overwrite(kept)
-    n_kept = out.read(spark).count()
+    n_kept = out.overwrite(kept).added_rows
     release_caches()
     print(json.dumps({"method": args.method, "n_in": n_in,
                       "n_kept": n_kept,

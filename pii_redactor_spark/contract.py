@@ -1572,12 +1572,13 @@ def _pack_pre(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_pack",
     oracle=f"""
     WITH {_PACK_PRE_SQL}
-    SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens, start_off,
-           start_off // {SEQ_TOKENS} AS seq_idx,
-           CASE WHEN n_tokens > 0 THEN
+    SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
+           CAST(start_off AS BIGINT) AS start_off,
+           CAST(start_off // {SEQ_TOKENS} AS BIGINT) AS seq_idx,
+           CAST(CASE WHEN n_tokens > 0 THEN
              (start_off + n_tokens - 1) // {SEQ_TOKENS}
                - start_off // {SEQ_TOKENS} + 1
-           ELSE 0 END AS n_seqs
+           ELSE 0 END AS BIGINT) AS n_seqs
     FROM pre
     """,
 )
@@ -1810,12 +1811,12 @@ pre AS (
            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
            AS start_off
   FROM b)
-SELECT doc_id, n_tokens, start_off,
-       start_off // {SEQ_TOKENS} AS seq_idx,
-       CASE WHEN n_tokens > 0 THEN
+SELECT doc_id, n_tokens, CAST(start_off AS BIGINT) AS start_off,
+       CAST(start_off // {SEQ_TOKENS} AS BIGINT) AS seq_idx,
+       CAST(CASE WHEN n_tokens > 0 THEN
          (start_off + n_tokens - 1) // {SEQ_TOKENS}
            - start_off // {SEQ_TOKENS} + 1
-       ELSE 0 END AS n_seqs
+       ELSE 0 END AS BIGINT) AS n_seqs
 FROM pre"""
 
 

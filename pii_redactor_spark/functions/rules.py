@@ -428,8 +428,9 @@ def c4_stats(df: DataFrame, text_col: str = "text",
     terminal marks across kept lines, no 'lorem ipsum', no '{'.
     Everything is one projection over the scan — zero shuffle, zero
     Python; counts are exact ints and the kept text is pinned by
-    md5+length (the contract comparator's compact form)."""
-    t = F.col(text_col)
+    md5+length (the contract comparator's compact form). NULL text
+    reads as '' (as the oracle does): no lines, no sentences, dropped."""
+    t = F.coalesce(F.col(text_col), F.lit(""))
     lines = F.transform(lines_col(t), lambda l: F.trim(l))
     pre = df.withColumn("_lns", lines)
 
@@ -446,7 +447,7 @@ def c4_stats(df: DataFrame, text_col: str = "text",
         F.col("_kept"), F.lit(0),
         lambda acc, l: acc + F.length(l)
         - F.length(F.regexp_replace(l, r"[.!?]", "")))
-    low = F.lower(F.coalesce(t, F.lit("")))
+    low = F.lower(t)
     page_ok = ((n_sent >= F.lit(min_sentences))
                & ~F.contains(low, F.lit("lorem ipsum"))
                & ~F.contains(low, F.lit("{")))
@@ -469,7 +470,7 @@ def c4_stats_oracle_sql(table: str = "documents",
                         min_sentences: int = C4_MIN_SENTENCES) -> str:
     """DuckDB twin of ``c4_stats`` (optionally over the synthesized
     punctuated view)."""
-    t2 = synth_punct_sql(text_col) if synth else text_col
+    t2 = synth_punct_sql(text_col) if synth else f"COALESCE({text_col}, '')"
     line_ok = (
         f"regexp_matches(l, '[.!?\"]$') AND "
         f"len(list_filter(string_split_regex(l, '\\s+'), w -> w <> ''))"

@@ -134,8 +134,7 @@ def bm25_topk(docs: DataFrame, text_col: str = "text",
     )
 
 
-def bm25_oracle_sql(docs_stats: tuple[int, int, list[int]] | None = None,
-                    table: str = "documents", text_col: str = "text",
+def bm25_oracle_sql(table: str = "documents", text_col: str = "text",
                     id_col: str = "doc_id",
                     terms: tuple[str, ...] = BM25_TERMS,
                     topk: int = BM25_TOPK) -> str:

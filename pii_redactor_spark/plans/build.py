@@ -24,6 +24,12 @@ snapshots), re-enters the quality stage's own bucket-level resume if it
 was mid-flight, and continues the chain. A different ``run_id`` rebuilds
 from scratch (new lineage roots via overwrite).
 
+Row counts: a stage's ``n_in`` is the previous stage's ``n_out``, and
+every ``n_out`` comes from the committed snapshot's manifest (rows read
+from the Parquet footers at commit), so the chain's bookkeeping starts no
+Spark job beyond counting the input once (and the quality stage's kept
+rows, which no manifest records).
+
 Scale notes: stages only ever append/overwrite through tables.py
 (snapshot isolation, bucket partitioning on the quality stage); each
 stage's plan is the same one its contract query runs (broadcast
@@ -82,13 +88,15 @@ def build_job(
 
     stages: list[dict] = []
     current = pages
+    n_prev: int | None = None   # the previous stage's n_out
 
     def commit_stage(name: str, out_df: DataFrame, n_in: int,
                      t0: float) -> DataFrame:
+        nonlocal n_prev
         tbl = stage_table(root, name)
         tbl.overwrite(out_df, lineage={
             "run_id": run_id, "stage": name, "complete": True})
-        n_out = tbl.read(spark).count()
+        n_out = n_prev = tbl.count(spark)
         metrics.log(spark, [{
             "run_id": run_id, "stage": f"build:{name}", "bucket": None,
             "n_docs": n_in, "kept": n_out, "dropped": n_in - n_out,
@@ -101,12 +109,13 @@ def build_job(
         return tbl.read(spark)
 
     def skip_stage(name: str) -> DataFrame:
+        nonlocal n_prev
         tbl = stage_table(root, name)
-        df = tbl.read(spark)
-        stages.append({"stage": name, "n_in": None, "n_out": df.count(),
+        n_prev = tbl.count(spark)
+        stages.append({"stage": name, "n_in": None, "n_out": n_prev,
                        "resumed": True,
                        "snapshot": tbl.current_snapshot_id()})
-        return df
+        return tbl.read(spark)
 
     def maybe_fail(name: str) -> None:
         if fail_after_stage == name:
@@ -136,7 +145,7 @@ def build_job(
     else:
         from pii_redactor_spark.operators.decontaminate import contamination
         t0 = time.time()
-        n_in = current.count()
+        n_in = n_prev
         bench = benchmark if benchmark is not None else \
             current.filter(F.col("doc_id") % 37 == 0).select("doc_id", "text")
         kept = (contamination(current, bench)
@@ -152,7 +161,7 @@ def build_job(
     else:
         from pii_redactor_spark.plans.dedup_job import dedup_corpus
         t0 = time.time()
-        n_in = current.count()
+        n_in = n_prev
         kept = dedup_corpus(current)
         current = commit_stage(name, kept, n_in, t0)
         release_caches()  # band/shingle/CC persists from the operators
@@ -163,8 +172,7 @@ def build_job(
     qtbl = stage_table(root, name)
     from pii_redactor_spark.plans.pipeline import run_pipeline
     from pii_redactor_spark.tables import run_resumable
-    t0 = time.time()
-    n_in = current.count()
+    n_in = n_prev
     pass_cols = [c for c in ("doc_id", "lang", "n_chars")
                  if c in current.columns]
     commits = run_resumable(
@@ -177,13 +185,12 @@ def build_job(
                 F.col("scrubbed_text").alias("text"),
                 "lang_pred", "ppl", "n_redactions", "keep", "bucket"),
     )
-    qdf = qtbl.read(spark)
-    stages.append({"stage": name, "n_in": n_in,
-                   "n_out": qdf.count(),
+    n_prev = qtbl.count(spark)
+    stages.append({"stage": name, "n_in": n_in, "n_out": n_prev,
                    "resumed": commits == 0,
                    "commits_this_run": commits,
                    "snapshot": qtbl.current_snapshot_id()})
-    current = qdf.filter(F.col("keep")).drop("keep")
+    current = qtbl.read(spark).filter(F.col("keep")).drop("keep")
     maybe_fail(name)
 
     # -- select ---------------------------------------------------------------
@@ -193,6 +200,8 @@ def build_job(
     else:
         from pii_redactor_spark.operators.dsir import dsir_select
         t0 = time.time()
+        # select's input is the KEPT quality rows, which no manifest
+        # records: the chain's one count after the input's
         n_in = current.count()
         flags = dsir_select(current, frac=frac)
         keep_ids = flags.filter(F.col("selected")).select("doc_id")
@@ -210,7 +219,7 @@ def build_job(
         from pii_redactor_spark.operators.cache import registered_persist
         from pii_redactor_spark.operators.ranking import global_prefix_sum
         t0 = time.time()
-        n_in = current.count()
+        n_in = n_prev
         toks = registered_persist(current.select(
             "doc_id",
             F.size(F.regexp_extract_all(
@@ -242,7 +251,7 @@ def build_job(
             "total_tokens": int(tok_row["t"] or 0),
             "seq_tokens": SEQ_TOKENS,
             "n_sequences": -(-end // SEQ_TOKENS),
-            "metrics_rows": metrics.read(spark).count()}
+            "metrics_rows": metrics.count(spark)}
 
 
 def quality_increment(
@@ -292,14 +301,9 @@ def quality_increment(
     ).select("url", *pass_cols,
              F.col("scrubbed_text").alias("text"),
              "lang_pred", "ppl", "n_redactions", "keep")
-    out = out.persist()
-    try:
-        n = out.count()
-        output.append(out, lineage={
-            "run_id": run_id, "stage": "quality_increment",
-            "input_snapshot": cur, "complete": True})
-    finally:
-        out.unpersist()
+    n = output.append(out, lineage={
+        "run_id": run_id, "stage": "quality_increment",
+        "input_snapshot": cur, "complete": True}).added_rows
     metrics.log(spark, [{
         "run_id": run_id, "stage": "build:quality_increment",
         "bucket": None, "n_docs": n, "kept": None, "dropped": None,
@@ -372,6 +376,9 @@ def build_increment(
     bench_tbl = IcebergishTable(root / "inc_benchmark")
     stages: list[dict] = []
 
+    # every row counts what THIS increment's stage read and wrote: an
+    # append-through stage's n_out is the rows its own snapshot added
+    # (from the manifest), never the accumulated table
     def log_row(stage: str, mode: str, n_in, n_out, t0: float) -> None:
         metrics.log(spark, [{
             "run_id": run_id, "stage": f"inc:{stage}:{mode}",
@@ -411,14 +418,13 @@ def build_increment(
             kept = (contamination(kept, bench)
                     .filter(~F.col("contaminated"))
                     .drop("shared_ngrams", "contaminated"))
-            pre_tbl.append(kept, lineage={
+            n_out = pre_tbl.append(kept, lineage={
                 "run_id": run_id, "stage": "prefilter",
                 "mode": "append-through", "input_snapshot": cur_in,
-                "complete": True})
+                "complete": True}).added_rows
         finally:
             diff.unpersist()
-        log_row("prefilter", "append-through", n_in,
-                pre_tbl.read(spark).count(), t0)
+        log_row("prefilter", "append-through", n_in, n_out, t0)
     else:
         stages.append({"stage": "prefilter", "mode": "append-through",
                        "n_in": 0, "n_out": None})
@@ -438,15 +444,10 @@ def build_increment(
         ).select("url", *pass_cols,
                  F.col("scrubbed_text").alias("text"),
                  "lang_pred", "ppl", "n_redactions", "keep")
-        out = out.persist()
-        try:
-            n = out.count()
-            scrub_tbl.append(out, lineage={
-                "run_id": run_id, "stage": "scrub",
-                "mode": "append-through", "input_snapshot": cur_pre,
-                "complete": True})
-        finally:
-            out.unpersist()
+        n = scrub_tbl.append(out, lineage={
+            "run_id": run_id, "stage": "scrub",
+            "mode": "append-through", "input_snapshot": cur_pre,
+            "complete": True}).added_rows
         log_row("scrub", "append-through", n, n, t0)
     else:
         stages.append({"stage": "scrub", "mode": "append-through",
@@ -514,23 +515,21 @@ def build_increment(
         last_dd = _inc_last(dtbl, run_id, "dedup")
         if last_dd == cur_pre_dd and dtbl.snapshot() is not None:
             _sync_sig()
-            log_row("dedup", "append:up-to-date", None,
-                    dtbl.read(spark).count(), t0)
+            log_row("dedup", "append:up-to-date", 0, 0, t0)
         elif last_dd is None:
-            pre_df = pre_tbl.read(spark)
-            n_pre = pre_df.count()
-            survivors = dedup_corpus(pre_df)
-            dtbl.overwrite(survivors, lineage={
+            survivors = dedup_corpus(pre_tbl.read(spark))
+            n_out = dtbl.overwrite(survivors, lineage={
                 "run_id": run_id, "stage": "dedup", "mode": "append-seed",
-                "input_snapshot": cur_pre_dd, "complete": True})
+                "input_snapshot": cur_pre_dd, "complete": True}).added_rows
             _sync_sig()
             release_caches()
-            log_row("dedup", "append-seed", n_pre,
-                    dtbl.read(spark).count(), t0)
+            log_row("dedup", "append-seed", pre_tbl.count(spark), n_out,
+                    t0)
         else:
             _sync_sig()  # heal any prior crash window before flagging
             ddiff = pre_tbl.read_incremental(spark, last_dd)
             n_in = ddiff.count() if ddiff is not None else 0
+            n_out = 0
             if ddiff is not None and n_in > 0:
                 old_surv = dtbl.read(spark)
                 new_surv = dedup_corpus(ddiff)
@@ -541,30 +540,30 @@ def build_increment(
                                   old_bands=btbl.read(spark))
                     .filter(F.col("keep")).select("doc_id"))
                 add = new_surv.join(keep_ids, "doc_id", "left_semi")
-                dtbl.append(add, lineage={
+                n_out = dtbl.append(add, lineage={
                     "run_id": run_id, "stage": "dedup", "mode": "append",
-                    "input_snapshot": cur_pre_dd, "complete": True})
+                    "input_snapshot": cur_pre_dd,
+                    "complete": True}).added_rows
                 _sync_sig()  # append the new survivors' own signatures
                 release_caches()
-            log_row("dedup", "append", n_in, dtbl.read(spark).count(), t0)
+            log_row("dedup", "append", n_in, n_out, t0)
     else:
-        pre_df = pre_tbl.read(spark)
-        n_pre = pre_df.count()
-        survivors = dedup_corpus(pre_df)
-        dtbl.overwrite(survivors, lineage={
+        survivors = dedup_corpus(pre_tbl.read(spark))
+        n_out = dtbl.overwrite(survivors, lineage={
             "run_id": run_id, "stage": "dedup", "mode": "recompute",
-            "input_snapshot": cur_pre_dd, "complete": True})
+            "input_snapshot": cur_pre_dd, "complete": True}).added_rows
         release_caches()
-        log_row("dedup", "recompute", n_pre, dtbl.read(spark).count(), t0)
+        log_row("dedup", "recompute", pre_tbl.count(spark), n_out, t0)
 
     t0 = time.time()
     kept_ids = dtbl.read(spark).select("doc_id")
     quality = scrub_tbl.read(spark).join(kept_ids, "doc_id", "left_semi")
     qtbl = stage_table(root, "quality")
-    qtbl.overwrite(quality, lineage={
+    n_out = qtbl.overwrite(quality, lineage={
         "run_id": run_id, "stage": "quality",
-        "mode": "recompute-join-of-cached-scrub", "complete": True})
-    log_row("quality", "recompute", None, qtbl.read(spark).count(), t0)
+        "mode": "recompute-join-of-cached-scrub",
+        "complete": True}).added_rows
+    log_row("quality", "recompute", None, n_out, t0)
 
     from pii_redactor_spark.operators.dsir import dsir_select
     t0 = time.time()
@@ -574,19 +573,17 @@ def build_increment(
     keep_ids = flags.filter(F.col("selected")).select("doc_id")
     sel = current.join(keep_ids, "doc_id", "left_semi")
     stbl = stage_table(root, "select")
-    stbl.overwrite(sel, lineage={
+    n_sel = stbl.overwrite(sel, lineage={
         "run_id": run_id, "stage": "select", "mode": "recompute",
-        "complete": True})
+        "complete": True}).added_rows
     release_caches()
-    log_row("select", "recompute", n_in, stbl.read(spark).count(), t0)
+    log_row("select", "recompute", n_in, n_sel, t0)
 
     from pii_redactor_spark.contract import SEQ_TOKENS, _BPE_RE
     from pii_redactor_spark.operators.cache import registered_persist
     from pii_redactor_spark.operators.ranking import global_prefix_sum
     t0 = time.time()
-    cur = stbl.read(spark)
-    n_in = cur.count()
-    toks = registered_persist(cur.select(
+    toks = registered_persist(stbl.read(spark).select(
         "doc_id",
         F.size(F.regexp_extract_all(
             F.col("text"), F.lit(_BPE_RE), 0)).alias("n_tokens")))
@@ -602,11 +599,11 @@ def build_increment(
         .otherwise(F.lit(0)).cast("bigint").alias("n_seqs"),
     )
     ptbl = stage_table(root, "pack")
-    ptbl.overwrite(packed, lineage={
+    n_out = ptbl.overwrite(packed, lineage={
         "run_id": run_id, "stage": "pack", "mode": "recompute",
-        "complete": True})
+        "complete": True}).added_rows
     release_caches()
-    log_row("pack", "recompute", n_in, ptbl.read(spark).count(), t0)
+    log_row("pack", "recompute", n_sel, n_out, t0)
 
     pack_df = ptbl.read(spark)
     tok_row = pack_df.agg(
@@ -618,4 +615,4 @@ def build_increment(
             "total_tokens": int(tok_row["t"] or 0),
             "seq_tokens": SEQ_TOKENS,
             "n_sequences": -(-end // SEQ_TOKENS),
-            "metrics_rows": metrics.read(spark).count()}
+            "metrics_rows": metrics.count(spark)}

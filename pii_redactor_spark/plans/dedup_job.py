@@ -60,7 +60,7 @@ def run_dedup_job(
         n_in = docs.count()
         kept = dedup_corpus(docs, text_col, id_col)
         snap = output.append(kept)
-        n_kept = output.read(spark).count()
+        n_kept = snap.added_rows  # this run's rows, not the whole table
     finally:
         release_caches()  # band/shingle/CC-label persists from the operators
     metrics.log(spark, [{

@@ -18,6 +18,14 @@ EMULATION of the subset the pipeline needs:
   scans prune buckets (Spark's partition discovery works per-dir; the
   manifest records the bucket values present per data dir as Iceberg
   records partition summaries in manifests).
+- **Table facts from manifests**: each snapshot records the rows it
+  added and the table's total (Iceberg's ``added-records`` /
+  ``total-records`` snapshot summary) and the Spark read schema of each
+  data dir, all taken on the driver from the written Parquet footers.
+  ``count()`` and every read use them, so bookkeeping starts no Spark
+  job: a ``spark.read.parquet`` without a schema runs a one-task job to
+  read a footer. Manifests written before these fields existed read and
+  count through Spark as before.
 - **Resume**: the reference resumes by a cache-existence check
   (reference: optimizer.py:33-35); here each processed bucket commits a
   lineage row to a metrics table, and a restarted run anti-joins the done
@@ -38,10 +46,17 @@ import uuid
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DataType, DoubleType, LongType, StringType, StructField, StructType)
 
 CURRENT = "CURRENT"
+# the footer key Spark's Parquet writer stores its row schema under
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @dataclass
@@ -57,6 +72,13 @@ class Snapshot:
     # derives done-ness from this, so a crash between the data commit and
     # the metrics row can never cause a bucket group to be re-appended.
     lineage: dict | None = None
+    # rows this snapshot's data dir holds and rows in the whole table at
+    # this snapshot; None on manifests that predate them
+    added_rows: int | None = None
+    total_rows: int | None = None
+    # Spark read schema (DDL) -> the data dirs written with it, each
+    # schema stored once; a dir in no list is read by inference
+    schemas: dict[str, list[str]] | None = None
 
     def to_json(self) -> dict:
         return {
@@ -67,7 +89,17 @@ class Snapshot:
             "partitions": self.partitions,
             "ts": self.ts,
             "lineage": self.lineage,
+            "added_rows": self.added_rows,
+            "total_rows": self.total_rows,
+            "schemas": self.schemas,
         }
+
+
+def _data_files(path: Path) -> list[Path]:
+    """The Parquet part files under a data dir (partition subdirs
+    included); Spark's hidden ``.crc``/``_SUCCESS`` files are skipped."""
+    return sorted(p for p in path.rglob("*.parquet")
+                  if not p.name.startswith((".", "_")))
 
 
 class IcebergishTable:
@@ -116,10 +148,13 @@ class IcebergishTable:
         os.replace(cur_tmp, self.manifest_dir / CURRENT)
 
     # -- writes ---------------------------------------------------------------
-    def _write_data_dir(self, df: DataFrame,
-                        partition_by: str | None) -> tuple[str, list]:
+    def _new_dir(self) -> tuple[str, Path]:
         dir_name = f"d-{uuid.uuid4().hex[:12]}"
-        out = self.data_root / dir_name
+        return dir_name, self.data_root / dir_name
+
+    def _write_data_dir(self, df: DataFrame, partition_by: str | None
+                        ) -> tuple[str, list, int, str | None]:
+        dir_name, out = self._new_dir()
         w = df.write.mode("overwrite")
         if partition_by is not None:
             w = w.partitionBy(partition_by)
@@ -139,42 +174,70 @@ class IcebergishTable:
                 buckets = [int(r) for r in raws]
             except ValueError:
                 buckets = raws
-        return dir_name, sorted(buckets)
+        rows, schema = self._footer_facts(df.sparkSession, out,
+                                          partition_by is not None)
+        return dir_name, sorted(buckets), rows, schema
+
+    def _footer_facts(self, spark: SparkSession, out: Path,
+                      partitioned: bool) -> tuple[int, str | None]:
+        """(rows, read schema DDL) of a written data dir, from the Parquet
+        footers on the driver. Partition columns get the type Spark's
+        directory-name inference gives them: a read given only the data
+        schema lists the directory (no job) and appends them. (A read
+        makes every column nullable, so the footer's NOT NULLs are
+        harmless in the stored schema.)"""
+        metas = [pq.read_metadata(p) for p in _data_files(out)]
+        rows = sum(m.num_rows for m in metas)
+        footer = next((m.metadata[SPARK_SCHEMA_KEY] for m in metas
+                       if m.metadata and SPARK_SCHEMA_KEY in m.metadata),
+                      None)
+        if footer is None:
+            return rows, None
+        schema = StructType.fromJson(json.loads(footer))
+        if partitioned:
+            schema = self._reader(spark, out).schema(schema) \
+                .parquet(str(out)).schema
+        ddl = schema.toDDL()
+        # DDL drops field metadata: keep it only when it round-trips
+        return rows, ddl if DataType.fromDDL(ddl) == schema else None
+
+    def _commit_dir(self, op: str, dir_name: str, buckets: list,
+                    rows: int, schema: str | None,
+                    lineage: dict | None) -> Snapshot:
+        """Commit one new data dir: ``append`` keeps the parent's dirs,
+        ``overwrite`` starts a new lineage root."""
+        parent = self.snapshot()
+        base = parent if op == "append" else None
+        schemas = dict((base.schemas or {}) if base else {})
+        if schema is not None:
+            schemas[schema] = schemas.get(schema, []) + [dir_name]
+        snap = Snapshot(
+            snapshot_id=(parent.snapshot_id + 1) if parent else 0,
+            parent_id=parent.snapshot_id if parent else None,
+            op=op,
+            data_dirs=(base.data_dirs if base else []) + [dir_name],
+            partitions={**(base.partitions if base else {}),
+                        dir_name: buckets},
+            ts=time.time(),
+            lineage=lineage,
+            added_rows=rows,
+            total_rows=(rows if base is None
+                        else None if base.total_rows is None
+                        else base.total_rows + rows),
+            schemas=schemas,
+        )
+        self._commit(snap)
+        return snap
 
     def append(self, df: DataFrame, partition_by: str | None = None,
                lineage: dict | None = None) -> Snapshot:
-        parent = self.snapshot()
-        dir_name, buckets = self._write_data_dir(df, partition_by)
-        prev_dirs = parent.data_dirs if parent else []
-        prev_parts = dict(parent.partitions) if parent else {}
-        prev_parts[dir_name] = buckets
-        snap = Snapshot(
-            snapshot_id=(parent.snapshot_id + 1) if parent else 0,
-            parent_id=parent.snapshot_id if parent else None,
-            op="append",
-            data_dirs=prev_dirs + [dir_name],
-            partitions=prev_parts,
-            ts=time.time(),
-            lineage=lineage,
-        )
-        self._commit(snap)
-        return snap
+        return self._commit_dir(
+            "append", *self._write_data_dir(df, partition_by), lineage)
 
     def overwrite(self, df: DataFrame, partition_by: str | None = None,
                   lineage: dict | None = None) -> Snapshot:
-        parent = self.snapshot()
-        dir_name, buckets = self._write_data_dir(df, partition_by)
-        snap = Snapshot(
-            snapshot_id=(parent.snapshot_id + 1) if parent else 0,
-            parent_id=parent.snapshot_id if parent else None,
-            op="overwrite",
-            data_dirs=[dir_name],
-            partitions={dir_name: buckets},
-            ts=time.time(),
-            lineage=lineage,
-        )
-        self._commit(snap)
-        return snap
+        return self._commit_dir(
+            "overwrite", *self._write_data_dir(df, partition_by), lineage)
 
     def lineage_done_buckets(self, run_id: str, stage: str) -> list[int]:
         """Buckets recorded as committed for (run_id, stage) in snapshot
@@ -193,17 +256,23 @@ class IcebergishTable:
         return sorted(done)
 
     # -- reads ----------------------------------------------------------------
-    def _read_dirs(self, spark: SparkSession,
+    def _reader(self, spark: SparkSession, path: Path):
+        # each data dir is its own partition-discovery root (the dirs are
+        # commit units, not partition values)
+        return spark.read.option("basePath", str(path))
+
+    def _read_dirs(self, spark: SparkSession, snap: Snapshot,
                    dirs: list[str]) -> DataFrame | None:
         if not dirs:
             return None
-        # each data dir is its own partition-discovery root (the dirs are
-        # commit units, not partition values) — union the per-commit scans
-        dfs = [
-            spark.read.option("basePath", str(self.data_root / d))
-            .parquet(str(self.data_root / d))
-            for d in dirs
-        ]
+        schemas = {d: ddl for ddl, ds in (snap.schemas or {}).items()
+                   for d in ds}
+        dfs = []
+        for d in dirs:
+            r = self._reader(spark, self.data_root / d)
+            if d in schemas:
+                r = r.schema(schemas[d])  # no footer-inference job
+            dfs.append(r.parquet(str(self.data_root / d)))
         out = dfs[0]
         for df in dfs[1:]:
             # allowMissingColumns: a table's schema may widen between
@@ -213,13 +282,24 @@ class IcebergishTable:
             out = out.unionByName(df, allowMissingColumns=True)
         return out
 
+    def count(self, spark: SparkSession,
+              snapshot_id: int | None = None) -> int:
+        """Row count from the manifest; a table with commits from before
+        manifests recorded rows is counted by a Spark job."""
+        snap = self.snapshot(snapshot_id)
+        if snap is None:
+            return 0
+        if snap.total_rows is not None:
+            return snap.total_rows
+        return self._read_dirs(spark, snap, snap.data_dirs).count()
+
     def read(self, spark: SparkSession,
              snapshot_id: int | None = None) -> DataFrame | None:
         """Snapshot-isolated read: only dirs listed in the manifest."""
         snap = self.snapshot(snapshot_id)
         if snap is None:
             return None
-        return self._read_dirs(spark, snap.data_dirs)
+        return self._read_dirs(spark, snap, snap.data_dirs)
 
     def read_incremental(self, spark: SparkSession,
                          since_snapshot_id: int | None) -> DataFrame | None:
@@ -237,7 +317,7 @@ class IcebergishTable:
             if since_snapshot_id is not None else None
         old_dirs = set(old.data_dirs) if old else set()
         return self._read_dirs(
-            spark, [d for d in cur.data_dirs if d not in old_dirs])
+            spark, cur, [d for d in cur.data_dirs if d not in old_dirs])
 
     def read_at(self, spark: SparkSession, snapshot_id: int) -> DataFrame | None:
         """Time travel to an older snapshot."""
@@ -306,6 +386,15 @@ def with_salted_host_key(df: DataFrame, url_col: str = "url",
 METRICS_COLUMNS = ("run_id", "stage", "bucket", "n_docs", "kept",
                    "dropped", "scrubbed", "elapsed_s", "ts",
                    "langid_s", "ppl_s", "scrub_s")
+METRICS_SCHEMA = StructType([
+    StructField(c, StringType() if c in ("run_id", "stage")
+                else DoubleType() if c.endswith("_s") or c == "ts"
+                else LongType())
+    for c in METRICS_COLUMNS])
+METRICS_DDL = ",".join(f"{f.name} {f.dataType.simpleString().upper()}"
+                       for f in METRICS_SCHEMA)
+METRICS_ARROW_SCHEMA = to_arrow_schema(METRICS_SCHEMA).with_metadata(
+    {SPARK_SCHEMA_KEY: METRICS_SCHEMA.json()})
 
 
 class MetricsTable(IcebergishTable):
@@ -315,29 +404,41 @@ class MetricsTable(IcebergishTable):
     record lives in the output table's snapshot lineage — these rows are
     observability (including the per-kernel cost breakdown, the analogue
     of the reference's student/reflection cost split,
-    optimizer.py:300-308)."""
+    optimizer.py:300-308).
+
+    The rows are already on the driver, so ``log`` writes them with
+    pyarrow as one Parquet file carrying Spark's row-schema footer key
+    (Spark reads it with the same column types) and commits the manifest
+    — no Spark job. ``done_buckets`` reads them back the same way."""
 
     def log(self, spark: SparkSession, rows: list[dict]) -> None:
-        df = spark.createDataFrame(
-            [tuple(r.get(c) for c in METRICS_COLUMNS) for r in rows],
-            "run_id string, stage string, bucket long, n_docs long, "
-            "kept long, dropped long, scrubbed long, elapsed_s double, "
-            "ts double, langid_s double, ppl_s double, scrub_s double",
-        )
-        self.append(df)
+        table = pa.Table.from_pylist(
+            [{c: r.get(c) for c in METRICS_COLUMNS} for r in rows],
+            schema=METRICS_ARROW_SCHEMA)
+        dir_name, out = self._new_dir()
+        out.mkdir()
+        # store_schema=False: the Arrow schema copy is only for Arrow
+        # readers and would double the file
+        pq.write_table(table, out / f"part-00000-{dir_name}.parquet",
+                       compression="snappy", store_schema=False)
+        self._commit_dir("append", dir_name, [], table.num_rows,
+                         METRICS_DDL, None)
 
     def done_buckets(self, spark: SparkSession, run_id: str,
                      stage: str) -> list[int]:
-        df = self.read(spark)
-        if df is None:
+        snap = self.snapshot()
+        if snap is None:
             return []
-        return [
-            r["bucket"] for r in (
-                df.filter((F.col("run_id") == run_id)
-                          & (F.col("stage") == stage))
-                .select("bucket").distinct().collect()
-            )
-        ]
+        done: set[int] = set()
+        for d in snap.data_dirs:
+            for f in _data_files(self.data_root / d):
+                for r in pq.read_table(
+                        f, columns=["run_id", "stage", "bucket"]
+                ).to_pylist():
+                    if (r["run_id"] == run_id and r["stage"] == stage
+                            and r["bucket"] is not None):
+                        done.add(r["bucket"])
+        return sorted(done)
 
 
 def remaining_buckets(all_buckets: list[int], done: list[int]) -> list[int]:
@@ -369,35 +470,42 @@ def run_resumable(
     passed) are logged after the data commit, purely for observability.
     ``fail_after_commits`` injects a crash for tests.
 
+    ``transform`` is applied ONCE, to the whole bucketed corpus; each
+    group commits that plan filtered to its buckets. The bucket filter is
+    pushed below the kernels' ArrowEvalPython, so they still see only
+    the group's rows, and the plan is built once instead of per group.
+
     Returns the number of bucket-groups processed in THIS invocation.
     """
     bucketed = with_bucket(pages, key_col, n_buckets)
     done = sorted(set(output.lineage_done_buckets(run_id, stage))
                   | set(metrics.done_buckets(spark, run_id, stage)))
     todo = remaining_buckets(list(range(n_buckets)), done)
+    if not todo:
+        return 0
+    full = transform(bucketed) if transform is not None else bucketed
+    has_keep = "keep" in full.columns
     commits = 0
     for i in range(0, len(todo), buckets_per_commit):
         group = todo[i:i + buckets_per_commit]
         t0 = time.time()
         k0 = timers.snapshot() if timers is not None else None
-        part = bucketed.filter(F.col("bucket").isin(group))
-        out = transform(part) if transform is not None else part
-        # persist so the write and the stats aggregation share ONE
-        # kernel execution (previously each action recomputed the group)
-        out = out.persist()
-        try:
-            output.append(out, partition_by="bucket", lineage={
-                "run_id": run_id, "stage": stage, "buckets": group})
-            stats = (
-                out.groupBy("bucket").agg(
-                    F.count("*").alias("n_docs"),
-                    F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("kept")
-                    if "keep" in out.columns
-                    else F.lit(None).cast("long").alias("kept"),
-                ).collect()
-            )
-        finally:
-            out.unpersist()
+        # the write's own job counts each bucket's rows (observe), so no
+        # second aggregation job and no persist to share the kernel pass
+        obs = Observation()
+        bucket = F.col("bucket")
+        counts = [F.count_if(bucket == b).alias(f"n_{b}") for b in group]
+        if has_keep:
+            counts += [F.count_if((bucket == b) & F.col("keep"))
+                       .alias(f"kept_{b}") for b in group]
+        output.append(full.filter(bucket.isin(group)).observe(obs, *counts),
+                      partition_by="bucket", lineage={
+                          "run_id": run_id, "stage": stage,
+                          "buckets": group})
+        got = obs.get
+        stats = [{"bucket": b, "n_docs": got[f"n_{b}"],
+                  "kept": got.get(f"kept_{b}")}
+                 for b in group if got[f"n_{b}"]]
         elapsed = time.time() - t0
         # the timer delta covers the WHOLE commit group; apportion it
         # evenly across the group's bucket rows so summing the metrics

@@ -8,6 +8,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from pii_redactor_spark.cli import main
 
 
@@ -452,3 +453,39 @@ def test_build_increment_dedup_append(spark, capsys, tmp_path):
     by3 = {s["stage"]: s for s in got3["stages"]}
     assert by3["dedup"]["mode"] == "append:up-to-date"
     assert surv(ra) == s_app
+
+
+def test_build_increment_metrics_rows_per_increment_scope(spark, tmp_path):
+    """Every metrics row of an incremental build counts what THAT
+    increment's stage read and wrote: over two append-mode increments no
+    row has a negative ``dropped`` (the append-through stages used to
+    log the accumulated table as their output), and the prefilter and
+    dedup rows carry the rows their own snapshots added."""
+    from pii_redactor_spark.operators.cache import release_caches
+    from pii_redactor_spark.plans.build import build_increment
+    from pii_redactor_spark.tables import IcebergishTable, MetricsTable
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    inp = IcebergishTable(tmp_path / "input")
+    root = tmp_path / "inc"
+    added = {}
+    for lo, hi in ((0, 80), (80, 110)):
+        inp.append(docs.filter(f"doc_id >= {lo} AND doc_id < {hi}"))
+        build_increment(spark, inp, root, run_id="scope",
+                        dedup_mode="append")
+        release_caches()
+        for name in ("inc_00_prefilter", "02_dedup"):
+            added.setdefault(name, []).append(
+                IcebergishTable(root / name).snapshot().added_rows)
+    rows = MetricsTable(root / "metrics").read(spark).collect()
+    assert rows
+    assert all(r["dropped"] is None or r["dropped"] >= 0 for r in rows), \
+        [(r["stage"], r["n_docs"], r["kept"]) for r in rows]
+    by = {}
+    for r in sorted(rows, key=lambda r: r["ts"]):
+        by.setdefault(r["stage"], []).append(r)
+    pre = by["inc:prefilter:append-through"]
+    assert [r["n_docs"] for r in pre] == [80, 30]
+    assert [r["kept"] for r in pre] == added["inc_00_prefilter"]
+    seed, app = by["inc:dedup:append-seed"], by["inc:dedup:append"]
+    assert [seed[0]["kept"], app[0]["kept"]] == added["02_dedup"]

@@ -313,6 +313,27 @@ class TestC4SentenceRules:
         assert out[0]["kept_hash"] == want
         assert out[0]["kept_len"] == len(keep_a) + 1 + len(keep_b)
 
+    def test_null_text_matches_oracle(self, spark):
+        """A direct call on NULL text (no pre-coalesced view) reads it
+        as '': no sentences, page dropped — row-equal to the oracle run
+        on the same rows."""
+        import duckdb
+        from pii_redactor_spark.functions.rules import c4_stats_oracle_sql
+        rows = [(0, None), (1, ""),
+                (2, "one two three four five. six seven eight nine ten."
+                    " eleven twelve thirteen fourteen fifteen.")]
+        out = self._run(spark, rows)
+        assert out[0]["n_sentences"] == 0 and out[0]["c4_keep"] is False
+        con = duckdb.connect()
+        con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+        oracle = {r[0]: r for r in con.execute(
+            c4_stats_oracle_sql(synth=False)).fetchall()}
+        cols = ("doc_id", "n_lines", "n_kept_lines", "n_sentences",
+                "c4_keep", "kept_hash", "kept_len")
+        for doc_id, r in out.items():
+            assert tuple(r[c] for c in cols) == oracle[doc_id], doc_id
+
     def test_synth_punct_is_deterministic_and_fires(self, spark):
         """The md5-punctuated view gives the corpus real line/sentence
         structure: both keeps and drops occur at sf0.001, and the view

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from pii_redactor_spark.plans.pipeline import run_pipeline
 from pii_redactor_spark.tables import (
     IcebergishTable,
@@ -289,3 +290,186 @@ def test_quality_increment_processes_only_new_snapshots(spark, tmp_path):
     assert out.read(spark).count() == 85
     # output rows carry the scrubbed text as `text`
     assert "text" in got.columns and "scrubbed_text" not in got.columns
+
+
+# ---------------------------------------------------------------------------
+# table facts from manifests: counts and read schemas without Spark jobs
+# ---------------------------------------------------------------------------
+
+def _jobs_started(spark, fn):
+    """(fn's result, ids of the Spark jobs fn started)."""
+    import uuid
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job probe")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _inferred(spark, tbl):
+    """The table read as before manifests recorded schemas: every data
+    dir's schema inferred from its footers."""
+    import dataclasses
+    snap = dataclasses.replace(tbl.snapshot(), schemas=None)
+    return tbl._read_dirs(spark, snap, snap.data_dirs)
+
+
+def _rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+def test_manifest_count_matches_spark_count(spark, docs, tmp_path):
+    t = IcebergishTable(tmp_path / "t")
+    assert t.count(spark) == 0
+    s0 = t.append(docs.filter("doc_id < 40"))
+    s1 = t.append(docs.filter("doc_id >= 40 AND doc_id < 100"))
+    assert (s0.added_rows, s1.added_rows, s1.total_rows) == (40, 60, 100)
+    assert t.count(spark) == t.read(spark).count() == 100
+    assert t.count(spark, s0.snapshot_id) == 40   # time travel too
+    t.overwrite(docs.filter("doc_id < 7"))
+    assert t.count(spark) == t.read(spark).count() == 7
+    # partitioned appends: int bucket and string partition values
+    p = IcebergishTable(tmp_path / "p")
+    p.append(with_bucket(docs, "url", 8), partition_by="bucket")
+    p.append(docs.filter("doc_id < 30"), partition_by="lang")
+    assert p.count(spark) == p.read(spark).count() == docs.count() + 30
+    # an empty write adds zero rows
+    e = IcebergishTable(tmp_path / "e")
+    assert e.append(docs.filter("doc_id < 0")).added_rows == 0
+    assert e.count(spark) == e.read(spark).count() == 0
+
+
+def test_stored_schema_matches_inference(spark, docs, tmp_path):
+    t = IcebergishTable(tmp_path / "t")
+    t.append(with_bucket(docs, "url", 4), partition_by="bucket")
+    t.append(with_bucket(docs.filter("doc_id < 9"), "url", 4)
+             .withColumn("extra", F.lit(1.5)), partition_by="bucket")
+    s = IcebergishTable(tmp_path / "s")
+    s.append(spark.createDataFrame([(1, "12"), (2, "en")],
+                                   "id long not null, part string"),
+             partition_by="part")
+    for tbl in (t, s):
+        got, want = tbl.read(spark), _inferred(spark, tbl)
+        assert got.schema == want.schema
+        assert _rows(got) == _rows(want)
+    assert dict(t.read(spark).dtypes)["bucket"] == "int"
+    assert dict(s.read(spark).dtypes)["part"] == "string"
+
+
+def test_build_stage_tables_read_as_inferred(spark, tmp_path):
+    """Every build_job stage table (and the metrics table) reads with
+    its stored schema exactly as footer inference reads it."""
+    from pii_redactor_spark.operators.cache import release_caches
+    from pii_redactor_spark.plans.build import (
+        STAGE_ORDER, build_job, stage_table)
+    pages = spark.read.parquet(
+        f"{SF_DIR}/documents.parquet").filter("doc_id < 120")
+    out = build_job(spark, pages, tmp_path / "b", run_id="sch")
+    release_caches()
+    tables = [stage_table(tmp_path / "b", n) for n in STAGE_ORDER]
+    tables.append(MetricsTable(tmp_path / "b" / "metrics"))
+    for tbl in tables:
+        got, want = tbl.read(spark), _inferred(spark, tbl)
+        assert got.schema == want.schema, tbl.base.name
+        assert _rows(got) == _rows(want), tbl.base.name
+        assert tbl.count(spark) == want.count(), tbl.base.name
+    assert dict(tables[3].read(spark).dtypes)["bucket"] == "int"
+    by = {s["stage"]: s for s in out["stages"]}
+    for prev, st in zip(STAGE_ORDER[:3], STAGE_ORDER[1:4]):
+        assert by[st]["n_in"] == by[prev]["n_out"]
+    assert out["metrics_rows"] == tables[-1].read(spark).count()
+
+
+def test_manifest_without_facts_reads_and_counts(spark, docs, tmp_path):
+    """Manifests written before snapshots recorded rows and schemas
+    still read and count (through Spark), also after a new append."""
+    import json
+    t = IcebergishTable(tmp_path / "t")
+    t.append(with_bucket(docs, "url", 4), partition_by="bucket")
+    t.append(docs.filter("doc_id < 10").select("doc_id", "text"))
+    want = _rows(t.read(spark))
+    for p in t.manifest_dir.glob("snap-*.json"):
+        d = json.loads(p.read_text())
+        for k in ("added_rows", "total_rows", "schemas"):
+            d.pop(k)
+        p.write_text(json.dumps(d))
+    snap = t.snapshot()
+    assert snap.total_rows is None and snap.schemas is None
+    assert _rows(t.read(spark)) == want
+    assert t.count(spark) == docs.count() + 10
+    t.append(docs.filter("doc_id < 5").select("doc_id", "text"))
+    assert t.snapshot().total_rows is None      # unknown base stays unknown
+    assert t.count(spark) == t.read(spark).count() == docs.count() + 15
+
+
+def test_metrics_log_and_count_start_no_spark_jobs(spark, docs, tmp_path):
+    met = MetricsTable(tmp_path / "met")
+    rows = [{"run_id": "r", "stage": "scrub", "bucket": b, "n_docs": 10,
+             "kept": 9, "dropped": 1, "elapsed_s": 0.5, "ts": 1.0}
+            for b in (0, 1)]
+    _, jobs = _jobs_started(spark, lambda: met.log(spark, rows))
+    assert jobs == []
+    _, jobs = _jobs_started(spark, lambda: met.log(spark, [
+        {"run_id": "r", "stage": "other", "bucket": 5}]))
+    assert jobs == []
+    done, jobs = _jobs_started(
+        spark, lambda: met.done_buckets(spark, "r", "scrub"))
+    assert done == [0, 1] and jobs == []
+    n, jobs = _jobs_started(spark, lambda: met.count(spark))
+    assert n == 3 and jobs == []
+    t = IcebergishTable(tmp_path / "t")
+    t.append(with_bucket(docs, "url", 4), partition_by="bucket")
+    (n, df), jobs = _jobs_started(
+        spark, lambda: (t.count(spark), t.read(spark)))
+    assert n == docs.count() and jobs == []    # no footer-inference job
+    # Spark reads the driver-written rows with the metrics column types
+    got = met.read(spark)
+    assert dict(got.dtypes) == {
+        "run_id": "string", "stage": "string", "bucket": "bigint",
+        "n_docs": "bigint", "kept": "bigint", "dropped": "bigint",
+        "scrubbed": "bigint", "elapsed_s": "double", "ts": "double",
+        "langid_s": "double", "ppl_s": "double", "scrub_s": "double"}
+    assert sorted((r["stage"], r["bucket"], r["kept"])
+                  for r in got.collect()) == [
+        ("other", 5, None), ("scrub", 0, 9), ("scrub", 1, 9)]
+
+
+def test_resumable_builds_transform_once_and_filters_below_udf(
+        spark, docs, tmp_path):
+    """run_resumable plans the transform once; each group's committed
+    plan has the bucket Filter BELOW the kernels' ArrowEvalPython, so
+    the kernels only see the group's rows."""
+    plans: list[str] = []
+
+    class Capture(IcebergishTable):
+        def append(self, df, partition_by=None, lineage=None):
+            plans.append(df._jdf.queryExecution().executedPlan()
+                         .toString())
+            return super().append(df, partition_by, lineage)
+
+    calls = []
+
+    def transform(df):
+        calls.append(1)
+        return (run_pipeline(df, allowed_langs=("en",), max_ppl=50.0)
+                .select("url", "doc_id", "keep", "bucket"))
+
+    out = Capture(tmp_path / "out")
+    n = run_resumable(spark, docs, out, MetricsTable(tmp_path / "m"),
+                      run_id="once", n_buckets=8, buckets_per_commit=2,
+                      transform=transform)
+    assert n == 4 and len(calls) == 1 and len(plans) == 4
+    for plan in plans:
+        lines = plan.splitlines()
+        udf = next(i for i, l in enumerate(lines)
+                   if "ArrowEvalPython" in l)
+        filt = [i for i, l in enumerate(lines)
+                if "Filter" in l and "xxhash64" in l]
+        assert filt and all(i > udf for i in filt), plan
+        depth = len(lines[udf]) - len(lines[udf].lstrip(" :+-"))
+        assert all(len(lines[i]) - len(lines[i].lstrip(" :+-")) > depth
+                   for i in filt), plan
+    assert out.count(spark) == docs.count()
