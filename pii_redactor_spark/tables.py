@@ -39,6 +39,7 @@ per bucket-group, metrics rows) are unchanged.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
@@ -51,8 +52,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (
-    DataType, DoubleType, LongType, StringType, StructField, StructType)
+from pyspark.sql.types import DataType, StructType
 
 CURRENT = "CURRENT"
 # the footer key Spark's Parquet writer stores its row schema under
@@ -282,11 +282,10 @@ class IcebergishTable:
             out = out.unionByName(df, allowMissingColumns=True)
         return out
 
-    def count(self, spark: SparkSession,
-              snapshot_id: int | None = None) -> int:
+    def count(self, spark: SparkSession) -> int:
         """Row count from the manifest; a table with commits from before
         manifests recorded rows is counted by a Spark job."""
-        snap = self.snapshot(snapshot_id)
+        snap = self.snapshot()
         if snap is None:
             return 0
         if snap.total_rows is not None:
@@ -383,18 +382,17 @@ def with_salted_host_key(df: DataFrame, url_col: str = "url",
     return df.withColumn(key_col, key)
 
 
-METRICS_COLUMNS = ("run_id", "stage", "bucket", "n_docs", "kept",
-                   "dropped", "scrubbed", "elapsed_s", "ts",
-                   "langid_s", "ppl_s", "scrub_s")
-METRICS_SCHEMA = StructType([
-    StructField(c, StringType() if c in ("run_id", "stage")
-                else DoubleType() if c.endswith("_s") or c == "ts"
-                else LongType())
-    for c in METRICS_COLUMNS])
-METRICS_DDL = ",".join(f"{f.name} {f.dataType.simpleString().upper()}"
-                       for f in METRICS_SCHEMA)
-METRICS_ARROW_SCHEMA = to_arrow_schema(METRICS_SCHEMA).with_metadata(
-    {SPARK_SCHEMA_KEY: METRICS_SCHEMA.json()})
+METRICS_DDL = ("run_id string, stage string, bucket long, n_docs long, "
+               "kept long, dropped long, scrubbed long, elapsed_s double, "
+               "ts double, langid_s double, ppl_s double, scrub_s double")
+
+
+@functools.cache
+def _metrics_arrow_schema() -> pa.Schema:
+    # DataType.fromDDL parses on the JVM, so this runs on the first log()
+    schema = DataType.fromDDL(METRICS_DDL)
+    return to_arrow_schema(schema).with_metadata(
+        {SPARK_SCHEMA_KEY: schema.json()})
 
 
 class MetricsTable(IcebergishTable):
@@ -412,9 +410,10 @@ class MetricsTable(IcebergishTable):
     — no Spark job. ``done_buckets`` reads them back the same way."""
 
     def log(self, spark: SparkSession, rows: list[dict]) -> None:
+        schema = _metrics_arrow_schema()
         table = pa.Table.from_pylist(
-            [{c: r.get(c) for c in METRICS_COLUMNS} for r in rows],
-            schema=METRICS_ARROW_SCHEMA)
+            [{c: r.get(c) for c in schema.names} for r in rows],
+            schema=schema)
         dir_name, out = self._new_dir()
         out.mkdir()
         # store_schema=False: the Arrow schema copy is only for Arrow

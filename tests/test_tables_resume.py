@@ -328,7 +328,6 @@ def test_manifest_count_matches_spark_count(spark, docs, tmp_path):
     s1 = t.append(docs.filter("doc_id >= 40 AND doc_id < 100"))
     assert (s0.added_rows, s1.added_rows, s1.total_rows) == (40, 60, 100)
     assert t.count(spark) == t.read(spark).count() == 100
-    assert t.count(spark, s0.snapshot_id) == 40   # time travel too
     t.overwrite(docs.filter("doc_id < 7"))
     assert t.count(spark) == t.read(spark).count() == 7
     # partitioned appends: int bucket and string partition values
