@@ -573,69 +573,10 @@ def run_inc_dedup(sf_dir: str, repl: int = 10) -> dict:
         spark.stop()
 
 
-def run_cc_engines() -> dict:
-    """Measured comparison of the two connected-components engines
-    (round-4 verdict watch-item (a)) on synthetic graphs at the two
-    structural extremes:
-
-    - ``neardup``: 2,000 disjoint 10-node chains — the shape LSH dup
-      graphs actually have (tiny diameter, many components), where the
-      label engine's slimmer rounds should win;
-    - ``chain``: one 20,000-node path — the worst-case diameter, where
-      the star engine's round bound pays.
-
-    Reports wall sec + executed rounds per engine per graph, and
-    asserts both engines produce the same component count (full label
-    equality is pinned in tests; here we avoid a driver-side collect of
-    20k rows beyond the count).
-    """
-    from pyspark.sql import functions as F
-
-    from pii_redactor_spark.operators import dedup
-    from pii_redactor_spark.operators.cache import release_caches
-
-    spark = get_spark(app_name="bench_cc_engines", master="local[32]")
-    out: dict = {}
-    try:
-        graphs = {}
-        n = 20_000
-        nodes = spark.range(n).select(F.col("id").alias("node"))
-        graphs["chain"] = (nodes, spark.range(n - 1).select(
-            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")))
-        graphs["neardup"] = (nodes, spark.range(n).where(
-            "id % 10 < 9").select(
-            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")))
-        for gname, (gn, ge) in graphs.items():
-            ge = ge.persist()
-            ge.count()
-            res = {}
-            for ename, fn in (("label", dedup.components_from_edges),
-                              ("star", dedup.components_star)):
-                stats: dict = {}
-                t0 = time.perf_counter()
-                labels = fn(gn, ge, max_iter=40, stats=stats)
-                n_comp = labels.select("component").distinct().count()
-                res[ename] = {"sec": round(time.perf_counter() - t0, 3),
-                              "rounds": stats["rounds"],
-                              "n_components": n_comp}
-                release_caches()
-            assert (res["label"]["n_components"]
-                    == res["star"]["n_components"])
-            ge.unpersist()
-            out[gname] = {"nodes": n, **res}
-    finally:
-        spark.stop()
-    return out
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
-
-    if "--cc-engines" in sys.argv:
-        print(json.dumps(run_cc_engines()))
-        return
 
     if "--inc-dedup" in sys.argv:
         print(json.dumps(run_inc_dedup(sf_dir)))

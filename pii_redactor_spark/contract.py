@@ -2016,18 +2016,8 @@ def q_ann_pq_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round-5 additions past the VERDICT list: the two remaining structural
-# watch-items from the round-4 perf audit.
+# Round-5 additions past the VERDICT list.
 # ---------------------------------------------------------------------------
-@register("q_dedup_components_star", oracle=_dd.dedup_components_oracle_sql())
-def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # alternating large-star/small-star CC (Kiveris et al. 2014) — the
-    # round-halving engine for high-diameter dup graphs; same labels,
-    # same recursive-CTE oracle as q_dedup_components
-    return _dd.dedup_components(_t(spark, sf_dir, "documents"),
-                                engine="star")
-
-
 @register("q_soft_dedup", oracle=_dd.soft_dedup_oracle_sql())
 def q_soft_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SoftDeDup-style duplicate reweighting (keep every copy at weight

@@ -34,21 +34,26 @@ def register(df: DataFrame) -> DataFrame:
     return df
 
 
-class _LocalCheckpointHandle:
-    """Release handle for a ``localCheckpoint(eager=True)`` DataFrame.
+def unpersist_checkpoint(df: DataFrame) -> None:
+    """Free a ``localCheckpoint`` DataFrame's storage.
 
     ``df.unpersist()`` is a no-op for checkpoints (the storage belongs to
-    the internal LogicalRDD, not the cache manager), so the handle
-    unpersists that RDD through py4j. After release the DataFrame CANNOT
-    be re-executed (checkpointed lineage is truncated by design) — the
-    release_caches contract already requires results to be fully
+    the internal LogicalRDD, not the cache manager), so this unpersists
+    that RDD through py4j. After release the DataFrame CANNOT be
+    re-executed (checkpointed lineage is truncated by design)."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+class _LocalCheckpointHandle:
+    """Release handle for a ``localCheckpoint(eager=True)`` DataFrame —
+    the release_caches contract already requires results to be fully
     consumed first."""
 
     def __init__(self, df: DataFrame):
         self._df = df
 
     def unpersist(self) -> None:
-        self._df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        unpersist_checkpoint(self._df)
 
 
 def register_local_checkpoint(df: DataFrame) -> DataFrame:

@@ -7,9 +7,10 @@ training-data-pipeline mandate.
 
 Scale-first design notes:
 
-- Every per-document signature (minhash, simhash, band hashes, shingle
-  sets) is a **projection-only** Column expression — no UDF, no shuffle.
-  Whole-stage codegen evaluates them JVM-side at parquet-scan speed; a
+- Every per-document signature is computed without a shuffle: one
+  JVM projection hashes each word shingle once (``sh_set``), and one
+  Arrow pass turns those hashes into MinHash band keys
+  (``signatures``); simhash is the same projection + Arrow shape. A
   1000-executor cluster computes signatures embarrassingly parallel.
 - The only shuffles are the semantic ones: the exact-dup groupBy on the
   content hash and the LSH bucket self-join on (band_idx, band_hash).
@@ -131,18 +132,33 @@ def simhash60_expr(hashes: Column) -> Column:
     return out.cast("bigint")
 
 
-def make_minhash_udf(h: int = MINHASH_H):
-    """Arrow twin of the H XOR-min permutations over the pre-computed
-    shingle-hash arrays: per batch, one vectorized
-    ``minimum.reduceat(flat ^ mask, segments)`` per mask. All values are
-    60-bit non-negatives, so int64 XOR/min are exact — bit-identical to
-    the expression form (equality-tested). At H=128 the expression form
-    is 128 interpreted array_min(transform) passes per row — the same
-    allocation-bound pattern as the simhash majority vote, and the same
-    remedy; the md5 shingle hashing stays JVM-side. Measured at sf0.1:
-    q_dedup_minhash_bands 2.85 -> ~1.1 s."""
-    from pyspark.sql.types import ArrayType, LongType
+def make_minhash_udf(h: int = MINHASH_H, bands: int = LSH_BANDS,
+                     rows: int = LSH_ROWS):
+    """Arrow pass over the shingle-hash sets: the H XOR-min permutations
+    and the LSH band keys, as ``struct<sig, band_keys>``.
+
+    ``sig`` — per batch, one vectorized ``minimum.reduceat(flat ^ mask,
+    segments)`` per mask. All values are 60-bit non-negatives, so int64
+    XOR/min are exact — bit-identical to the expression form
+    (equality-tested). At H=128 the expression form is 128 interpreted
+    array_min(transform) passes per row — the same allocation-bound
+    pattern as the simhash majority vote, and the same remedy; the md5
+    shingle hashing stays JVM-side.
+
+    ``band_keys`` — ``bands`` md5 hex keys, key b = md5 of signature rows
+    ``b*rows .. b*rows+rows-1`` as decimals joined by ``'|'`` (the
+    oracle's ``CAST(s AS VARCHAR) || '|' || ...``). A key is NULL when
+    any of its rows is NULL — the oracle's ``||`` propagates NULL, so a
+    NULL-text document lands in no bucket instead of one shared
+    md5('|||…') bucket. Computing the keys here replaces a
+    bands x rows element_at/cast/concat/md5 expression per row."""
+    from pyspark.sql.types import (ArrayType, LongType, StringType,
+                                   StructField, StructType)
     masks = np.array(minhash_masks(h), dtype=np.int64)
+    out_type = StructType([
+        StructField("sig", ArrayType(LongType())),
+        StructField("band_keys", ArrayType(StringType())),
+    ])
 
     def _clean(v):
         """Per-row int64 view with NULL elements dropped — mirrors
@@ -161,17 +177,24 @@ def make_minhash_udf(h: int = MINHASH_H):
                            dtype=np.int64)
         return a.astype(np.int64, copy=False)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def minhash_np(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        nulls = [None] * len(masks)  # all-null shingle set -> null sigs,
-        # exactly array_min over an all-null transform
+    def _keys(sig: list[int]) -> list[str]:
+        return [hashlib.md5("|".join(
+            map(str, sig[b * rows:(b + 1) * rows])).encode()).hexdigest()
+            for b in range(bands)]
+
+    @F.pandas_udf(out_type)
+    def minhash_np(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+        # all-null shingle set -> null sig rows (exactly array_min over an
+        # all-null transform) -> null band keys
+        null_sig, null_keys = [None] * len(masks), [None] * bands
         for hashes in batches:
             n = len(hashes)
             cleaned = [None if v is None else _clean(v) for v in hashes]
             lens = np.array([0 if v is None else len(v) for v in cleaned],
                             dtype=np.int64)
-            out: list = [None if v is None else list(nulls)
-                         for v in cleaned]
+            sig_col: list = [None if v is None else list(null_sig)
+                             for v in cleaned]
+            key_col: list = [list(null_keys) for _ in range(n)]
             if lens.sum() > 0:
                 flat = np.concatenate(
                     [v for v in cleaned if v is not None and len(v)])
@@ -184,60 +207,56 @@ def make_minhash_udf(h: int = MINHASH_H):
                 for j, m in enumerate(masks):
                     sigs[:, j] = np.minimum.reduceat(flat ^ m,
                                                      segs_nz)
-                k = 0
-                for i in range(n):
-                    if nz[i]:
-                        out[i] = list(sigs[k])
-                        k += 1
-            yield pd.Series(out, index=hashes.index, dtype=object)
+                for i, sig in zip(np.flatnonzero(nz), sigs.tolist()):
+                    sig_col[i] = sig
+                    key_col[i] = _keys(sig)
+            yield pd.DataFrame({"sig": sig_col, "band_keys": key_col},
+                               index=hashes.index)
 
     return minhash_np
+
+
+def with_shingle_hashes(docs: DataFrame, text_col: str = "text"
+                        ) -> DataFrame:
+    """Attach ``sh_set``: the distinct 60-bit hashes of the document's
+    word k-shingles (one md5 each). The single text -> words -> shingles
+    -> hashes projection every MinHash operator starts from; ``_words``
+    is materialized once and shared by the shingle builder."""
+    return (
+        docs
+        .withColumn("_words", words_expr(F.col(text_col)))
+        .withColumn("sh_set", F.array_distinct(
+            F.transform(shingles_expr(F.col("_words")), word_hash60)))
+        .drop("_words")
+    )
 
 
 def with_minhash(docs: DataFrame, text_col: str = "text",
                  h: int = MINHASH_H,
                  vectorized: bool = True) -> DataFrame:
-    """Attach `sig` (array<bigint> of H minhashes) via a staged
-    projection: words → shingles → 60-bit shingle hashes (one md5 each),
-    each materialized once and shared downstream. ``vectorized``
-    (default) computes the H permutations through the Arrow twin
-    (bit-identical; see make_minhash_udf); ``False`` keeps the
-    expression-only plan (the DuckDB-oracle-mirrored form)."""
-    pre = (
-        docs
-        .withColumn("_words", words_expr(F.col(text_col)))
-        .withColumn("_shingles", shingles_expr(F.col("_words")))
-        .withColumn("_sh_hashes", F.transform(F.col("_shingles"), word_hash60))
-    )
-    sig = (make_minhash_udf(h)(F.col("_sh_hashes")) if vectorized
-           else F.array(*minhash_sig_exprs(F.col("_sh_hashes"), h)))
-    return (
-        pre.withColumn("sig", sig)
-        .drop("_words", "_shingles", "_sh_hashes")
-    )
+    """Attach `sig` (array<bigint> of H minhashes) over the shingle-hash
+    set. ``vectorized`` (default) computes the H permutations through the
+    Arrow pass (bit-identical; see make_minhash_udf); ``False`` keeps the
+    expression-only plan (the DuckDB-oracle-mirrored form). The min over
+    a distinct set equals the min over the full shingle list."""
+    pre = with_shingle_hashes(docs, text_col)
+    sig = (make_minhash_udf(h)(F.col("sh_set"))["sig"] if vectorized
+           else F.array(*minhash_sig_exprs(F.col("sh_set"), h)))
+    return pre.withColumn("sig", sig).drop("sh_set")
 
 
-def band_hashes(sig: Column, bands: int = LSH_BANDS,
-                rows: int = LSH_ROWS) -> Column:
-    """array<struct<band_idx:int, band_hash:string>> — md5 of each band's
-    concatenated signature rows. F.concat, NOT concat_ws: concat_ws
-    SKIPS null inputs while the oracle's ``||`` propagates them, so a
-    NULL-text document (null signature) would get a md5('|||…') bucket
-    in Spark and collide with every other null doc while the oracle
-    emits NULL — the latent-parity class round-3 ADVICE flagged."""
-    def one(b: int) -> Column:
-        parts: list[Column] = []
-        for r in range(rows):
-            if r:
-                parts.append(F.lit("|"))
-            parts.append(
-                F.element_at(sig, b * rows + r + 1).cast("string"))
-        return F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(F.concat(*parts)).alias("band_hash"),
-        )
-
-    return F.array(*[one(b) for b in range(bands)])
+def signatures(docs: DataFrame, text_col: str = "text",
+               id_col: str = "doc_id", h: int = MINHASH_H,
+               bands: int = LSH_BANDS,
+               rows: int = LSH_ROWS) -> DataFrame:
+    """``(id, sh_set, band_keys)`` — the near-dup signature substrate:
+    one text -> shingle-hash projection feeding one Arrow MinHash pass.
+    Candidate generation explodes ``band_keys``; Jaccard verification
+    reads ``sh_set``. Callers that need both persist this frame, so each
+    document is split, shingled and hashed once."""
+    sets = with_shingle_hashes(docs.select(id_col, text_col), text_col)
+    keys = make_minhash_udf(h, bands, rows)(F.col("sh_set"))["band_keys"]
+    return sets.select(id_col, "sh_set", keys.alias("band_keys"))
 
 
 # ---------------------------------------------------------------------------
@@ -259,6 +278,42 @@ def exact_dedup(docs: DataFrame, text_col: str = "text",
     )
 
 
+def _explode_bands(sigs: DataFrame, id_col: str) -> DataFrame:
+    """(id, band_idx, band_hash) rows from a ``signatures`` frame.
+    posexplode_outer + a null filter on the position: a plain explode
+    triggers InferFiltersFromGenerate, which duplicates the whole
+    signature expression into a pushed-down size() filter (see
+    operators/decontaminate.py); NULL keys stay as rows, like the
+    oracle's."""
+    return (
+        sigs
+        .select(F.col(id_col),
+                F.posexplode_outer("band_keys").alias("band_idx",
+                                                       "band_hash"))
+        .where(F.col("band_idx").isNotNull())
+    )
+
+
+def _bucket_pairs(bands: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (id_a < id_b) pairs sharing a (band_idx, band_hash)
+    bucket — the LSH bucket self-join."""
+    left = bands.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
+    right = bands.select(F.col(id_col).alias("id_b"), "band_idx",
+                         "band_hash")
+    return (
+        left.join(right, ["band_idx", "band_hash"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+        .distinct()
+    )
+
+
+def _jaccard(a: str, b: str) -> Column:
+    """Exact Jaccard of two distinct shingle-hash sets."""
+    return (F.size(F.array_intersect(a, b)).cast("double")
+            / F.size(F.array_union(a, b)))
+
+
 def minhash_bands(docs: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", h: int = MINHASH_H,
                   bands: int = LSH_BANDS,
@@ -267,19 +322,8 @@ def minhash_bands(docs: DataFrame, text_col: str = "text",
     explode only; the downstream bucket join supplies the shuffle.
     (h, bands, rows) parameterized so scripts/minhash_recall.py can
     sweep S-curves; the contract pins the module defaults."""
-    sigs = with_minhash(docs, text_col, h)
-    # explode_outer + null filter: a plain explode triggers
-    # InferFiltersFromGenerate, which duplicates the whole signature
-    # expression into a pushed-down size() filter (see
-    # operators/decontaminate.py)
-    return (
-        sigs
-        .select(F.col(id_col),
-                F.explode_outer(band_hashes(F.col("sig"), bands, rows))
-                .alias("b"))
-        .where(F.col("b").isNotNull())
-        .select(id_col, "b.band_idx", "b.band_hash")
-    )
+    return _explode_bands(
+        signatures(docs, text_col, id_col, h, bands, rows), id_col)
 
 
 def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
@@ -300,14 +344,7 @@ def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
     b = minhash_bands(docs, text_col, id_col, h, bands, rows)
     if reuse_bands:
         b = registered_persist(b)
-    left = b.select(F.col(id_col).alias("id_a"), "band_idx", "band_hash")
-    right = b.select(F.col(id_col).alias("id_b"), "band_idx", "band_hash")
-    return (
-        left.join(right, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return _bucket_pairs(b, id_col)
 
 
 def jaccard_pairs(docs: DataFrame, text_col: str = "text",
@@ -315,294 +352,159 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
                   threshold: float = 0.8,
                   pairs: DataFrame | None = None) -> DataFrame:
     """Exact n-gram Jaccard verification of LSH candidates: join each
-    pair back to its distinct shingle sets, jaccard = |A∩B| / |A∪B|.
-    The candidate set (not the corpus cross product) drives the cost —
-    this is the standard verify stage after LSH recall. ``pairs``
-    overrides the candidate source (any (id_a, id_b) DataFrame)."""
+    pair back to its distinct shingle-hash sets, jaccard = |A∩B| / |A∪B|
+    (60-bit hashes stand in for the shingle strings; the oracle compares
+    the strings). The candidate set (not the corpus cross product)
+    drives the cost — this is the standard verify stage after LSH
+    recall. Candidates and sets come from ONE persisted ``signatures``
+    frame. ``pairs`` overrides the candidate source (any (id_a, id_b)
+    DataFrame); then only the sets are built."""
     from pii_redactor_spark.operators.cache import registered_persist
     if pairs is None:
-        pairs = lsh_candidate_pairs(docs, text_col, id_col)
-    shingle_sets = registered_persist(  # joined twice (id_a and id_b sides)
-        docs
-        .withColumn("_words", words_expr(F.col(text_col)))
-        .select(F.col(id_col).alias("sid"),
-                F.array_distinct(shingles_expr(F.col("_words"))).alias("sset"))
-    )
+        sigs = registered_persist(signatures(docs, text_col, id_col))
+        pairs = _bucket_pairs(_explode_bands(sigs, id_col), id_col)
+    else:
+        sigs = registered_persist(
+            with_shingle_hashes(docs.select(id_col, text_col), text_col)
+            .select(id_col, "sh_set"))
     return (
         pairs
-        .join(shingle_sets.withColumnRenamed("sid", "id_a")
-              .withColumnRenamed("sset", "set_a"), "id_a")
-        .join(shingle_sets.withColumnRenamed("sid", "id_b")
-              .withColumnRenamed("sset", "set_b"), "id_b")
-        .select(
-            "id_a", "id_b",
-            (F.size(F.array_intersect("set_a", "set_b")).cast("double")
-             / F.size(F.array_union("set_a", "set_b"))).alias("jaccard"),
-        )
+        .join(sigs.select(F.col(id_col).alias("id_a"),
+                          F.col("sh_set").alias("set_a")), "id_a")
+        .join(sigs.select(F.col(id_col).alias("id_b"),
+                          F.col("sh_set").alias("set_b")), "id_b")
+        .select("id_a", "id_b", _jaccard("set_a", "set_b").alias("jaccard"))
         .withColumn("is_dup", F.col("jaccard") >= F.lit(threshold))
     )
 
 
 def components_from_edges(nodes: DataFrame, edges: DataFrame,
                           max_iter: int = 30,
-                          checkpoint_every: int = 3,
                           stats: dict | None = None) -> DataFrame:
     """Connected components over an explicit edge list: ``nodes`` has a
     ``node`` column, ``edges`` has ``(id_a, id_b)``; returns
     ``(node, component)`` with component = min node id of the cluster.
-    ``stats`` (optional dict) receives ``{"rounds": <executed rounds>}``
-    for round-count comparisons against :func:`components_star`.
+    ``stats`` (optional dict) receives ``{"rounds": <executed rounds>}``.
 
-    Round structure (round-3 rewrite of the plain min-label loop):
+    Only edge endpoints carry labels inside the loop; every other node
+    is a singleton and keeps its own id through the final left join with
+    ``nodes``. Rounds (min-label + path-halving):
 
-    1. neighbor-min: every node takes the min of its own component and
-       its neighbors' (one join + groupBy + join);
-    2. path-halving shortcut: ``component = component_of(component)``
-       (one self-join) — the pointer-jumping step of the classic
-       two-phase CC algorithm. Labels now hop *through* already-merged
-       chains, so convergence is O(log diameter) rounds instead of
-       O(diameter): the round-2 adversarial case (one long chain) costs
-       ~log2(n) rounds, not n.
-    3. every ``checkpoint_every`` rounds the labels are
-       ``localCheckpoint``-ed (lazily — materialized by the same round's
-       convergence aggregate): the iterative lineage is TRUNCATED, so
-       the logical plan stays bounded by ~3 rounds of operators no
-       matter how many rounds run (round-2 verdict item 2 — at 58
-       shuffles/plan the planner, not the data, became the bottleneck).
-       localCheckpoint trades fault-tolerance of the truncated prefix
-       for plan size; a production cluster run can swap in a snapshot
-       write through tables.py for a durable cut.
+    1. closed form: ``label(v) = least(v, min(neighbors(v)))`` — one
+       groupBy over the undirected edges. Over identity labels the
+       neighbor-min needs no join and the pointer jump does nothing.
+    2. later rounds: neighbor-min (one join + groupBy + join), then the
+       path-halving jump ``label = least(label, label_of(label))`` over
+       the previous round's labels — the pointer-jumping step of the
+       classic two-phase CC algorithm, so a long chain converges in
+       O(log diameter) rounds, not O(diameter).
 
-    ONE job per round (round-4 verdict item 5): each round's frame
-    carries its previous label alongside the new one, so the
-    convergence check is a count aggregate ON the frame being
-    materialized — the action that fills the round's persist/checkpoint
-    IS the convergence check. No second full-corpus join per round; at
-    100 TB a round costs exactly its neighbor-min + path-halving
-    shuffles plus one constant-size agg. Jobs-per-round is pinned in
-    test_dedup_similarity (job-group count == rounds).
+    Stop test: the number of edges whose endpoint labels differ under
+    the NEW labels. Labels only decrease and never leave their
+    component, so when every edge agrees each component carries one
+    label no larger than any of its ids — its minimum. No confirming
+    round is needed. The count is the round's one action: the round is
+    a lazy ``localCheckpoint`` that this count fills (AQE runs the
+    round's shuffle stages inside the checkpoint call itself, so a
+    round shows as a checkpoint + count execution pair — the
+    per-round pin in test_dedup_similarity).
 
-    The RETURNED frame is a final eager localCheckpoint (one extra job,
-    a scan of the already-cached last round): downstream consumers and
-    the PLANS.md audit see the true runtime cost — a bounded
-    ExistingRDD scan — instead of the loop's worst-case unexecuted
-    lineage (round-4 verdict item 4: the dump recorded 82 shuffles the
-    caches never ran).
+    Every round is a ``localCheckpoint``, never ``persist()``: a
+    persisted plan ending in a shuffle keeps all
+    ``spark.sql.shuffle.partitions`` partitions (AQE does not coalesce
+    cached plans), so each round would run one task per shuffle
+    partition however few endpoints there are; a checkpoint keeps AQE's
+    coalesced partitions and truncates the lineage, so the plan stays
+    bounded at any round count. The undirected edge list is checkpointed
+    eagerly once (every round reads it); a round's checkpoint is freed
+    as soon as the next round's is filled. localCheckpoint trades
+    fault-tolerance of the truncated prefix for plan size; a production
+    cluster run can swap in a snapshot write through tables.py for a
+    durable cut.
+
+    The RETURNED frame is a final eager localCheckpoint: downstream
+    consumers and the PLANS.md audit see a bounded ExistingRDD scan, not
+    the loop's lineage.
     """
+    from pii_redactor_spark.operators.cache import (
+        register_local_checkpoint, unpersist_checkpoint)
     und = (
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(edges.select(F.col("id_b").alias("src"),
                             F.col("id_a").alias("dst")))
+        .localCheckpoint(eager=True)
     )
-    labels = nodes.select("node", F.col("node").alias("component"))
-    und = und.persist()
-    prev_handle: DataFrame | None = None
+    labels = und.groupBy("src").agg(
+        F.least(F.col("src"), F.min("dst")).alias("component")
+    ).withColumnRenamed("src", "node")
+    prev: DataFrame | None = None
     try:
         for it in range(max_iter):
-            neighbor_min = (
-                und.join(labels, und.dst == labels.node)
-                .groupBy("src").agg(F.min("component").alias("nmin"))
-            )
-            merged = (
-                labels.join(neighbor_min,
-                            labels.node == neighbor_min.src, "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("component"),
-                        F.coalesce(F.col("nmin"), F.col("component")),
-                    ).alias("component"),
-                    # previous label rides along so convergence is a
-                    # column comparison, never a second join
-                    F.col("component").alias("_oc"),
+            if it:
+                nmin = (
+                    und.join(labels.select(F.col("node").alias("dst"),
+                                           F.col("component").alias("_c")),
+                             "dst")
+                    .groupBy(F.col("src").alias("node"))
+                    .agg(F.min("_c").alias("_nmin"))
                 )
-            )
-            # path-halving: jump each label to its label's label
-            ptr = labels.select(F.col("node").alias("_c"),
-                                F.col("component").alias("_cc"))
-            round_df = (
-                merged.join(ptr, merged.component == ptr._c, "left")
-                .select(
-                    "node",
-                    F.least(F.col("component"),
-                            F.coalesce(F.col("_cc"), F.col("component")))
-                    .alias("component"),
-                    "_oc",
+                merged = labels.join(nmin, "node").select(
+                    "node", F.least("component", "_nmin").alias("component"))
+                ptr = labels.select(F.col("node").alias("_p"),
+                                    F.col("component").alias("_pc"))
+                labels = (
+                    merged.join(ptr, F.col("component") == F.col("_p"))
+                    .select("node",
+                            F.least("component", "_pc").alias("component"))
                 )
+            labels = labels.localCheckpoint(eager=False)
+            split = (
+                und.join(labels.select(F.col("node").alias("src"),
+                                       F.col("component").alias("_cs")),
+                         "src")
+                .join(labels.select(F.col("node").alias("dst"),
+                                    F.col("component").alias("_cd")),
+                      "dst")
+                .where(F.col("_cs") != F.col("_cd"))
+                .count()
             )
-            if (it + 1) % checkpoint_every == 0:
-                # truncate lineage; eager=False so the convergence agg
-                # below is the action that materializes AND checkpoints
-                # the round — one job. The checkpoint's storage is freed
-                # via cache.release_caches (LogicalRDD handle), not
-                # unpersist — a released checkpoint can't be re-run.
-                from pii_redactor_spark.operators.cache import (
-                    register_local_checkpoint)
-                round_df = register_local_checkpoint(
-                    round_df.localCheckpoint(eager=False))
-            else:
-                round_df = round_df.persist()
-            # the round's ONLY action: fills the persist/checkpoint and
-            # returns the number of labels that moved
-            changed = round_df.agg(
-                F.count(F.when(F.col("component") != F.col("_oc"),
-                               F.lit(1))).alias("n")).first()["n"]
-            # checkpointed dfs report is_cached=False, so this only ever
-            # releases the plain persisted rounds
-            if prev_handle is not None and prev_handle.is_cached:
-                prev_handle.unpersist()
-            prev_handle = round_df
-            labels = round_df.select("node", "component")
+            if prev is not None:
+                unpersist_checkpoint(prev)
+            prev = labels
             if stats is not None:
                 stats["rounds"] = it + 1
-            if changed == 0:
+            if split == 0:
                 break
-    finally:
-        und.unpersist()
-    from pii_redactor_spark.operators.cache import register_local_checkpoint
-    final = register_local_checkpoint(labels.localCheckpoint(eager=True))
-    if prev_handle is not None and prev_handle.is_cached:
-        prev_handle.unpersist()  # final checkpoint is self-contained
-    return final
-
-
-def components_star(nodes: DataFrame, edges: DataFrame,
-                    max_iter: int = 30,
-                    checkpoint_every: int = 2,
-                    stats: dict | None = None) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond", Algorithm 3 "two-phase") — the round-halving alternative
-    to the min-label + path-halving loop in
-    :func:`components_from_edges` (round-4 verdict watch-item (a):
-    "large-star/small-star would roughly halve round count on real
-    graphs").
-
-    State is the EDGE SET, not a label table. Each round rewrites it:
-
-    - **large-star**: every node's strictly-larger neighbours hook onto
-      the minimum of its closed neighbourhood (one grouped min + one
-      co-keyed join + distinct);
-    - **small-star**: orient edges (hi, lo); every hi node AND its
-      smaller neighbours hook onto the smallest of them (same shape).
-
-    Both steps preserve the graph's connected components (proved in the
-    paper); the fixed point is a star forest whose roots are the
-    component minima — after small-star every edge points larger ->
-    smaller, so a star's root sits below all its leaves, and one
-    component cannot split into two stars without breaking
-    connectivity preservation.
-
-    Convergence = the star-forest test: a star forest has **no 2-edge
-    chain** (no edge's target is another edge's source — targets are
-    roots and roots have no out-edges). The chain count is an aggregate
-    over a self-join of the round's OWN frame, so materializing the
-    round's persist/checkpoint and testing convergence is ONE
-    full-corpus action per round — the same action budget as
-    components_from_edges (pinned in test_dedup_similarity).
-
-    Per-round cost is higher than the label loop's (2 grouped shuffles
-    + 2 joins + 2 distincts + the convergence self-join, vs 2 joins +
-    1 groupBy). Measured round counts on chain graphs (the worst-case
-    diameter): star 6 vs label 7 at diameter 64, 8 vs 9 at 256, 10 vs
-    11 at 1024 (test_components_star_fewer_rounds pins the 64 case) —
-    both engines are O(log d) because the label loop already
-    path-halves, so star buys one round, not half. Its structural
-    advantages at 100 TB are different: state is the shrinking EDGE
-    SET (each round's distinct contracts it toward one edge per
-    non-root node) rather than a constant-width full-corpus label
-    table, and the paper's proof gives a worst-case round bound that
-    does not depend on the label distribution. Both engines are
-    exposed and hash-identical against the same recursive-CTE oracle.
-
-    Returns ``(node, component)``; singletons keep their own id. The
-    returned frame is a final eager localCheckpoint so downstream plans
-    (and PLANS.md) see a bounded ExistingRDD scan, exactly like
-    components_from_edges.
-    """
-    from pii_redactor_spark.operators.cache import (
-        register_local_checkpoint)
-
-    e0 = (
-        edges.filter(F.col("id_a") != F.col("id_b"))
-        .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-        .distinct()
-        .persist()
-    )
-    e = e0
-    prev_handle: DataFrame | None = None
-    try:
-        for it in range(max_iter):
-            # large-star: v in N(u), v > u  hooks onto m = min(N(u) ∪ {u})
-            nbrs = e.union(e.select(F.col("b").alias("a"),
-                                    F.col("a").alias("b")))
-            lmin = (
-                nbrs.groupBy("a").agg(F.min("b").alias("_nm"))
-                .select("a", F.least(F.col("a"), F.col("_nm")).alias("_m"))
-            )
-            large = (
-                nbrs.join(lmin, "a")
-                .where(F.col("b") > F.col("a"))
-                .select(F.col("b").alias("a"), F.col("_m").alias("b"))
-                .where(F.col("a") != F.col("b"))
-                .distinct()
-            )
-            # small-star: orient (hi, lo); hi + its small neighbours
-            # hook onto min(N_lo(hi))
-            dir2 = large.select(F.greatest("a", "b").alias("u"),
-                                F.least("a", "b").alias("v"))
-            smin = dir2.groupBy("u").agg(F.min("v").alias("_m"))
-            hooked = (
-                dir2.join(smin, "u")
-                .select(F.col("v").alias("a"), F.col("_m").alias("b"))
-                .union(smin.select(F.col("u").alias("a"),
-                                   F.col("_m").alias("b")))
-                .where(F.col("a") != F.col("b"))
-                .distinct()
-            )
-            if (it + 1) % checkpoint_every == 0:
-                # lazy: the convergence count below is the action that
-                # materializes AND checkpoints the round (one job);
-                # storage freed via the cache registry handle.
-                hooked = register_local_checkpoint(
-                    hooked.localCheckpoint(eager=False))
-            else:
-                hooked = hooked.persist()
-            # the round's ONLY action: fills the persist/checkpoint and
-            # counts 2-edge chains (0 <=> star forest <=> fixed point)
-            x = hooked.select(F.col("b").alias("_t"))
-            y = hooked.select(F.col("a").alias("_s"))
-            chains = x.join(y, x._t == y._s).count()
-            if prev_handle is not None and prev_handle.is_cached:
-                prev_handle.unpersist()
-            prev_handle = hooked
-            e = hooked
-            if stats is not None:
-                stats["rounds"] = it + 1
-            if chains == 0:
-                break
-        # star forest -> labels: leaf -> its root; roots and singleton
-        # nodes (no out-edge) keep their own id
-        comp = e.groupBy("a").agg(F.min("b").alias("_c"))
-        labels = (
-            nodes.join(comp, nodes.node == comp.a, "left")
-            .select("node",
-                    F.coalesce(F.col("_c"), F.col("node"))
+        final = register_local_checkpoint(
+            nodes.join(labels, "node", "left")
+            .select("node", F.coalesce("component", "node")
                     .alias("component"))
-        )
-        final = register_local_checkpoint(labels.localCheckpoint(eager=True))
+            .localCheckpoint(eager=True))
     finally:
-        e0.unpersist()
-    if prev_handle is not None and prev_handle.is_cached:
-        prev_handle.unpersist()  # final checkpoint is self-contained
+        unpersist_checkpoint(und)
+        if prev is not None:
+            unpersist_checkpoint(prev)
     return final
+
+
+def dedup_edges(docs: DataFrame, text_col: str = "text",
+                id_col: str = "doc_id",
+                verify_threshold: float | None = None) -> DataFrame:
+    """``(id_a, id_b)`` edges of the near-dup graph: Jaccard-verified
+    pairs when ``verify_threshold`` is set, raw LSH candidates
+    otherwise."""
+    if verify_threshold is None:
+        return lsh_candidate_pairs(docs, text_col, id_col)
+    return (
+        jaccard_pairs(docs, text_col, id_col, verify_threshold)
+        .filter(F.col("is_dup")).select("id_a", "id_b")
+    )
 
 
 def dedup_components(docs: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id",
                      max_iter: int = 30,
-                     verify_threshold: float | None = None,
-                     engine: str = "label") -> DataFrame:
+                     verify_threshold: float | None = None) -> DataFrame:
     """Connected components over the LSH near-dup graph: every document
     mapped to the min doc id of its duplicate cluster (the canonical
     representative for dedup-keep-one).
@@ -612,29 +514,14 @@ def dedup_components(docs: DataFrame, text_col: str = "text",
     candidates: a false-positive band collision can otherwise merge
     unrelated documents into one cluster and drop non-duplicates from a
     rewrite (round-2 advice). The corpus rewrite job always verifies;
-    the raw variant remains for candidate-graph analysis.
-
-    ``engine`` — ``"label"`` (default): min-label + path-halving,
-    lineage-truncated (``components_from_edges``; slimmer rounds, good
-    for the tiny-diameter near-dup graphs where 2-3 rounds is typical);
-    ``"star"``: alternating large-star/small-star
-    (``components_star``; fewer rounds on high-diameter graphs — at
-    100 TB, where each round is a full-corpus barrier, round count
-    dominates). Both return identical labels (equality-tested and
-    oracle-gated against the same recursive-CTE truth).
+    the raw variant remains for candidate-graph analysis. Either way the
+    edges come from one persisted signature frame (``dedup_edges``) and
+    the components from ``components_from_edges``.
     """
-    if verify_threshold is not None:
-        edges = (
-            jaccard_pairs(docs, text_col, id_col, verify_threshold)
-            .filter(F.col("is_dup")).select("id_a", "id_b")
-        )
-    else:
-        edges = lsh_candidate_pairs(docs, text_col, id_col)
     nodes = docs.select(F.col(id_col).alias("node"))
-    if engine == "star":
-        labels = components_star(nodes, edges, max_iter=max_iter)
-    else:
-        labels = components_from_edges(nodes, edges, max_iter=max_iter)
+    labels = components_from_edges(
+        nodes, dedup_edges(docs, text_col, id_col, verify_threshold),
+        max_iter=max_iter)
     return labels.select(F.col("node").alias(id_col), "component")
 
 
@@ -764,20 +651,23 @@ def span_dedup_rewrite(docs: DataFrame, n: int = SPAN_N,
     # overflow its position range into the next doc_id's key space and
     # silently mis-rank the global first occurrence IDENTICALLY on both
     # engines (the oracle mirrors the arithmetic, so it cannot catch
-    # it). raise_error beats mis-ranking; the CASE is lazy per row.
+    # it). raise_error beats mis-ranking; the CASE is lazy per row. It
+    # fires only on a KNOWN overflow: the optimizer may evaluate the
+    # key on the NULL-position rows of empty documents before the
+    # isNotNull filter drops them (an intermittent failure otherwise).
     occ = (
         pre.select(id_col, F.posexplode_outer("_g").alias("pos", "g"))
         .where(F.col("g").isNotNull())
         .withColumn("_k", F.when(
-            F.col("pos") < F.lit(_SPAN_POS_LIM),
-            F.col(id_col) * F.lit(_SPAN_POS_LIM) + F.col("pos"))
-            .otherwise(F.raise_error(F.format_string(
+            F.col("pos") >= F.lit(_SPAN_POS_LIM),
+            F.raise_error(F.format_string(
                 "span_dedup_rewrite: document position %s exceeds "
                 "_SPAN_POS_LIM=%s words — raise the limit (doc ids "
                 "must stay < 2^63/LIM)",
                 F.col("pos").cast("string"),
-                F.lit(str(_SPAN_POS_LIM))))
-                .cast("bigint")))
+                F.lit(str(_SPAN_POS_LIM)))).cast("bigint"))
+            .otherwise(F.col(id_col) * F.lit(_SPAN_POS_LIM)
+                       + F.col("pos")))
     )
     owners = occ.groupBy("g").agg(F.min("_k").alias("_mn"),
                                   F.count("*").alias("_n"))
@@ -902,11 +792,14 @@ _WORDS_SQL = (
 
 
 def _shingles_sql(words: str, k: int = SHINGLE_K) -> str:
+    # DuckDB's array_to_string([]) is NULL where Spark's array_join gives
+    # '': an empty document's one shingle is '' on both sides
     return (
         f"CASE WHEN len({words}) >= {k} THEN "
         f"list_transform(range(len({words}) - {k} + 1), i -> "
         f"array_to_string(list_slice({words}, CAST(i+1 AS INT), CAST(i+{k} AS INT)), ' ')) "
-        f"ELSE [array_to_string({words}, ' ')] END"
+        f"ELSE [CASE WHEN len({words}) = 0 THEN '' "
+        f"ELSE array_to_string({words}, ' ') END] END"
     )
 
 
@@ -1041,11 +934,12 @@ def span_dedup_rewrite_paragraphs(docs: DataFrame,
         .where(F.col("l").isNotNull())
         .withColumn("_h", F.md5("l"))
         .withColumn("_k", F.when(
-            F.col("pos") < F.lit(_SPAN_POS_LIM),
-            F.col(id_col) * F.lit(_SPAN_POS_LIM) + F.col("pos"))
-            .otherwise(F.raise_error(F.lit(
+            F.col("pos") >= F.lit(_SPAN_POS_LIM),
+            F.raise_error(F.lit(
                 "span_dedup_rewrite_paragraphs: position exceeds "
-                "_SPAN_POS_LIM")).cast("bigint")))
+                "_SPAN_POS_LIM")).cast("bigint"))
+            .otherwise(F.col(id_col) * F.lit(_SPAN_POS_LIM)
+                       + F.col("pos")))
     )
     owners = occ.groupBy("_h").agg(F.min("_k").alias("_mn"),
                                    F.count("*").alias("_n"))
@@ -1333,10 +1227,16 @@ def dedup_against(new_docs: DataFrame, old_docs: DataFrame,
             .withColumn("_n", F.lit(1))
         )
     else:
+        from pii_redactor_spark.operators.cache import registered_persist
+        # one signature pass over the drop: its band keys find the
+        # candidates, its shingle-hash sets verify them
+        new_sigs = registered_persist(signatures(new_docs, text_col, id_col))
         old_bf = old_bf_src.select(
             "band_idx", "band_hash", F.col(id_col).alias("_oid"))
-        cand = (
-            minhash_bands(new_docs, text_col, id_col)
+        # read twice (old-side prune, verify join): persisted so the old
+        # side's band keys are computed once when they are not stored
+        cand = registered_persist(
+            _explode_bands(new_sigs, id_col)
             .join(old_bf, ["band_idx", "band_hash"])
             .select(F.col(id_col), "_oid").distinct()
         )
@@ -1345,27 +1245,15 @@ def dedup_against(new_docs: DataFrame, old_docs: DataFrame,
         old_hit = old_docs.join(
             cand.select(F.col("_oid").alias(id_col)).distinct(),
             id_col, "left_semi")
-
-        def _ssets(d: DataFrame, sid: str) -> DataFrame:
-            return (
-                d.withColumn("_words", words_expr(F.col(text_col)))
-                .select(F.col(id_col).alias(sid),
-                        F.array_distinct(
-                            shingles_expr(F.col("_words"))).alias(
-                            f"_set_{sid}"))
-            )
-
+        old_sets = with_shingle_hashes(
+            old_hit.select(id_col, text_col), text_col).select(
+            F.col(id_col).alias("_oid"), F.col("sh_set").alias("_set_o"))
         near_ids = (
             cand
-            .join(_ssets(new_docs, "_nid"),
-                  cand[id_col] == F.col("_nid"))
-            .join(_ssets(old_hit, "_osid"),
-                  F.col("_oid") == F.col("_osid"))
-            .where(
-                F.size(F.array_intersect("_set__nid", "_set__osid"))
-                .cast("double")
-                / F.size(F.array_union("_set__nid", "_set__osid"))
-                >= F.lit(verify_threshold))
+            .join(new_sigs.select(id_col, F.col("sh_set").alias("_set_n")),
+                  id_col)
+            .join(old_sets, "_oid")
+            .where(_jaccard("_set_n", "_set_o") >= F.lit(verify_threshold))
             .select(id_col).distinct()
             .withColumn("_n", F.lit(1))
         )

@@ -14,6 +14,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pii_redactor_spark.contract import QUERIES  # noqa: E402
+from pii_redactor_spark.operators.cache import release_caches  # noqa: E402
+from pii_redactor_spark.operators.dedup import dedup_edges  # noqa: E402
 from pii_redactor_spark.session import get_spark  # noqa: E402
 
 
@@ -60,28 +62,40 @@ def summarize(plan: str) -> list[str]:
 # worst-case lineage, 82 shuffles the caches never ran).
 ITERATIVE_NOTES = {
     "q_dedup_components": (
-        "iterative (min-label + path-halving): per round = 1 neighbor-min "
-        "join + 1 pointer join + the convergence agg riding the SAME "
-        "materializing action (ONE full-corpus action/round, "
-        "execution-count-pinned in test_dedup_similarity); lineage "
-        "truncated by localCheckpoint every 3 rounds; returned frame = "
-        "final checkpoint scan below"),
+        "iterative (min-label + path-halving) over edge endpoints only: "
+        "round 1 is the closed form least(src, min(dst)) — one groupBy; "
+        "later rounds = 1 neighbor-min join + groupBy + 1 pointer join; "
+        "each round is a lazy localCheckpoint filled by its stop test "
+        "(count of edges whose endpoint labels differ under the new "
+        "labels), so the converging round is the last; returned frame = "
+        "final checkpoint scan below, edge phase (the loop's input) "
+        "after it"),
     "q_dedup_components_verified": (
-        "same loop as q_dedup_components over Jaccard-verified edges"),
-    "q_dedup_components_star": (
-        "iterative (alternating large-star/small-star, Kiveris et al. "
-        "2014): per round = 2 grouped mins + 2 co-keyed joins + 2 "
-        "distincts on a SHRINKING edge set, convergence = 2-edge-chain "
-        "count over the round's own frame (ONE full-corpus action/round, "
-        "execution-count-pinned); measured rounds on chains: 6 vs the "
-        "label engine's 7 at diameter 64 — both O(log d); returned "
-        "frame = final checkpoint scan below"),
+        "same loop as q_dedup_components over Jaccard-verified edges; "
+        "the edge phase reads ONE persisted signature frame (one "
+        "text -> shingle-hash projection feeding one Arrow pass) for "
+        "both candidates and verification"),
     "q_kmeans": (
         "fixed-iteration Lloyd: per iteration = 1 projection-only "
         "assignment + 1 constant-size (cid,pos) decimal-mean shuffle, "
         "driver roundtrip between iterations (zero lineage growth); "
         "the dumped plan is the final assignment projection"),
 }
+
+# The components queries' edge phase: the plan the loop consumes, which
+# the checkpointed result no longer shows.
+EDGE_PHASES = {
+    "q_dedup_components": {},
+    "q_dedup_components_verified": {"verify_threshold": 0.8},
+}
+
+
+def _plan_block(plan: str) -> list[str]:
+    # keep plans readable: cap very long lines (expression dumps)
+    return (["```"]
+            + [ln[:200] + (" …" if len(ln) > 200 else "")
+               for ln in plan.splitlines()]
+            + ["```"])
 
 
 def main() -> None:
@@ -106,12 +120,17 @@ def main() -> None:
                 out.append("")
                 out.append(f"**Iterative shape:** {ITERATIVE_NOTES[name]}")
             out.append("")
-            out.append("```")
-            # keep plans readable: cap very long lines (expression dumps)
-            for ln in plan.splitlines():
-                out.append(ln[:200] + (" …" if len(ln) > 200 else ""))
-            out.append("```")
+            out.extend(_plan_block(plan))
             out.append("")
+            if name in EDGE_PHASES:
+                docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+                edges = dedup_edges(docs, **EDGE_PHASES[name])
+                eplan = edges._jdf.queryExecution().executedPlan().toString()
+                out.append("**Edge phase:** " + "; ".join(summarize(eplan)))
+                out.append("")
+                out.extend(_plan_block(eplan))
+                out.append("")
+            release_caches()
     finally:
         spark.stop()
     Path("PLANS.md").write_text("\n".join(out))

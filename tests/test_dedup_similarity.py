@@ -120,22 +120,21 @@ def test_connected_components_chain(spark):
 def test_components_long_chain_bounded_plan(spark):
     """Round-2 verdict item 2: an adversarial long chain must converge
     with a BOUNDED logical plan. Path-halving makes the rounds
-    O(log diameter); localCheckpoint every 3 rounds truncates lineage so
-    the converged plan never carries more than ~3 rounds of operators
-    (round 2 grew 58 shuffles on a diameter-3 graph already)."""
+    O(log diameter); every round is a localCheckpoint, so the converged
+    plan never carries more than one round of operators (round 2 grew
+    58 shuffles on a diameter-3 graph already)."""
     from pii_redactor_spark.operators.cache import release_caches
     from pii_redactor_spark.operators.dedup import components_from_edges
     n = 50
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                   "id_a long, id_b long")
-    labels = components_from_edges(nodes, edges, max_iter=30,
-                                   checkpoint_every=3)
+    labels = components_from_edges(nodes, edges, max_iter=30)
     rows = labels.collect()
     assert len(rows) == n
     assert all(r["component"] == 0 for r in rows)  # one cluster, min label
-    # lineage bound: <= checkpoint_every rounds of (2 joins + ptr join)
-    # survive in the optimized plan, independent of rounds executed
+    # lineage bound: at most one round of joins survives in the
+    # optimized plan, independent of rounds executed
     opt = labels._jdf.queryExecution().optimizedPlan().toString()
     assert opt.count("Join") <= 12, opt.count("Join")
     release_caches()
@@ -481,6 +480,30 @@ def test_null_text_band_hash_is_null_like_oracle(spark):
     assert pairs == []
 
 
+def test_band_keys_match_oracle_called_directly(spark):
+    """minhash_bands itself (not the contract's view) against
+    minhash_bands_oracle_sql run in DuckDB over the same rows: NULL
+    text (NULL keys), empty text and a 2-word doc (one whole-document
+    shingle) and a normal doc."""
+    import duckdb
+
+    from pii_redactor_spark.operators.cache import release_caches
+    rows = [(0, None), (1, ""), (2, "two words"), (3, BASE)]
+    got = sorted(
+        (r["doc_id"], r["band_idx"], r["band_hash"] or "")
+        for r in dedup.minhash_bands(spark.createDataFrame(
+            rows, "doc_id long, text string")).collect())
+    release_caches()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    want = sorted((d, b, h or "") for d, b, h in con.execute(
+        dedup.minhash_bands_oracle_sql()).fetchall())
+    assert len(got) == 4 * dedup.LSH_BANDS
+    assert got == want
+    assert all(h == "" for d, _, h in got if d == 0)
+
+
 def test_span_rewrite_keeps_first_occurrence_only(spark):
     """Rewrite semantics (Lee et al. keep-one-copy): the globally first
     doc keeps its text verbatim, an exact duplicate is emptied, a doc
@@ -549,17 +572,14 @@ def test_span_rewrite_position_overflow_fails_loudly(spark, monkeypatch):
 
 
 def test_components_one_job_per_round(spark):
-    """Round-4 verdict item 5: the convergence check rides the round's
-    own materializing aggregate (the previous label is a column on the
-    round frame), so a round costs exactly ONE full-corpus action —
-    never the old second neighbor-vs-old count-JOIN. Measured as SQL
-    EXECUTIONS (AQE/broadcast builds legitimately split one action into
-    several jobs; an execution is what a 100 TB round pays full-corpus
-    latency for). max_iter=4 with no checkpoint round inside: 4 rounds
-    x 1 execution + the single final eager checkpoint = 5. A lazy
-    checkpoint round adds one BOOKKEEPING execution (verified 0 jobs in
-    Spark 4.1 — Dataset.checkpoint always records a withAction), still
-    one materializing action."""
+    """Round-4 verdict item 5: a round is materialized by exactly one
+    job group — the SQL executions that started jobs, grouped per round
+    — and the stop test rides it, never a second full-corpus action.
+    AQE runs a lazy checkpoint's shuffle stages inside the
+    ``localCheckpoint`` call, so a round's group is that call plus the
+    stop-test count that fills it. Around the rounds: the eager
+    undirected-edge checkpoint before, the final eager checkpoint after.
+    Executions that start no job (bookkeeping) are not counted."""
     from pii_redactor_spark.operators.cache import release_caches
     n = 50
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
@@ -569,17 +589,81 @@ def test_components_one_job_per_round(spark):
 
     def executions():
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return store.executionsCount()
+        out, it = [], store.executionsList().iterator()
+        while it.hasNext():
+            e = it.next()
+            out.append((e.executionId(), e.description().split(" ")[0],
+                        e.jobs().size()))
+        return sorted(out)
 
-    before = executions()
+    before = {e[0] for e in executions()}
     try:
-        labels = dedup.components_from_edges(
-            nodes, edges, max_iter=4, checkpoint_every=5)
-        # 4 rounds x 1 materializing agg + 1 final eager checkpoint
-        assert executions() - before == 5
+        st: dict = {}
+        labels = dedup.components_from_edges(nodes, edges, max_iter=4,
+                                             stats=st)
+        assert st["rounds"] == 4  # the chain needs more than 4 rounds
+        ran = [d for i, d, jobs in executions()
+               if i not in before and jobs > 0]
+        assert ran == (["localCheckpoint"]
+                       + ["localCheckpoint", "count"] * st["rounds"]
+                       + ["localCheckpoint"]), ran
         assert labels.columns == ["node", "component"]
     finally:
         release_caches()
+
+
+def test_components_exhaustive_small_graphs(spark):
+    """Every labeled graph on 1..5 nodes (1,099 graphs), as ONE
+    disjoint union — graph g on ids 10g..10g+4 — must match union-find
+    in a single components_from_edges call; covers every shape the
+    one-round stop test could misjudge, e.g. the path 0-3-2-4-1 on
+    which the deleted star engine returned two components."""
+    import itertools
+
+    from pii_redactor_spark.operators.cache import release_caches
+    from tests.test_properties import _uf_components
+    node_ids, edge_ids = [], []
+    g = 0
+    for k in range(1, 6):
+        pairs = list(itertools.combinations(range(k), 2))
+        for mask in range(1 << len(pairs)):
+            es = [p for j, p in enumerate(pairs) if mask >> j & 1]
+            node_ids += [10 * g + v for v in range(k)]
+            edge_ids += [(10 * g + a, 10 * g + b) for a, b in es]
+            g += 1
+    assert g == 1099
+    want = _uf_components(10 * g, edge_ids)
+    nodes = spark.createDataFrame([(v,) for v in node_ids], "node long")
+    edges = spark.createDataFrame(edge_ids, "id_a long, id_b long")
+    got = {r["node"]: r["component"]
+           for r in dedup.components_from_edges(nodes, edges).collect()}
+    release_caches()
+    assert got == {v: want[v] for v in node_ids}
+    path = spark.createDataFrame([(0, 3), (3, 2), (2, 4), (4, 1)],
+                                 "id_a long, id_b long")
+    five = spark.createDataFrame([(i,) for i in range(5)], "node long")
+    comp = {r["node"]: r["component"]
+            for r in dedup.components_from_edges(five, path).collect()}
+    release_caches()
+    assert comp == {i: 0 for i in range(5)}
+
+
+def test_components_clique_converges_in_one_round(spark):
+    """On a clique the closed-form first round already gives every
+    node the minimum, and the stop test sees it in the same round."""
+    from pii_redactor_spark.operators.cache import release_caches
+    n = 12
+    nodes = spark.createDataFrame([(i,) for i in range(n + 3)], "node long")
+    edges = spark.createDataFrame(
+        [(a, b) for a in range(3, 3 + n) for b in range(a + 1, 3 + n)],
+        "id_a long, id_b long")
+    st: dict = {}
+    comp = {r["node"]: r["component"] for r in
+            dedup.components_from_edges(nodes, edges, stats=st).collect()}
+    release_caches()
+    assert st["rounds"] == 1
+    assert comp == {**{i: i for i in range(3)},
+                    **{i: 3 for i in range(3, 3 + n)}}
 
 
 def test_components_returned_plan_is_bounded_scan(spark):
@@ -656,82 +740,6 @@ def test_pq_fitted_codebook_recall_at_least_orthant(spark):
     release_caches()
     assert len(fit & exact) >= len(orth & exact)
     assert len(fit & exact) / len(exact) >= 0.8
-
-
-def test_components_star_matches_label_engine(spark):
-    """Round-4 verdict watch-item (a): the large-star/small-star engine
-    must produce exactly the label engine's (node, component) set on a
-    graph with merged chains, a cycle, and singletons."""
-    from pii_redactor_spark.operators.cache import release_caches
-    nodes = spark.createDataFrame([(i,) for i in range(12)], "node long")
-    edges = spark.createDataFrame(
-        # chain 0-1-2-3, triangle 5-6-7 (cycle), pair 9-10, dup edge,
-        # self-loop (must be ignored); 4, 8, 11 are singletons
-        [(0, 1), (1, 2), (2, 3), (5, 6), (6, 7), (7, 5), (9, 10),
-         (10, 9), (4, 4)],
-        "id_a long, id_b long")
-    lab = {(r["node"], r["component"])
-           for r in dedup.components_from_edges(nodes, edges).collect()}
-    release_caches()
-    star = {(r["node"], r["component"])
-            for r in dedup.components_star(nodes, edges).collect()}
-    release_caches()
-    assert star == lab
-    comp = dict(star)
-    assert comp[0] == comp[1] == comp[2] == comp[3] == 0
-    assert comp[5] == comp[6] == comp[7] == 5
-    assert comp[9] == comp[10] == 9
-    assert comp[4] == 4 and comp[8] == 8 and comp[11] == 11
-
-
-def test_components_star_fewer_rounds(spark):
-    """Measured claim in the components_star docstring: on a 64-node
-    chain (worst-case diameter) the star engine converges in 6 rounds
-    vs the label engine's 7 — both O(log d) since the label loop
-    path-halves; star never takes MORE rounds."""
-    from pii_redactor_spark.operators.cache import release_caches
-    n = 64
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
-    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
-                                  "id_a long, id_b long")
-    sl, ss = {}, {}
-    lab = dedup.components_from_edges(nodes, edges, max_iter=30, stats=sl)
-    assert all(r["component"] == 0 for r in lab.collect())
-    release_caches()
-    star = dedup.components_star(nodes, edges, max_iter=30, stats=ss)
-    assert all(r["component"] == 0 for r in star.collect())
-    release_caches()
-    assert ss["rounds"] <= sl["rounds"], (ss, sl)
-    assert ss["rounds"] <= 8  # O(log 64) with the paper's constant
-
-
-def test_components_star_one_execution_per_round(spark):
-    """Same action-budget pin as test_components_one_job_per_round: a
-    star round's convergence self-join count is the ONE materializing
-    SQL execution (it fills the round's persist); an already-star graph
-    converges in 1 round -> 1 round execution + 1 final eager
-    checkpoint = 2."""
-    from pii_redactor_spark.operators.cache import release_caches
-    nodes = spark.createDataFrame([(i,) for i in range(5)], "node long")
-    edges = spark.createDataFrame([(1, 0), (2, 0), (3, 0)],
-                                  "id_a long, id_b long")
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def executions():
-        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        return store.executionsCount()
-
-    before = executions()
-    try:
-        st = {}
-        labels = dedup.components_star(nodes, edges, max_iter=10,
-                                       checkpoint_every=5, stats=st)
-        assert executions() - before == 2, executions() - before
-        assert st["rounds"] == 1
-        comp = {r["node"]: r["component"] for r in labels.collect()}
-        assert comp == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4}
-    finally:
-        release_caches()
 
 
 def test_soft_dedup_weights(spark):

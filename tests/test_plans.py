@@ -302,20 +302,26 @@ def test_soft_dedup_no_window_partial_agg(spark, docs):
     assert "partial_count" in plan or "partial" in plan.lower(), plan
 
 
-def test_components_star_returned_plan_is_bounded_scan(spark):
-    """Same runtime-truth guard as the label engine: the star engine's
-    returned frame is a final eager localCheckpoint — a bounded
-    ExistingRDD scan, not the loop's worst-case lineage."""
-    from pii_redactor_spark.operators import dedup
+def test_verified_edges_read_one_signature_frame(spark, docs):
+    """dedup_components(verify_threshold) builds its edges from ONE
+    persisted signature frame: candidates (band keys) and verification
+    (shingle-hash sets) both scan the same InMemoryRelation, which holds
+    the only text -> shingle-hash projection and the only Arrow pass."""
     from pii_redactor_spark.operators.cache import release_caches
-    nodes = spark.createDataFrame([(i,) for i in range(6)], "node long")
-    edges = spark.createDataFrame([(0, 1), (1, 2), (4, 5)],
-                                  "id_a long, id_b long")
-    out = dedup.components_star(nodes, edges)
-    plan = _plan(out)
-    assert "Scan ExistingRDD" in plan
-    assert "Exchange" not in plan or plan.count("Exchange") <= 1, plan
-    assert len(out.collect()) == 6
+    from pii_redactor_spark.operators.dedup import dedup_edges
+    plan = _plan(dedup_edges(docs, verify_threshold=0.8))
+
+    def distinct(marker):
+        return {ln.split(marker, 1)[1] for ln in plan.splitlines()
+                if marker in ln}
+
+    # each scan re-prints the cached subtree (same expression ids), so
+    # one pass shows as one distinct line, printed once per scan
+    assert len(distinct("ArrowEvalPython")) == 1, plan
+    assert len(distinct("array_distinct(transform(")) == 1, plan
+    n_scans = plan.count("InMemoryRelation [")
+    assert n_scans >= 2, plan  # candidates and verification share it
+    assert plan.count("ArrowEvalPython") == n_scans, plan
     release_caches()
 
 

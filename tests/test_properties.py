@@ -191,10 +191,9 @@ def _uf_components(n_nodes: int, edges: list[tuple[int, int]]) -> dict:
 @settings(max_examples=8, deadline=None)
 @given(st.data())
 def test_cc_engines_match_union_find(spark, data):
-    """Both distributed CC engines (min-label + path-halving, and
-    large-star/small-star) must equal a driver-side union-find on
-    arbitrary small graphs — self-loops, parallel/reversed edges,
-    singletons and all."""
+    """The distributed CC engine (min-label + path-halving) must equal a
+    driver-side union-find on arbitrary small graphs — self-loops,
+    parallel/reversed edges, singletons and all."""
     from pii_redactor_spark.operators import dedup
     from pii_redactor_spark.operators.cache import release_caches
     n = data.draw(st.integers(min_value=1, max_value=14))
@@ -205,7 +204,7 @@ def test_cc_engines_match_union_find(spark, data):
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
     edf = spark.createDataFrame(
         [(a, b) for a, b in edges] or [(0, 0)], "id_a long, id_b long")
-    for fn in (dedup.components_from_edges, dedup.components_star):
-        got = {r["node"]: r["component"] for r in fn(nodes, edf).collect()}
-        release_caches()
-        assert got == want, (fn.__name__, n, edges)
+    got = {r["node"]: r["component"]
+           for r in dedup.components_from_edges(nodes, edf).collect()}
+    release_caches()
+    assert got == want, (n, edges)
