@@ -937,9 +937,10 @@ def q_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Language ID over the corpus (north-star fastText-style langid;
-# kernels/langid.py). Round-4: served by the EXPRESSION form (hashed
-# char-bigram NB, BIGINT-quantized weights, md5 bucket fold — the
-# quality_clf recipe) so the query is fully oracle-gated; the pandas-UDF
+# kernels/langid.py). Round-4: served by an engine-reproducible char-
+# bigram NB (BIGINT-quantized weights, md5 bucket fold — the quality_clf
+# recipe; integer score sums in one Arrow pass) so the query is fully
+# oracle-gated; the pandas-UDF
 # kernel remains the flagship-path scorer (q_pipeline_full) and both
 # are pinned to 100% seed-sentence accuracy in test_rules_kernels.
 # ---------------------------------------------------------------------------
@@ -956,8 +957,8 @@ def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Deduplication family (training-data pipeline ops; operators/dedup.py):
 # exact hash-dedup, MinHash+LSH bands, candidate pairs, Jaccard verify,
-# SimHash. All signatures are projection-only md5-based expressions so the
-# DuckDB oracle reproduces them exactly.
+# SimHash. All signatures are shuffle-free and md5-based (JVM hashing, one
+# integer-exact Arrow pass) so the DuckDB oracle reproduces them exactly.
 # ---------------------------------------------------------------------------
 from pii_redactor_spark.operators import dedup as _dd  # noqa: E402
 from pii_redactor_spark.operators import fingerprint as _fp  # noqa: E402
@@ -1860,10 +1861,9 @@ def q_proto_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Neural-encoder slot (kernels/encoder.py, round-3 verdict item 7): a
 # deterministic 2-layer integer MLP over hashed BoW — the text->vector
 # surface a production pipeline fills with a fitted sentence encoder
-# (artifact-swappable, kernels/artifacts.py encoder.npz). Expression
-# serving is BIGINT-exact end to end (relu = greatest), so the whole
-# NETWORK is oracle-gated, and the iterator-pandas-UDF twin is
-# equality-tested in tests/test_encoder.py. q_ann_mlp closes the loop:
+# (artifact-swappable, kernels/artifacts.py encoder.npz). The iterator-
+# pandas-UDF serving is BIGINT-exact end to end (relu = greatest), so
+# the whole NETWORK is oracle-gated. q_ann_mlp closes the loop:
 # the encoder's vectors feeding the ANN family.
 # ---------------------------------------------------------------------------
 from pii_redactor_spark.kernels import encoder as _enc  # noqa: E402

@@ -16,18 +16,17 @@ Architecture (all integer arithmetic until the caller converts):
     h_j    = relu(sum_w sign(w) * W1[bucket(w), j] + b1_j)
     e_k    = sum_j h_j * W2[j, k]
 
-Exact BIGINT everywhere, so the Spark expression serving, the numpy
-iterator-pandas-UDF twin (equality-tested), and the DuckDB oracle agree
-bit-for-bit — the engine-reproducibility discipline of
-kernels/quality_clf.py applied to a nonlinear model: relu is
-``greatest(0, .)`` in every engine, and a linear layer is a sum of
+Exact BIGINT everywhere, so the numpy iterator-pandas-UDF serving form
+and the DuckDB oracle agree bit-for-bit — the engine-reproducibility
+discipline of kernels/quality_clf.py applied to a nonlinear model: relu
+is ``greatest(0, .)`` in both engines, and a linear layer is a sum of
 per-word integer contributions, so the only order-sensitive step
 (float accumulation) never occurs.
 
-Scale shape: serving is a pure projection over the scan (zero shuffle,
-zero Python in the expression form); the UDF form crosses one Arrow
-batch per task. Layer widths are artifact constants — a fitted
-replacement only changes the literals.
+Scale shape: zero shuffle; the per-word md5 bucketing is a JVM
+projection over the scan and the network crosses one Arrow batch per
+task. Layer widths are artifact constants — a fitted replacement only
+changes the weight arrays.
 """
 
 from __future__ import annotations
@@ -95,7 +94,7 @@ def bow_bucket(word: str, dim: int = MLP_IN) -> tuple[int, int]:
 
 
 # ---------------------------------------------------------------------------
-# Spark expression serving (zero Python, zero shuffle)
+# Spark serving: JVM-side word bucketing, Arrow/numpy network
 # ---------------------------------------------------------------------------
 
 def _word_sig(w: Column, dim: int) -> Column:
@@ -109,55 +108,15 @@ def _word_sig(w: Column, dim: int) -> Column:
     return F.struct(bucket.alias("bucket"), sign.alias("sign"))
 
 
-def _hid_fold(sigs: Column, w_lit: Column) -> Column:
-    """Closure factory (HOF arity rule): pre-activation of one hidden
-    unit — exact BIGINT sum of sign * W1[bucket] over the words."""
-    return F.aggregate(
-        sigs, F.lit(0).cast("bigint"),
-        lambda acc, s: acc + s["sign"] * F.element_at(w_lit,
-                                                      s["bucket"] + 1))
-
-
-def with_mlp_embedding(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """(id, emb: array<bigint>[MLP_OUT]) — the expression-form encoder.
-    Hidden units are MLP_HID independent integer folds over the
-    materialized per-word (bucket, sign) array; relu + the output layer
-    are literal arithmetic over the MLP_HID hidden columns."""
-    w1, b1, w2 = mlp_weights()
-    from pii_redactor_spark.functions.rules import words_col
-    pre = (
-        docs
-        .withColumn("_words", words_col(F.col(text_col)))
-        .withColumn("_sigs", F.transform(
-            F.col("_words"), lambda w: _word_sig(w, len(w1))))
-    )
-    for j in range(len(b1)):
-        col_lit = F.expr("array({})".format(
-            ",".join(f"{int(w1[i][j])}L" for i in range(len(w1)))))
-        # coalesce: NULL text folds to the bias-only activation, exactly
-        # like the oracle's COALESCE(SUM(...), 0) (the dsir NULL-parity
-        # lesson from round-3 ADVICE)
-        pre = pre.withColumn(
-            f"_h{j}",
-            F.greatest(F.coalesce(_hid_fold(F.col("_sigs"), col_lit),
-                                  F.lit(0).cast("bigint"))
-                       + F.lit(int(b1[j])).cast("bigint"),
-                       F.lit(0).cast("bigint")))
-    outs = []
-    for k in range(w2.shape[1]):
-        term = F.lit(0).cast("bigint")
-        for j in range(len(b1)):
-            term = term + F.col(f"_h{j}") * F.lit(int(w2[j][k]))
-        outs.append(term)
-    return pre.select(id_col, F.array(*outs).alias("emb"))
-
-
 def make_mlp_embed_udf():
-    """Iterator pandas UDF twin: per-batch numpy scatter + two integer
-    matmuls — identical bits to the expression form (equality-tested in
-    test_encoder). Takes the pre-computed (bucket, sign) arrays so the
-    md5 hashing stays JVM-side (the simhash/BoW precedent).
+    """Iterator pandas UDF: per-batch numpy scatter + two integer
+    matmuls — identical bits to the oracle (tested in test_encoder).
+    Takes the pre-computed (bucket, sign) arrays so the md5 hashing
+    stays JVM-side (the simhash/BoW precedent). As expressions the
+    MLP_HID hidden units are interpreted aggregate folds that rebuild
+    the accumulator per word, allocation-bound like the simhash
+    majority vote (mlp_summary at sf0.1: 1.74 s as expressions, 0.42 s
+    through this UDF).
 
     Weights are resolved HERE, at UDF construction time, so cloudpickle
     ships the actual arrays in the closure: the UDF body executes in
@@ -188,9 +147,9 @@ def make_mlp_embed_udf():
                 idx = np.repeat(np.arange(n), lens)
                 np.add.at(x, (idx, flatb), flats)
             # NULL text keeps its zero row: the network emits the
-            # bias-only activation, exactly like the expression form's
-            # coalesced folds (and the oracle's COALESCE(SUM, 0)) — a
-            # None here would silently diverge on NULL-text corpora
+            # bias-only activation, exactly like the oracle's
+            # COALESCE(SUM, 0) — a None here would silently diverge on
+            # NULL-text corpora
             h = np.maximum(x @ w1 + b1, 0)
             e = h @ w2
             yield pd.Series([list(row) for row in e])
@@ -200,7 +159,8 @@ def make_mlp_embed_udf():
 
 def mlp_embeddings_udf(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:
-    """The UDF-served form of ``with_mlp_embedding`` (same output)."""
+    """(id, emb: array<bigint>[MLP_OUT]) — the encoder output: per-word
+    (bucket, sign) arrays built JVM-side feed ``make_mlp_embed_udf``."""
     from pii_redactor_spark.functions.rules import words_col
     pre = (
         docs
@@ -277,25 +237,14 @@ def probe_vector(out_dim: int = MLP_OUT) -> list[int]:
 
 
 def mlp_summary(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id",
-                vectorized: bool = True) -> DataFrame:
+                id_col: str = "doc_id") -> DataFrame:
     """(id, emb_sq, argmax_pos, probe_dot) — contract-safe scalar view
     of the MLP embedding (the driver's canonicalizer cannot hash raw
     array cells). Every column is exact BIGINT: emb_sq is the sum of
     squared coordinates (round-4 ADVICE — its rounded square root was
     a rounded double in an oracle-gated output; consumers derive the
-    L2 norm with one sqrt).
-
-    ``vectorized=True`` (default) serves the network through the
-    Arrow/numpy twin — bit-identical to the expression form (integer
-    arithmetic end to end, equality-tested), measured 1.74 -> 0.42 s at
-    sf0.1: MLP_HID independent interpreted aggregate folds rebuild the
-    accumulator per element, the same allocation-bound pattern as the
-    simhash majority vote; the md5 bucketing stays JVM-side either
-    way. ``False`` keeps the pure-expression plan (the DuckDB-oracle-
-    mirrored form, plan-guarded projection-only)."""
-    embed = mlp_embeddings_udf if vectorized else with_mlp_embedding
-    emb = embed(docs, text_col, id_col)
+    L2 norm with one sqrt)."""
+    emb = mlp_embeddings_udf(docs, text_col, id_col)
     probe = F.expr("array({})".format(
         ",".join(f"{v}L" for v in probe_vector())))
     sq = F.aggregate(
@@ -330,17 +279,13 @@ FROM emb
 
 
 def mlp_ann(docs: DataFrame, k: int = 10, n_queries: int = 5,
-            text_col: str = "text", id_col: str = "doc_id",
-            udf_form: bool = True) -> DataFrame:
+            text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact top-k cosine search over the MLP embeddings — the encoder
     feeding the ANN family end-to-end (queries = lowest ids). The dot
     products are integer-valued doubles < 2^53, so the cosine is
-    bit-identical across engines and fold orders. ``udf_form`` defaults
-    to the Arrow twin for the same allocation-bound reason as
-    ``mlp_summary`` (outputs identical either way, equality-tested)."""
+    bit-identical across engines and fold orders."""
     from pii_redactor_spark.operators.similarity import ann_bruteforce
-    embed = mlp_embeddings_udf if udf_form else with_mlp_embedding
-    emb = embed(docs, text_col, id_col).select(
+    emb = mlp_embeddings_udf(docs, text_col, id_col).select(
         F.col(id_col).alias("vec_id"), F.col("emb").alias("embedding"))
     return ann_bruteforce(emb, k=k, n_queries=n_queries)
 

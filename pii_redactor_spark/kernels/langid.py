@@ -153,7 +153,7 @@ def make_langid_udf():
 
 
 # ---------------------------------------------------------------------------
-# Expression-form language ID — the oracle-gated serving twin.
+# Oracle-gated language ID (q_langid).
 #
 # Same published shape as the pandas-UDF kernel above (fastText-style
 # hashed char-n-gram NB, Joulin et al. 2016) re-expressed with the
@@ -161,13 +161,13 @@ def make_langid_udf():
 # char-BIGRAM log-likelihoods are quantized to BIGINT (x 1e6), bigram
 # buckets come from the first-8-hex-chars md5 fold (reproducible in
 # DuckDB via the strpos fold), per-language scores are exact BIGINT
-# aggregate folds, and argmax is a deterministic >=-CASE chain in
-# sorted-language order. Zero Python, zero shuffle — a projection over
-# the scan; the UDF kernel stays the flagship-path scorer (wider 1-3
-# gram features + confidence), this form is what the contract oracle
-# bit-checks. Both fit the same embedded seed corpora and both score
-# every seed sentence to its true language (pinned in
-# tests/test_rules_kernels.py).
+# sums, and argmax takes the first maximum in sorted-language order
+# (the oracle's >=-CASE chain). Zero shuffle: bigram bucketing is a JVM
+# projection over the scan, the score sums one Arrow pass. The UDF
+# kernel stays the flagship-path scorer (wider 1-3 gram features +
+# confidence); this form is what the contract oracle bit-checks. Both
+# fit the same embedded seed corpora and both score every seed
+# sentence to its true language (pinned in tests/test_rules_kernels.py).
 # ---------------------------------------------------------------------------
 LANGID_EXPR_DIM = 2048
 _EXPR_SCALE = 1_000_000
@@ -209,21 +209,17 @@ def _lg_bucket_expr(bg, dim: int):
                   F.lit(dim)).cast("int")
 
 
-def _lang_score(bk_col, w_lit):
-    """Closure factory (never default-arg lambdas — HOF arity rule):
-    exact BIGINT sum of per-bigram weights."""
-    return F.aggregate(bk_col, F.lit(0).cast("bigint"),
-                       lambda acc, bk: acc + F.element_at(w_lit, bk + 1))
-
-
 def make_langid_score_udf(dim: int = LANGID_EXPR_DIM):
-    """Arrow twin of the per-language score folds: one segmented
-    gather-sum per language over the pre-computed bigram-bucket arrays
-    (md5 bucketing stays JVM-side), argmax with first-max tie-break —
-    np.argmax returns the FIRST maximum, which is exactly the
-    >=-CASE chain's earliest-language-wins semantics. Integer
-    arithmetic end to end, so bit-identical to the expression form
-    (equality-tested in test_rules_kernels)."""
+    """The per-language scores as one segmented gather-sum per language
+    over the pre-computed bigram-bucket arrays (md5 bucketing stays
+    JVM-side), argmax with first-max tie-break — np.argmax returns the
+    FIRST maximum, which is exactly the oracle's >=-CASE chain's
+    earliest-language-wins semantics. Integer arithmetic end to end, so
+    bit-identical to the oracle (tested in test_rules_kernels). As
+    expressions the five per-language sums are interpreted aggregate
+    folds over ~400-element arrays, allocation-bound like the simhash
+    majority vote (measured 2.32 s vs ~0.6 s through this UDF at
+    sf0.1)."""
     from pyspark.sql.types import StringType
 
     @F.pandas_udf(StringType())
@@ -256,8 +252,7 @@ def make_langid_score_udf(dim: int = LANGID_EXPR_DIM):
 def langid_expr_columns(docs: "DataFrame", text_col: str = "text",
                         id_col: str = "doc_id",
                         extra_cols: tuple[str, ...] = (),
-                        dim: int = LANGID_EXPR_DIM,
-                        vectorized: bool = True) -> "DataFrame":
+                        dim: int = LANGID_EXPR_DIM) -> "DataFrame":
     """(id, *extra_cols, lang_pred): the oracle-gated language-ID
     serving path.
 
@@ -266,15 +261,8 @@ def langid_expr_columns(docs: "DataFrame", text_col: str = "text",
     element_at inside a transform re-evaluates the captured array PER
     ELEMENT when CollapseProject inlines it, the O(n^2) trap in
     CLAUDE.md). Documents shorter than 2 chars (or NULL) predict NULL,
-    matching the oracle's length guard.
-
-    ``vectorized=True`` (default) runs the five per-language score
-    folds through the Arrow twin (measured 2.32 -> ~0.6 s at sf0.1:
-    five interpreted aggregate folds over ~400-element arrays are
-    allocation-bound, the simhash-majority-vote pattern); md5 bucketing
-    stays JVM-side. ``False`` keeps the pure-expression plan (the
-    DuckDB-oracle-mirrored form; bit-identical, equality-tested)."""
-    langs, W = fit_langid_expr(dim)
+    matching the oracle's length guard; the scores and the argmax run
+    in ``make_langid_score_udf``."""
     pre = (
         docs
         .withColumn("_lc", F.lower(F.col(text_col)))
@@ -291,25 +279,9 @@ def langid_expr_columns(docs: "DataFrame", text_col: str = "text",
         .withColumn("_bk", F.transform(
             F.col("_bgs"), lambda bg: _lg_bucket_expr(bg, dim)))
     )
-    if vectorized:
-        return pre.select(
-            id_col, *extra_cols,
-            make_langid_score_udf(dim)(F.col("_bk")).alias("lang_pred"))
-    for i, lang in enumerate(langs):
-        w_lit = F.expr("array({})".format(
-            ",".join(f"{int(v)}L" for v in W[i])))
-        pre = pre.withColumn(f"_s_{lang}", _lang_score(F.col("_bk"), w_lit))
-    # argmax as a >=-CASE chain in sorted-lang order (ties -> earliest),
-    # guarded so short/NULL text yields NULL — identical chain in SQL
-    chain = F.lit(langs[-1])
-    for i in range(len(langs) - 2, -1, -1):
-        cond = None
-        for j in range(i + 1, len(langs)):
-            c = F.col(f"_s_{langs[i]}") >= F.col(f"_s_{langs[j]}")
-            cond = c if cond is None else (cond & c)
-        chain = F.when(cond, F.lit(langs[i])).otherwise(chain)
-    pred = F.when(F.length("_lc") >= 2, chain)
-    return pre.select(id_col, *extra_cols, pred.alias("lang_pred"))
+    return pre.select(
+        id_col, *extra_cols,
+        make_langid_score_udf(dim)(F.col("_bk")).alias("lang_pred"))
 
 
 def langid_expr_oracle_sql(table: str = "documents",

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 
 from pii_redactor_spark.operators.cache import registered_persist
 from pii_redactor_spark.operators.similarity import (
-    EMB_DIM, _cos_sql, _d2, as_double, cosine)
+    EMB_DIM, _cos_sql, _d2, as_double)
 
 KM_K = 8          # coarse-quantizer size on the synthetic corpus
 KM_ITERS = 3      # fixed Lloyd iterations (unrolled in the oracle)
@@ -202,9 +202,9 @@ def _semdedup_flags_arrow(assigned: DataFrame, tau: float) -> DataFrame:
     group crosses to Python once; the pairwise cosine matrix is built by
     a VERTICAL fold over dimensions (one vectorized outer-product add
     per dim), so every matrix entry is the same left-to-right double
-    fold as the expression/DuckDB `aggregate(zip_with(...))` — norms are
-    per-vector self-dots (identical bits to the per-pair
-    sqrt(dot(a,a)) the oracle computes). This is the sanctioned
+    fold as the DuckDB oracle's dot product — norms are per-vector
+    self-dots (identical bits to the per-pair sqrt(dot(a,a)) the oracle
+    computes). This is the sanctioned
     Arrow/numpy hop (CLAUDE.md): 250k interpreted zip_with pairs at
     sf0.1 are allocation-bound exactly like the simhash per-bit case.
 
@@ -238,10 +238,10 @@ def _semdedup_flags_arrow(assigned: DataFrame, tau: float) -> DataFrame:
                 D += np.outer(col[lo:hi], col[:hi])
             with np.errstate(invalid="ignore", divide="ignore"):
                 C = D / np.outer(norm[lo:hi], norm[:hi])
-            # Spark and DuckDB both order NaN ABOVE every number, so
-            # the expression/oracle path flags a 0/0 cosine (zero-norm
-            # vector) as >= tau; mirror that here instead of numpy's
-            # NaN>=x = False. Row i may only match columns j < i.
+            # DuckDB orders NaN ABOVE every number, so the oracle flags
+            # a 0/0 cosine (zero-norm vector) as >= tau; mirror that
+            # here instead of numpy's NaN>=x = False. Row i may only
+            # match columns j < i.
             hit = (C >= tau) | np.isnan(C)
             mask = (np.arange(hi)[None, :]
                     < np.arange(lo, hi)[:, None])
@@ -254,30 +254,8 @@ def _semdedup_flags_arrow(assigned: DataFrame, tau: float) -> DataFrame:
         flag, "vec_id long, cid int, is_dup boolean")
 
 
-def _semdedup_flags_expr(assigned: DataFrame, tau: float) -> DataFrame:
-    """Expression-form reference: pairwise equi-join on cid + JVM cosine
-    fold. Same rows as the Arrow path (equality-tested); kept as the
-    direct mirror of the DuckDB oracle."""
-    assigned = registered_persist(assigned)
-    a, b = assigned.alias("a"), assigned.alias("b")
-    dups = (
-        a.join(b, (F.col("a.cid") == F.col("b.cid"))
-               & (F.col("b.vec_id") < F.col("a.vec_id")))
-        .where(cosine(F.col("a.v"), F.col("b.v")) >= F.lit(tau))
-        .select(F.col("a.vec_id").alias("vec_id"))
-        .distinct()
-        .withColumn("_dup", F.lit(True))
-    )
-    return (
-        assigned.join(F.broadcast(dups), "vec_id", "left")
-        .select("vec_id", "cid",
-                F.coalesce(F.col("_dup"), F.lit(False)).alias("is_dup"))
-    )
-
-
 def semdedup(emb: DataFrame, k: int = KM_K, iters: int = KM_ITERS,
              tau: float = SEM_TAU, dim: int = EMB_DIM,
-             arrow: bool = True,
              cents: list[tuple[int, list[float]]] | None = None
              ) -> DataFrame:
     """SemDeDup: k-means-cluster the embeddings, then mark a vector as a
@@ -285,8 +263,8 @@ def semdedup(emb: DataFrame, k: int = KM_K, iters: int = KM_ITERS,
     cosine >= tau (keep-lowest representative — the deterministic
     analogue of the paper's keep-one-per-dup-group).
 
-    Shape: pairwise work happens ONLY within a cluster (grouped Arrow
-    pass, or an equi-join on cid with ``arrow=False``), so cost is
+    Shape: pairwise work happens ONLY within a cluster (one grouped
+    Arrow pass keyed on cid, ``_semdedup_flags_arrow``), so cost is
     bounded by the per-cluster size, never all-pairs across the corpus.
     Output: (vec_id, cid:int, is_dup:boolean).
     """
@@ -295,9 +273,7 @@ def semdedup(emb: DataFrame, k: int = KM_K, iters: int = KM_ITERS,
     assigned = (
         _assign(_vecs(emb), cents)
         .select("vec_id", F.col("cid").cast("int").alias("cid"), "v"))
-    if arrow:
-        return _semdedup_flags_arrow(assigned, tau)
-    return _semdedup_flags_expr(assigned, tau)
+    return _semdedup_flags_arrow(assigned, tau)
 
 
 # ---------------------------------------------------------------------------

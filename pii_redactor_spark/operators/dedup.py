@@ -63,13 +63,16 @@ def words_expr(text: Column) -> Column:
 def shingles_expr(words: Column, k: int = SHINGLE_K) -> Column:
     """Word k-shingles joined by single spaces; documents shorter than k
     words contribute one whole-document shingle so no doc has an empty
-    signature."""
+    signature. NULL words (NULL text) give a NULL array, never
+    ``[NULL]``: a null element would float every list of its Arrow
+    batch (see ``make_minhash_udf``)."""
     n = F.size(words)
     full = F.transform(
         F.sequence(F.lit(0), n - k),
         lambda i: F.array_join(F.slice(words, i + 1, k), " "),
     )
-    return F.when(n >= k, full).otherwise(F.array(F.array_join(words, " ")))
+    return (F.when(n >= k, full)
+            .when(words.isNotNull(), F.array(F.array_join(words, " "))))
 
 
 @lru_cache(maxsize=None)
@@ -82,122 +85,58 @@ def minhash_masks(h: int = MINHASH_H) -> tuple[int, ...]:
     )
 
 
-def minhash_sig_exprs(hashes: Column, h: int = MINHASH_H) -> list[Column]:
-    """H minhashes over a pre-materialized array<bigint> of 60-bit
-    shingle hashes: sig_i = min over shingles of (hash XOR mask_i).
-
-    One md5 per shingle + H cheap XOR permutations instead of H full md5
-    passes — 16x less hashing, the dominant cost at corpus scale.
-
-    NB: single-parameter lambdas only — a two-parameter lambda (even
-    `lambda s, i=i`) is treated by PySpark as an (element, index)
-    higher-order function and the second arg becomes the index Column.
-    """
-    def one(mask: int) -> Column:
-        return F.array_min(F.transform(
-            hashes, lambda x: x.bitwiseXOR(F.lit(mask))))
-
-    return [one(m) for m in minhash_masks(h)]
-
-
 def word_hash60(w: Column) -> Column:
     """First 60 bits of md5(input) as a signed bigint (conv parses hex).
     Signed-64-safe in both Spark and DuckDB; also used for shingles."""
     return F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("bigint")
 
 
-def simhash60_expr(hashes: Column) -> Column:
-    """60-bit SimHash over a pre-materialized array<bigint> of word hashes.
-
-    Per-bit majority vote as pure expressions: bit b is set iff more than
-    half the word hashes have bit b set. 60 filter passes over a short
-    array — projection-only, no shuffle. (An explode+groupBy formulation
-    shuffles |words|*60 rows per doc; strictly worse at corpus scale.)
-    """
-    n = F.size(hashes)
-
-    def bit_count(b: int) -> Column:
-        # single-parameter lambda: two-parameter lambdas become
-        # (element, index) HOFs in PySpark (see minhash_sig_exprs)
-        return F.size(F.filter(
-            hashes, lambda h: F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1))
-
-    terms = []
-    for b in range(SIMHASH_BITS):
-        cnt = bit_count(b)
-        terms.append(F.when(cnt * 2 > n, F.lit(1 << b)).otherwise(F.lit(0)))
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out.cast("bigint")
-
-
 def make_minhash_udf(h: int = MINHASH_H, bands: int = LSH_BANDS,
                      rows: int = LSH_ROWS):
-    """Arrow pass over the shingle-hash sets: the H XOR-min permutations
-    and the LSH band keys, as ``struct<sig, band_keys>``.
+    """Arrow pass from the shingle-hash sets to the LSH band keys
+    (``array<string>``, ``bands`` md5 hex keys per document).
 
-    ``sig`` — per batch, one vectorized ``minimum.reduceat(flat ^ mask,
-    segments)`` per mask. All values are 60-bit non-negatives, so int64
-    XOR/min are exact — bit-identical to the expression form
-    (equality-tested). At H=128 the expression form is 128 interpreted
-    array_min(transform) passes per row — the same allocation-bound
-    pattern as the simhash majority vote, and the same remedy; the md5
-    shingle hashing stays JVM-side.
+    The H XOR-min permutations are one vectorized
+    ``minimum.reduceat(flat ^ mask, segments)`` per mask over the
+    batch. All values are 60-bit non-negatives, so int64 XOR/min are
+    exact (the oracle's ``list_min(list_transform(h -> xor(h, mask)))``).
+    As expressions they are 128 interpreted array_min(transform) passes
+    per row — the same allocation-bound pattern as the simhash majority
+    vote, and the same remedy; the md5 shingle hashing stays JVM-side.
 
-    ``band_keys`` — ``bands`` md5 hex keys, key b = md5 of signature rows
-    ``b*rows .. b*rows+rows-1`` as decimals joined by ``'|'`` (the
-    oracle's ``CAST(s AS VARCHAR) || '|' || ...``). A key is NULL when
-    any of its rows is NULL — the oracle's ``||`` propagates NULL, so a
+    Key b = md5 of signature rows ``b*rows .. b*rows+rows-1`` as
+    decimals joined by ``'|'`` (the oracle's
+    ``CAST(s AS VARCHAR) || '|' || ...``). A NULL (or empty) set gets
+    NULL keys — the oracle's ``||`` propagates the NULL minimum, so a
     NULL-text document lands in no bucket instead of one shared
     md5('|||…') bucket. Computing the keys here replaces a
-    bands x rows element_at/cast/concat/md5 expression per row."""
-    from pyspark.sql.types import (ArrayType, LongType, StringType,
-                                   StructField, StructType)
-    masks = np.array(minhash_masks(h), dtype=np.int64)
-    out_type = StructType([
-        StructField("sig", ArrayType(LongType())),
-        StructField("band_keys", ArrayType(StringType())),
-    ])
+    bands x rows element_at/cast/concat/md5 expression per row.
 
-    def _clean(v):
-        """Per-row int64 view with NULL elements dropped — mirrors
-        array_min's skip-nulls semantics. Arrow surfaces a null list
-        element as object-None or float-NaN; the int fast path (the
-        whole corpus, normally) costs nothing."""
-        a = np.asarray(v)
-        if a.dtype.kind == "f":
-            # Arrow only floats a list that CONTAINS nulls; in this
-            # operator that is the all-null [NULL] shingle set (null
-            # text), so nothing surviving the NaN filter ever passed
-            # through a lossy float (60-bit values exceed 2^53)
-            a = a[~np.isnan(a)]
-        elif a.dtype == object:
-            a = np.asarray([x for x in v if x is not None],
-                           dtype=np.int64)
-        return a.astype(np.int64, copy=False)
+    The sets must hold no NULL element: one null element anywhere in a
+    batch makes Arrow hand EVERY list of the batch to pandas as float64,
+    which rounds 60-bit hashes (``shingles_expr`` keeps NULL text a NULL
+    set for this reason)."""
+    from pyspark.sql.types import ArrayType, StringType
+    masks = np.array(minhash_masks(h), dtype=np.int64)
 
     def _keys(sig: list[int]) -> list[str]:
         return [hashlib.md5("|".join(
             map(str, sig[b * rows:(b + 1) * rows])).encode()).hexdigest()
             for b in range(bands)]
 
-    @F.pandas_udf(out_type)
-    def minhash_np(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        # all-null shingle set -> null sig rows (exactly array_min over an
-        # all-null transform) -> null band keys
-        null_sig, null_keys = [None] * len(masks), [None] * bands
+    @F.pandas_udf(ArrayType(StringType()))
+    def minhash_np(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        null_keys = [None] * bands
         for hashes in batches:
             n = len(hashes)
-            cleaned = [None if v is None else _clean(v) for v in hashes]
-            lens = np.array([0 if v is None else len(v) for v in cleaned],
+            sets = [None if v is None else np.asarray(v, dtype=np.int64)
+                    for v in hashes]
+            lens = np.array([0 if v is None else len(v) for v in sets],
                             dtype=np.int64)
-            sig_col: list = [None if v is None else list(null_sig)
-                             for v in cleaned]
             key_col: list = [list(null_keys) for _ in range(n)]
             if lens.sum() > 0:
                 flat = np.concatenate(
-                    [v for v in cleaned if v is not None and len(v)])
+                    [v for v in sets if v is not None and len(v)])
                 seg = np.zeros(n + 1, dtype=np.int64)
                 np.cumsum(lens, out=seg[1:])
                 nz = lens > 0
@@ -208,10 +147,8 @@ def make_minhash_udf(h: int = MINHASH_H, bands: int = LSH_BANDS,
                     sigs[:, j] = np.minimum.reduceat(flat ^ m,
                                                      segs_nz)
                 for i, sig in zip(np.flatnonzero(nz), sigs.tolist()):
-                    sig_col[i] = sig
                     key_col[i] = _keys(sig)
-            yield pd.DataFrame({"sig": sig_col, "band_keys": key_col},
-                               index=hashes.index)
+            yield pd.Series(key_col, index=hashes.index)
 
     return minhash_np
 
@@ -231,20 +168,6 @@ def with_shingle_hashes(docs: DataFrame, text_col: str = "text"
     )
 
 
-def with_minhash(docs: DataFrame, text_col: str = "text",
-                 h: int = MINHASH_H,
-                 vectorized: bool = True) -> DataFrame:
-    """Attach `sig` (array<bigint> of H minhashes) over the shingle-hash
-    set. ``vectorized`` (default) computes the H permutations through the
-    Arrow pass (bit-identical; see make_minhash_udf); ``False`` keeps the
-    expression-only plan (the DuckDB-oracle-mirrored form). The min over
-    a distinct set equals the min over the full shingle list."""
-    pre = with_shingle_hashes(docs, text_col)
-    sig = (make_minhash_udf(h)(F.col("sh_set"))["sig"] if vectorized
-           else F.array(*minhash_sig_exprs(F.col("sh_set"), h)))
-    return pre.withColumn("sig", sig).drop("sh_set")
-
-
 def signatures(docs: DataFrame, text_col: str = "text",
                id_col: str = "doc_id", h: int = MINHASH_H,
                bands: int = LSH_BANDS,
@@ -255,7 +178,7 @@ def signatures(docs: DataFrame, text_col: str = "text",
     reads ``sh_set``. Callers that need both persist this frame, so each
     document is split, shingled and hashed once."""
     sets = with_shingle_hashes(docs.select(id_col, text_col), text_col)
-    keys = make_minhash_udf(h, bands, rows)(F.col("sh_set"))["band_keys"]
+    keys = make_minhash_udf(h, bands, rows)(F.col("sh_set"))
     return sets.select(id_col, "sh_set", keys.alias("band_keys"))
 
 
@@ -731,9 +654,7 @@ def make_simhash_udf():
     numpy path 0.71 s. Expression-level per-bit counting is
     allocation-bound however formulated, so the majority vote is the
     one place the Arrow hop beats whole-stage codegen — the hashing
-    itself stays JVM-side (only the bigint arrays cross to Python).
-    ``simhash60_expr`` remains as the expression-only reference
-    implementation (oracle-mirrored, used by the equality test)."""
+    itself stays JVM-side (only the bigint arrays cross to Python)."""
     from pyspark.sql.types import LongType
 
     @F.pandas_udf(LongType())
@@ -756,30 +677,26 @@ def make_simhash_udf():
                 maj = 2 * counts > lens[:, None]
                 out = (maj.astype(np.uint64) << shifts).sum(axis=1) \
                     .astype(np.int64)
-            # null text folds to 0, matching the expression form (its
-            # per-bit WHENs all fall through on null comparisons)
+            # null text folds to 0, matching the oracle (its per-bit
+            # CASEs all fall through on null comparisons)
             yield pd.Series(out, index=hashes.index)
 
     return simhash_np
 
 
 def simhash(docs: DataFrame, text_col: str = "text",
-            id_col: str = "doc_id", vectorized: bool = True) -> DataFrame:
-    """(id, simhash:bigint) — 60-bit SimHash per document.
-
-    ``vectorized=True`` (default) runs the majority vote through the
-    Arrow/numpy UDF (fastest measured, see ``make_simhash_udf``);
-    ``False`` keeps the pure-expression plan (zero Python, the
-    DuckDB-oracle-mirrored form)."""
+            id_col: str = "doc_id") -> DataFrame:
+    """(id, simhash:bigint) — 60-bit SimHash per document: JVM-side word
+    hashes, majority vote through the Arrow/numpy UDF (see
+    ``make_simhash_udf``)."""
     pre = (
         docs
         .withColumn("_words", words_expr(F.col(text_col)))
         .withColumn("_hashes",
                     F.transform(F.col("_words"), word_hash60))
     )
-    vote = (make_simhash_udf()(F.col("_hashes")) if vectorized
-            else simhash60_expr(F.col("_hashes")))
-    return pre.select(id_col, vote.alias("simhash"))
+    return pre.select(id_col,
+                      make_simhash_udf()(F.col("_hashes")).alias("simhash"))
 
 
 # ---------------------------------------------------------------------------

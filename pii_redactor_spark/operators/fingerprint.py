@@ -32,8 +32,10 @@ def normalized_text(text: Column) -> Column:
 
 
 def winnow_expr(shingle_hashes: Column, w: int = WINNOW_WINDOW) -> Column:
-    """Sorted distinct window-minimum hashes. Short docs (< w shingles)
-    use one whole-array window."""
+    """Sorted distinct non-NULL window-minimum hashes. Short docs (< w
+    shingles) use one whole-array window; NULL shingles (NULL text) give
+    an empty array — DuckDB's ``list_distinct`` drops the NULL window
+    minimum that Spark's ``array_distinct`` keeps."""
     n = F.size(shingle_hashes)
     mins = F.transform(
         F.sequence(F.lit(0), n - w),
@@ -41,13 +43,16 @@ def winnow_expr(shingle_hashes: Column, w: int = WINNOW_WINDOW) -> Column:
     )
     picked = F.when(n >= w, mins).otherwise(
         F.array(F.array_min(shingle_hashes)))
-    return F.array_sort(F.array_distinct(picked))
+    return F.array_sort(F.filter(F.array_distinct(picked),
+                                 lambda h: h.isNotNull()))
 
 
 def fingerprints(docs: DataFrame, text_col: str = "text",
                  id_col: str = "doc_id") -> DataFrame:
     """(id, content_fp, n_fps, winnow_fps) — winnow_fps serialized to a
-    comma-joined string so value-hash comparison is array-layout-proof."""
+    comma-joined string so value-hash comparison is array-layout-proof;
+    NULL text gives ``(NULL, 0, NULL)`` like the oracle (DuckDB's
+    ``array_to_string([])`` is NULL)."""
     pre = (
         docs
         .withColumn("_words", words_expr(F.col(text_col)))
@@ -59,7 +64,7 @@ def fingerprints(docs: DataFrame, text_col: str = "text",
         id_col,
         F.md5(normalized_text(F.col(text_col))).alias("content_fp"),
         F.size(winnow).cast("int").alias("n_fps"),
-        F.array_join(winnow, ",").alias("winnow_fps"),
+        F.nullif(F.array_join(winnow, ","), F.lit("")).alias("winnow_fps"),
     )
 
 

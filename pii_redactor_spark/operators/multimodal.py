@@ -131,24 +131,33 @@ def extract_media_meta(media: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            metas = [_fake_decode(p) for p in pdf["payload"]]
+            # a NULL payload decodes to NULL metadata (the oracle's
+            # md5(NULL)) and has no resize target or frame samples
+            metas = [(None,) * 4 if p is None else _fake_decode(p)
+                     for p in pdf["payload"]]
             resized = [
-                resize_dims(m[0], m[1]) if not mime.startswith("audio/")
+                resize_dims(m[0], m[1])
+                if m[0] is not None and not mime.startswith("audio/")
                 else (None, None)
                 for m, mime in zip(metas, pdf["mime"])
             ]
             yield pd.DataFrame({
                 "doc_id": pdf["doc_id"].astype("int64"),
                 "mime": pdf["mime"],
-                "n_bytes": [len(p) for p in pdf["payload"]],
-                "width": [m[0] for m in metas],
-                "height": [m[1] for m in metas],
+                "n_bytes": pd.array(
+                    [None if p is None else len(p) for p in pdf["payload"]],
+                    dtype="Int32"),
+                "width": pd.array([m[0] for m in metas], dtype="Int32"),
+                "height": pd.array([m[1] for m in metas], dtype="Int32"),
                 "duration_s": [m[2] for m in metas],
                 "feature": [m[3] for m in metas],
-                "feature_checksum": [round(sum(m[3]), 6) for m in metas],
+                "feature_checksum": [
+                    None if m[3] is None else round(sum(m[3]), 6)
+                    for m in metas],
                 "frame_samples": [
-                    sample_frames(m[2]) if mime.startswith("video/") else []
-                    for m, mime in zip(metas, pdf["mime"])
+                    sample_frames(m[2])
+                    if m[2] is not None and mime.startswith("video/")
+                    else [] for m, mime in zip(metas, pdf["mime"])
                 ],
                 "resized_w": pd.array([r[0] for r in resized],
                                       dtype="Int32"),
@@ -202,15 +211,17 @@ def media_meta_resize_sql(table: str = "documents",
                           max_side: int = RESIZE_MAX_SIDE) -> str:
     """Oracle twin of ``resize_dims`` over the media_meta base: integer
     floor division on both engines (Python ``//`` == DuckDB ``//`` for
-    positive operands), NULL for audio."""
+    positive operands), NULL for audio and for a NULL payload (no
+    dimensions; without the guard DuckDB's NULL-skipping ``greatest``
+    would give 1)."""
     return f"""
 WITH meta AS ({media_meta_oracle_sql(table)})
 SELECT doc_id, mime, width, height,
-  CASE WHEN mime LIKE 'audio/%' THEN NULL
+  CASE WHEN mime LIKE 'audio/%' OR width IS NULL THEN NULL
        WHEN greatest(width, height) <= {max_side} THEN width
        ELSE CAST(greatest(1, (width * {max_side})
                  // greatest(width, height)) AS INT) END AS resized_w,
-  CASE WHEN mime LIKE 'audio/%' THEN NULL
+  CASE WHEN mime LIKE 'audio/%' OR width IS NULL THEN NULL
        WHEN greatest(width, height) <= {max_side} THEN height
        ELSE CAST(greatest(1, (height * {max_side})
                  // greatest(width, height)) AS INT) END AS resized_h

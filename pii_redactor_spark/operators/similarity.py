@@ -409,16 +409,20 @@ def _pq_cells_np(cell_rows, m: int, d: int) -> list:
 
 
 def make_pq_encode_udf(cells_np: list, d: int):
-    """Arrow-hop PQ encoder: argmin squared-L2 over <=256 codewords per
-    subspace, vectorized in numpy. The expression form (``pq_encode``)
-    evaluates the codeword loop in interpreted HOFs and re-inlines the
-    subvector slice per element (measured 6.5 s vs 0.5 s at sf0.1);
-    this is the same sanctioned vertical-vectorization hop as the
-    SimHash popcount (dedup.py). Bit parity with the expression form
-    and the DuckDB oracle: the distance accumulates coordinate-by-
-    coordinate LEFT-TO-RIGHT (never np.sum, whose pairwise order
-    differs), every step an elementwise IEEE double op, and np.argmin
-    takes the FIRST minimum == lowest pattern position."""
+    """Arrow-hop PQ encoder: ``v: array<double>`` -> ``code``
+    (array<int>, one 1-based codeword position per subspace) — argmin
+    squared L2 over <=256 codewords per subspace (ties -> lowest
+    position == lowest pattern), vectorized in numpy. At scale this
+    pass rewrites 256 B/vector into m bytes (32x) ahead of any distance
+    scan. As
+    expressions the codeword loop runs in interpreted HOFs and
+    re-inlines the subvector slice per element (measured 6.5 s vs
+    0.5 s at sf0.1); this is the same sanctioned vertical-vectorization
+    hop as the SimHash popcount (dedup.py). Bit parity with the DuckDB
+    oracle: the distance accumulates coordinate-by-coordinate
+    LEFT-TO-RIGHT (never np.sum, whose pairwise order differs), every
+    step an elementwise IEEE double op, and np.argmin takes the FIRST
+    minimum == lowest pattern position."""
     from pyspark.sql.types import ArrayType, IntegerType
 
     @F.pandas_udf(ArrayType(IntegerType()))
@@ -439,38 +443,6 @@ def make_pq_encode_udf(cells_np: list, d: int):
     return enc
 
 
-def pq_encode(corpus: DataFrame, cells: list[Column],
-              dim: int = EMB_DIM, m: int = PQ_M) -> DataFrame:
-    """Append ``code`` (array<int>, one 1-based codeword position per
-    subspace) to a corpus of (..., v: array<double>). Assignment is
-    argmin squared L2 against the subspace's codewords (ties -> lowest
-    position == lowest pattern), pure projection: zero shuffle, zero
-    Python — at scale this pass rewrites 256 B/vector into m bytes
-    (32x) ahead of any distance scan.
-
-    This is the expression REFERENCE form (retained for the equality
-    test vs the vectorized encoder); ``ann_pq`` uses
-    ``make_pq_encode_udf`` in the hot path."""
-    d = dim // m
-    out = corpus
-    for s in range(m):
-        out = out.withColumn(f"_sub{s}", F.slice(F.col("v"), s * d + 1, d))
-
-    # closure factory; the 2-param lambda is (element, index) by design
-    def cands(s: int) -> Column:
-        return F.transform(
-            cells[s],
-            lambda cw, i: F.struct(
-                _d2(F.col(f"_sub{s}"), cw).alias("d2"),
-                i.alias("pos")))
-
-    code = F.array(*[
-        (F.array_min(cands(s))["pos"] + 1).cast("int") for s in range(m)
-    ])
-    return out.withColumn("code", code).drop(
-        *[f"_sub{s}" for s in range(m)])
-
-
 def ann_pq(emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES,
            m: int = PQ_M, refine: int = PQ_REFINE,
            cell_rows: list | None = None) -> DataFrame:
@@ -479,7 +451,7 @@ def ann_pq(emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES,
 
     1. fit the codebook once (``pq_fit_cells`` — orthant-mean cells,
        <= 256 codewords per subspace, a tiny collected artifact);
-    2. encode the corpus (``pq_encode`` — the 32x-compressed
+    2. encode the corpus (``make_pq_encode_udf`` — the 32x-compressed
        representation you'd persist next to the parquet at scale);
     3. per query, precompute m lookup tables: d2 from the query's s-th
        subvector to every codeword (m x K doubles, materialized on the
@@ -807,8 +779,9 @@ def make_bow_embed_udf(dim: int = EMBED_DIM):
     element) — the same allocation-bound pattern as the simhash majority
     vote (dedup.py make_simhash_udf) and the same remedy. All
     contributions are ±1.0 (exact in doubles regardless of summation
-    order), so numpy and the expression/DuckDB folds agree bit-for-bit;
-    the md5 bucketing stays JVM-side."""
+    order), so numpy and the DuckDB fold agree bit-for-bit; the md5
+    bucketing stays JVM-side. An empty (or NULL) bucket array gives the
+    zero vector with norm 0."""
     from pyspark.sql.types import (
         ArrayType, DoubleType, StructField, StructType)
 
@@ -836,32 +809,23 @@ def make_bow_embed_udf(dim: int = EMBED_DIM):
             norms = np.sqrt((acc * acc).sum(axis=1))
             safe = np.where(norms[:, None] > 0, norms[:, None], 1.0)
             emb = np.where(norms[:, None] > 0, acc / safe, acc)
-            # null text -> null emb/norm, matching the expression fold
-            isnull = np.array([b is None for b in buckets])
-            yield pd.DataFrame({
-                "emb": [None if nz else e
-                        for e, nz in zip(emb, isnull)],
-                "norm": [None if nz else v
-                         for v, nz in zip(norms, isnull)],
-            })
+            yield pd.DataFrame({"emb": list(emb), "norm": norms})
 
     return bow
 
 
 def text_embeddings(docs: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id",
-                    dim: int = EMBED_DIM,
-                    vectorized: bool = True) -> DataFrame:
-    """(id, emb: array<double>[dim]) — L2-normalized signed-hash BoW
-    projection. Per-word (bucket, sign) is materialized once JVM-side
-    (nested HOFs re-evaluate unbound subtrees per element); the dense
-    fold runs through ``make_bow_embed_udf`` by default (2.5x faster,
-    bit-identical — see its docstring) or as the pure-expression
-    aggregate with ``vectorized=False`` (the DuckDB-oracle-mirrored
-    form). Zero shuffle; all counts are small integers in doubles, so
-    every engine sums them exactly."""
+                    dim: int = EMBED_DIM) -> DataFrame:
+    """(id, emb: array<double>[dim], emb_norm) — L2-normalized
+    signed-hash BoW projection. Per-word (bucket, sign) is materialized
+    once JVM-side (nested HOFs re-evaluate unbound subtrees per
+    element); the dense fold runs through ``make_bow_embed_udf``. Zero
+    shuffle; all counts are small integers in doubles, so every engine
+    sums them exactly. NULL text reads as '' (the zero vector, norm 0),
+    as in the oracle, whose empty fold COALESCEs to 0."""
     from pii_redactor_spark.functions.rules import words_col
-    t = F.col(text_col)
+    t = F.coalesce(F.col(text_col), F.lit(""))
     pre = (
         docs
         .withColumn("_words", words_col(t))
@@ -870,38 +834,12 @@ def text_embeddings(docs: DataFrame, text_col: str = "text",
             lambda w: F.md5(F.concat(F.lit("eb:"), w))))
         .withColumn("_ws", F.transform(F.col("_md5"),
                                        lambda m: _sig_from_md5(m, dim)))
+        .withColumn("_b", F.transform(F.col("_ws"), lambda s: s["bucket"]))
+        .withColumn("_s", F.transform(F.col("_ws"), lambda s: s["sign"]))
+        .withColumn("_e", make_bow_embed_udf(dim)(F.col("_b"), F.col("_s")))
     )
-    if vectorized:
-        pre = (
-            pre
-            .withColumn("_b", F.transform(F.col("_ws"), lambda s: s["bucket"]))
-            .withColumn("_s", F.transform(F.col("_ws"), lambda s: s["sign"]))
-            .withColumn("_e", make_bow_embed_udf(dim)(F.col("_b"),
-                                                      F.col("_s")))
-        )
-        return pre.select(id_col, F.col("_e.emb").alias("emb"),
-                          F.col("_e.norm").alias("emb_norm"))
-    raw = F.aggregate(
-        F.col("_ws"),
-        F.expr(f"array_repeat(0.0D, {dim})"),
-        lambda acc, s: F.transform(
-            acc, lambda v, i: v + F.when(s["bucket"] == i, s["sign"])
-            .otherwise(F.lit(0.0))),
-    )
-    norm = F.sqrt(F.aggregate(
-        F.col("_raw"), F.lit(0.0), lambda a, x: a + x * x))
-    return (
-        pre
-        .withColumn("_raw", raw)
-        .withColumn("_norm", norm)
-        .select(
-            id_col,
-            F.when(F.col("_norm") > 0,
-                   F.transform(F.col("_raw"), lambda x: x / F.col("_norm")))
-            .otherwise(F.col("_raw")).alias("emb"),
-            F.col("_norm").alias("emb_norm"),
-        )
-    )
+    return pre.select(id_col, F.col("_e.emb").alias("emb"),
+                      F.col("_e.norm").alias("emb_norm"))
 
 
 def text_embedding_summary(docs: DataFrame, text_col: str = "text",

@@ -130,34 +130,30 @@ def test_kmeans_update_shuffle_is_constant_size(emb):
 
 
 def test_semdedup_pairwise_is_cluster_bounded(emb):
-    """Pairwise work must stay within clusters: the Arrow path is ONE
-    grouped pass keyed on cid (no nested-loop across clusters), the
-    expression path an equi-join on cid."""
+    """Pairwise work must stay within clusters: ONE grouped Arrow pass
+    keyed on cid (no nested-loop across clusters)."""
     plan = km.semdedup(emb)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "FlatMapGroupsInPandas" in plan
-    expr_plan = (km.semdedup(emb, arrow=False)
-                 ._jdf.queryExecution().executedPlan().toString())
-    assert "CartesianProduct" not in expr_plan
 
 
-def test_semdedup_arrow_matches_expression(emb):
-    """The vertical-fold numpy cosine must reproduce the expression/
-    oracle fold row-for-row (same left-to-right double arithmetic)."""
+def test_semdedup_arrow_matches_expression(emb, oracle):
+    """The vertical-fold numpy cosine must reproduce the oracle's SQL
+    fold row-for-row (same left-to-right double arithmetic), k-means
+    fit included, over the same rows."""
     from pii_redactor_spark.operators.cache import release_caches
-    a = {(r["vec_id"], r["cid"], r["is_dup"])
-         for r in km.semdedup(emb, arrow=True).collect()}
-    b = {(r["vec_id"], r["cid"], r["is_dup"])
-         for r in km.semdedup(emb, arrow=False).collect()}
+    got, want = oracle(km.semdedup_oracle_sql(), km.semdedup(emb),
+                       embeddings=emb)
     release_caches()
-    assert a == b
+    assert got == want
+    assert any(r[-1] for r in got)  # some vectors are flagged
 
 
 def test_semdedup_blocked_matrix_matches_unblocked(emb, monkeypatch):
     """Row-blocking the pairwise matrix (round-3 ADVICE memory fix) is
     bit-neutral: force many tiny blocks on a planted ONE-GIANT-CLUSTER
     corpus (every vector near one centroid — the skew case) and compare
-    against the expression path."""
+    against the default block size (one block per cluster here)."""
     from pii_redactor_spark.operators.cache import release_caches
     spark = emb.sparkSession
     from pyspark.sql import functions as F
@@ -169,11 +165,11 @@ def test_semdedup_blocked_matrix_matches_unblocked(emb, monkeypatch):
         F.expr("transform(embedding, x -> CAST(CASE WHEN vec_id % 20 = 0 "
                "THEN x ELSE 0.01 * x END AS FLOAT))").alias("embedding"),
         "label")
+    b = {(r["vec_id"], r["is_dup"])
+         for r in km.semdedup(crushed).collect()}
     monkeypatch.setattr(km, "SEM_BLOCK", 37)  # force ~13 ragged blocks
     a = {(r["vec_id"], r["is_dup"])
          for r in km.semdedup(crushed).collect()}
-    b = {(r["vec_id"], r["is_dup"])
-         for r in km.semdedup(crushed, arrow=False).collect()}
     release_caches()
     assert a == b
     sizes = (km.kmeans(crushed).groupBy("cid").count().collect())

@@ -44,13 +44,13 @@ def test_exact_dedup_counts(corpus):
 
 
 def test_minhash_identical_docs_share_signature(corpus):
-    sigs = {r["doc_id"]: r["sig"]
-            for r in dedup.with_minhash(corpus).select("doc_id", "sig").collect()}
-    assert sigs[0] == sigs[1]
-    assert sigs[0] != sigs[3]
-    # near-dup shares most minhashes with the original
-    shared = sum(a == b for a, b in zip(sigs[0], sigs[2]))
-    assert shared >= dedup.MINHASH_H // 2
+    keys = {r["doc_id"]: r["band_keys"]
+            for r in dedup.signatures(corpus).collect()}
+    assert len(keys[0]) == dedup.LSH_BANDS and all(keys[0])
+    assert keys[0] == keys[1]
+    assert not set(keys[0]) & set(keys[3])   # unrelated: no shared bucket
+    # the near-dup (shingle Jaccard ~0.8) shares some band buckets
+    assert set(keys[0]) & set(keys[2])
 
 
 def test_lsh_pairs_and_jaccard(corpus):
@@ -65,19 +65,17 @@ def test_lsh_pairs_and_jaccard(corpus):
         assert 0.5 < jac[(0, 2)]["jaccard"] < 1.0
 
 
-def test_simhash_vectorized_matches_expression(spark):
+def test_simhash_vectorized_matches_expression(sf_docs, oracle,
+                                               with_adversarial):
     # the numpy vertical-popcount path must be bit-identical to the
-    # expression-only reference implementation, including null text
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text").limit(200)
-    docs = docs.unionByName(spark.createDataFrame(
-        [(90001, None), (90002, ""), (90003, "one")],
-        "doc_id long, text string"))
-    a = {r["doc_id"]: r["simhash"]
-         for r in dedup.simhash(docs, vectorized=True).collect()}
-    b = {r["doc_id"]: r["simhash"]
-         for r in dedup.simhash(docs, vectorized=False).collect()}
-    assert a == b
+    # oracle's SQL expression over the same rows, adversarial ones
+    # included (NULL text folds to 0)
+    docs = with_adversarial(
+        sf_docs.select("doc_id", "text").where("doc_id < 200"))
+    got, want = oracle(dedup.simhash_oracle_sql(), dedup.simhash(docs),
+                       documents=docs)
+    assert got == want
+    assert dict(got)[90001] == 0
 
 
 def test_simhash_hamming_orders_similarity(corpus):
@@ -245,37 +243,31 @@ def test_ann_lsh_recall_vs_bruteforce(emb):
     assert mp_recall >= 0.95, f"multiprobe recall: {mp_recall}"
 
 
-def test_ann_pq_recall_and_code_shape(emb):
+def test_ann_pq_recall_and_code_shape(emb, oracle):
     exact = {(r["query_id"], r["vec_id"])
              for r in similarity.ann_bruteforce(emb).collect()}
-    approx = {(r["query_id"], r["vec_id"])
-              for r in similarity.ann_pq(emb).collect()}
+    pq = similarity.ann_pq(emb)
+    approx = {(r["query_id"], r["vec_id"]) for r in pq.collect()}
     recall = len(exact & approx) / len(exact)
     # orthant-mean codebook, refine=3: measured 0.84 on this corpus
     # (label-mean codewords gave 0.26 — the fit matters)
     assert recall >= 0.7, f"PQ recall too low: {recall}"
+    # the Arrow-hop encoder (left-to-right accumulation, first-min
+    # argmin) and the ADC scan reproduce the oracle over the same rows
+    got, want = oracle(similarity.ann_pq_oracle_sql(), pq, embeddings=emb)
+    assert got == want
     # compressed representation: one byte-sized code per subspace
-    cells = similarity._pq_cell_literals(
-        similarity.pq_fit_cells(emb), similarity.PQ_M,
-        similarity.EMB_DIM // similarity.PQ_M)
-    vecs = emb.select(
-        "vec_id", similarity.as_double(F.col("embedding")).alias("v"))
-    codes = {r["vec_id"]: list(r["code"]) for r in
-             similarity.pq_encode(vecs, cells).collect()}
-    for code in codes.values():
+    d = similarity.EMB_DIM // similarity.PQ_M
+    enc = similarity.make_pq_encode_udf(
+        similarity._pq_cells_np(similarity.pq_fit_cells(emb),
+                                similarity.PQ_M, d), d)
+    vecs = emb.select(similarity.as_double(F.col("embedding")).alias("v"))
+    codes = [list(r["code"]) for r in
+             vecs.select(enc(F.col("v")).alias("code")).collect()]
+    assert len(codes) == emb.count()
+    for code in codes:
         assert len(code) == similarity.PQ_M
         assert all(1 <= c <= 256 for c in code)
-    # the vectorized Arrow-hop encoder must be bit-identical to the
-    # expression reference form (left-to-right accumulation, first-min
-    # argmin)
-    cell_rows = similarity.pq_fit_cells(emb)
-    enc = similarity.make_pq_encode_udf(
-        similarity._pq_cells_np(cell_rows, similarity.PQ_M,
-                                similarity.EMB_DIM // similarity.PQ_M),
-        similarity.EMB_DIM // similarity.PQ_M)
-    fast = {r["vec_id"]: list(r["code"]) for r in
-            vecs.select("vec_id", enc(F.col("v")).alias("code")).collect()}
-    assert fast == codes
 
 
 def test_ann_pq_candidate_cut_is_two_phase(emb):
@@ -289,22 +281,24 @@ def test_ann_pq_candidate_cut_is_two_phase(emb):
     assert "_pid" in plan and "SPARK_PARTITION_ID" in plan.upper()
 
 
-def test_text_embeddings_vectorized_matches_expression(spark):
-    # the numpy bincount fold must be bit-identical to the expression
-    # fold (all contributions are ±1.0 — exact in doubles), incl. empty
-    from pii_redactor_spark.operators.similarity import text_embeddings
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet") \
-        .select("doc_id", "text").limit(150)
-    docs = docs.unionByName(spark.createDataFrame(
-        [(91001, None), (91002, "")], "doc_id long, text string"))
-    def snap(df):
-        return {r["doc_id"]:
-                (None if r["emb"] is None else tuple(r["emb"]),
-                 r["emb_norm"]) for r in df.collect()}
-    a = snap(text_embeddings(docs, vectorized=True))
-    b = snap(text_embeddings(docs, vectorized=False))
-    assert a == b
-    assert a[91001] == (None, None)  # null text -> null emb in BOTH paths
+def test_text_embeddings_vectorized_matches_expression(sf_docs, oracle,
+                                                       with_adversarial):
+    # the numpy bincount fold must be bit-identical to the oracle's SQL
+    # fold (all contributions are ±1.0 — exact in doubles), adversarial
+    # rows included
+    from pii_redactor_spark.operators.similarity import (
+        EMBED_DIM, text_embed_oracle_sql, text_embedding_summary,
+        text_embeddings)
+    docs = with_adversarial(
+        sf_docs.select("doc_id", "text").where("doc_id < 150"))
+    got, want = oracle(text_embed_oracle_sql(),
+                       text_embedding_summary(docs), documents=docs)
+    assert got == want
+    a = {r["doc_id"]: (tuple(r["emb"]), r["emb_norm"])
+         for r in text_embeddings(docs).where("doc_id > 90000").collect()}
+    # NULL text reads as '': the zero vector, norm 0 (the oracle's
+    # COALESCEd empty fold)
+    assert a[90001] == ((0.0,) * EMBED_DIM, 0.0) == a[90002]
 
 
 def test_text_embeddings_unit_norm_and_dedup_bridge(spark):
@@ -443,19 +437,18 @@ def test_span_dup_fires_on_planted_corpus_dups(spark):
     assert sum(1 for v in clean if v == 0) >= 0.9 * len(clean)
 
 
-def test_minhash_vectorized_matches_expression(spark):
-    """The Arrow XOR-min twin (default) must reproduce the expression/
-    oracle signatures bit-for-bit at H=128."""
+def test_minhash_vectorized_matches_expression(sf_docs, oracle,
+                                               with_adversarial):
+    """The Arrow XOR-min pass must reproduce the oracle's SQL-expression
+    band keys bit-for-bit at H=128, with NULL/empty/short rows in the
+    same Arrow batch as 200 normal documents."""
     from pii_redactor_spark.operators import dedup
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet").limit(200)
-    a = {r["doc_id"]: r["sig"] for r in
-         dedup.with_minhash(docs, vectorized=True)
-         .select("doc_id", "sig").collect()}
-    b = {r["doc_id"]: r["sig"] for r in
-         dedup.with_minhash(docs, vectorized=False)
-         .select("doc_id", "sig").collect()}
-    assert a == b
+    docs = with_adversarial(
+        sf_docs.select("doc_id", "text").where("doc_id < 200"))
+    got, want = oracle(dedup.minhash_bands_oracle_sql(),
+                       dedup.minhash_bands(docs), documents=docs)
+    assert len(got) == 205 * dedup.LSH_BANDS
+    assert got == want
 
 
 def test_null_text_band_hash_is_null_like_oracle(spark):
@@ -489,10 +482,11 @@ def test_band_keys_match_oracle_called_directly(spark):
 
     from pii_redactor_spark.operators.cache import release_caches
     rows = [(0, None), (1, ""), (2, "two words"), (3, BASE)]
+    # one partition: the NULL row shares an Arrow batch with the others
     got = sorted(
         (r["doc_id"], r["band_idx"], r["band_hash"] or "")
         for r in dedup.minhash_bands(spark.createDataFrame(
-            rows, "doc_id long, text string")).collect())
+            rows, "doc_id long, text string").coalesce(1)).collect())
     release_caches()
     con = duckdb.connect()
     con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")

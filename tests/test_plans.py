@@ -244,15 +244,9 @@ def test_host_cap_windows_are_salted_two_phase(spark, docs):
 
 
 def test_langid_expr_is_projection_only(spark, docs):
-    # round-4: the oracle-mirrored langid expression form must stay a
-    # pure projection over the scan (zero Python, zero shuffle); the
-    # default serving path swaps only the score folds for the Arrow
-    # twin (one ArrowEvalPython, still zero shuffle) — equality-tested
-    # in test_rules_kernels
-    from pii_redactor_spark.kernels.langid import langid_expr_columns
-    plan = _plan(langid_expr_columns(docs, vectorized=False))
-    assert "Exchange" not in plan
-    assert "Python" not in plan
+    # round-4: the oracle-gated langid stays a projection over the scan
+    # (zero shuffle) with the score sums in one ArrowEvalPython —
+    # oracle-tested in test_rules_kernels
     from pii_redactor_spark.contract import QUERIES
     dplan = _plan(QUERIES["q_langid"](spark, SF))
     assert "Exchange" not in dplan

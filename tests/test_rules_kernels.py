@@ -218,23 +218,19 @@ class TestKernelGoldenValues:
         c = Counter(r["lang_pred"] for r in df.collect())
         assert dict(c) == {"en": 455, "fr": 10, "es": 31, "de": 4}
 
-    def test_langid_vectorized_matches_expression(self, spark):
-        """The Arrow score twin (default serving) must reproduce the
-        expression/oracle form row-for-row — same integer sums, same
-        first-max tie-break."""
-        from pii_redactor_spark.kernels.langid import langid_expr_columns
-        docs = spark.read.parquet(
-            "/root/testdata/sf0.001/documents.parquet") \
-            .select("doc_id", "text")
-        docs = docs.unionByName(spark.createDataFrame(
-            [(90001, None), (90002, ""), (90003, "a")],
-            "doc_id long, text string"))
-        a = {r["doc_id"]: r["lang_pred"] for r in
-             langid_expr_columns(docs, vectorized=True).collect()}
-        b = {r["doc_id"]: r["lang_pred"] for r in
-             langid_expr_columns(docs, vectorized=False).collect()}
-        assert a == b
-        # NULL / sub-bigram text predicts NULL in both forms
+    def test_langid_vectorized_matches_expression(self, sf_docs, oracle,
+                                                  with_adversarial):
+        """The Arrow score pass (the serving form) must reproduce the
+        oracle's SQL expression row-for-row over the same rows — same
+        integer sums, same first-max tie-break."""
+        from pii_redactor_spark.kernels.langid import (
+            langid_expr_columns, langid_expr_oracle_sql)
+        docs = with_adversarial(sf_docs.select("doc_id", "text"))
+        got, want = oracle(langid_expr_oracle_sql(),
+                           langid_expr_columns(docs), documents=docs)
+        assert got == want
+        a = dict(got)
+        # NULL / sub-bigram text predicts NULL
         assert a[90001] is None and a[90002] is None and a[90003] is None
 
     def test_langid_expr_seed_accuracy(self, spark):
