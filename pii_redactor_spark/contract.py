@@ -1485,7 +1485,7 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Distributed Lloyd k-means + SemDeDup (operators/clustering.py): the
-# k-means fit ann_ivf defers to "offline" (similarity.py:209-214), run
+# k-means fit whose centroids ann_ivf accepts as its quantizer, run
 # HERE as iters constant-size-shuffle passes with a driver-round-trip
 # centroid artifact, plus Abbas-et-al-2023 semantic dedup on the fitted
 # clusters. The oracle unrolls the fixed iteration count as chained
@@ -1525,24 +1525,19 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sequence packing (concat-then-chunk): assign every document its byte
-# position in the concatenated token stream and the fixed-size training
-# sequence(s) it lands in — the standard pretraining batch-prep step.
-# The global running sum uses ranking.global_prefix_sum (bounded
-# two-phase prefix scan, never Exchange SinglePartition).
+# Sequence packing (concat-then-chunk, ranking.pack): assign every
+# document its position in the concatenated token stream and the
+# fixed-size training sequence(s) it lands in — the standard pretraining
+# batch-prep step. The global running sum uses ranking.global_prefix_sum
+# (bounded two-phase prefix scan, never Exchange SinglePartition).
 # ---------------------------------------------------------------------------
-SEQ_TOKENS = 2048
-# Whitespace spelled as an explicit char class: Java's \s includes
-# \x0B (VT) but RE2's does not — the one predefined-class divergence
-# between the engines' regex dialects (round-3 ADVICE).
-_BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\x0B\f\r]"
-# the same pattern text works verbatim as a DuckDB literal: SQL strings
-# do not process backslashes, so '\t' reaches RE2 as the escape itself
+from pii_redactor_spark.operators.ranking import (  # noqa: E402
+    BPE_RE, SEQ_TOKENS, pack, regex_token_count)
 
 _PACK_PRE_SQL = f"""
     toks AS (
       SELECT doc_id,
-             len(regexp_extract_all(text, '{_BPE_RE}'))
+             len(regexp_extract_all(text, '{BPE_RE}'))
                AS n_tokens
       FROM documents),
     pre AS (
@@ -1553,20 +1548,10 @@ _PACK_PRE_SQL = f"""
       FROM toks)"""
 
 
-def _pack_pre(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, n_tokens, start_off) — the shared concat-then-chunk
-    prefix: regex token counts + the bounded two-phase global prefix
-    scan (ranking.global_prefix_sum; never Exchange SinglePartition).
-    Persisted: the regex tokenization is the dominant cost and would
-    otherwise run twice (prefix-sum bucket-sums job + final plan)."""
-    from pii_redactor_spark.operators.cache import registered_persist
-    from pii_redactor_spark.operators.ranking import global_prefix_sum
-    toks = registered_persist(_t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.size(F.regexp_extract_all(
-            F.col("text"), F.lit(_BPE_RE), 0)).alias("n_tokens")))
-    return global_prefix_sum(toks, "doc_id", "n_tokens",
-                             sum_name="start_off")
+def _pack_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``ranking.pack`` over the documents' regex token counts."""
+    return pack(_t(spark, sf_dir, "documents").select(
+        "doc_id", regex_token_count(F.col("text")).alias("n_tokens")))
 
 
 @register(
@@ -1584,16 +1569,7 @@ def _pack_pre(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pre = _pack_pre(spark, sf_dir)
-    b = SEQ_TOKENS
-    return pre.select(
-        "doc_id", "n_tokens", "start_off",
-        F.expr(f"start_off div {b}").alias("seq_idx"),
-        F.when(F.col("n_tokens") > 0,
-               F.expr(f"(start_off + n_tokens - 1) div {b}")
-               - F.expr(f"start_off div {b}") + F.lit(1))
-        .otherwise(F.lit(0)).cast("bigint").alias("n_seqs"),
-    )
+    return _pack_docs(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1627,10 +1603,9 @@ def q_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_pack_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pre = _pack_pre(spark, sf_dir)
     b = SEQ_TOKENS
     return (
-        pre.where(F.col("n_tokens") > 0)
+        _pack_docs(spark, sf_dir).where(F.col("n_tokens") > 0)
         .withColumn("_seqs", F.sequence(
             F.expr(f"start_off div {b}"),
             F.expr(f"(start_off + n_tokens - 1) div {b}")))
@@ -1830,24 +1805,10 @@ _PACK_BPE_ORACLE = "\nUNION ALL\n".join(
 
 @register("q_pack_bpe", oracle=_PACK_BPE_ORACLE)
 def q_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pii_redactor_spark.operators.cache import registered_persist
-    from pii_redactor_spark.operators.ranking import global_prefix_sum
     docs = _t(spark, sf_dir, "documents")
     merges = _bpe.fit_bpe_merges(_bpe.bpe_word_counts(docs))
-    toks = registered_persist(
-        _bpe.bpe_columns(docs, merges)
-        .select("doc_id", F.col("n_bpe_tokens").alias("n_tokens")))
-    pre = global_prefix_sum(toks, "doc_id", "n_tokens",
-                            sum_name="start_off")
-    b = SEQ_TOKENS
-    return pre.select(
-        "doc_id", "n_tokens", "start_off",
-        F.expr(f"start_off div {b}").alias("seq_idx"),
-        F.when(F.col("n_tokens") > 0,
-               F.expr(f"(start_off + n_tokens - 1) div {b}")
-               - F.expr(f"start_off div {b}") + F.lit(1))
-        .otherwise(F.lit(0)).cast("bigint").alias("n_seqs"),
-    )
+    return pack(_bpe.bpe_columns(docs, merges)
+                .select("doc_id", F.col("n_bpe_tokens").alias("n_tokens")))
 
 
 @register("q_proto_prune", oracle=_km.proto_prune_oracle_sql())
@@ -1898,7 +1859,7 @@ def q_ann_mlp(spark: SparkSession, sf_dir: str) -> DataFrame:
     clf AS ({_qclf.quality_clf_oracle_sql()}),
     toks AS (
       SELECT doc_id, source, lang,
-             len(regexp_extract_all(text, '{_BPE_RE}')) AS n_tokens
+             len(regexp_extract_all(text, '{BPE_RE}')) AS n_tokens
       FROM documents)
     SELECT t.source, t.lang,
            COUNT(*) AS n_docs,
@@ -1919,8 +1880,7 @@ def q_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     base = (
         with_quality(docs, "text", QualityThresholds())
-        .withColumn("_toks", F.size(F.regexp_extract_all(
-            F.col("text"), F.lit(_BPE_RE), 0)))
+        .withColumn("_toks", regex_token_count(F.col("text")))
     )
     scored = quality_clf_columns(
         base, extra_cols=("source", "lang", "keep", "_toks"))

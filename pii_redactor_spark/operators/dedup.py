@@ -251,22 +251,20 @@ def minhash_bands(docs: DataFrame, text_col: str = "text",
 
 def lsh_candidate_pairs(docs: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id",
-                        reuse_bands: bool = True,
                         h: int = MINHASH_H, bands: int = LSH_BANDS,
                         rows: int = LSH_ROWS) -> DataFrame:
     """Distinct candidate near-dup pairs (id_a < id_b) that share at least
     one LSH band. Equi self-join on (band_idx, band_hash) — the classic
     MinHash-LSH bucket join; AQE splits skewed buckets.
 
-    ``reuse_bands`` persists the band table so the self-join's two
-    branches don't recompute every signature (Spark shares no work across
-    join inputs). At cluster scale the same role is played by
-    materializing signatures to an Iceberg-style table (tables.py) —
-    persist is the single-job analogue."""
+    The band table is persisted so the self-join's two branches don't
+    recompute every signature (Spark shares no work across join inputs).
+    At cluster scale the same role is played by materializing signatures
+    to an Iceberg-style table (tables.py) — persist is the single-job
+    analogue."""
     from pii_redactor_spark.operators.cache import registered_persist
-    b = minhash_bands(docs, text_col, id_col, h, bands, rows)
-    if reuse_bands:
-        b = registered_persist(b)
+    b = registered_persist(minhash_bands(docs, text_col, id_col, h, bands,
+                                         rows))
     return _bucket_pairs(b, id_col)
 
 

@@ -206,38 +206,6 @@ def ann_lsh(emb: DataFrame, k: int = TOP_K,
 IVF_NPROBE = 5
 
 
-def _centroids(emb: DataFrame, dim: int = EMB_DIM) -> DataFrame:
-    """Coarse-quantizer centroids: per-label mean embedding, summed in
-    DECIMAL so the oracle reproduces every coordinate bit-for-bit
-    (double-sum order differs between engines). The label column stands
-    in for a k-means assignment — at scale you fit k-means once offline;
-    the probe/search plumbing is identical."""
-    aggs = [
-        (F.sum(F.col("v")[i].cast("decimal(28,12)"))
-         / F.count("*")).cast("double").alias(f"c{i}")
-        for i in range(dim)
-    ]
-    per = emb.select("label", as_double(F.col("embedding")).alias("v")) \
-        .groupBy("label").agg(*aggs)
-    return per.select(
-        "label", F.array(*[F.col(f"c{i}") for i in range(dim)]).alias("cv"))
-
-
-def _centroid_literal(cent_rows) -> Column:
-    """Embed the (tiny) centroid table as ONE parsed SQL literal:
-    array<struct<label:int, cv:array<double>>>. ``repr(float)`` is the
-    shortest round-trip representation, so every coordinate survives
-    driver→plan bit-for-bit; one F.expr parse instead of per-element
-    py4j literals (~100x cheaper plan construction, see CLAUDE.md)."""
-    items = ", ".join(
-        "named_struct('label', {lab}, 'cv', array({vals}))".format(
-            lab=int(r["label"]),
-            vals=", ".join(f"{float(x)!r}D" for x in r["cv"]))
-        for r in cent_rows
-    )
-    return F.expr(f"array({items})")
-
-
 def ann_ivf(emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES,
             nprobe: int = IVF_NPROBE, centroid_rows=None) -> DataFrame:
     """IVF path: assign corpus vectors to their nearest centroid
@@ -252,26 +220,19 @@ def ann_ivf(emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES,
     Exchange, zero window. The previous formulation window-partitioned
     corpus x centroid rows by vec_id, a full shuffle of the corpus just
     to take rn=1 (round-1 verdict: scale-killer)."""
+    from pii_redactor_spark.operators.clustering import (
+        _cents_literal, decimal_means)
     queries, corpus = _split_queries(emb, n_queries)
-    # centroid_rows: an external quantizer artifact — either
-    # [{'label': int, 'cv': [double]}] rows or the (cid, cv) tuples
-    # that clustering.kmeans_fit / artifacts.load_centroids return —
-    # replaces the default per-label means (the oracle pins the default)
+    # centroid_rows: the (cid, cv) tuples of an external quantizer
+    # artifact (clustering.kmeans_fit / artifacts.load_centroids)
+    # replace the default per-label means (the oracle pins the default;
+    # the label column stands in for an offline k-means assignment —
+    # the probe/search plumbing is identical)
     if centroid_rows is None:
-        centroid_rows = _centroids(emb).collect()
-
-    def _norm(r):
-        # pyspark Row subclasses tuple, so field-name access must win
-        # over the positional branch (round-3 ADVICE: a Row with
-        # (cv, label) field order would silently swap centroids)
-        if hasattr(r, "__fields__"):
-            return {"label": r["label"], "cv": r["cv"]}
-        if isinstance(r, tuple):  # (cid, cv) artifact tuples
-            return {"label": r[0], "cv": r[1]}
-        return r
-
-    centroid_rows = [_norm(r) for r in centroid_rows]
-    cents = _centroid_literal(centroid_rows)
+        centroid_rows = decimal_means(
+            emb.select("label", as_double(F.col("embedding")).alias("v")),
+            ["label"]).items()
+    cents = _cents_literal(centroid_rows)
 
     # per-query top-nprobe lists: comparator sort (ccos desc, label asc)
     # + slice — projection-only on the query side too
@@ -279,7 +240,7 @@ def ann_ivf(emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES,
         queries
         .withColumn("_cc", F.transform(cents, lambda c: F.struct(
             cosine(F.col("qv"), c["cv"]).alias("ccos"),
-            c["label"].alias("label"))))
+            c["cid"].alias("label"))))
         .withColumn("_top", F.slice(F.expr(
             "array_sort(_cc, (l, r) -> CASE"
             " WHEN l.ccos > r.ccos THEN -1 WHEN l.ccos < r.ccos THEN 1"
@@ -296,7 +257,7 @@ def ann_ivf(emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES,
         corpus
         .withColumn("_cc", F.transform(cents, lambda c: F.struct(
             cosine(F.col("v"), c["cv"]).alias("ccos"),
-            (-c["label"]).alias("nlabel"))))
+            (-c["cid"]).alias("nlabel"))))
         .withColumn("_best", F.array_max("_cc"))
         .select("vec_id", "v", (-F.col("_best.nlabel")).alias("label"))
     )
@@ -336,79 +297,60 @@ def _pattern_expr(sub: Column, d: int) -> Column:
         F.lit(0), lambda acc, x: acc + x)
 
 
+def _pq_subs(emb: DataFrame, dim: int, m: int) -> DataFrame:
+    """(vec_id, m, v): each vector exploded into its m subvectors of
+    dim // m coordinates — the frame both codebook fits run on."""
+    d = dim // m
+    subs = F.array(*[
+        F.struct(F.lit(s).alias("m"),
+                 F.slice(F.col("v"), s * d + 1, d).alias("v"))
+        for s in range(m)
+    ])
+    return (
+        emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
+        .select("vec_id", F.explode_outer(subs).alias("e"))
+        .where(F.col("e").isNotNull())
+        .select("vec_id", "e.m", "e.v")
+    )
+
+
+def _per_subspace(cells: dict, m: int) -> list[list[list[float]]]:
+    """The codebook's one in-memory shape: per subspace, its codewords
+    in key order, from ``{(subspace, key): codeword}`` in key order."""
+    return [[cw for (s, _), cw in cells.items() if s == i]
+            for i in range(m)]
+
+
 def pq_fit_cells(emb: DataFrame, dim: int = EMB_DIM,
-                 m: int = PQ_M) -> list:
+                 m: int = PQ_M) -> list[list[list[float]]]:
     """Fit the PQ codebook: per subspace, one codeword per occupied
     ORTHANT (sign pattern of the subvector), the codeword being the
     cell's per-coordinate mean.
 
     Orthant cells are the closed-form stand-in for per-subspace k-means
-    (k-means' float-iterative fit cannot be reproduced bit-for-bit by a
-    second engine; cell means summed in DECIMAL are exact, hence
-    aggregation-order-independent and oracle-identical). With d=8 dims
-    per subspace the codebook is capped at 2^8 = 256 codewords — the
-    canonical PQ byte-code size — and is data-fitted, not random:
-    measured recall 0.84 at refine=3 vs 0.26 for label-mean codewords.
+    (``pq_fit_cells_kmeans`` refines them): cell means summed in DECIMAL
+    are exact, hence aggregation-order-independent and oracle-identical.
+    With d=8 dims per subspace the codebook is capped at 2^8 = 256
+    codewords — the canonical PQ byte-code size — and is data-fitted,
+    not random: measured recall 0.84 at refine=3 vs 0.26 for label-mean
+    codewords.
 
-    One pass: explode each vector into (subspace, subvector), aggregate
-    decimal means per (subspace, orthant) — map-side partials reduce to
-    <= m * 2^d groups, so the shuffle is constant-size in corpus rows.
-    Returns collected rows (m, pattern, c0..c{d-1}) — a tiny model
-    artifact (<= 2048 rows) like the IVF centroid table.
+    One ``decimal_means`` pass keyed by (subspace, orthant) — map-side
+    partials reduce to <= m * 2^d * d groups, so the shuffle is
+    constant-size in corpus rows. Returns, per subspace, the
+    pattern-sorted codewords (positions give the deterministic
+    tie-breaks the oracle mirrors with ``ORDER BY d2, pattern``) — a
+    tiny model artifact like the IVF centroid table.
     """
-    d = dim // m
-    subs = F.array(*[
-        F.struct(F.lit(s).alias("m"),
-                 F.slice(F.col("v"), s * d + 1, d).alias("sub"))
-        for s in range(m)
-    ])
-    ex = (
-        emb.select(as_double(F.col("embedding")).alias("v"))
-        .select(F.explode_outer(subs).alias("e"))
-        .where(F.col("e").isNotNull())
-        .select(F.col("e.m").alias("m"), F.col("e.sub").alias("sub"))
-    )
-    aggs = [
-        (F.sum(F.col("sub")[j].cast("decimal(28,12)"))
-         / F.count("*")).cast("double").alias(f"c{j}")
-        for j in range(d)
-    ]
-    return (
-        ex.withColumn("pattern", _pattern_expr(F.col("sub"), d))
-        .groupBy("m", "pattern").agg(*aggs)
-        .collect()
-    )
+    from pii_redactor_spark.operators.clustering import decimal_means
+    subs = _pq_subs(emb, dim, m)
+    cells = decimal_means(
+        subs.withColumn("pattern", _pattern_expr(F.col("v"), dim // m)),
+        ["m", "pattern"])
+    return _per_subspace(cells, m)
 
 
-def _pq_cell_literals(cell_rows, m: int, d: int) -> list[Column]:
-    """Per-subspace literal ``array<array<double>>`` of codewords,
-    pattern-sorted so positions give deterministic tie-breaks that the
-    oracle mirrors with ``ORDER BY d2, pattern``."""
-    out = []
-    for s in range(m):
-        rows = sorted((r for r in cell_rows if r["m"] == s),
-                      key=lambda r: r["pattern"])
-        arrays = ", ".join(
-            "array({})".format(
-                ", ".join(f"{float(r[f'c{j}'])!r}D" for j in range(d)))
-            for r in rows)
-        out.append(F.expr(f"array({arrays})"))
-    return out
-
-
-def _pq_cells_np(cell_rows, m: int, d: int) -> list:
-    """Pattern-sorted per-subspace codeword matrices for the vectorized
-    encoder — same doubles as the SQL literals."""
-    out = []
-    for s in range(m):
-        rows = sorted((r for r in cell_rows if r["m"] == s),
-                      key=lambda r: r["pattern"])
-        out.append(np.array([[float(r[f"c{j}"]) for j in range(d)]
-                             for r in rows], dtype=np.float64))
-    return out
-
-
-def make_pq_encode_udf(cells_np: list, d: int):
+def make_pq_encode_udf(codebook: list, d: int):
     """Arrow-hop PQ encoder: ``v: array<double>`` -> ``code``
     (array<int>, one 1-based codeword position per subspace) — argmin
     squared L2 over <=256 codewords per subspace (ties -> lowest
@@ -424,6 +366,7 @@ def make_pq_encode_udf(cells_np: list, d: int):
     step an elementwise IEEE double op, and np.argmin takes the FIRST
     minimum == lowest pattern position."""
     from pyspark.sql.types import ArrayType, IntegerType
+    cells_np = [np.array(cws, dtype=np.float64) for cws in codebook]
 
     @F.pandas_udf(ArrayType(IntegerType()))
     def enc(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -445,7 +388,7 @@ def make_pq_encode_udf(cells_np: list, d: int):
 
 def ann_pq(emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES,
            m: int = PQ_M, refine: int = PQ_REFINE,
-           cell_rows: list | None = None) -> DataFrame:
+           codebook: list | None = None) -> DataFrame:
     """PQ/ADC search (Jégou et al. 2011): scan compressed codes, not
     vectors.
 
@@ -470,12 +413,14 @@ def ann_pq(emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES,
     """
     d = EMB_DIM // m
     queries, corpus = _split_queries(emb, n_queries)
-    if cell_rows is None:  # default: the orthant-mean codebook;
+    if codebook is None:  # default: the orthant-mean codebook;
         # ann_pq_fitted passes the per-subspace k-means fit instead
-        cell_rows = pq_fit_cells(emb, EMB_DIM, m)
-    cells = _pq_cell_literals(cell_rows, m, d)
+        codebook = pq_fit_cells(emb, EMB_DIM, m)
+    cells = [F.expr("array({})".format(", ".join(
+        "array({})".format(", ".join(f"{float(x)!r}D" for x in cw))
+        for cw in cws))) for cws in codebook]
 
-    enc_udf = make_pq_encode_udf(_pq_cells_np(cell_rows, m, d), d)
+    enc_udf = make_pq_encode_udf(codebook, d)
     encoded = corpus.select("vec_id", "v", enc_udf(F.col("v")).alias("code"))
 
     # closure FACTORY, never default-arg lambdas: a 2-param HOF lambda
@@ -532,6 +477,19 @@ def ann_pq(emb: DataFrame, k: int = TOP_K, n_queries: int = N_QUERIES,
 
 _DOT_SQL = ("list_sum(list_transform(list_zip({a}, {b}), "
             "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))")
+
+
+_D2_SQL = ("list_sum(list_transform(list_zip({a}, {b}), "
+           "p -> (p[1] - p[2]) * (p[1] - p[2])))")
+
+
+def _means_sql(vec: str, n: int) -> str:
+    """The per-coordinate DECIMAL(28,12) mean of the n-long list ``vec``
+    over a GROUP BY, as a list — the oracle of
+    ``clustering.decimal_means``."""
+    return "[{}]".format(", ".join(
+        f"CAST(SUM(CAST({vec}[{i + 1}] AS DECIMAL(28,12))) / COUNT(*)"
+        " AS DOUBLE)" for i in range(n)))
 
 
 def _cos_sql(a: str, b: str) -> str:
@@ -624,62 +582,51 @@ WHERE round({_cos_sql('va', 'vb')}, 6) >= {threshold}
 """
 
 
-def ann_pq_oracle_sql(table: str = "embeddings", k: int = TOP_K,
-                      n_queries: int = N_QUERIES, m: int = PQ_M,
-                      refine: int = PQ_REFINE,
-                      dim: int = EMB_DIM) -> str:
-    """DuckDB twin of ``ann_pq``: same codebook (per-(subspace, orthant)
-    decimal-sum means — exact decimals make the fit aggregation-order-
-    independent, so both engines derive identical codewords), same
-    argmin encoding (ties -> lowest pattern == lowest position in the
-    pattern-sorted Spark literal), ADC folded in ascending-subspace
-    order (``list_sum(list(d2 ORDER BY m))`` == the Spark side's
-    explicit ascending + chain), same refine cut + exact cosine
-    rerank."""
-    d = dim // m
-    cell_cols = ", ".join(
-        f"CAST(SUM(CAST(sub[{j + 1}] AS DECIMAL(28,12))) / COUNT(*) AS DOUBLE)"
-        for j in range(d))
-    d2_sql = ("list_sum(list_transform(list_zip({a}, {b}), "
-              "p -> (p[1] - p[2]) * (p[1] - p[2])))")
-    pattern_sql = (
-        f"list_sum(list_transform(range({d}), "
-        "j -> CASE WHEN sub[CAST(j + 1 AS INT)] > 0 "
-        "THEN (1 << j) ELSE 0 END))")
-    return f"""
-WITH vecs AS (SELECT vec_id,
-                     list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-              FROM {table}),
+def _pq_orthant_sql(table: str, m: int, d: int) -> str:
+    """CTEs ``vecs``, ``subs`` (vec_id, m, v) and ``cells`` (m, cid, cv):
+    the orthant codebook of ``pq_fit_cells``, one codeword per
+    (subspace, sign pattern), cid = the pattern."""
+    pattern = (f"list_sum(list_transform(range({d}), "
+               "j -> CASE WHEN v[CAST(j + 1 AS INT)] > 0 "
+               "THEN (1 << j) ELSE 0 END))")
+    return f"""vecs AS ({_vecs_sql(table)}),
 sp AS (SELECT unnest(range({m})) AS m),
 subs AS (
-  SELECT vec_id, sp.m,
-         list_slice(v, sp.m*{d} + 1, sp.m*{d} + {d}) AS sub
+  SELECT vec_id, sp.m, list_slice(v, sp.m*{d} + 1, sp.m*{d} + {d}) AS v
   FROM vecs CROSS JOIN sp),
-pats AS (SELECT vec_id, m, sub, {pattern_sql} AS pattern FROM subs),
 cells AS (
-  SELECT m, pattern, [{cell_cols}] AS cw
-  FROM pats GROUP BY m, pattern),
-q AS (SELECT vec_id AS query_id, v AS qv FROM vecs WHERE vec_id < {n_queries}),
+  SELECT m, pattern AS cid, {_means_sql('v', d)} AS cv
+  FROM (SELECT m, v, {pattern} AS pattern FROM subs)
+  GROUP BY m, pattern)"""
+
+
+def _pq_search_sql(codebook: str, k: int, n_queries: int,
+                   refine: int) -> str:
+    """The PQ search after ``_pq_orthant_sql``'s CTEs, over the codebook
+    CTE ``codebook`` (m, cid, cv): argmin encoding of every corpus
+    subvector (ties -> lowest cid == lowest position in the Spark
+    literal), ADC folded in ascending-subspace order
+    (``list_sum(list(d2 ORDER BY m))`` == the Spark side's explicit
+    ascending + chain), the refine cut and the exact cosine rerank."""
+    d2 = _D2_SQL.format(a="p.v", b="cb.cv")
+    return f"""q AS (SELECT vec_id AS query_id, v AS qv FROM vecs WHERE vec_id < {n_queries}),
 c AS (SELECT vec_id, v FROM vecs WHERE vec_id >= {n_queries}),
 codes AS (
-  SELECT vec_id, m, pattern AS code_pattern FROM (
-    SELECT p.vec_id, p.m, cells.pattern,
+  SELECT vec_id, m, cid FROM (
+    SELECT p.vec_id, p.m, cb.cid,
            ROW_NUMBER() OVER (PARTITION BY p.vec_id, p.m
-             ORDER BY {d2_sql.format(a='p.sub', b='cells.cw')} ASC,
-                      cells.pattern ASC) AS rn
-    FROM pats p JOIN cells USING (m)
+             ORDER BY {d2} ASC, cb.cid ASC) AS rn
+    FROM subs p JOIN {codebook} cb USING (m)
     WHERE p.vec_id >= {n_queries})
   WHERE rn = 1),
 qd2 AS (
-  SELECT p.vec_id AS query_id, p.m, cells.pattern,
-         {d2_sql.format(a='p.sub', b='cells.cw')} AS d2
-  FROM pats p JOIN cells USING (m)
+  SELECT p.vec_id AS query_id, p.m, cb.cid, {d2} AS d2
+  FROM subs p JOIN {codebook} cb USING (m)
   WHERE p.vec_id < {n_queries}),
 adc AS (
   SELECT qd2.query_id, codes.vec_id,
          list_sum(list(qd2.d2 ORDER BY codes.m)) AS approx_d2
-  FROM codes JOIN qd2 ON qd2.m = codes.m
-                     AND qd2.pattern = codes.code_pattern
+  FROM codes JOIN qd2 ON qd2.m = codes.m AND qd2.cid = codes.cid
   GROUP BY qd2.query_id, codes.vec_id),
 cand AS (
   SELECT query_id, vec_id FROM (
@@ -701,19 +648,28 @@ FROM ranked WHERE rnk <= {k}
 """
 
 
+def ann_pq_oracle_sql(table: str = "embeddings", k: int = TOP_K,
+                      n_queries: int = N_QUERIES, m: int = PQ_M,
+                      refine: int = PQ_REFINE,
+                      dim: int = EMB_DIM) -> str:
+    """DuckDB twin of ``ann_pq``: the same orthant codebook (exact
+    decimal means make the fit aggregation-order-independent, so both
+    engines derive identical codewords), then ``_pq_search_sql``."""
+    return f"""
+WITH {_pq_orthant_sql(table, m, dim // m)},
+{_pq_search_sql("cells", k, n_queries, refine)}"""
+
+
 def ann_ivf_oracle_sql(table: str = "embeddings", k: int = TOP_K,
                        n_queries: int = N_QUERIES,
                        nprobe: int = IVF_NPROBE,
                        dim: int = EMB_DIM) -> str:
-    cent_cols = ", ".join(
-        f"CAST(SUM(CAST(v[{i + 1}] AS DECIMAL(28,12))) / COUNT(*) AS DOUBLE)"
-        for i in range(dim))
     return f"""
 WITH vecs AS (SELECT vec_id, label,
                      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
               FROM {table}),
 cent AS (
-  SELECT label, [{cent_cols}] AS cv
+  SELECT label, {_means_sql('v', dim)} AS cv
   FROM vecs GROUP BY label),
 q AS (SELECT vec_id AS query_id, v AS qv FROM vecs WHERE vec_id < {n_queries}),
 c AS (SELECT vec_id, v FROM vecs WHERE vec_id >= {n_queries}),
@@ -993,7 +949,7 @@ FROM ranked WHERE rnk <= {k}
 # Lloyd refinement of the orthant baseline: per-subspace quantization
 # distortion is non-increasing from iteration 0, which is what makes
 # the measured recall >= the orthant codebook's (asserted in tests).
-# All m subspaces fit JOINTLY over the exploded (vec_id, m, sub) frame
+# All m subspaces fit JOINTLY over the exploded (vec_id, m, v) frame
 # — one assignment projection and one (m, cid, pos)-keyed decimal-mean
 # shuffle per iteration regardless of m, with a driver roundtrip
 # between iterations (zero lineage growth); the oracle unrolls the
@@ -1002,88 +958,33 @@ FROM ranked WHERE rnk <= {k}
 PQ_KM_ITERS = 3   # Lloyd iterations per subspace fit (unrolled in SQL)
 
 
-def _pq_subs(emb: DataFrame, dim: int, m: int) -> DataFrame:
-    """(vec_id, m, sub): the exploded subvector frame both the fit and
-    the oracle operate on."""
-    d = dim // m
-    subs = F.array(*[
-        F.struct(F.lit(s).alias("m"),
-                 F.slice(F.col("v"), s * d + 1, d).alias("sub"))
-        for s in range(m)
-    ])
-    return (
-        emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-        .select("vec_id", F.explode_outer(subs).alias("e"))
-        .where(F.col("e").isNotNull())
-        .select("vec_id", F.col("e.m").alias("m"),
-                F.col("e.sub").alias("sub"))
-    )
-
-
 def pq_fit_cells_kmeans(emb: DataFrame, dim: int = EMB_DIM,
                         m: int = PQ_M,
-                        iters: int = PQ_KM_ITERS) -> list[dict]:
-    """Rows (m, pattern, c0..c{d-1}) — same shape as ``pq_fit_cells``
-    (pattern := cid = position of the seeding orthant cell in pattern
-    order), so the literal/numpy builders and the encoder are shared
-    verbatim between the orthant and fitted codebooks."""
+                        iters: int = PQ_KM_ITERS) -> list[list[list[float]]]:
+    """The per-subspace Lloyd codebook, same shape as ``pq_fit_cells``
+    (codeword position = cid = position of the seeding orthant cell in
+    pattern order), so the encoder and the ADC tables are shared
+    verbatim between the orthant and fitted codebooks. The fit is
+    ``clustering.lloyd`` keyed by (m, cid): each subvector is assigned
+    among its own subspace's codewords (``element_at`` of the
+    per-subspace literals at m + 1)."""
     from pii_redactor_spark.operators.cache import (
         registered_persist, release_caches)
-    d = dim // m
+    from pii_redactor_spark.operators.clustering import (
+        _cents_literal, lloyd)
     subs = registered_persist(_pq_subs(emb, dim, m))
-    cents: dict[tuple[int, int], list[float]] = {}
-    # seeds: the orthant codebook, pattern-sorted per subspace
-    seed_rows = pq_fit_cells(emb, dim, m)
-    by_m: dict[int, list] = {}
-    for r in seed_rows:
-        by_m.setdefault(int(r["m"]), []).append(r)
-    kc_by_m: dict[int, int] = {}
-    for s, rows in by_m.items():
-        rows.sort(key=lambda r: r["pattern"])
-        kc_by_m[s] = len(rows)
-        for cid, r in enumerate(rows):
-            cents[(s, cid)] = [float(r[f"c{j}"]) for j in range(d)]
+    cents = {(s, cid): cw
+             for s, cws in enumerate(pq_fit_cells(emb, dim, m))
+             for cid, cw in enumerate(cws)}
 
-    def lit_all() -> Column:
-        per_m = []
-        for s in range(m):
-            items = ", ".join(
-                "named_struct('cid', {c}, 'cv', array({v}))".format(
-                    c=cid, v=", ".join(f"{x!r}D" for x in cents[(s, cid)]))
-                for cid in range(kc_by_m[s]))
-            per_m.append(f"array({items})")
-        return F.expr("array({})".format(", ".join(per_m)))
+    def literal(items) -> Column:
+        per_m = [_cents_literal([(cid, cw) for (s, cid), cw in items
+                                 if s == i]) for i in range(m)]
+        return F.element_at(F.array(*per_m), F.col("m") + 1)
 
-    for _ in range(iters):
-        assigned = (
-            subs
-            .withColumn("_cands", F.transform(
-                F.element_at(lit_all(), F.col("m") + 1),
-                lambda c: F.struct(_d2(F.col("sub"), c["cv"]).alias("d2"),
-                                   c["cid"].alias("cid"))))
-            .withColumn("_best", F.array_min("_cands"))
-            .select("m", F.col("_best.cid").alias("cid"), "sub")
-        )
-        rows = (
-            assigned
-            .select("m", "cid", F.posexplode_outer("sub").alias("pos", "x"))
-            .where(F.col("x").isNotNull())
-            .groupBy("m", "cid", "pos")
-            .agg((F.sum(F.col("x").cast("decimal(28,12)")) / F.count("*"))
-                 .cast("double").alias("c"))
-            .collect()
-        )
-        upd: dict[tuple[int, int], dict[int, float]] = {}
-        for r in rows:
-            upd.setdefault((int(r["m"]), int(r["cid"])),
-                           {})[int(r["pos"])] = r["c"]
-        for key, byp in upd.items():
-            if len(byp) == d:  # empty clusters keep the previous centroid
-                cents[key] = [byp[i] for i in range(d)]
+    cents = lloyd(subs, ["m", "cid"], cents, literal, iters)
     release_caches()
-    return [{"m": s, "pattern": cid,
-             **{f"c{j}": cents[(s, cid)][j] for j in range(d)}}
-            for s in range(m) for cid in range(kc_by_m[s])]
+    return _per_subspace(cents, m)
 
 
 def ann_pq_fitted(emb: DataFrame, k: int = TOP_K,
@@ -1092,7 +993,7 @@ def ann_pq_fitted(emb: DataFrame, k: int = TOP_K,
                   iters: int = PQ_KM_ITERS) -> DataFrame:
     """``ann_pq`` served from the per-subspace k-means codebook."""
     return ann_pq(emb, k, n_queries, m, refine,
-                  cell_rows=pq_fit_cells_kmeans(emb, EMB_DIM, m, iters))
+                  codebook=pq_fit_cells_kmeans(emb, EMB_DIM, m, iters))
 
 
 def ann_pq_fitted_oracle_sql(table: str = "embeddings", k: int = TOP_K,
@@ -1101,88 +1002,14 @@ def ann_pq_fitted_oracle_sql(table: str = "embeddings", k: int = TOP_K,
                              iters: int = PQ_KM_ITERS,
                              dim: int = EMB_DIM) -> str:
     """DuckDB twin of ``ann_pq_fitted``: the joint per-subspace Lloyd
-    unrolled as chained (m, cid)-keyed CTEs (seed = the orthant cells
-    in pattern order, DECIMAL means, argmin ties to the lowest cid,
-    empty clusters COALESCE to the previous codeword), then the
-    identical encode / ADC / refine / rerank tail as
-    ``ann_pq_oracle_sql``."""
-    d = dim // m
-    cell_cols = ", ".join(
-        f"CAST(SUM(CAST(sub[{j + 1}] AS DECIMAL(28,12))) / COUNT(*) AS DOUBLE)"
-        for j in range(d))
-    d2_sql = ("list_sum(list_transform(list_zip({a}, {b}), "
-              "p -> (p[1] - p[2]) * (p[1] - p[2])))")
-    pattern_sql = (
-        f"list_sum(list_transform(range({d}), "
-        "j -> CASE WHEN sub[CAST(j + 1 AS INT)] > 0 "
-        "THEN (1 << j) ELSE 0 END))")
-    parts = [
-        (f"vecs AS (SELECT vec_id, list_transform(embedding, "
-         f"x -> CAST(x AS DOUBLE)) AS v FROM {table})"),
-        (f"sp AS (SELECT unnest(range({m})) AS m)"),
-        (f"subs AS (SELECT vec_id, sp.m, "
-         f"list_slice(v, sp.m*{d} + 1, sp.m*{d} + {d}) AS sub "
-         f"FROM vecs CROSS JOIN sp)"),
-        (f"pats AS (SELECT vec_id, m, sub, {pattern_sql} AS pattern "
-         f"FROM subs)"),
-        (f"cells0 AS (SELECT m, pattern, [{cell_cols}] AS cw "
-         f"FROM pats GROUP BY m, pattern)"),
-        ("k0 AS (SELECT m, CAST(ROW_NUMBER() OVER (PARTITION BY m "
-         "ORDER BY pattern) - 1 AS INT) AS cid, cw FROM cells0)"),
-    ]
-    for t in range(1, iters + 1):
-        parts.append(f"""a{t} AS (
-  SELECT vec_id, m, sub, cid FROM (
-    SELECT s.vec_id, s.m, s.sub, k{t - 1}.cid,
-           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-             ORDER BY {d2_sql.format(a='s.sub', b=f'k{t - 1}.cw')} ASC,
-                      k{t - 1}.cid ASC) AS rn
-    FROM subs s JOIN k{t - 1} ON s.m = k{t - 1}.m) WHERE rn = 1)""")
-        parts.append(f"""k{t} AS (
-  SELECT p.m, p.cid, COALESCE(u.cw, p.cw) AS cw
-  FROM k{t - 1} p LEFT JOIN (
-    SELECT m, cid, [{cell_cols}] AS cw FROM a{t} GROUP BY m, cid) u
-  USING (m, cid))""")
-    parts.append(f"cells AS (SELECT m, cid AS pattern, cw FROM k{iters})")
+    unrolled as chained (m, cid)-keyed CTEs (``_lloyd_ctes``; seed = the
+    orthant cells in pattern order), then the same search as
+    ``ann_pq_oracle_sql`` over the last iteration's codebook."""
+    from pii_redactor_spark.operators.clustering import _lloyd_ctes
+    lloyd_ctes = ",\n".join(_lloyd_ctes("subs", ["m"], dim // m, iters))
     return f"""
-WITH {','.join(parts)},
-q AS (SELECT vec_id AS query_id, v AS qv FROM vecs WHERE vec_id < {n_queries}),
-c AS (SELECT vec_id, v FROM vecs WHERE vec_id >= {n_queries}),
-codes AS (
-  SELECT vec_id, m, pattern AS code_pattern FROM (
-    SELECT p.vec_id, p.m, cells.pattern,
-           ROW_NUMBER() OVER (PARTITION BY p.vec_id, p.m
-             ORDER BY {d2_sql.format(a='p.sub', b='cells.cw')} ASC,
-                      cells.pattern ASC) AS rn
-    FROM subs p JOIN cells USING (m)
-    WHERE p.vec_id >= {n_queries})
-  WHERE rn = 1),
-qd2 AS (
-  SELECT p.vec_id AS query_id, p.m, cells.pattern,
-         {d2_sql.format(a='p.sub', b='cells.cw')} AS d2
-  FROM subs p JOIN cells USING (m)
-  WHERE p.vec_id < {n_queries}),
-adc AS (
-  SELECT qd2.query_id, codes.vec_id,
-         list_sum(list(qd2.d2 ORDER BY codes.m)) AS approx_d2
-  FROM codes JOIN qd2 ON qd2.m = codes.m
-                     AND qd2.pattern = codes.code_pattern
-  GROUP BY qd2.query_id, codes.vec_id),
-cand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-             ORDER BY approx_d2 ASC, vec_id ASC) AS arn
-    FROM adc)
-  WHERE arn <= {refine * k}),
-scored AS (
-  SELECT query_id, vec_id, {_cos_sql('qv', 'v')} AS cos_sim
-  FROM cand JOIN q USING (query_id) JOIN c USING (vec_id)),
-ranked AS (
-  SELECT query_id, vec_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cos_sim DESC, vec_id ASC) AS rnk
-  FROM scored)
-SELECT query_id, vec_id, round(cos_sim, 6) AS cos_sim, CAST(rnk AS INT) AS rnk
-FROM ranked WHERE rnk <= {k}
-"""
+WITH {_pq_orthant_sql(table, m, dim // m)},
+c0 AS (SELECT m, CAST(ROW_NUMBER() OVER (PARTITION BY m ORDER BY cid) - 1
+                      AS INT) AS cid, cv FROM cells),
+{lloyd_ctes},
+{_pq_search_sql(f"c{iters}", k, n_queries, refine)}"""

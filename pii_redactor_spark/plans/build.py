@@ -45,6 +45,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.operators.ranking import (
+    SEQ_TOKENS, pack, regex_token_count)
 from pii_redactor_spark.tables import IcebergishTable, MetricsTable
 
 STAGE_ORDER = ("urlfilter", "decontaminate", "dedup", "quality",
@@ -215,33 +217,16 @@ def build_job(
     if _complete(stage_table(root, name), run_id, name):
         skip_stage(name)
     else:
-        from pii_redactor_spark.contract import SEQ_TOKENS, _BPE_RE
-        from pii_redactor_spark.operators.cache import registered_persist
-        from pii_redactor_spark.operators.ranking import global_prefix_sum
         t0 = time.time()
         n_in = n_prev
-        toks = registered_persist(current.select(
-            "doc_id",
-            F.size(F.regexp_extract_all(
-                F.col("text"), F.lit(_BPE_RE), 0)).alias("n_tokens")))
-        pre = global_prefix_sum(toks, "doc_id", "n_tokens",
-                                sum_name="start_off")
-        b = SEQ_TOKENS
-        packed = pre.select(
-            "doc_id", "n_tokens", "start_off",
-            F.expr(f"start_off div {b}").alias("seq_idx"),
-            F.when(F.col("n_tokens") > 0,
-                   F.expr(f"(start_off + n_tokens - 1) div {b}")
-                   - F.expr(f"start_off div {b}") + F.lit(1))
-            .otherwise(F.lit(0)).cast("bigint").alias("n_seqs"),
-        )
+        packed = pack(current.select(
+            "doc_id", regex_token_count(F.col("text")).alias("n_tokens")))
         commit_stage(name, packed, n_in, t0)
         release_caches()
     maybe_fail(name)
 
     # final corpus summary off the committed pack table (one tiny agg):
     # the numbers a training run actually budgets by
-    from pii_redactor_spark.contract import SEQ_TOKENS
     pack_df = stage_table(root, "pack").read(spark)
     tok_row = pack_df.agg(
         F.sum("n_tokens").alias("t"),
@@ -579,25 +564,9 @@ def build_increment(
     release_caches()
     log_row("select", "recompute", n_in, n_sel, t0)
 
-    from pii_redactor_spark.contract import SEQ_TOKENS, _BPE_RE
-    from pii_redactor_spark.operators.cache import registered_persist
-    from pii_redactor_spark.operators.ranking import global_prefix_sum
     t0 = time.time()
-    toks = registered_persist(stbl.read(spark).select(
-        "doc_id",
-        F.size(F.regexp_extract_all(
-            F.col("text"), F.lit(_BPE_RE), 0)).alias("n_tokens")))
-    pre = global_prefix_sum(toks, "doc_id", "n_tokens",
-                            sum_name="start_off")
-    b = SEQ_TOKENS
-    packed = pre.select(
-        "doc_id", "n_tokens", "start_off",
-        F.expr(f"start_off div {b}").alias("seq_idx"),
-        F.when(F.col("n_tokens") > 0,
-               F.expr(f"(start_off + n_tokens - 1) div {b}")
-               - F.expr(f"start_off div {b}") + F.lit(1))
-        .otherwise(F.lit(0)).cast("bigint").alias("n_seqs"),
-    )
+    packed = pack(stbl.read(spark).select(
+        "doc_id", regex_token_count(F.col("text")).alias("n_tokens")))
     ptbl = stage_table(root, "pack")
     n_out = ptbl.overwrite(packed, lineage={
         "run_id": run_id, "stage": "pack", "mode": "recompute",

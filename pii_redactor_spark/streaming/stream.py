@@ -255,11 +255,11 @@ def semdedup_stream(
     import pandas as pd
 
     from pii_redactor_spark.operators.clustering import (
-        SEM_TAU, _assign, _vecs)
+        SEM_TAU, _assign, _cents_literal, _vecs)
 
     t = SEM_TAU if tau is None else tau
     emb = spark.readStream.schema(schema).parquet(source_dir)
-    assigned = _assign(_vecs(emb), cents).select(
+    assigned = _assign(_vecs(emb), _cents_literal(cents)).select(
         "vec_id", F.col("cid").cast("int").alias("cid"), "v")
 
     out_type = "vec_id long, cid int, is_dup boolean"

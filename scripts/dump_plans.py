@@ -82,6 +82,22 @@ ITERATIVE_NOTES = {
         "the dumped plan is the final assignment projection"),
 }
 
+# Fitted queries collect their model while the plan is built; the fit
+# never shows in the dumped serving plan, so its shape is stated here.
+FIT_NOTES = {
+    "q_ann_ivf": (
+        "default centroids = ONE clustering.decimal_means aggregate keyed "
+        "by (label, pos), <= labels x dim rows collected; the dumped plan "
+        "is the search against that literal"),
+    "q_ann_pq": (
+        "orthant codebook = ONE decimal_means aggregate keyed by (m, "
+        "pattern, pos); the dumped plan is the search against it"),
+    "q_ann_pq_fitted": (
+        "the q_ann_pq orthant pass seeds clustering.lloyd keyed by (m, "
+        "cid): per iteration 1 projection-only assignment + 1 (m, cid, "
+        "pos) decimal-mean shuffle, driver roundtrip between iterations"),
+}
+
 # The components queries' edge phase: the plan the loop consumes, which
 # the checkpointed result no longer shows.
 EDGE_PHASES = {
@@ -119,6 +135,9 @@ def main() -> None:
             if name in ITERATIVE_NOTES:
                 out.append("")
                 out.append(f"**Iterative shape:** {ITERATIVE_NOTES[name]}")
+            if name in FIT_NOTES:
+                out.append("")
+                out.append(f"**Fit:** {FIT_NOTES[name]}")
             out.append("")
             out.extend(_plan_block(plan))
             out.append("")

@@ -113,20 +113,21 @@ def test_kmeans_assignment_plan_projection_only(emb):
 
 
 def test_kmeans_update_shuffle_is_constant_size(emb):
-    """The per-iteration update aggregates BEFORE the exchange
-    (partial_ prefix on the map side), so <= k rows per partition cross
-    the wire regardless of corpus size."""
-    cents = km._seed_centroids(km._vecs(emb), km.KM_K)
-    assigned = km._assign(km._vecs(emb), cents)
-    aggs = [
-        (F.sum(F.col("v")[i].cast("decimal(28,12)"))
-         / F.count("*")).cast("double").alias(f"c{i}")
-        for i in range(4)
-    ]
-    plan = (assigned.groupBy("cid").agg(*aggs)
+    """The per-iteration update — the served ``decimal_means`` plan —
+    aggregates BEFORE the one exchange (partial_ prefix on the map
+    side), so <= k x dim rows per partition cross the wire regardless of
+    corpus size, and it is ONE (cid, pos) decimal mean, never one
+    aggregate per coordinate (c0, c1, ...)."""
+    import re
+    vecs = km._vecs(emb)
+    assigned = km._assign(
+        vecs, km._cents_literal(km._seed_centroids(vecs, km.KM_K)))
+    plan = (km._mean_rows(assigned, ["cid"])
             ._jdf.queryExecution().executedPlan().toString())
-    assert "partial" in plan.lower()
     assert plan.count("Exchange") == 1
+    assert plan.count("partial_sum") == 1
+    assert plan.index("Exchange") < plan.index("partial_sum")  # below it
+    assert not re.search(r"AS c\d+#", plan)
 
 
 def test_semdedup_pairwise_is_cluster_bounded(emb):
@@ -206,7 +207,8 @@ def test_proto_prune_keeps_hardest_per_cluster(emb):
     from pii_redactor_spark.operators.cache import release_caches
     cents = km.kmeans_fit(emb)
     exact = {r["vec_id"]: r["d2"]
-             for r in km._assign(km._vecs(emb), cents).collect()}
+             for r in km._assign(km._vecs(emb),
+                                 km._cents_literal(cents)).collect()}
     out = km.proto_prune(emb, cents=cents).collect()
     release_caches()
     by_cid: dict[int, list] = {}
@@ -235,3 +237,28 @@ def test_proto_prune_rank_is_skew_safe(emb):
                                    hot_threshold=10).collect()}
     release_caches()
     assert hot == base
+
+
+@pytest.mark.parametrize("embedding", [
+    "transform(embedding, (x, i) -> "
+    "CASE WHEN vec_id = 123 AND i = 3 THEN CAST(NULL AS FLOAT) ELSE x END)",
+    "CASE WHEN vec_id = 123 THEN slice(embedding, 1, 63) ELSE embedding END",
+], ids=["null_coordinate", "ragged"])
+def test_centroid_fits_reject_incomplete_vectors(emb, embedding):
+    """Every fit on the shared DECIMAL means raises the same ValueError
+    on one NULL coordinate or one short (ragged) vector, where a mean
+    over the remaining rows would silently differ from the oracle's
+    COUNT(*) mean: the k-means fit, ann_ivf's default per-label
+    centroids and both PQ codebooks."""
+    from pii_redactor_spark.operators import similarity as sim
+    from pii_redactor_spark.operators.cache import release_caches
+    broken = emb.select("vec_id", "label",
+                        F.expr(embedding).alias("embedding"))
+    fits = [lambda: km.kmeans_fit(broken),
+            lambda: sim.ann_ivf(broken),
+            lambda: sim.pq_fit_cells(broken),
+            lambda: sim.pq_fit_cells_kmeans(broken)]
+    for fit in fits:
+        with pytest.raises(ValueError, match="missing/null"):
+            fit()
+    release_caches()
