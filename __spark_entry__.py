@@ -29,6 +29,7 @@ def entry(spark: SparkSession) -> DataFrame:
     (SURVEY.md §3.1, the engine's ``redact(text)`` + quality gate)."""
     import os
 
+    from pii_redactor_spark.kernels.artifacts import load_fitted
     from pii_redactor_spark.plans.pipeline import run_pipeline
 
     ship_package(spark)
@@ -40,9 +41,9 @@ def entry(spark: SparkSession) -> DataFrame:
     # fit->serve hook (reference main.py:22-26 loads the optimized model
     # at startup when present): honored via $PII_SPARK_ARTIFACTS only —
     # never a cwd default — so unconfigured driver runs stay hermetic
-    out = run_pipeline(pages, allowed_langs=("en",), max_ppl=50.0,
-                       global_gazetteer=global_scrub_gazetteer(),
-                       artifacts_dir=os.environ.get("PII_SPARK_ARTIFACTS"))
+    thresholds, tables = load_fitted(os.environ.get("PII_SPARK_ARTIFACTS"))
+    out = run_pipeline(pages, thresholds=thresholds, artifacts=tables,
+                       global_gazetteer=global_scrub_gazetteer())
     return out.select(
         "url", "doc_id", "lang", "n_chars",
         "lang_pred", F.round("lang_conf", 4).alias("lang_conf"),

@@ -222,8 +222,7 @@ def run_scaling(sf_dir: str, pairs=((2, 8), (8, 32)),
                 pages = spark.read.parquet(corpus_path).select(
                     F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
                     "doc_id", "text", "lang")
-                df = run_pipeline(pages, allowed_langs=("en",),
-                                  max_ppl=50.0) \
+                df = run_pipeline(pages) \
                     .select("url", "doc_id", "lang_pred", "ppl",
                             "n_redactions", "keep")
                 _force(df)  # warm: codegen + per-worker kernel fit

@@ -18,8 +18,8 @@ Subcommands:
                         on the snapshot diff, global stages recompute
   evaluate [--offset --limit --randomize --seed]
                         golden-fixture held-out evaluation
-  scaling [--low --high]
-                        two-parallelism throughput evidence
+
+Scaling evidence is ``python bench.py --scaling``.
 
 Ship with: ``spark-submit --py-files pii_redactor_spark.zip -m
 pii_redactor_spark.cli ...`` — in local smoke runs ``ship_package``
@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
 
 from pyspark.sql import functions as F
 
@@ -61,46 +60,30 @@ def cmd_redact(args) -> int:
 
 
 def cmd_run(args) -> int:
+    from pii_redactor_spark.kernels.artifacts import (
+        load_fitted, resolve_artifacts_dir)
+    from pii_redactor_spark.plans.build import with_doc_url
     from pii_redactor_spark.plans.pipeline import KernelTimers, run_pipeline
     from pii_redactor_spark.tables import (
         IcebergishTable, MetricsTable, run_resumable)
 
     spark = get_spark(app_name="pipeline_run")
     ship_package(spark)
-    pages = spark.read.parquet(args.input)
-    if "url" not in pages.columns:
-        pages = pages.withColumn(
-            "url", F.concat(F.lit("doc://"), F.col("doc_id")))
+    pages = with_doc_url(spark.read.parquet(args.input))
     out = IcebergishTable(args.output)
     met = MetricsTable(args.metrics)
     timers = KernelTimers(spark)
-    thresholds = None
-    artifacts = None
-    from pii_redactor_spark.kernels.artifacts import (
-        load_tables, load_thresholds, resolve_artifacts_dir)
     # fit->serve loop closed by DEFAULT (reference: main.py:22-26 loads
     # the optimized model at startup whenever the file exists): an
     # explicit --artifacts wins, else $PII_SPARK_ARTIFACTS, else
     # ./artifacts when fitted files are present
     art_dir = resolve_artifacts_dir(args.artifacts)
-    if art_dir:
-        # load_tables, not load_artifacts: the tables must ship to the
-        # executors through the UDF closure — a driver-side preload
-        # never reaches worker processes
-        try:
-            artifacts = load_tables(art_dir)
-        except FileNotFoundError:
-            artifacts = None  # thresholds-only artifact dir
-        try:
-            thresholds = load_thresholds(art_dir)
-        except FileNotFoundError:
-            thresholds = None
+    thresholds, artifacts = load_fitted(art_dir)
     commits = run_resumable(
         spark, pages, out, met, run_id=args.run_id,
         n_buckets=args.n_buckets, timers=timers,
         transform=lambda df: run_pipeline(
-            df, thresholds=thresholds, allowed_langs=("en",),
-            max_ppl=50.0, timers=timers, artifacts=artifacts)
+            df, thresholds=thresholds, timers=timers, artifacts=artifacts)
         .select("url", "doc_id", "lang_pred", "ppl", "n_redactions",
                 "keep", "bucket"),
     )
@@ -220,7 +203,10 @@ def cmd_build(args) -> int:
     decontaminate → dedup → quality(scrub) → select → pack, one
     lineage-tracked snapshot per stage, resumable mid-chain AND
     mid-quality-stage with the same --run-id."""
-    from pii_redactor_spark.plans.build import build_job
+    from pii_redactor_spark.kernels.artifacts import (
+        load_fitted, resolve_artifacts_dir)
+    from pii_redactor_spark.plans.build import build_increment, build_job
+    from pii_redactor_spark.tables import IcebergishTable
 
     if not 0.0 < args.frac <= 1.0:
         print(json.dumps({"error": f"--frac must be in (0, 1], got "
@@ -228,39 +214,24 @@ def cmd_build(args) -> int:
         return 2
     spark = get_spark(app_name="build")
     ship_package(spark)
-    # --incremental: --input is an IcebergishTable root (snapshot diffs
-    # drive the per-row stages), not a raw parquet path
-    pages = (None if getattr(args, "incremental", False)
-             else spark.read.parquet(args.input))
-    thresholds = None
-    artifacts = None
-    from pii_redactor_spark.kernels.artifacts import (
-        load_tables, load_thresholds, resolve_artifacts_dir)
     art_dir = resolve_artifacts_dir(args.artifacts)
-    if art_dir:
-        try:
-            artifacts = load_tables(art_dir)
-        except FileNotFoundError:
-            artifacts = None
-        try:
-            thresholds = load_thresholds(art_dir)
-        except FileNotFoundError:
-            thresholds = None
+    thresholds, artifacts = load_fitted(art_dir)
     benchmark = (spark.read.parquet(args.benchmark)
                  if args.benchmark else None)
-    if getattr(args, "incremental", False):
-        from pii_redactor_spark.plans.build import build_increment
-        from pii_redactor_spark.tables import IcebergishTable
+    if args.incremental:
+        # --input is an IcebergishTable root (snapshot diffs drive the
+        # per-row stages), not a raw parquet path
         out = build_increment(
             spark, IcebergishTable(args.input), args.output_root,
             run_id=args.run_id, frac=args.frac, benchmark=benchmark,
             thresholds=thresholds, artifacts=artifacts,
             dedup_mode=args.dedup_mode)
     else:
-        out = build_job(spark, pages, args.output_root,
-                        run_id=args.run_id, n_buckets=args.n_buckets,
-                        frac=args.frac, benchmark=benchmark,
-                        thresholds=thresholds, artifacts=artifacts)
+        out = build_job(spark, spark.read.parquet(args.input),
+                        args.output_root, run_id=args.run_id,
+                        n_buckets=args.n_buckets, frac=args.frac,
+                        benchmark=benchmark, thresholds=thresholds,
+                        artifacts=artifacts)
     out["artifacts_dir"] = art_dir
     print(json.dumps(out))
     return 0
@@ -300,14 +271,6 @@ def cmd_evaluate(args) -> int:
         randomize=args.randomize, seed=args.seed,
     )
     print(json.dumps(summary))
-    return 0
-
-
-def cmd_scaling(args) -> int:
-    sys.path.insert(0, str(__import__("pathlib").Path(__file__).resolve().parents[1]))
-    from bench import run_scaling
-    out = run_scaling(args.sf_dir, pairs=((args.low, args.high),))
-    print(json.dumps(out))
     return 0
 
 
@@ -387,12 +350,6 @@ def main(argv: list[str] | None = None) -> int:
     e.add_argument("--randomize", action="store_true")
     e.add_argument("--seed", type=int, default=42)
     e.set_defaults(fn=cmd_evaluate)
-
-    s = sub.add_parser("scaling")
-    s.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    s.add_argument("--low", type=int, default=2)
-    s.add_argument("--high", type=int, default=8)
-    s.set_defaults(fn=cmd_scaling)
 
     args = p.parse_args(argv)
     return args.fn(args)

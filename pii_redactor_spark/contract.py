@@ -746,7 +746,7 @@ def q_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"),
         "doc_id", "text", "lang",
     )
-    out = run_pipeline(docs, allowed_langs=("en",), max_ppl=50.0)
+    out = run_pipeline(docs)
     _, rule_reasons = keep_decision(QualityThresholds())
     return (
         out

@@ -137,6 +137,22 @@ def resolve_artifacts_dir(explicit: str | None = None) -> str | None:
     return None
 
 
+def load_fitted(path: str | Path | None) -> tuple:
+    """``(thresholds, tables)`` fitted into an already-resolved artifact
+    dir; either is ``None`` when its files are absent (a thresholds-only
+    dir, or no dir at all). The tables ship to executors through
+    ``run_pipeline(artifacts=...)``."""
+    if not path:
+        return None, None
+    out = []
+    for load in (load_thresholds, load_tables):
+        try:
+            out.append(load(path))
+        except FileNotFoundError:
+            out.append(None)
+    return tuple(out)
+
+
 def load_artifacts(path: str | Path) -> dict:
     """Load fitted tables from ``path`` into THIS process's kernel
     caches (wins over refitting). Driver-side convenience; for

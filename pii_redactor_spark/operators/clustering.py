@@ -107,10 +107,20 @@ def _assign(points: DataFrame, cents: Column) -> DataFrame:
     )
 
 
+def _incomplete(key) -> ValueError:
+    return ValueError(
+        f"group {key}: embedding coordinates missing/null — ragged "
+        "or null vectors are not supported by the decimal means")
+
+
 def _seed_centroids(vecs: DataFrame, k: int) -> list[tuple[int, list[float]]]:
     """Deterministic init: the k lowest vec_ids, cid = rank 0..k-1.
-    TakeOrdered on the driver — k rows, no shuffle."""
+    TakeOrdered on the driver — k rows, no shuffle. A NULL seed vector
+    or coordinate raises ``decimal_means``' ValueError."""
     rows = vecs.orderBy("vec_id").limit(k).collect()
+    for r in rows:
+        if r["v"] is None or None in r["v"]:
+            raise _incomplete(f"seed vec_id {r['vec_id']}")
     return [(i, list(r["v"])) for i, r in enumerate(rows)]
 
 
@@ -153,9 +163,7 @@ def decimal_means(df: DataFrame, keys: list[str]) -> dict:
     for key, g in groups.items():
         if (len(dims) > 1 or sorted(g) != list(range(len(g)))
                 or len({n for n, _ in g.values()}) > 1):
-            raise ValueError(
-                f"group {key}: embedding coordinates missing/null — ragged "
-                "or null vectors are not supported by the decimal means")
+            raise _incomplete(key)
     return {key: [g[i][1] for i in range(len(g))]
             for key, g in sorted(groups.items())}
 

@@ -1008,6 +1008,13 @@ FROM ranked d JOIN ranked r
 # Soft dedup: reweight duplicates instead of dropping them
 # ---------------------------------------------------------------------------
 
+def content_hash(text: Column) -> Column:
+    """The exact-duplicate key: ``md5(text)``, with NULL text folded
+    into a sentinel no md5 hex can collide with — a Spark equi-join
+    drops NULL keys, and the NULL-text docs are one duplicate group."""
+    return F.coalesce(F.md5(text), F.lit("_null_"))
+
+
 def soft_dedup_weights(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:
     """Per-document sampling weight from exact-duplicate multiplicity —
@@ -1030,11 +1037,9 @@ def soft_dedup_weights(docs: DataFrame, text_col: str = "text",
     every copy of the hottest page in ONE task (the window-skew rule —
     AQE cannot split window partitions), while the join spreads them.
     """
-    # NULL-text docs must form ONE multiplicity group (the oracle's
-    # window PARTITION BY groups NULLs together) — but a Spark equi-join
-    # drops NULL keys, so fold NULL into a sentinel no md5 hex can
-    # collide with before grouping/joining.
-    h = F.coalesce(F.md5(F.col(text_col)), F.lit("_null_")).alias("_h")
+    # NULL-text docs form ONE multiplicity group (the oracle's window
+    # PARTITION BY groups NULLs together): content_hash's sentinel
+    h = content_hash(F.col(text_col)).alias("_h")
     counts = (docs.select(h).groupBy("_h")
               .agg(F.count(F.lit(1)).alias("n_copies")))
     return (
@@ -1069,12 +1074,11 @@ FROM (SELECT {id_col},
 # ---------------------------------------------------------------------------
 
 def doc_hashes(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """``(_h)`` content-hash rows with the NULL-text sentinel — the
-    storable exact-dup key table for ``dedup_against(old_hashes=...)``:
-    an incremental pipeline appends each drop's hashes once and never
-    re-hashes the accumulated corpus."""
-    return docs.select(
-        F.coalesce(F.md5(F.col(text_col)), F.lit("_null_")).alias("_h"))
+    """``(_h)`` content-hash rows — the storable exact-dup key table for
+    ``dedup_against(old_hashes=...)``: an incremental pipeline appends
+    each drop's hashes once and never re-hashes the accumulated
+    corpus."""
+    return docs.select(content_hash(F.col(text_col)).alias("_h"))
 
 
 def dedup_against(new_docs: DataFrame, old_docs: DataFrame,
@@ -1122,7 +1126,7 @@ def dedup_against(new_docs: DataFrame, old_docs: DataFrame,
     only the docs that actually collide (semi-join prune), so the old
     side's per-increment cost is bounded by the collision set.
     """
-    h = F.coalesce(F.md5(F.col(text_col)), F.lit("_null_"))
+    h = content_hash(F.col(text_col))
     old_h = ((old_hashes if old_hashes is not None
               else doc_hashes(old_docs, text_col))
              .select("_h").distinct().withColumn("_e", F.lit(1)))
@@ -1226,16 +1230,14 @@ near AS (
   WHERE CAST(len(list_intersect(a.sset, b.sset)) AS DOUBLE)
         / len(list_distinct(list_concat(a.sset, b.sset)))
         >= {verify_threshold})"""
+    h = f"coalesce(md5(d.{text_col}), '_null_')"   # content_hash
     return f"""
 WITH old_h AS (
-  SELECT DISTINCT coalesce(md5({text_col}), '_null_') AS _h
-  FROM {table} WHERE {old_pred}),{near}
+  SELECT DISTINCT {h} AS _h FROM {table} d WHERE {old_pred}),{near}
 SELECT d.{id_col},
-       coalesce(md5(d.{text_col}), '_null_') IN (SELECT _h FROM old_h)
-         AS exact_dup,
+       {h} IN (SELECT _h FROM old_h) AS exact_dup,
        d.{id_col} IN (SELECT {id_col} FROM near) AS near_dup,
-       NOT (coalesce(md5(d.{text_col}), '_null_')
-            IN (SELECT _h FROM old_h))
+       NOT ({h} IN (SELECT _h FROM old_h))
        AND NOT (d.{id_col} IN (SELECT {id_col} FROM near)) AS keep
 FROM {table} d WHERE {new_pred}
 """

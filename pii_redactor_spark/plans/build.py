@@ -1,7 +1,6 @@
 """One-command corpus build: the whole training-data pipeline as one
-lineage-tracked chain (round-3 verdict item 6 — the reference's
-``--optimize`` is a single command, reference: main.py:66-75; the
-engine's end-to-end corpus story is ``cli build``).
+lineage-tracked chain (the reference's ``--optimize`` is a single
+command, reference: main.py:66-75; the engine's is ``cli build``).
 
 Stages, each committing ONE snapshot-isolated table under
 ``<output_root>/NN_<stage>`` plus a metrics/lineage row:
@@ -16,6 +15,11 @@ Stages, each committing ONE snapshot-isolated table under
     select        DSIR top-fraction importance resampling
     pack          concat-then-chunk sequence assignment at the fixed
                   token budget (the tokenizer-writer handoff)
+
+``build_job`` runs the chain over a DataFrame; ``build_increment`` runs
+it over a growing IcebergishTable. Both call the same stage steps below
+(url default, url gate, decontaminate gate + default benchmark, scrub
+projection, DSIR cut, pack, token summary).
 
 Resume semantics: every completed stage's CURRENT snapshot carries
 ``lineage = {run_id, stage, complete: true}``; a re-run with the same
@@ -58,13 +62,116 @@ def stage_table(output_root: str | Path, name: str) -> IcebergishTable:
     return IcebergishTable(Path(output_root) / f"{idx:02d}_{name}")
 
 
-def _complete(tbl: IcebergishTable, run_id: str, stage: str) -> bool:
+def _lineage(tbl: IcebergishTable, run_id: str, stage: str) -> dict:
+    """The current snapshot's lineage when ``run_id``'s ``stage``
+    committed it, else ``{}``."""
     snap = tbl.snapshot()
-    return bool(snap and snap.lineage
-                and snap.lineage.get("run_id") == run_id
-                and snap.lineage.get("stage") == stage
-                and snap.lineage.get("complete"))
+    if snap and snap.lineage and snap.lineage.get("run_id") == run_id \
+            and snap.lineage.get("stage") == stage:
+        return snap.lineage
+    return {}
 
+
+def _log(spark: SparkSession, metrics: MetricsTable, run_id: str,
+         stage: str, n_in, n_out, t0: float) -> None:
+    metrics.log(spark, [{
+        "run_id": run_id, "stage": stage, "bucket": None,
+        "n_docs": n_in, "kept": n_out,
+        "dropped": (n_in - n_out)
+        if n_in is not None and n_out is not None else None,
+        "scrubbed": None, "elapsed_s": time.time() - t0,
+        "ts": time.time(),
+    }])
+
+
+# ---------------------------------------------------------------------------
+# the stage steps both chains run
+# ---------------------------------------------------------------------------
+
+def with_doc_url(pages: DataFrame) -> DataFrame:
+    """Pages without a url column get ``doc://<doc_id>``."""
+    if "url" in pages.columns:
+        return pages
+    return pages.withColumn("url", F.concat(F.lit("doc://"), F.col("doc_id")))
+
+
+def url_gate(df: DataFrame) -> DataFrame:
+    from pii_redactor_spark.functions.url_rules import with_url_rules
+    return (with_url_rules(df).filter(F.col("url_keep"))
+            .drop("host", "path", "url_reasons", "url_keep"))
+
+
+def default_benchmark(df: DataFrame) -> DataFrame:
+    """The benchmark when none is given: every 37th doc of the input."""
+    return df.filter(F.col("doc_id") % 37 == 0).select("doc_id", "text")
+
+
+def decontaminate_gate(df: DataFrame, bench: DataFrame) -> DataFrame:
+    from pii_redactor_spark.operators.decontaminate import contamination
+    return (contamination(df, bench).filter(~F.col("contaminated"))
+            .drop("shared_ngrams", "contaminated"))
+
+
+def scrub_projection(df: DataFrame, thresholds=None,
+                     artifacts=None) -> DataFrame:
+    """The quality kernels + keep decision; ``text`` becomes the
+    scrubbed text. A ``bucket`` column (run_resumable's) passes
+    through."""
+    from pii_redactor_spark.plans.pipeline import run_pipeline
+    pass_cols = [c for c in ("doc_id", "lang", "n_chars") if c in df.columns]
+    tail = ["bucket"] if "bucket" in df.columns else []
+    return run_pipeline(df, thresholds=thresholds, artifacts=artifacts) \
+        .select("url", *pass_cols, F.col("scrubbed_text").alias("text"),
+                "lang_pred", "ppl", "n_redactions", "keep", *tail)
+
+
+def dsir_cut(df: DataFrame, frac: float) -> DataFrame:
+    from pii_redactor_spark.operators.dsir import dsir_select
+    keep_ids = dsir_select(df, frac=frac) \
+        .filter(F.col("selected")).select("doc_id")
+    return df.join(keep_ids, "doc_id", "left_semi")
+
+
+def pack_tokens(df: DataFrame) -> DataFrame:
+    return pack(df.select(
+        "doc_id", regex_token_count(F.col("text")).alias("n_tokens")))
+
+
+def token_summary(spark: SparkSession, pack_tbl: IcebergishTable) -> dict:
+    """The numbers a training run budgets by, off the committed pack
+    table (one tiny aggregate)."""
+    row = pack_tbl.read(spark).agg(
+        F.sum("n_tokens").alias("t"),
+        F.max(F.col("start_off") + F.col("n_tokens")).alias("e")).first()
+    return {"total_tokens": int(row["t"] or 0), "seq_tokens": SEQ_TOKENS,
+            "n_sequences": -(-int(row["e"] or 0) // SEQ_TOKENS)}
+
+
+def append_through(spark: SparkSession, source: IcebergishTable,
+                   output: IcebergishTable, run_id: str, stage: str,
+                   transform) -> tuple | None:
+    """The per-row incremental step: read the source's manifest diff
+    since the ``input_snapshot`` marker in ``output``'s lineage,
+    transform it, append it with the new marker — a crawl drop costs
+    one pass over the drop, never a corpus re-scan. ``transform(diff)``
+    returns the rows to append and the number of diff rows it read
+    (``None``: one row out per row in). Returns ``(n_in, n_out)``, or
+    ``None`` when the source has nothing new (idempotent re-runs)."""
+    last = _lineage(output, run_id, stage).get("input_snapshot")
+    cur = source.current_snapshot_id()
+    diff = source.read_incremental(spark, last) if cur != last else None
+    if diff is None:
+        return None
+    out, n_in = transform(diff)
+    n_out = output.append(out, lineage={
+        "run_id": run_id, "stage": stage, "mode": "append-through",
+        "input_snapshot": cur, "complete": True}).added_rows
+    return (n_out if n_in is None else n_in), n_out
+
+
+# ---------------------------------------------------------------------------
+# the batch chain
+# ---------------------------------------------------------------------------
 
 def build_job(
     spark: SparkSession,
@@ -82,250 +189,88 @@ def build_job(
     ``fail_after_stage`` injects a crash after that stage commits — the
     mid-chain-kill test hook (run_resumable's fail_after_commits
     covers the intra-stage crash window)."""
+    from pii_redactor_spark.operators.cache import release_caches
+    from pii_redactor_spark.plans.dedup_job import dedup_corpus
+    from pii_redactor_spark.tables import run_resumable
+
     root = Path(output_root)
     metrics = MetricsTable(root / "metrics")
-    if "url" not in pages.columns:
-        pages = pages.withColumn(
-            "url", F.concat(F.lit("doc://"), F.col("doc_id")))
-
     stages: list[dict] = []
-    current = pages
+    current = with_doc_url(pages)
     n_prev: int | None = None   # the previous stage's n_out
 
-    def commit_stage(name: str, out_df: DataFrame, n_in: int,
-                     t0: float) -> DataFrame:
-        nonlocal n_prev
+    def run_stage(name: str, step, count_input: bool = False) -> None:
+        """Skip a stage this run completed, else commit ``step(current)``
+        and free the operators' caches."""
+        nonlocal current, n_prev
         tbl = stage_table(root, name)
-        tbl.overwrite(out_df, lineage={
-            "run_id": run_id, "stage": name, "complete": True})
-        n_out = n_prev = tbl.count(spark)
-        metrics.log(spark, [{
-            "run_id": run_id, "stage": f"build:{name}", "bucket": None,
-            "n_docs": n_in, "kept": n_out, "dropped": n_in - n_out,
-            "scrubbed": None, "elapsed_s": time.time() - t0,
-            "ts": time.time(),
-        }])
-        stages.append({"stage": name, "n_in": n_in, "n_out": n_out,
-                       "resumed": False,
-                       "snapshot": tbl.current_snapshot_id()})
-        return tbl.read(spark)
-
-    def skip_stage(name: str) -> DataFrame:
-        nonlocal n_prev
-        tbl = stage_table(root, name)
+        resumed = bool(_lineage(tbl, run_id, name).get("complete"))
+        n_in = None
+        if not resumed:
+            t0 = time.time()
+            n_in = current.count() if count_input else n_prev
+            tbl.overwrite(step(current), lineage={
+                "run_id": run_id, "stage": name, "complete": True})
         n_prev = tbl.count(spark)
-        stages.append({"stage": name, "n_in": None, "n_out": n_prev,
-                       "resumed": True,
+        if not resumed:
+            _log(spark, metrics, run_id, f"build:{name}", n_in, n_prev, t0)
+            release_caches()
+        stages.append({"stage": name, "n_in": n_in, "n_out": n_prev,
+                       "resumed": resumed,
                        "snapshot": tbl.current_snapshot_id()})
-        return tbl.read(spark)
+        current = tbl.read(spark)
+        maybe_fail(name)
 
     def maybe_fail(name: str) -> None:
         if fail_after_stage == name:
             raise RuntimeError(
                 f"injected failure after stage {name} (test hook)")
 
-    from pii_redactor_spark.operators.cache import release_caches
+    run_stage("urlfilter", url_gate, count_input=True)
+    run_stage("decontaminate", lambda df: decontaminate_gate(
+        df, benchmark if benchmark is not None else default_benchmark(df)))
+    run_stage("dedup", dedup_corpus)
 
-    # -- urlfilter ----------------------------------------------------------
-    name = "urlfilter"
-    if _complete(stage_table(root, name), run_id, name):
-        current = skip_stage(name)
-    else:
-        from pii_redactor_spark.functions.url_rules import with_url_rules
-        t0 = time.time()
-        n_in = current.count()
-        kept = (with_url_rules(current)
-                .filter(F.col("url_keep"))
-                .drop("host", "path", "url_reasons", "url_keep"))
-        current = commit_stage(name, kept, n_in, t0)
-    maybe_fail(name)
-
-    # -- decontaminate --------------------------------------------------------
-    name = "decontaminate"
-    if _complete(stage_table(root, name), run_id, name):
-        current = skip_stage(name)
-    else:
-        from pii_redactor_spark.operators.decontaminate import contamination
-        t0 = time.time()
-        n_in = n_prev
-        bench = benchmark if benchmark is not None else \
-            current.filter(F.col("doc_id") % 37 == 0).select("doc_id", "text")
-        kept = (contamination(current, bench)
-                .filter(~F.col("contaminated"))
-                .drop("shared_ngrams", "contaminated"))
-        current = commit_stage(name, kept, n_in, t0)
-    maybe_fail(name)
-
-    # -- dedup ----------------------------------------------------------------
-    name = "dedup"
-    if _complete(stage_table(root, name), run_id, name):
-        current = skip_stage(name)
-    else:
-        from pii_redactor_spark.plans.dedup_job import dedup_corpus
-        t0 = time.time()
-        n_in = n_prev
-        kept = dedup_corpus(current)
-        current = commit_stage(name, kept, n_in, t0)
-        release_caches()  # band/shingle/CC persists from the operators
-    maybe_fail(name)
-
-    # -- quality (bucket-resumable inside the stage) ---------------------------
-    name = "quality"
-    qtbl = stage_table(root, name)
-    from pii_redactor_spark.plans.pipeline import run_pipeline
-    from pii_redactor_spark.tables import run_resumable
+    # quality: bucket-resumable inside the stage
+    qtbl = stage_table(root, "quality")
     n_in = n_prev
-    pass_cols = [c for c in ("doc_id", "lang", "n_chars")
-                 if c in current.columns]
     commits = run_resumable(
-        spark, current, qtbl, metrics, run_id=run_id, stage=name,
+        spark, current, qtbl, metrics, run_id=run_id, stage="quality",
         n_buckets=n_buckets,
-        transform=lambda df: run_pipeline(
-            df, thresholds=thresholds, allowed_langs=("en",),
-            max_ppl=50.0, artifacts=artifacts)
-        .select("url", *pass_cols,
-                F.col("scrubbed_text").alias("text"),
-                "lang_pred", "ppl", "n_redactions", "keep", "bucket"),
-    )
+        transform=lambda df: scrub_projection(df, thresholds, artifacts))
     n_prev = qtbl.count(spark)
-    stages.append({"stage": name, "n_in": n_in, "n_out": n_prev,
+    stages.append({"stage": "quality", "n_in": n_in, "n_out": n_prev,
                    "resumed": commits == 0,
                    "commits_this_run": commits,
                    "snapshot": qtbl.current_snapshot_id()})
     current = qtbl.read(spark).filter(F.col("keep")).drop("keep")
-    maybe_fail(name)
+    maybe_fail("quality")
 
-    # -- select ---------------------------------------------------------------
-    name = "select"
-    if _complete(stage_table(root, name), run_id, name):
-        current = skip_stage(name)
-    else:
-        from pii_redactor_spark.operators.dsir import dsir_select
-        t0 = time.time()
-        # select's input is the KEPT quality rows, which no manifest
-        # records: the chain's one count after the input's
-        n_in = current.count()
-        flags = dsir_select(current, frac=frac)
-        keep_ids = flags.filter(F.col("selected")).select("doc_id")
-        kept = current.join(keep_ids, "doc_id", "left_semi")
-        current = commit_stage(name, kept, n_in, t0)
-        release_caches()  # dsir's persisted scoring projection
-    maybe_fail(name)
-
-    # -- pack -----------------------------------------------------------------
-    name = "pack"
-    if _complete(stage_table(root, name), run_id, name):
-        skip_stage(name)
-    else:
-        t0 = time.time()
-        n_in = n_prev
-        packed = pack(current.select(
-            "doc_id", regex_token_count(F.col("text")).alias("n_tokens")))
-        commit_stage(name, packed, n_in, t0)
-        release_caches()
-    maybe_fail(name)
-
-    # final corpus summary off the committed pack table (one tiny agg):
-    # the numbers a training run actually budgets by
-    pack_df = stage_table(root, "pack").read(spark)
-    tok_row = pack_df.agg(
-        F.sum("n_tokens").alias("t"),
-        F.max(F.col("start_off") + F.col("n_tokens")).alias("e")).first()
-    end = int(tok_row["e"] or 0)
+    # select's input is the KEPT quality rows, which no manifest records:
+    # the chain's one count after the input's
+    run_stage("select", lambda df: dsir_cut(df, frac), count_input=True)
+    run_stage("pack", pack_tokens)
     return {"run_id": run_id, "stages": stages,
-            "total_tokens": int(tok_row["t"] or 0),
-            "seq_tokens": SEQ_TOKENS,
-            "n_sequences": -(-end // SEQ_TOKENS),
+            **token_summary(spark, stage_table(root, "pack")),
             "metrics_rows": metrics.count(spark)}
 
 
-def quality_increment(
-    spark: SparkSession,
-    input_table: IcebergishTable,
-    output: IcebergishTable,
-    metrics: MetricsTable,
-    run_id: str = "inc",
-    thresholds=None,
-    artifacts=None,
-) -> dict:
-    """Incremental quality/scrub pass over a GROWING input table — the
-    per-row-stage incremental pattern (ROADMAP round-5 item 3): the
-    output table's snapshot lineage records the input snapshot id last
-    processed; each invocation reads ONLY the manifest diff
-    (``read_incremental``), scrubs it, and appends — a crawl drop costs
-    one pass over the drop, never a corpus re-scan. Global stages
-    (dedup / select / pack) are NOT incremental by their semantics and
-    must recompute over old+new — that is the chain's documented
-    design decision, not a gap here.
-
-    Idempotent: a re-run with no new input snapshot appends nothing.
-    """
-    import time as _time
-
-    from pii_redactor_spark.plans.pipeline import run_pipeline
-
-    last = None
-    snap = output.snapshot()
-    if snap and snap.lineage and snap.lineage.get("run_id") == run_id \
-            and snap.lineage.get("stage") == "quality_increment":
-        last = snap.lineage.get("input_snapshot")
-    cur = input_table.current_snapshot_id()
-    new_rows = input_table.read_incremental(spark, last)
-    if new_rows is None or cur == last:
-        return {"run_id": run_id, "appended": 0,
-                "input_snapshot": cur, "up_to_date": True}
-    if "url" not in new_rows.columns:
-        new_rows = new_rows.withColumn(
-            "url", F.concat(F.lit("doc://"), F.col("doc_id")))
-    t0 = _time.time()
-    pass_cols = [c for c in ("doc_id", "lang", "n_chars")
-                 if c in new_rows.columns]
-    out = run_pipeline(
-        new_rows, thresholds=thresholds, allowed_langs=("en",),
-        max_ppl=50.0, artifacts=artifacts,
-    ).select("url", *pass_cols,
-             F.col("scrubbed_text").alias("text"),
-             "lang_pred", "ppl", "n_redactions", "keep")
-    n = output.append(out, lineage={
-        "run_id": run_id, "stage": "quality_increment",
-        "input_snapshot": cur, "complete": True}).added_rows
-    metrics.log(spark, [{
-        "run_id": run_id, "stage": "build:quality_increment",
-        "bucket": None, "n_docs": n, "kept": None, "dropped": None,
-        "scrubbed": n, "elapsed_s": _time.time() - t0,
-        "ts": _time.time(),
-    }])
-    return {"run_id": run_id, "appended": n, "input_snapshot": cur,
-            "up_to_date": False}
-
-
 # ---------------------------------------------------------------------------
-# Incremental build (round-4 verdict item 2): the chain over a GROWING
-# IcebergishTable input. Per-ROW stages (urlfilter + decontaminate,
-# then the quality scrub) are APPEND-THROUGH — each invocation
-# processes only the input's manifest diff (read_incremental), chained
-# table-to-table by snapshot markers in the output lineage, so a crawl
-# drop costs one pass over the drop. GLOBAL stages (dedup / select /
-# pack) RECOMPUTE over old+new by their semantics (a new drop can
+# Incremental build: the chain over a GROWING IcebergishTable input.
+# Per-ROW stages (urlfilter + decontaminate, then the quality scrub) are
+# APPEND-THROUGH (``append_through``), chained table-to-table by
+# snapshot markers in the output lineage. GLOBAL stages (dedup / select
+# / pack) RECOMPUTE over old+new by their semantics (a new drop can
 # duplicate an old doc, move the DSIR cut, and shifts every pack
-# offset) — the design decision is recorded in every lineage row and
-# metrics row as mode=append-through|recompute. The quality stage's
-# per-doc scrub outputs are doc-local, so they are computed ONCE per
-# doc (the scrub cache) and the recomputed dedup survivor set just
-# semi-joins them — the final tables equal a from-scratch build_job
-# over the same input + pinned benchmark (pinned at the first
-# increment; decontamination is only per-row against a FIXED benchmark,
-# which is also the real-world shape: eval suites don't grow with the
-# crawl).
+# offset) — the decision is recorded in every lineage row and metrics
+# row as mode=append-through|recompute. The quality stage's per-doc
+# scrub outputs are doc-local, so they are computed ONCE per doc (the
+# scrub cache) and the recomputed dedup survivor set just semi-joins
+# them — the final tables equal a from-scratch build_job over the same
+# input + pinned benchmark (pinned at the first increment;
+# decontamination is only per-row against a FIXED benchmark, which is
+# also the real-world shape: eval suites don't grow with the crawl).
 # ---------------------------------------------------------------------------
-
-def _inc_last(tbl: IcebergishTable, run_id: str, stage: str):
-    snap = tbl.snapshot()
-    if snap and snap.lineage and snap.lineage.get("run_id") == run_id \
-            and snap.lineage.get("stage") == stage:
-        return snap.lineage.get("input_snapshot")
-    return None
-
 
 def build_increment(
     spark: SparkSession,
@@ -349,10 +294,9 @@ def build_increment(
     (exact hash + Jaccard-verified band candidates) and only novel docs
     append — one pass over the drop instead of the corpus, at the
     documented bridge-case trade (see the stage comment)."""
-    from pii_redactor_spark.functions.url_rules import with_url_rules
-    from pii_redactor_spark.operators.cache import release_caches
-    from pii_redactor_spark.operators.decontaminate import contamination
-    from pii_redactor_spark.plans.pipeline import run_pipeline
+    from pii_redactor_spark.operators.cache import (
+        registered_persist, release_caches)
+    from pii_redactor_spark.plans.dedup_job import dedup_corpus
 
     root = Path(output_root)
     metrics = MetricsTable(root / "metrics")
@@ -365,78 +309,38 @@ def build_increment(
     # append-through stage's n_out is the rows its own snapshot added
     # (from the manifest), never the accumulated table
     def log_row(stage: str, mode: str, n_in, n_out, t0: float) -> None:
-        metrics.log(spark, [{
-            "run_id": run_id, "stage": f"inc:{stage}:{mode}",
-            "bucket": None, "n_docs": n_in, "kept": n_out,
-            "dropped": (n_in - n_out)
-            if n_in is not None and n_out is not None else None,
-            "scrubbed": None, "elapsed_s": time.time() - t0,
-            "ts": time.time(),
-        }])
+        _log(spark, metrics, run_id, f"inc:{stage}:{mode}", n_in, n_out, t0)
         stages.append({"stage": stage, "mode": mode,
                        "n_in": n_in, "n_out": n_out})
 
-    # -- per-row: prefilter (urlfilter + fixed-benchmark decontaminate) ------
-    t0 = time.time()
-    last_in = _inc_last(pre_tbl, run_id, "prefilter")
-    cur_in = input_table.current_snapshot_id()
-    diff = (input_table.read_incremental(spark, last_in)
-            if cur_in != last_in else None)
-    if diff is not None:
-        if "url" not in diff.columns:
-            diff = diff.withColumn(
-                "url", F.concat(F.lit("doc://"), F.col("doc_id")))
+    def prefilter(diff: DataFrame) -> tuple:
+        """url gate + decontaminate against the benchmark pinned at the
+        first increment."""
+        diff = with_doc_url(diff)
         if bench_tbl.snapshot() is None:
-            b = benchmark if benchmark is not None else \
-                diff.filter(F.col("doc_id") % 37 == 0) \
-                    .select("doc_id", "text")
-            bench_tbl.overwrite(b, lineage={
-                "run_id": run_id, "stage": "benchmark",
-                "mode": "pinned-at-first-increment", "complete": True})
+            bench_tbl.overwrite(
+                benchmark if benchmark is not None
+                else default_benchmark(diff), lineage={
+                    "run_id": run_id, "stage": "benchmark",
+                    "mode": "pinned-at-first-increment", "complete": True})
         bench = bench_tbl.read(spark).select("doc_id", "text")
-        diff = diff.persist()
-        try:
-            n_in = diff.count()
-            kept = (with_url_rules(diff)
-                    .filter(F.col("url_keep"))
-                    .drop("host", "path", "url_reasons", "url_keep"))
-            kept = (contamination(kept, bench)
-                    .filter(~F.col("contaminated"))
-                    .drop("shared_ngrams", "contaminated"))
-            n_out = pre_tbl.append(kept, lineage={
-                "run_id": run_id, "stage": "prefilter",
-                "mode": "append-through", "input_snapshot": cur_in,
-                "complete": True}).added_rows
-        finally:
-            diff.unpersist()
-        log_row("prefilter", "append-through", n_in, n_out, t0)
-    else:
-        stages.append({"stage": "prefilter", "mode": "append-through",
-                       "n_in": 0, "n_out": None})
+        # read by the count and the append; freed with the dedup caches
+        diff = registered_persist(diff)
+        return decontaminate_gate(url_gate(diff), bench), diff.count()
 
-    # -- per-row: scrub cache (quality kernels, once per doc ever) -----------
-    t0 = time.time()
-    last_pre = _inc_last(scrub_tbl, run_id, "scrub")
-    cur_pre = pre_tbl.current_snapshot_id()
-    pdiff = (pre_tbl.read_incremental(spark, last_pre)
-             if cur_pre != last_pre else None)
-    if pdiff is not None:
-        pass_cols = [c for c in ("doc_id", "lang", "n_chars")
-                     if c in pdiff.columns]
-        out = run_pipeline(
-            pdiff, thresholds=thresholds, allowed_langs=("en",),
-            max_ppl=50.0, artifacts=artifacts,
-        ).select("url", *pass_cols,
-                 F.col("scrubbed_text").alias("text"),
-                 "lang_pred", "ppl", "n_redactions", "keep")
-        n = scrub_tbl.append(out, lineage={
-            "run_id": run_id, "stage": "scrub",
-            "mode": "append-through", "input_snapshot": cur_pre,
-            "complete": True}).added_rows
-        log_row("scrub", "append-through", n, n, t0)
-    else:
-        stages.append({"stage": "scrub", "mode": "append-through",
-                       "n_in": 0, "n_out": None})
+    cur_in = input_table.current_snapshot_id()
+    for name, source, output, transform in (
+            ("prefilter", input_table, pre_tbl, prefilter),
+            ("scrub", pre_tbl, scrub_tbl, lambda d: (
+                scrub_projection(d, thresholds, artifacts), None))):
+        t0 = time.time()
+        done = append_through(spark, source, output, run_id, name,
+                              transform)
+        if done is None:
+            stages.append({"stage": name, "mode": "append-through",
+                           "n_in": 0, "n_out": None})
+        else:
+            log_row(name, "append-through", *done, t0)
 
     if pre_tbl.snapshot() is None:
         return {"run_id": run_id, "incremental": True, "stages": stages,
@@ -444,10 +348,9 @@ def build_increment(
                 "total_tokens": 0}
 
     # -- global recompute: dedup -> quality join -> select -> pack -----------
-    from pii_redactor_spark.plans.dedup_job import dedup_corpus
     t0 = time.time()
     dtbl = stage_table(root, "dedup")
-    cur_pre_dd = pre_tbl.current_snapshot_id()
+    cur_pre = pre_tbl.current_snapshot_id()
     if dedup_mode == "append":
         # Append-mode dedup (the dedup_against building block): the new
         # drop is deduped WITHIN itself (dedup_corpus), then flagged
@@ -485,7 +388,7 @@ def build_increment(
             for tbl, stage, derive in (
                     (htbl, "dedup_hashes", doc_hashes),
                     (btbl, "dedup_bands", minhash_bands)):
-                last = _inc_last(tbl, run_id, stage)
+                last = _lineage(tbl, run_id, stage).get("input_snapshot")
                 if last == cur_dd:
                     continue
                 lineage = {"run_id": run_id, "stage": stage,
@@ -497,15 +400,15 @@ def build_increment(
                     if delta is not None:
                         tbl.append(derive(delta), lineage=lineage)
 
-        last_dd = _inc_last(dtbl, run_id, "dedup")
-        if last_dd == cur_pre_dd and dtbl.snapshot() is not None:
+        last_dd = _lineage(dtbl, run_id, "dedup").get("input_snapshot")
+        if last_dd == cur_pre and dtbl.snapshot() is not None:
             _sync_sig()
             log_row("dedup", "append:up-to-date", 0, 0, t0)
         elif last_dd is None:
             survivors = dedup_corpus(pre_tbl.read(spark))
             n_out = dtbl.overwrite(survivors, lineage={
                 "run_id": run_id, "stage": "dedup", "mode": "append-seed",
-                "input_snapshot": cur_pre_dd, "complete": True}).added_rows
+                "input_snapshot": cur_pre, "complete": True}).added_rows
             _sync_sig()
             release_caches()
             log_row("dedup", "append-seed", pre_tbl.count(spark), n_out,
@@ -527,7 +430,7 @@ def build_increment(
                 add = new_surv.join(keep_ids, "doc_id", "left_semi")
                 n_out = dtbl.append(add, lineage={
                     "run_id": run_id, "stage": "dedup", "mode": "append",
-                    "input_snapshot": cur_pre_dd,
+                    "input_snapshot": cur_pre,
                     "complete": True}).added_rows
                 _sync_sig()  # append the new survivors' own signatures
                 release_caches()
@@ -536,52 +439,33 @@ def build_increment(
         survivors = dedup_corpus(pre_tbl.read(spark))
         n_out = dtbl.overwrite(survivors, lineage={
             "run_id": run_id, "stage": "dedup", "mode": "recompute",
-            "input_snapshot": cur_pre_dd, "complete": True}).added_rows
+            "input_snapshot": cur_pre, "complete": True}).added_rows
         release_caches()
         log_row("dedup", "recompute", pre_tbl.count(spark), n_out, t0)
 
+    def recompute(name: str, df: DataFrame, n_in, t0: float,
+                  mode: str = "recompute") -> int:
+        n_out = stage_table(root, name).overwrite(df, lineage={
+            "run_id": run_id, "stage": name, "mode": mode,
+            "complete": True}).added_rows
+        release_caches()
+        log_row(name, "recompute", n_in, n_out, t0)
+        return n_out
+
     t0 = time.time()
     kept_ids = dtbl.read(spark).select("doc_id")
-    quality = scrub_tbl.read(spark).join(kept_ids, "doc_id", "left_semi")
-    qtbl = stage_table(root, "quality")
-    n_out = qtbl.overwrite(quality, lineage={
-        "run_id": run_id, "stage": "quality",
-        "mode": "recompute-join-of-cached-scrub",
-        "complete": True}).added_rows
-    log_row("quality", "recompute", None, n_out, t0)
-
-    from pii_redactor_spark.operators.dsir import dsir_select
+    recompute("quality",
+              scrub_tbl.read(spark).join(kept_ids, "doc_id", "left_semi"),
+              None, t0, mode="recompute-join-of-cached-scrub")
     t0 = time.time()
-    current = qtbl.read(spark).filter(F.col("keep")).drop("keep")
+    current = stage_table(root, "quality").read(spark) \
+        .filter(F.col("keep")).drop("keep")
     n_in = current.count()
-    flags = dsir_select(current, frac=frac)
-    keep_ids = flags.filter(F.col("selected")).select("doc_id")
-    sel = current.join(keep_ids, "doc_id", "left_semi")
-    stbl = stage_table(root, "select")
-    n_sel = stbl.overwrite(sel, lineage={
-        "run_id": run_id, "stage": "select", "mode": "recompute",
-        "complete": True}).added_rows
-    release_caches()
-    log_row("select", "recompute", n_in, n_sel, t0)
-
+    n_sel = recompute("select", dsir_cut(current, frac), n_in, t0)
     t0 = time.time()
-    packed = pack(stbl.read(spark).select(
-        "doc_id", regex_token_count(F.col("text")).alias("n_tokens")))
-    ptbl = stage_table(root, "pack")
-    n_out = ptbl.overwrite(packed, lineage={
-        "run_id": run_id, "stage": "pack", "mode": "recompute",
-        "complete": True}).added_rows
-    release_caches()
-    log_row("pack", "recompute", n_sel, n_out, t0)
-
-    pack_df = ptbl.read(spark)
-    tok_row = pack_df.agg(
-        F.sum("n_tokens").alias("t"),
-        F.max(F.col("start_off") + F.col("n_tokens")).alias("e")).first()
-    end = int(tok_row["e"] or 0)
+    recompute("pack", pack_tokens(stage_table(root, "select").read(spark)),
+              n_sel, t0)
     return {"run_id": run_id, "incremental": True, "stages": stages,
             "input_snapshot": cur_in,
-            "total_tokens": int(tok_row["t"] or 0),
-            "seq_tokens": SEQ_TOKENS,
-            "n_sequences": -(-end // SEQ_TOKENS),
+            **token_summary(spark, stage_table(root, "pack")),
             "metrics_rows": metrics.count(spark)}

@@ -1,26 +1,24 @@
-"""End-to-end corpus deduplication job: components → keep-one → rewrite.
+"""Corpus deduplication: components → keep-one.
 
-The full dedup path a training-data pipeline runs before training:
+The dedup path a training-data pipeline runs before training:
 
 1. LSH near-dup candidate pairs → connected components
    (operators/dedup.py) — every document labeled with its duplicate
    cluster's min id;
 2. keep exactly the representative (component == id) of each cluster,
-   drop the rest;
-3. write the deduplicated corpus as a new Iceberg-style snapshot with a
-   metrics/lineage row (docs in, docs kept, dups removed) — the rewrite
-   is a snapshot commit, so the pre-dedup corpus remains time-travelable.
+   drop the rest.
+
+The build chain's dedup stage (plans/build.py) commits the result as a
+snapshot with its metrics/lineage row, so the pre-dedup corpus remains
+time-travelable.
 """
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pii_redactor_spark.operators.dedup import dedup_components
-from pii_redactor_spark.tables import IcebergishTable, MetricsTable
 
 
 def dedup_corpus(docs: DataFrame, text_col: str = "text",
@@ -42,32 +40,3 @@ def dedup_corpus(docs: DataFrame, text_col: str = "text",
         .select(id_col)
     )
     return docs.join(F.broadcast(dups), id_col, "left_anti")
-
-
-def run_dedup_job(
-    spark: SparkSession,
-    docs: DataFrame,
-    output: IcebergishTable,
-    metrics: MetricsTable,
-    run_id: str = "dedup",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> dict:
-    """Execute the rewrite + commit + lineage row. Returns a summary."""
-    from pii_redactor_spark.operators.cache import release_caches
-    t0 = time.time()
-    try:
-        n_in = docs.count()
-        kept = dedup_corpus(docs, text_col, id_col)
-        snap = output.append(kept)
-        n_kept = snap.added_rows  # this run's rows, not the whole table
-    finally:
-        release_caches()  # band/shingle/CC-label persists from the operators
-    metrics.log(spark, [{
-        "run_id": run_id, "stage": "dedup_rewrite", "bucket": None,
-        "n_docs": n_in, "kept": n_kept, "dropped": n_in - n_kept,
-        "scrubbed": None, "elapsed_s": time.time() - t0, "ts": time.time(),
-    }])
-    return {"n_in": n_in, "n_kept": n_kept,
-            "n_dups_removed": n_in - n_kept,
-            "snapshot_id": snap.snapshot_id}

@@ -160,38 +160,21 @@ def run_pipeline(
     text_col: str = "text",
     thresholds: QualityThresholds | None = None,
     allowed_langs: tuple[str, ...] = ("en",),
-    max_ppl: float | None = 30.0,
+    max_ppl: float | None = 50.0,
     per_url_gazetteer: dict[str, list[tuple[str, str]]] | None = None,
     enable_regex: bool = True,
     global_gazetteer: list[tuple[str, str]] | None = None,
     timers: KernelTimers | None = None,
     artifacts: dict | None = None,
-    artifacts_dir: str | None = None,
 ) -> DataFrame:
     """Full quality pipeline over a pages DataFrame.
 
     Output adds: lang_pred, lang_conf, ppl, scrubbed_text, entities,
     n_redactions, all quality-rule stats, keep:boolean, reasons:array.
-    ``artifacts``: fitted kernel tables (artifacts.load_tables) shipped
-    to executors via the UDF closure. ``artifacts_dir``: convenience —
-    load fitted thresholds + tables from a fit-job output directory
-    (the reference always loads its optimized model at startup when
-    present, main.py:22-26); explicit ``thresholds``/``artifacts``
-    arguments win over the directory.
+    ``artifacts``: fitted kernel tables (artifacts.load_fitted) shipped
+    to executors via the UDF closure. The default gate (English,
+    perplexity <= 50) is the one every served path runs.
     """
-    if artifacts_dir is not None:
-        from pii_redactor_spark.kernels.artifacts import (
-            load_tables, load_thresholds)
-        if thresholds is None:
-            try:
-                thresholds = load_thresholds(artifacts_dir)
-            except FileNotFoundError:
-                pass
-        if artifacts is None:
-            try:
-                artifacts = load_tables(artifacts_dir)
-            except FileNotFoundError:
-                pass
     th = thresholds or QualityThresholds()
     fused = make_fused_kernel_udf(per_url_gazetteer, enable_regex,
                                   global_gazetteer, timers=timers,

@@ -52,10 +52,8 @@ def scrub_stream(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = run_pipeline(
-            batch_df, allowed_langs=("en",), max_ppl=50.0,
-        ).select("url", "doc_id", "lang_pred", "ppl", "n_redactions",
-                 "keep")
+        out = run_pipeline(batch_df).select(
+            "url", "doc_id", "lang_pred", "ppl", "n_redactions", "keep")
         # persist: the fused kernel pass runs ONCE per micro-batch; the
         # stats aggregation and the table append both read the cache
         # (previously count + filter.count + append = 3 kernel passes)

@@ -3,18 +3,25 @@ entry on Spark and its oracle_sql() on DuckDB at sf0.01, compare row count,
 column names, and an order-insensitive value hash.
 
 Usage: python scripts/check_contract.py [sf_dir] [query ...]
+
+Each oracle runs under ORACLE_BUDGET_S; one that overruns is interrupted
+and reported as TIMEOUT, a failure like any other.
 """
 
 from __future__ import annotations
 
 import hashlib
 import sys
+import threading
 from pathlib import Path
 
 import duckdb
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+# seconds one oracle query may run on DuckDB before it is interrupted
+ORACLE_BUDGET_S = 300
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -81,9 +88,18 @@ def main() -> int:
         if name not in oracles:
             print(f"{name:28s} rows-only: {len(srows)} rows")
             continue
-        orel = con.execute(oracles[name])
-        ocols = [d[0] for d in orel.description]
-        orows = orel.fetchall()
+        timer = threading.Timer(ORACLE_BUDGET_S, con.interrupt)
+        timer.start()
+        try:
+            orel = con.execute(oracles[name])
+            ocols = [d[0] for d in orel.description]
+            orows = orel.fetchall()
+        except duckdb.InterruptException:
+            failures += 1
+            print(f"{name:28s} TIMEOUT  oracle over {ORACLE_BUDGET_S} s")
+            continue
+        finally:
+            timer.cancel()
         ok_rows = len(srows) == len(orows)
         ok_cols = sorted(scols) == sorted(ocols)
         sh, oh = table_hash(scols, srows), table_hash(ocols, orows)

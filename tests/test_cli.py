@@ -135,6 +135,20 @@ def test_thresholds_roundtrip(tmp_path):
     assert load_thresholds(tmp_path) == th
 
 
+def test_load_fitted_tolerates_missing_files(tmp_path):
+    """The one artifact loader behind cli run/build and
+    ``__spark_entry__.entry``: no dir, a thresholds-only dir and a
+    missing dir load what is there and ``None`` for the rest."""
+    from pii_redactor_spark.functions.rules import QualityThresholds
+    from pii_redactor_spark.kernels.artifacts import (
+        load_fitted, save_thresholds)
+    th = QualityThresholds(min_words=7)
+    save_thresholds(tmp_path / "th_only", th)
+    assert load_fitted(None) == (None, None)
+    assert load_fitted(str(tmp_path / "th_only")) == (th, None)
+    assert load_fitted(tmp_path / "missing") == (None, None)
+
+
 def test_run_and_resume(spark, capsys, tmp_path):
     args = ["run",
             "--input", "/root/testdata/sf0.001/documents.parquet",
@@ -279,6 +293,7 @@ def test_build_summary_token_budget(spark, tmp_path):
     equals the pack table's sum and n_sequences its ceil-division."""
     from pii_redactor_spark.operators.cache import release_caches
     from pii_redactor_spark.plans.build import build_job, stage_table
+    from pii_redactor_spark.tables import MetricsTable
 
     pages = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet").filter("doc_id < 120")
@@ -288,6 +303,15 @@ def test_build_summary_token_budget(spark, tmp_path):
     total = sum(r["n_tokens"] for r in pack)
     assert out["total_tokens"] == total > 0
     assert out["n_sequences"] == -(-total // out["seq_tokens"])
+    # the dedup stage's metrics row: docs in, kept, dups removed
+    dedup = {s["stage"]: s for s in out["stages"]}["dedup"]
+    rows = [r for r in MetricsTable(tmp_path / "c2" / "metrics")
+            .read(spark).collect() if r["stage"] == "build:dedup"]
+    assert len(rows) == 1
+    assert rows[0]["n_docs"] == dedup["n_in"]
+    assert rows[0]["kept"] == dedup["n_out"] == \
+        stage_table(tmp_path / "c2", "dedup").read(spark).count()
+    assert rows[0]["dropped"] == dedup["n_in"] - dedup["n_out"]
 
 
 def test_build_incremental_appends_diff_and_matches_scratch(

@@ -243,7 +243,11 @@ def test_proto_prune_rank_is_skew_safe(emb):
     "transform(embedding, (x, i) -> "
     "CASE WHEN vec_id = 123 AND i = 3 THEN CAST(NULL AS FLOAT) ELSE x END)",
     "CASE WHEN vec_id = 123 THEN slice(embedding, 1, 63) ELSE embedding END",
-], ids=["null_coordinate", "ragged"])
+    # vec_id 7 is a k-means seed at k = 8: the seed literal must not
+    # meet the NULL first
+    "transform(embedding, (x, i) -> "
+    "CASE WHEN vec_id = 7 AND i = 3 THEN CAST(NULL AS FLOAT) ELSE x END)",
+], ids=["null_coordinate", "ragged", "null_seed_coordinate"])
 def test_centroid_fits_reject_incomplete_vectors(emb, embedding):
     """Every fit on the shared DECIMAL means raises the same ValueError
     on one NULL coordinate or one short (ragged) vector, where a mean

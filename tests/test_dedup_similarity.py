@@ -140,23 +140,19 @@ def test_components_long_chain_bounded_plan(spark):
     assert persistent == 0  # checkpoints freed via the registry handle
 
 
-def test_dedup_job_rewrites_corpus(spark, tmp_path):
-    from pii_redactor_spark.plans.dedup_job import run_dedup_job
-    from pii_redactor_spark.tables import IcebergishTable, MetricsTable
+def test_dedup_job_rewrites_corpus(spark):
+    """dedup_corpus keeps each cluster's representative; the build
+    chain's dedup stage commits it (its metrics row is checked in
+    test_cli::test_build_summary_token_budget)."""
+    from pii_redactor_spark.operators.cache import release_caches
+    from pii_redactor_spark.plans.dedup_job import dedup_corpus
     rows = [(0, BASE), (1, BASE), (2, NEAR), (3, OTHER), (4, "tiny doc")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = IcebergishTable(tmp_path / "out")
-    met = MetricsTable(tmp_path / "met")
-    summary = run_dedup_job(spark, docs, out, met, run_id="dd1")
-    assert summary["n_in"] == 5
-    kept_ids = {r["doc_id"] for r in out.read(spark).collect()}
+    kept_ids = {r["doc_id"] for r in dedup_corpus(docs).collect()}
+    release_caches()
     assert 0 in kept_ids and 1 not in kept_ids   # exact dup dropped, rep kept
     assert {3, 4} <= kept_ids                    # isolated docs survive
-    assert summary["n_kept"] == len(kept_ids)
-    assert summary["n_dups_removed"] >= 1
-    m = met.read(spark).collect()[0]
-    assert m["dropped"] == summary["n_dups_removed"]
-    assert m["stage"] == "dedup_rewrite"
+    assert len(kept_ids) <= len(rows) - 1        # at least one dup removed
 
 
 def test_verified_components_exclude_false_band_collisions(spark):

@@ -260,33 +260,34 @@ def test_read_incremental_is_manifest_diff(spark, tmp_path):
 
 
 def test_quality_increment_processes_only_new_snapshots(spark, tmp_path):
-    """Incremental scrub over a growing input table: first pass scrubs
+    """Incremental scrub over a growing input table (the build's
+    append-through step with the scrub transform): first pass scrubs
     everything, a second pass after an append scrubs ONLY the drop, a
     third pass with no growth is a no-op."""
-    from pyspark.sql import functions as F
-
-    from pii_redactor_spark.plans.build import quality_increment
-    from pii_redactor_spark.tables import IcebergishTable, MetricsTable
+    from pii_redactor_spark.plans.build import (
+        append_through, scrub_projection, with_doc_url)
+    from pii_redactor_spark.tables import IcebergishTable
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     src = IcebergishTable(tmp_path / "src")
     out = IcebergishTable(tmp_path / "out")
-    met = MetricsTable(tmp_path / "met")
+
+    def scrub_increment():
+        return append_through(
+            spark, src, out, "i1", "scrub",
+            lambda diff: (scrub_projection(with_doc_url(diff)), None))
 
     src.append(docs.filter("doc_id < 60"))
-    r1 = quality_increment(spark, src, out, met, run_id="i1")
-    assert r1["appended"] == 60 and not r1["up_to_date"]
+    assert scrub_increment() == (60, 60)     # read 60, appended 60
     assert out.read(spark).count() == 60
 
     src.append(docs.filter("doc_id >= 60 AND doc_id < 85"))
-    r2 = quality_increment(spark, src, out, met, run_id="i1")
-    assert r2["appended"] == 25
+    assert scrub_increment() == (25, 25)
     got = out.read(spark)
     assert got.count() == 85
     assert got.select("doc_id").distinct().count() == 85  # no re-scrubs
 
-    r3 = quality_increment(spark, src, out, met, run_id="i1")
-    assert r3["up_to_date"] and r3["appended"] == 0
+    assert scrub_increment() is None         # up to date: appends nothing
     assert out.read(spark).count() == 85
     # output rows carry the scrubbed text as `text`
     assert "text" in got.columns and "scrubbed_text" not in got.columns
