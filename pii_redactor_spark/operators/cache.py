@@ -45,8 +45,8 @@ def unpersist_checkpoint(df: DataFrame) -> None:
 
 
 class _LocalCheckpointHandle:
-    """Release handle for a ``localCheckpoint(eager=True)`` DataFrame —
-    the release_caches contract already requires results to be fully
+    """Release handle for a filled ``localCheckpoint`` DataFrame — the
+    release_caches contract already requires results to be fully
     consumed first."""
 
     def __init__(self, df: DataFrame):
@@ -57,7 +57,7 @@ class _LocalCheckpointHandle:
 
 
 def register_local_checkpoint(df: DataFrame) -> DataFrame:
-    """Track an eager localCheckpoint for release via release_caches."""
+    """Track a filled localCheckpoint for release via release_caches."""
     _ACTIVE.append(_LocalCheckpointHandle(df))  # duck-typed .unpersist()
     return df
 

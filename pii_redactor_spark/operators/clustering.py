@@ -539,13 +539,16 @@ def semdedup_stream_oracle_sql(table: str = "embeddings", k: int = KM_K,
     """DuckDB twin: pairwise hit flags from the same cosine arithmetic,
     then the sequential rep-set evolution as a RECURSIVE CTE over the
     per-cluster rank (one state row per (cid, rank), reps as an INT[]
-    of ranks — pure integer/boolean recursion, no float state)."""
+    of ranks — pure integer/boolean recursion, no float state).
+    ``ranked`` and ``hitlists`` are MATERIALIZED: the recursive step
+    reads both, and inlined they would re-run the k-means CTE chain
+    and the pairwise join on every step (sf0.1 did not finish)."""
     cte = _kmeans_cte(table, k, iters, dim).replace(
         "WITH ", "WITH RECURSIVE ", 1)
     dup_expr = "COALESCE(len(list_intersect(s.reps, h.js)) > 0, FALSE)"
     return f"""
 {cte},
-ranked AS (
+ranked AS MATERIALIZED (
   SELECT vec_id, v, CAST(cid AS INT) AS cid,
          CAST(ROW_NUMBER() OVER (PARTITION BY cid ORDER BY vec_id)
               AS INT) AS rk
@@ -555,7 +558,8 @@ hits AS (
   FROM ranked a JOIN ranked b
     ON a.cid = b.cid AND b.rk < a.rk
   WHERE {_cos_sql('a.v', 'b.v')} >= {tau!r}),
-hitlists AS (SELECT cid, ri, list(rj) AS js FROM hits GROUP BY cid, ri),
+hitlists AS MATERIALIZED (
+  SELECT cid, ri, list(rj) AS js FROM hits GROUP BY cid, ri),
 steps AS (
   SELECT cid, 0 AS rk, CAST([] AS INT[]) AS reps,
          CAST(NULL AS BIGINT) AS vec_id, CAST(NULL AS BOOLEAN) AS is_dup

@@ -337,22 +337,34 @@ def components_from_edges(nodes: DataFrame, edges: DataFrame,
     partition however few endpoints there are; a checkpoint keeps AQE's
     coalesced partitions and truncates the lineage, so the plan stays
     bounded at any round count. The undirected edge list is checkpointed
-    eagerly once (every round reads it); a round's checkpoint is freed
-    as soon as the next round's is filled. localCheckpoint trades
-    fault-tolerance of the truncated prefix for plan size; a production
-    cluster run can swap in a snapshot write through tables.py for a
-    durable cut.
+    eagerly once (every round reads it): each edge is emitted in both
+    directions by one generator over ONE copy of the edge plan, so the
+    plan behind ``edges`` (e.g. the Jaccard verification) runs once. A
+    round's checkpoint is freed as soon as the next round's is filled.
+    localCheckpoint trades fault-tolerance of the truncated prefix for
+    plan size; a production cluster run can swap in a snapshot write
+    through tables.py for a durable cut.
 
-    The RETURNED frame is a final eager localCheckpoint: downstream
-    consumers and the PLANS.md audit see a bounded ExistingRDD scan, not
-    the loop's lineage.
+    The RETURNED frame is the lazy ``nodes`` left join over the last
+    round's checkpoint, which stays registered for ``release_caches``:
+    downstream consumers and the PLANS.md audit see a bounded
+    ExistingRDD scan, not the loop's lineage, and no extra action runs
+    just to materialize the result. The labels are broadcast: they hold
+    edge endpoints only, at most twice the non-representative ids that
+    ``dedup_corpus`` broadcasts anyway, so ``nodes`` never shuffles.
     """
     from pii_redactor_spark.operators.cache import (
         register_local_checkpoint, unpersist_checkpoint)
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
+    # inline_outer, not inline: the array always holds two structs, and
+    # the outer form keeps InferFiltersFromGenerate from re-evaluating it
+    # in a pushed-down size() filter
     und = (
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(edges.select(F.col("id_b").alias("src"),
-                            F.col("id_a").alias("dst")))
+        edges.select(F.inline_outer(F.array(
+            F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+            F.struct(F.col("id_b").alias("src"),
+                     F.col("id_a").alias("dst")))))
         .localCheckpoint(eager=True)
     )
     labels = und.groupBy("src").agg(
@@ -396,16 +408,15 @@ def components_from_edges(nodes: DataFrame, edges: DataFrame,
                 stats["rounds"] = it + 1
             if split == 0:
                 break
-        final = register_local_checkpoint(
-            nodes.join(labels, "node", "left")
-            .select("node", F.coalesce("component", "node")
-                    .alias("component"))
-            .localCheckpoint(eager=True))
-    finally:
-        unpersist_checkpoint(und)
+    except BaseException:
         if prev is not None:
             unpersist_checkpoint(prev)
-    return final
+        raise
+    finally:
+        unpersist_checkpoint(und)
+    register_local_checkpoint(labels)
+    return nodes.join(F.broadcast(labels), "node", "left").select(
+        "node", F.coalesce("component", "node").alias("component"))
 
 
 def dedup_edges(docs: DataFrame, text_col: str = "text",

@@ -47,7 +47,7 @@ import math
 from collections import Counter
 from functools import lru_cache
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from pii_redactor_spark.functions.rules import words_col
@@ -84,13 +84,15 @@ def target_logprobs(dim: int = DSIR_DIM) -> tuple[int, ...]:
 
 
 def raw_logprobs(docs: DataFrame, text_col: str = "text",
-                 dim: int = DSIR_DIM) -> list[int]:
-    """Quantized log-probs of the RAW corpus LM: the distributed fit —
-    one explode + groupBy(bucket) count (map-side partials, <= dim
-    groups), collected as a tiny table; quantization driver-side with
-    the same arithmetic the oracle runs in SQL."""
+                 dim: int = DSIR_DIM) -> tuple[list[int], int]:
+    """(quantized log-probs of the RAW corpus LM, number of documents):
+    the distributed fit — one explode + groupBy(bucket) count (map-side
+    partials, <= dim groups), collected as a tiny table; quantization
+    driver-side with the same arithmetic the oracle runs in SQL. The
+    document count is observed on the same pass (no count job)."""
+    obs = Observation()
     rows = (
-        docs
+        docs.observe(obs, F.count(F.lit(1)).alias("n"))
         .select(F.explode_outer(words_col(F.col(text_col))).alias("w"))
         .where(F.col("w").isNotNull())
         .select(_bucket_expr(F.col("w"), dim).alias("bucket"))
@@ -100,19 +102,19 @@ def raw_logprobs(docs: DataFrame, text_col: str = "text",
     counts = {int(r["bucket"]): int(r["count"]) for r in rows}
     total = sum(counts.values())
     den = float(total) + DSIR_ALPHA * dim
-    return [
-        _qlog(float(counts.get(b, 0)) + DSIR_ALPHA, den) for b in range(dim)]
+    return [_qlog(float(counts.get(b, 0)) + DSIR_ALPHA, den)
+            for b in range(dim)], obs.get["n"]
 
 
 def _scored_df(docs: DataFrame, text_col: str, id_col: str,
-               dim: int) -> DataFrame:
-    """Persisted (id, n_words, _s:BIGINT) scoring projection — the
-    per-word md5 fold (the expensive part of the plan) runs once; the
-    threshold job and the final projection both read the materialized
-    scores (quality_tiers precedent; released per query by
+               dim: int) -> tuple[DataFrame, int]:
+    """(persisted (id, n_words, _s:BIGINT) scoring projection, number of
+    documents) — the per-word md5 fold (the expensive part of the plan)
+    runs once; the threshold job and the final projection both read the
+    materialized scores (quality_tiers precedent; released per query by
     check_contract/bench via release_caches)."""
     lt = target_logprobs(dim)
-    lq = raw_logprobs(docs, text_col, dim)
+    lq, n = raw_logprobs(docs, text_col, dim)
     lr = [lt[b] - lq[b] for b in range(dim)]
     lr_lit = F.expr("array({})".format(",".join(f"{v}L" for v in lr)))
     return registered_persist(
@@ -134,7 +136,7 @@ def _scored_df(docs: DataFrame, text_col: str, id_col: str,
                 F.when(F.col("_buckets").isNotNull(),
                        F.size("_buckets")).alias("n_words"),
                 F.col("_s").alias("_s"))
-    )
+    ), n
 
 
 def _top_frac_cut(scored: DataFrame, key_col: str, key_type: str,
@@ -168,8 +170,8 @@ def dsir_select(docs: DataFrame, text_col: str = "text",
                 dim: int = DSIR_DIM) -> DataFrame:
     """(doc_id, n_words, dsir_logw, selected): exact BIGINT log-ratio
     score per document + deterministic top-``frac`` cut."""
-    scored = _scored_df(docs, text_col, id_col, dim)
-    k = (docs.count() * int(round(frac * 100))) // 100
+    scored, n = _scored_df(docs, text_col, id_col, dim)
+    k = (n * int(round(frac * 100))) // 100
     sel = _top_frac_cut(scored, "_s", "bigint", id_col, k)
     return scored.select(
         id_col, "n_words",
@@ -262,13 +264,13 @@ def dsir_gumbel_select(docs: DataFrame, text_col: str = "text",
     """(doc_id, n_words, gumbel_key, selected): Gumbel-top-frac —
     exactly ``dsir_select``'s plan with the perturbed, 6-rounded key
     swapped into the same TakeOrdered struct-threshold cut."""
+    raw, n = _scored_df(docs, text_col, id_col, dim)
     scored = registered_persist(
-        _scored_df(docs, text_col, id_col, dim)
-        .select(id_col, "n_words",
-                F.round(F.col("_s").cast("double") / _SCALE
-                        + _gumbel_col(id_col), 6).alias("gumbel_key"))
+        raw.select(id_col, "n_words",
+                   F.round(F.col("_s").cast("double") / _SCALE
+                           + _gumbel_col(id_col), 6).alias("gumbel_key"))
     )
-    k = (docs.count() * int(round(frac * 100))) // 100
+    k = (n * int(round(frac * 100))) // 100
     sel = _top_frac_cut(scored, "gumbel_key", "double", id_col, k)
     return scored.select(id_col, "n_words", "gumbel_key",
                          sel.alias("selected"))

@@ -85,13 +85,15 @@ def split_by_rank(df: DataFrame, order_col: str, n: int,
 
 
 def _boundaries(df: DataFrame, order_col: str, num_buckets: int,
-                seed: int = 42) -> list:
+                seed: int = 42, n_rows: int | None = None) -> list:
     """~``num_buckets - 1`` ascending boundary values of ``order_col``,
     from a driver-collected sample (the same procedure Spark's own
     RangePartitioner runs: count, sample, pick evenly spaced keys).
-    Boundary QUALITY only affects balance, never correctness — the
-    caller ranks within buckets and offsets across them."""
-    n = df.count()
+    ``n_rows`` is ``df``'s row count when the caller knows it; only
+    otherwise is ``df`` counted. Boundary QUALITY only affects balance,
+    never correctness — the caller ranks within buckets and offsets
+    across them."""
+    n = df.count() if n_rows is None else n_rows
     if n == 0 or num_buckets <= 1:
         return []
     fraction = min(1.0, BOUNDARY_SAMPLE_TARGET / n)
@@ -220,7 +222,8 @@ def global_prefix_sum(df: DataFrame, order_col: str, value_col: str,
                       extra_order_cols: tuple[str, ...] = (),
                       num_buckets: int | None = None,
                       sum_name: str = "prefix_sum",
-                      seed: int = 42) -> DataFrame:
+                      seed: int = 42,
+                      n_rows: int | None = None) -> DataFrame:
     """EXCLUSIVE global running sum of ``value_col`` in (order_col,
     *extra_order_cols) order — ``SUM(value) OVER (ORDER BY ... ROWS
     UNBOUNDED PRECEDING AND 1 PRECEDING)`` without the ``Exchange
@@ -234,11 +237,12 @@ def global_prefix_sum(df: DataFrame, order_col: str, value_col: str,
     end-to-end); the order must be a total order for cross-engine
     determinism. This is the distributed prefix-scan primitive behind
     sequence packing (concat-then-chunk into fixed token budgets).
+    ``n_rows``: ``df``'s row count, when the caller already holds it.
     """
     spark = df.sparkSession
     if num_buckets is None:
         num_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    bounds = _boundaries(df, order_col, num_buckets, seed)
+    bounds = _boundaries(df, order_col, num_buckets, seed, n_rows)
     bucket = _bucket_expr(order_col, bounds)
 
     sums = (
@@ -289,16 +293,17 @@ def regex_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_RE), 0))
 
 
-def pack(toks: DataFrame) -> DataFrame:
+def pack(toks: DataFrame, n_rows: int | None = None) -> DataFrame:
     """(doc_id, n_tokens, start_off, seq_idx, n_seqs) from (doc_id,
     n_tokens): ``start_off`` is the document's offset in the doc_id-ordered
     token stream, ``seq_idx`` the SEQ_TOKENS-sized sequence it starts
     in, ``n_seqs`` how many sequences it spans (0 for no tokens).
     ``toks`` is persisted: its tokenization is the dominant cost and
     would otherwise run twice (the prefix sum's bucket-sums job + the
-    final plan); ``release_caches`` frees it."""
+    final plan); ``release_caches`` frees it. ``n_rows``: ``toks``'s row
+    count when the caller knows it (spares the prefix sum a count)."""
     pre = global_prefix_sum(registered_persist(toks), "doc_id", "n_tokens",
-                            sum_name="start_off")
+                            sum_name="start_off", n_rows=n_rows)
     b = SEQ_TOKENS
     return pre.select(
         "doc_id", "n_tokens", "start_off",

@@ -30,9 +30,11 @@ from scratch (new lineage roots via overwrite).
 
 Row counts: a stage's ``n_in`` is the previous stage's ``n_out``, and
 every ``n_out`` comes from the committed snapshot's manifest (rows read
-from the Parquet footers at commit), so the chain's bookkeeping starts no
-Spark job beyond counting the input once (and the quality stage's kept
-rows, which no manifest records).
+from the Parquet footers at commit). The two inputs no manifest records
+(the chain's input, and the quality stage's kept rows that select reads)
+are counted by an ``Observation`` riding the stage's own passes, and the
+token summary is observed on the pack write, so the chain's bookkeeping
+starts no Spark job of its own.
 
 Scale notes: stages only ever append/overwrite through tables.py
 (snapshot isolation, bucket partitioning on the quality stage); each
@@ -46,7 +48,7 @@ from __future__ import annotations
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from pii_redactor_spark.operators.ranking import (
@@ -87,6 +89,15 @@ def _log(spark: SparkSession, metrics: MetricsTable, run_id: str,
 # ---------------------------------------------------------------------------
 # the stage steps both chains run
 # ---------------------------------------------------------------------------
+
+def count_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count observed (``obs.get["n"]``): the count
+    rides the first action that reads the frame instead of running a
+    job of its own. No filter is pushed below an observe, so it counts
+    every row of ``df`` whatever the consumer filters."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
 
 def with_doc_url(pages: DataFrame) -> DataFrame:
     """Pages without a url column get ``doc://<doc_id>``."""
@@ -132,17 +143,29 @@ def dsir_cut(df: DataFrame, frac: float) -> DataFrame:
     return df.join(keep_ids, "doc_id", "left_semi")
 
 
-def pack_tokens(df: DataFrame) -> DataFrame:
-    return pack(df.select(
-        "doc_id", regex_token_count(F.col("text")).alias("n_tokens")))
+def pack_tokens(df: DataFrame, n_rows: int) -> tuple[DataFrame, Observation]:
+    """The pack rows of ``df`` (``n_rows`` rows, the select stage's
+    committed count) and the Observation its write fills with the token
+    summary's aggregates."""
+    obs = Observation()
+    rows = pack(df.select(
+        "doc_id", regex_token_count(F.col("text")).alias("n_tokens")),
+        n_rows=n_rows)
+    return rows.observe(obs, *_token_aggs()), obs
 
 
-def token_summary(spark: SparkSession, pack_tbl: IcebergishTable) -> dict:
-    """The numbers a training run budgets by, off the committed pack
-    table (one tiny aggregate)."""
-    row = pack_tbl.read(spark).agg(
-        F.sum("n_tokens").alias("t"),
-        F.max(F.col("start_off") + F.col("n_tokens")).alias("e")).first()
+def _token_aggs() -> list:
+    return [F.sum("n_tokens").alias("t"),
+            F.max(F.col("start_off") + F.col("n_tokens")).alias("e")]
+
+
+def token_summary(spark: SparkSession, pack_tbl: IcebergishTable,
+                  written: Observation | None = None) -> dict:
+    """The numbers a training run budgets by: observed on the pack write
+    (``written``, from ``pack_tokens``) when this run wrote the table,
+    else one tiny aggregate over the committed pack table."""
+    row = written.get if written is not None else \
+        pack_tbl.read(spark).agg(*_token_aggs()).first()
     return {"total_tokens": int(row["t"] or 0), "seq_tokens": SEQ_TOKENS,
             "n_sequences": -(-int(row["e"] or 0) // SEQ_TOKENS)}
 
@@ -154,19 +177,19 @@ def append_through(spark: SparkSession, source: IcebergishTable,
     since the ``input_snapshot`` marker in ``output``'s lineage,
     transform it, append it with the new marker — a crawl drop costs
     one pass over the drop, never a corpus re-scan. ``transform(diff)``
-    returns the rows to append and the number of diff rows it read
-    (``None``: one row out per row in). Returns ``(n_in, n_out)``, or
-    ``None`` when the source has nothing new (idempotent re-runs)."""
+    returns the rows to append; the diff's row count is observed on
+    that pass. Returns ``(n_in, n_out)``, or ``None`` when the source
+    has nothing new (idempotent re-runs)."""
     last = _lineage(output, run_id, stage).get("input_snapshot")
     cur = source.current_snapshot_id()
     diff = source.read_incremental(spark, last) if cur != last else None
     if diff is None:
         return None
-    out, n_in = transform(diff)
-    n_out = output.append(out, lineage={
+    diff, seen = count_rows(diff)
+    n_out = output.append(transform(diff), lineage={
         "run_id": run_id, "stage": stage, "mode": "append-through",
         "input_snapshot": cur, "complete": True}).added_rows
-    return (n_out if n_in is None else n_in), n_out
+    return seen.get["n"], n_out
 
 
 # ---------------------------------------------------------------------------
@@ -201,16 +224,20 @@ def build_job(
 
     def run_stage(name: str, step, count_input: bool = False) -> None:
         """Skip a stage this run completed, else commit ``step(current)``
-        and free the operators' caches."""
+        and free the operators' caches. ``count_input``: the input has
+        no manifest count, so it is observed on the stage's own
+        passes."""
         nonlocal current, n_prev
         tbl = stage_table(root, name)
         resumed = bool(_lineage(tbl, run_id, name).get("complete"))
         n_in = None
         if not resumed:
             t0 = time.time()
-            n_in = current.count() if count_input else n_prev
-            tbl.overwrite(step(current), lineage={
+            src, seen = count_rows(current) if count_input \
+                else (current, None)
+            tbl.overwrite(step(src), lineage={
                 "run_id": run_id, "stage": name, "complete": True})
+            n_in = seen.get["n"] if seen is not None else n_prev
         n_prev = tbl.count(spark)
         if not resumed:
             _log(spark, metrics, run_id, f"build:{name}", n_in, n_prev, t0)
@@ -247,11 +274,18 @@ def build_job(
     maybe_fail("quality")
 
     # select's input is the KEPT quality rows, which no manifest records:
-    # the chain's one count after the input's
+    # its count rides DSIR's raw-LM pass
     run_stage("select", lambda df: dsir_cut(df, frac), count_input=True)
-    run_stage("pack", pack_tokens)
+    written = None   # the pack write's token aggregates, if it ran
+
+    def pack_step(df: DataFrame) -> DataFrame:
+        nonlocal written
+        rows, written = pack_tokens(df, n_prev)  # n_prev: select's n_out
+        return rows
+
+    run_stage("pack", pack_step)
     return {"run_id": run_id, "stages": stages,
-            **token_summary(spark, stage_table(root, "pack")),
+            **token_summary(spark, stage_table(root, "pack"), written),
             "metrics_rows": metrics.count(spark)}
 
 
@@ -294,8 +328,7 @@ def build_increment(
     (exact hash + Jaccard-verified band candidates) and only novel docs
     append — one pass over the drop instead of the corpus, at the
     documented bridge-case trade (see the stage comment)."""
-    from pii_redactor_spark.operators.cache import (
-        registered_persist, release_caches)
+    from pii_redactor_spark.operators.cache import release_caches
     from pii_redactor_spark.plans.dedup_job import dedup_corpus
 
     root = Path(output_root)
@@ -313,7 +346,7 @@ def build_increment(
         stages.append({"stage": stage, "mode": mode,
                        "n_in": n_in, "n_out": n_out})
 
-    def prefilter(diff: DataFrame) -> tuple:
+    def prefilter(diff: DataFrame) -> DataFrame:
         """url gate + decontaminate against the benchmark pinned at the
         first increment."""
         diff = with_doc_url(diff)
@@ -324,15 +357,13 @@ def build_increment(
                     "run_id": run_id, "stage": "benchmark",
                     "mode": "pinned-at-first-increment", "complete": True})
         bench = bench_tbl.read(spark).select("doc_id", "text")
-        # read by the count and the append; freed with the dedup caches
-        diff = registered_persist(diff)
-        return decontaminate_gate(url_gate(diff), bench), diff.count()
+        return decontaminate_gate(url_gate(diff), bench)
 
     cur_in = input_table.current_snapshot_id()
     for name, source, output, transform in (
             ("prefilter", input_table, pre_tbl, prefilter),
-            ("scrub", pre_tbl, scrub_tbl, lambda d: (
-                scrub_projection(d, thresholds, artifacts), None))):
+            ("scrub", pre_tbl, scrub_tbl,
+             lambda d: scrub_projection(d, thresholds, artifacts))):
         t0 = time.time()
         done = append_through(spark, source, output, run_id, name,
                               transform)
@@ -443,29 +474,29 @@ def build_increment(
         release_caches()
         log_row("dedup", "recompute", pre_tbl.count(spark), n_out, t0)
 
-    def recompute(name: str, df: DataFrame, n_in, t0: float,
-                  mode: str = "recompute") -> int:
+    def recompute(name: str, df: DataFrame, mode: str = "recompute") -> int:
         n_out = stage_table(root, name).overwrite(df, lineage={
             "run_id": run_id, "stage": name, "mode": mode,
             "complete": True}).added_rows
         release_caches()
-        log_row(name, "recompute", n_in, n_out, t0)
         return n_out
 
     t0 = time.time()
     kept_ids = dtbl.read(spark).select("doc_id")
-    recompute("quality",
-              scrub_tbl.read(spark).join(kept_ids, "doc_id", "left_semi"),
-              None, t0, mode="recompute-join-of-cached-scrub")
+    n_q = recompute(
+        "quality", scrub_tbl.read(spark).join(kept_ids, "doc_id", "left_semi"),
+        mode="recompute-join-of-cached-scrub")
+    log_row("quality", "recompute", None, n_q, t0)
     t0 = time.time()
-    current = stage_table(root, "quality").read(spark) \
-        .filter(F.col("keep")).drop("keep")
-    n_in = current.count()
-    n_sel = recompute("select", dsir_cut(current, frac), n_in, t0)
+    current, seen = count_rows(stage_table(root, "quality").read(spark)
+                               .filter(F.col("keep")).drop("keep"))
+    n_sel = recompute("select", dsir_cut(current, frac))
+    log_row("select", "recompute", seen.get["n"], n_sel, t0)
     t0 = time.time()
-    recompute("pack", pack_tokens(stage_table(root, "select").read(spark)),
-              n_sel, t0)
+    rows, written = pack_tokens(stage_table(root, "select").read(spark),
+                                n_sel)
+    log_row("pack", "recompute", n_sel, recompute("pack", rows), t0)
     return {"run_id": run_id, "incremental": True, "stages": stages,
             "input_snapshot": cur_in,
-            **token_summary(spark, stage_table(root, "pack")),
+            **token_summary(spark, stage_table(root, "pack"), written),
             "metrics_rows": metrics.count(spark)}

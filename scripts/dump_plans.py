@@ -55,7 +55,7 @@ def summarize(plan: str) -> list[str]:
 
 
 # Iterative operators run their loop DURING plan construction; the
-# returned frame is a final localCheckpoint, so the dumped plan (a
+# returned frame reads the last round's checkpoint, so the dumped plan (a
 # bounded ExistingRDD scan) is exactly what downstream consumers
 # execute — the per-round cost lives in the loop and is annotated here
 # instead (round-4 verdict: the old dump recorded the un-checkpointed
@@ -67,9 +67,10 @@ ITERATIVE_NOTES = {
         "later rounds = 1 neighbor-min join + groupBy + 1 pointer join; "
         "each round is a lazy localCheckpoint filled by its stop test "
         "(count of edges whose endpoint labels differ under the new "
-        "labels), so the converging round is the last; returned frame = "
-        "final checkpoint scan below, edge phase (the loop's input) "
-        "after it"),
+        "labels), so the converging round is the last; the undirected "
+        "edges are one inline_outer over one copy of the edge phase; "
+        "returned frame = nodes left-joined to the broadcast last-round "
+        "checkpoint scan below, edge phase (the loop's input) after it"),
     "q_dedup_components_verified": (
         "same loop as q_dedup_components over Jaccard-verified edges; "
         "the edge phase reads ONE persisted signature frame (one "

@@ -569,9 +569,10 @@ def test_components_one_job_per_round(spark):
     — and the stop test rides it, never a second full-corpus action.
     AQE runs a lazy checkpoint's shuffle stages inside the
     ``localCheckpoint`` call, so a round's group is that call plus the
-    stop-test count that fills it. Around the rounds: the eager
-    undirected-edge checkpoint before, the final eager checkpoint after.
-    Executions that start no job (bookkeeping) are not counted."""
+    stop-test count that fills it. Before the rounds: the eager
+    undirected-edge checkpoint; after them nothing (the result is a
+    lazy join over the last round's checkpoint). Executions that start
+    no job (bookkeeping) are not counted."""
     from pii_redactor_spark.operators.cache import release_caches
     n = 50
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
@@ -597,8 +598,7 @@ def test_components_one_job_per_round(spark):
         ran = [d for i, d, jobs in executions()
                if i not in before and jobs > 0]
         assert ran == (["localCheckpoint"]
-                       + ["localCheckpoint", "count"] * st["rounds"]
-                       + ["localCheckpoint"]), ran
+                       + ["localCheckpoint", "count"] * st["rounds"]), ran
         assert labels.columns == ["node", "component"]
     finally:
         release_caches()

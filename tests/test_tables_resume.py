@@ -275,7 +275,7 @@ def test_quality_increment_processes_only_new_snapshots(spark, tmp_path):
     def scrub_increment():
         return append_through(
             spark, src, out, "i1", "scrub",
-            lambda diff: (scrub_projection(with_doc_url(diff)), None))
+            lambda diff: scrub_projection(with_doc_url(diff)))
 
     src.append(docs.filter("doc_id < 60"))
     assert scrub_increment() == (60, 60)     # read 60, appended 60
