@@ -6,7 +6,9 @@ Subcommands:
 
   redact  <text>        one-document smoke path (reference: main.py:38,87-92)
   run     --input --output --metrics --run-id [--n-buckets]
-                        resumable corpus pipeline (restart = resume)
+                        resumable corpus pipeline (restart with the
+                        same --run-id = resume; a new --run-id
+                        replaces the output table)
   select  --input --output --method {dsir,semdedup,proto,urldedup,bm25}
                         data-selection job: score + cut, snapshot commit
   build   --input --output-root --run-id [--frac --benchmark --artifacts]

@@ -15,6 +15,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.functions import text_hash
 from pii_redactor_spark.functions.rules import (
     QualityThresholds, keep_decision, with_quality)
 from pii_redactor_spark.operators.metrics import with_hybrid_score
@@ -452,41 +453,14 @@ _STOPWORD_SQL_LIST = (
     "'it','for','not','on','with','he','as','you','do','at']"
 )
 
-# Hashed n-grams (round 3): the Spark side combines per-word 60-bit md5
-# folds with position rotations (functions/rules.py hashed_ngrams_col);
-# the oracle reproduces the exact same integer arithmetic, so the ratio
-# values are bit-identical in both engines.
-_WHASH_FOLD_SQL = (
-    "list_sum(list_transform(range(15), i -> "
-    "CAST(strpos('0123456789abcdef', substr(md5(w), CAST(i+1 AS INT), 1)) - 1 AS BIGINT) "
-    "* CAST(power(16, 14 - i) AS BIGINT)))"
-)
-
-
-def _rot60_sql(h: str, s: int) -> str:
-    if s == 0:
-        return h
-    mask = (1 << s) - 1
-    return f"(({h} >> {s}) | (({h} & {mask}) << {60 - s}))"
-
-
-def _hashed_ngrams_sql(n: int) -> str:
-    terms = [_rot60_sql(f"whashes[CAST(i+{k}+1 AS INT)]", (7 * k) % 60)
-             for k in range(n)]
-    expr = terms[0]
-    for t in terms[1:]:
-        expr = f"xor({expr}, {t})"
-    return (f"CASE WHEN len(whashes) >= {n} THEN "
-            f"list_transform(range(len(whashes) - {n} + 1), i -> {expr}) "
-            f"ELSE CAST([] AS BIGINT[]) END")
-
-
+# The n-gram arrays are the hashed word n-grams of functions/text_hash.py
+# on both sides, so the ratio values are bit-identical in both engines.
 _QUALITY_BASE_SQL = f"""
 WITH base AS (
   SELECT doc_id, text, words, lines,
-         list_transform(words, w -> {_WHASH_FOLD_SQL}) AS whashes
+         {text_hash.word_hashes_sql('words')} AS whashes
   FROM (SELECT doc_id, text,
-          list_filter(string_split_regex(trim(text), '\\s+'), w -> w <> '') AS words,
+          {text_hash.WORDS_SQL.format(t='text')} AS words,
           list_filter(string_split(text, chr(10)), l -> trim(l) <> '') AS lines
         FROM documents)),
 stats AS (
@@ -536,10 +510,10 @@ stats AS (
             / (len(words) - 4)
       END AS dup_5gram_ratio
   FROM (SELECT *,
-          {_hashed_ngrams_sql(2)} AS bigrams,
-          {_hashed_ngrams_sql(3)} AS trigrams,
-          {_hashed_ngrams_sql(4)} AS quadgrams,
-          {_hashed_ngrams_sql(5)} AS fivegrams
+          {text_hash.hashed_ngrams_sql('whashes', 2)} AS bigrams,
+          {text_hash.hashed_ngrams_sql('whashes', 3)} AS trigrams,
+          {text_hash.hashed_ngrams_sql('whashes', 4)} AS quadgrams,
+          {text_hash.hashed_ngrams_sql('whashes', 5)} AS fivegrams
         FROM base))
 SELECT * FROM stats
 """
@@ -607,11 +581,9 @@ def q_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # rows-only check; byte-identity is asserted by the query itself
 # (match=true for every row) and in test_corpus.py.
 # ---------------------------------------------------------------------------
-_FOLD8_SQL = (
-    "list_sum(list_transform(range(8), i -> "
-    "CAST(strpos('0123456789abcdef', substr(md5('{salt}' || doc_id), "
-    "CAST(i+1 AS INT), 1)) - 1 AS BIGINT) * CAST(power(16, 7 - i) AS BIGINT)))"
-)
+def _id_hash_sql(salt: str) -> str:
+    """sources/corpus.py's and sampling.hash_split's id hash."""
+    return text_hash.md5_int_sql(f"'{salt}' || doc_id", 8)
 
 
 @register(
@@ -619,11 +591,11 @@ _FOLD8_SQL = (
     oracle=f"""
     WITH corpus AS (
       SELECT doc_id,
-        CASE WHEN {_FOLD8_SQL.format(salt='host:')} % 2 = 0
+        CASE WHEN {_id_hash_sql('host:')} % 2 = 0
              THEN 'bighost.example'
-             ELSE 'site' || lpad(CAST({_FOLD8_SQL.format(salt='host:')} % 20 AS VARCHAR), 2, '0') || '.example'
+             ELSE 'site' || lpad(CAST({_id_hash_sql('host:')} % 20 AS VARCHAR), 2, '0') || '.example'
         END AS host,
-        to_timestamp(1700000000 + {_FOLD8_SQL.format(salt='ts:')} % 2592000) AS warc_ts
+        to_timestamp(1700000000 + {_id_hash_sql('ts:')} % 2592000) AS warc_ts
       FROM documents)
     SELECT CAST(date_trunc('day', warc_ts) AS DATE) AS crawl_day,
            host,
@@ -663,9 +635,9 @@ _WRAP_HTML_FIXED_BYTES = 151  # len(wrap_html('', '')) — pinned in test_corpus
     WITH corpus AS (
       SELECT doc_id, text,
         'https://' ||
-        CASE WHEN {_FOLD8_SQL.format(salt='host:')} % 2 = 0
+        CASE WHEN {_id_hash_sql('host:')} % 2 = 0
              THEN 'bighost.example'
-             ELSE 'site' || lpad(CAST({_FOLD8_SQL.format(salt='host:')} % 20 AS VARCHAR), 2, '0') || '.example'
+             ELSE 'site' || lpad(CAST({_id_hash_sql('host:')} % 20 AS VARCHAR), 2, '0') || '.example'
         END || '/doc/' || CAST(doc_id AS VARCHAR) AS url
       FROM documents)
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -1088,9 +1060,9 @@ def q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CORPUS_URLS_SQL = f"""
 SELECT doc_id,
   'https://' ||
-  CASE WHEN {_FOLD8_SQL.format(salt='host:')} % 2 = 0
+  CASE WHEN {_id_hash_sql('host:')} % 2 = 0
        THEN 'bighost.example'
-       ELSE 'site' || lpad(CAST({_FOLD8_SQL.format(salt='host:')} % 20 AS VARCHAR), 2, '0') || '.example'
+       ELSE 'site' || lpad(CAST({_id_hash_sql('host:')} % 20 AS VARCHAR), 2, '0') || '.example'
   END || '/doc/' || doc_id AS url
 FROM documents
 """
@@ -1169,12 +1141,11 @@ _DECON_BENCH_PRED = "doc_id % 37 = 0"
 
 def _decon_grams_sql(pred: str | None) -> str:
     where = f"WHERE {pred}" if pred else ""
-    return f"""SELECT doc_id, list_distinct({_hashed_ngrams_sql(8)}) AS gs
+    return f"""SELECT doc_id,
+      list_distinct({text_hash.hashed_ngrams_sql('whashes', 8)}) AS gs
     FROM (SELECT doc_id, words,
-                 list_transform(words, w -> {_WHASH_FOLD_SQL}) AS whashes
-          FROM (SELECT doc_id,
-                  list_filter(string_split_regex(trim(text), '\\s+'),
-                              w -> w <> '') AS words
+                 {text_hash.word_hashes_sql('words')} AS whashes
+          FROM (SELECT doc_id, {text_hash.WORDS_SQL.format(t='text')} AS words
                 FROM documents {where}))"""
 
 
@@ -1246,12 +1217,11 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH base AS (
       SELECT doc_id, words,
-             list_transform(words, w -> {{whf}}) AS whashes
-      FROM (SELECT doc_id,
-              list_filter(string_split_regex(trim(text), '\\s+'),
-                          w -> w <> '') AS words
+             {text_hash.word_hashes_sql('words')} AS whashes
+      FROM (SELECT doc_id, {text_hash.WORDS_SQL.format(t='text')} AS words
             FROM documents)),
-    grams AS (SELECT doc_id, {_hashed_ngrams_sql(8)} AS gs FROM base),
+    grams AS (SELECT doc_id, {text_hash.hashed_ngrams_sql('whashes', 8)} AS gs
+              FROM base),
     occ AS (
       SELECT doc_id,
              CAST(unnest(range(len(gs))) AS BIGINT) AS pos,
@@ -1291,7 +1261,7 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
            md5(clean) AS cleaned_hash,
            CAST(length(clean) AS INT) AS cleaned_len
     FROM fin
-    """.replace("{whf}", _WHASH_FOLD_SQL),
+    """,
 )
 def q_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dd.span_dedup_rewrite(_t(spark, sf_dir, "documents"))
@@ -1306,9 +1276,9 @@ def q_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_split_hash",
     oracle=f"""
     SELECT doc_id,
-           CASE WHEN {_FOLD8_SQL.format(salt='split:')} % 100 < 80
+           CASE WHEN {_id_hash_sql('split:')} % 100 < 80
                   THEN 'train'
-                WHEN {_FOLD8_SQL.format(salt='split:')} % 100 < 90
+                WHEN {_id_hash_sql('split:')} % 100 < 90
                   THEN 'val'
                 ELSE 'test' END AS part
     FROM documents
@@ -1403,9 +1373,9 @@ def q_text_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_token_count",
-    oracle=r"""
+    oracle=rf"""
     SELECT doc_id,
-           len(list_filter(string_split_regex(trim(text), '\s+'), w -> w <> '')) AS ws_tokens,
+           len({text_hash.WORDS_SQL.format(t='text')}) AS ws_tokens,
            len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS bpe_ish_tokens
     FROM documents
     """,
@@ -1414,8 +1384,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.size(F.filter(F.split(F.trim("text"), r"\s+"), lambda w: w != ""))
-         .alias("ws_tokens"),
+        F.size(text_hash.words(F.col("text"))).alias("ws_tokens"),
         F.size(F.regexp_extract_all(
             F.col("text"), F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0))
          .alias("bpe_ish_tokens"),
@@ -1707,8 +1676,7 @@ VOCAB_N = 200
     "q_vocab",
     oracle=f"""
     WITH w AS (
-      SELECT unnest(list_filter(string_split_regex(trim(text), '\\s+'),
-                    w -> w <> '')) AS word
+      SELECT unnest({text_hash.WORDS_SQL.format(t='text')}) AS word
       FROM documents),
     counts AS (SELECT word, COUNT(*) AS n FROM w GROUP BY word),
     ranked AS (

@@ -19,6 +19,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.functions import text_hash
+
 # Gopher uses a "stop word present" signal; C4 uses terminal punctuation.
 STOPWORDS = [
     "the", "be", "to", "of", "and", "a", "in", "that", "have", "i",
@@ -41,12 +43,6 @@ class QualityThresholds:
     max_top_quadgram_ratio: float = 0.18  # Gopher: top-4-gram fraction
     max_dup_5gram_ratio: float = 0.30    # Gopher: duplicated 5-grams
     toxicity_words: tuple[str, ...] = field(default=())
-
-
-def words_col(text: Column) -> Column:
-    """Whitespace tokenization; empty text -> empty array (split of ''
-    yields [''] so filter it)."""
-    return F.filter(F.split(F.trim(text), r"\s+"), lambda w: w != "")
 
 
 def lines_col(text: Column) -> Column:
@@ -76,74 +72,6 @@ def ngrams_col(words: Column, n: int) -> Column:
         .otherwise(F.array().cast("array<string>"))
 
 
-# --------------------------------------------------------------------------
-# Hashed n-grams (round-3, verdict item 5): the repetition family only
-# needs EQUALITY of n-grams, never their text — so n-grams are 60-bit
-# integers combined from per-word md5 hashes instead of concatenated
-# strings. ONE md5 pass over the words feeds all four families (the
-# 2/3/4/5-gram arrays are pure bigint arithmetic), and the sort +
-# run-length aggregates compare longs instead of strings. Semantics are
-# identical up to 60-bit hash collisions (P ≈ n²/2⁶¹ per doc — the same
-# trade Gopher-style pipelines make); the DuckDB oracle reproduces the
-# exact arithmetic, so oracle parity is bit-exact regardless.
-# Measured at sf0.1: q_quality_stats 1.86 s -> see BENCH/BASELINE.md.
-# --------------------------------------------------------------------------
-NGRAM_ROT_STEP = 7  # per-position rotation makes the xor order-sensitive
-
-
-def word_hashes_col(words: Column) -> Column:
-    """array<bigint>: first 60 bits of md5(word) per word (the same fold
-    the dedup operators use — operators/dedup.py word_hash60)."""
-    from pii_redactor_spark.operators.dedup import word_hash60
-    return F.transform(words, word_hash60)
-
-
-def _rot60(h: Column, s: int) -> Column:
-    """Rotate a 60-bit value right by ``s`` (0 <= s < 60) staying inside
-    signed-64 range in Spark AND DuckDB (no <<60 overflow: the low
-    ``s`` bits are masked before the left shift)."""
-    if s == 0:
-        return h
-    mask = (1 << s) - 1
-    return F.shiftright(h, s).bitwiseOR(
-        F.shiftleft(h.bitwiseAND(F.lit(mask)), 60 - s))
-
-
-def _rot60_zipper(s: int):
-    """zip_with merge binding the rotation OUTSIDE the lambda (default
-    args change the lambda's arity and break PySpark's HOF builder)."""
-    mask = (1 << s) - 1
-
-    def f(a: Column, b: Column) -> Column:
-        if s == 0:
-            return a.bitwiseXOR(b)
-        return a.bitwiseXOR(
-            F.shiftright(b, s).bitwiseOR(
-                F.shiftleft(b.bitwiseAND(F.lit(mask)), 60 - s)))
-    return f
-
-
-def hashed_ngrams_col(whashes: Column, n: int) -> Column:
-    """array<bigint> of hashed word n-grams: gram_i = XOR over k of
-    rot60(whash[i+k], 7k). Empty array for <n words.
-
-    Built as chained ``zip_with`` over SHIFTED SLICES of ``whashes`` —
-    never ``element_at`` inside a ``transform`` lambda: if Catalyst's
-    CollapseProject re-inlines a single-use whashes projection (it did,
-    round 3), a lambda-captured element_at re-evaluates the whole
-    md5-per-word transform PER ELEMENT PER POSITION — O(words²·n) md5
-    calls per document (a planted 22-minute single task at sf0.1).
-    Slices evaluate their input once per ROW, so the worst case under
-    inlining is n evaluations per row, linear always."""
-    m = F.size(whashes)
-    ln = F.greatest(m - n + 1, F.lit(0))
-    out = F.slice(whashes, 1, ln)
-    for k in range(1, n):
-        out = F.zip_with(out, F.slice(whashes, k + 1, ln),
-                         _rot60_zipper((NGRAM_ROT_STEP * k) % 60))
-    return out
-
-
 def quality_columns(
     text: Column | str,
     th: QualityThresholds | None = None,
@@ -163,23 +91,23 @@ def quality_columns(
     subtrees are computed once per row instead of once per statistic —
     at 100 TB the 6-way duplicated split/filter tree is pure wasted CPU
     (measured 13x on sf0.1). The n-gram arrays are HASHED bigints
-    (``hashed_ngrams_col``), never strings.
+    (``text_hash.hashed_ngrams_col``), never strings.
     """
     t = F.col(text) if isinstance(text, str) else text
     if words is None:
-        words = words_col(t)
+        words = text_hash.words(t)
     if lines is None:
         lines = lines_col(t)
     if whashes is None:
-        whashes = word_hashes_col(words)
+        whashes = text_hash.word_hashes_col(words)
     if bigrams is None:
-        bigrams = hashed_ngrams_col(whashes, 2)
+        bigrams = text_hash.hashed_ngrams_col(whashes, 2)
     if trigrams is None:
-        trigrams = hashed_ngrams_col(whashes, 3)
+        trigrams = text_hash.hashed_ngrams_col(whashes, 3)
     if quadgrams is None:
-        quadgrams = hashed_ngrams_col(whashes, 4)
+        quadgrams = text_hash.hashed_ngrams_col(whashes, 4)
     if fivegrams is None:
-        fivegrams = hashed_ngrams_col(whashes, 5)
+        fivegrams = text_hash.hashed_ngrams_col(whashes, 5)
     # all-bigrams-distinct shortcut (round 3): a duplicate n-gram implies
     # a duplicate (n-1)-gram (its prefix repeats), so when every bigram
     # is unique the 3/4/5-gram families are provably repetition-free —
@@ -281,7 +209,7 @@ def toxicity_hit(text: Column | str, toxicity_words: list[str]) -> Column:
     t = F.col(text) if isinstance(text, str) else text
     if not toxicity_words:
         return F.lit(False)
-    words = F.transform(words_col(t), lambda w: F.lower(w))
+    words = F.transform(text_hash.words(t), lambda w: F.lower(w))
     return F.size(F.array_intersect(
         words, F.array(*[F.lit(w.lower()) for w in toxicity_words])
     )) > 0
@@ -330,11 +258,13 @@ def attach_quality_stats(df: DataFrame, text_col: str = "text",
     multi-use expressions are not re-inlined), then derive all statistics
     from the shared arrays. Temps are dropped."""
     t = F.col(text_col)
+    wh = F.col("_whashes")
     pre = (
-        df.withColumn("_words", words_col(t))
+        df.withColumn("_words", text_hash.words(t))
           .withColumn("_lines", lines_col(t))
-          .withColumn("_whashes", word_hashes_col(F.col("_words")))
-          .withColumn("_bigrams", hashed_ngrams_col(F.col("_whashes"), 2))
+          .withColumn("_whashes",
+                      text_hash.word_hashes_col(F.col("_words")))
+          .withColumn("_bigrams", text_hash.hashed_ngrams_col(wh, 2))
           # the distinctness flag gates four statistics -> materialize
           .withColumn("_abd",
                       F.size(F.array_distinct(F.col("_bigrams")))
@@ -345,11 +275,11 @@ def attach_quality_stats(df: DataFrame, text_col: str = "text",
     # for documents with a repeated bigram (see quality_columns)
     stats = quality_columns(t, th, words=F.col("_words"),
                             lines=F.col("_lines"),
-                            whashes=F.col("_whashes"),
+                            whashes=wh,
                             bigrams=F.col("_bigrams"),
-                            trigrams=hashed_ngrams_col(F.col("_whashes"), 3),
-                            quadgrams=hashed_ngrams_col(F.col("_whashes"), 4),
-                            fivegrams=hashed_ngrams_col(F.col("_whashes"), 5),
+                            trigrams=text_hash.hashed_ngrams_col(wh, 3),
+                            quadgrams=text_hash.hashed_ngrams_col(wh, 4),
+                            fivegrams=text_hash.hashed_ngrams_col(wh, 5),
                             bigrams_distinct=F.col("_abd"))
     return pre.withColumns(stats).drop(
         "_words", "_lines", "_whashes", "_bigrams", "_abd")
@@ -399,13 +329,13 @@ def synth_punct_col(text: Column) -> Column:
                      F.lit("\n")).otherwise(F.lit(" "))
         return F.concat(w, punct, sep)
     return F.trim(F.coalesce(
-        F.array_join(F.transform(words_col(text), tok), ""), F.lit("")))
+        F.array_join(F.transform(text_hash.words(text), tok), ""),
+        F.lit("")))
 
 
 def synth_punct_sql(text_expr: str) -> str:
     """DuckDB twin of ``synth_punct_col`` (same md5 arithmetic)."""
-    words = ("list_filter(string_split_regex(trim({t}), '\\s+'), "
-             "w -> w <> '')").format(t=text_expr)
+    words = text_hash.WORDS_SQL.format(t=text_expr)
     tok = ("w || (CASE WHEN substr(md5('c4:' || w), 1, 1) IN "
            "('0','1','2','3') THEN '.' ELSE '' END) || "
            "(CASE WHEN substr(md5('c4:' || w), 2, 1) = '0' "
@@ -525,7 +455,7 @@ def badword_stats(df: DataFrame, text_col: str = "text",
     doubles as a blocklist-density signal; the C4 gate itself is the
     any-hit boolean."""
     t = F.coalesce(F.col(text_col), F.lit(""))
-    pre = df.withColumn("_w", F.transform(words_col(t),
+    pre = df.withColumn("_w", F.transform(text_hash.words(t),
                                           lambda w: F.lower(w)))
     n_bad = F.size(F.filter(
         F.col("_w"), _in_list_factory(badwords)))
@@ -552,9 +482,8 @@ def badword_stats_oracle_sql(table: str = "documents",
                              id_col: str = "doc_id",
                              badwords: tuple[str, ...] = BADWORDS) -> str:
     lst = ", ".join(f"'{w}'" for w in badwords)
-    words = (f"list_transform(list_filter(string_split_regex("
-             f"trim(coalesce({text_col}, '')), '\\s+'), "
-             f"w -> w <> ''), w -> lower(w))")
+    words = text_hash.WORDS_SQL.format(t=f"coalesce({text_col}, '')")
+    words = f"list_transform({words}, w -> lower(w))"
     return f"""
 SELECT {id_col},
        CAST(len(_w) AS BIGINT) AS n_words,

@@ -1,0 +1,131 @@
+"""The text-hash substrate: the word split, the md5-prefix integer fold
+and the hashed word n-grams, each written once as a Spark Column builder
+beside its DuckDB SQL twin.
+
+Every text kernel, rule and dedup operator reaches its numbers through
+these steps, and its oracle must reproduce them bit for bit, so no other
+module spells them out:
+
+- **word split** (``words`` / ``WORDS_SQL``): whitespace tokens of the
+  trimmed text, no empty token; NULL text gives a NULL array.
+- **md5-prefix fold** (``md5_int`` / ``md5_int_sql``; ``hex_int`` /
+  ``hex_int_sql`` over a digest already computed): the ``n`` hex chars
+  from 1-based ``start`` as a BIGINT. Spark parses them with ``conv``,
+  DuckDB with a ``'0x'`` literal cast. ``n <= 15`` keeps the value
+  signed-64-safe in both engines. md5 because xxhash64 has no DuckDB
+  twin.
+- **60-bit word hash and hashed n-grams** (``word_hash60``,
+  ``word_hashes_col``, ``hashed_ngrams_col`` and their ``_sql`` twins):
+  gram_i = XOR over k of rot60(whash[i+k], 7k). The repetition rules,
+  decontamination and span dedup need only n-gram EQUALITY, so grams
+  are bigints, equal up to 60-bit collisions in both engines alike.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+
+NGRAM_ROT_STEP = 7  # per-position rotation makes the xor order-sensitive
+
+# {t}: the text expression. Java's \s (Spark) includes the vertical tab
+# \x0B, RE2's (DuckDB) does not, so the SQL class adds it.
+WORDS_SQL = ("list_filter(string_split_regex(trim({t}), '[\\s\\x0B]+'), "
+             "w -> w <> '')")
+
+
+def words(text: Column) -> Column:
+    """Whitespace tokens; empty text -> empty array (split of '' yields
+    [''], so filter it)."""
+    return F.filter(F.split(F.trim(text), r"\s+"), lambda w: w != "")
+
+
+def hex_int(digest: Column, n: int, start: int = 1) -> Column:
+    return F.conv(F.substring(digest, start, n), 16, 10).cast("bigint")
+
+
+def hex_int_sql(digest: str, n: int, start: int = 1) -> str:
+    return f"CAST('0x' || substr({digest}, {start}, {n}) AS BIGINT)"
+
+
+def md5_int(x: Column, n: int, start: int = 1) -> Column:
+    return hex_int(F.md5(x), n, start)
+
+
+def md5_int_sql(x: str, n: int, start: int = 1) -> str:
+    return hex_int_sql(f"md5({x})", n, start)
+
+
+def word_hash60(w: Column) -> Column:
+    """First 60 bits of md5(input) as a signed bigint; also used for
+    shingles."""
+    return md5_int(w, 15)
+
+
+def word_hash60_sql(w: str) -> str:
+    return md5_int_sql(w, 15)
+
+
+def word_hashes_col(ws: Column) -> Column:
+    """array<bigint>: ``word_hash60`` of every word."""
+    return F.transform(ws, word_hash60)
+
+
+def word_hashes_sql(ws: str) -> str:
+    return f"list_transform({ws}, w -> {word_hash60_sql('w')})"
+
+
+def _rot60_zipper(s: int):
+    """zip_with merge ``a xor rot60(b, s)``, binding the rotation OUTSIDE
+    the lambda (default args change the lambda's arity and break
+    PySpark's HOF builder). The low ``s`` bits are masked before the
+    left shift, so the value stays inside signed 64 bits in Spark AND
+    DuckDB."""
+    mask = (1 << s) - 1
+
+    def f(a: Column, b: Column) -> Column:
+        if s == 0:
+            return a.bitwiseXOR(b)
+        return a.bitwiseXOR(
+            F.shiftright(b, s).bitwiseOR(
+                F.shiftleft(b.bitwiseAND(F.lit(mask)), 60 - s)))
+    return f
+
+
+def hashed_ngrams_col(whashes: Column, n: int) -> Column:
+    """array<bigint> of hashed word n-grams; empty array for <n words,
+    NULL for NULL ``whashes``.
+
+    Built as chained ``zip_with`` over SHIFTED SLICES of ``whashes`` —
+    never ``element_at`` inside a ``transform`` lambda: if Catalyst's
+    CollapseProject re-inlines a single-use whashes projection (it did,
+    round 3), a lambda-captured element_at re-evaluates the whole
+    md5-per-word transform PER ELEMENT PER POSITION — O(words²·n) md5
+    calls per document (a planted 22-minute single task at sf0.1).
+    Slices evaluate their input once per ROW, so the worst case under
+    inlining is n evaluations per row, linear always."""
+    m = F.size(whashes)
+    ln = F.greatest(m - n + 1, F.lit(0))
+    out = F.slice(whashes, 1, ln)
+    for k in range(1, n):
+        out = F.zip_with(out, F.slice(whashes, k + 1, ln),
+                         _rot60_zipper((NGRAM_ROT_STEP * k) % 60))
+    return out
+
+
+def _rot60_sql(h: str, s: int) -> str:
+    if s == 0:
+        return h
+    mask = (1 << s) - 1
+    return f"(({h} >> {s}) | (({h} & {mask}) << {60 - s}))"
+
+
+def hashed_ngrams_sql(whashes: str, n: int) -> str:
+    terms = [_rot60_sql(f"{whashes}[CAST(i+{k}+1 AS INT)]",
+                        (NGRAM_ROT_STEP * k) % 60) for k in range(n)]
+    expr = terms[0]
+    for t in terms[1:]:
+        expr = f"xor({expr}, {t})"
+    return (f"CASE WHEN len({whashes}) >= {n} THEN "
+            f"list_transform(range(len({whashes}) - {n} + 1), i -> {expr}) "
+            f"WHEN {whashes} IS NOT NULL THEN CAST([] AS BIGINT[]) END")

@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.functions import text_hash
+
 MLP_IN = 64    # hashed-BoW buckets
 MLP_HID = 16
 MLP_OUT = 16
@@ -99,11 +101,9 @@ def bow_bucket(word: str, dim: int = MLP_IN) -> tuple[int, int]:
 
 def _word_sig(w: Column, dim: int) -> Column:
     m = F.md5(F.concat(F.lit("ml:"), w))
-    bucket = F.pmod(F.conv(F.substring(m, 1, 8), 16, 10).cast("bigint"),
-                    F.lit(dim)).cast("int")
+    bucket = F.pmod(text_hash.hex_int(m, 8), F.lit(dim)).cast("int")
     sign = F.when(
-        F.pmod(F.conv(F.substring(m, 9, 1), 16, 10).cast("bigint"),
-               F.lit(2)) == 0,
+        F.pmod(text_hash.hex_int(m, 1, 9), F.lit(2)) == 0,
         F.lit(1).cast("bigint")).otherwise(F.lit(-1).cast("bigint"))
     return F.struct(bucket.alias("bucket"), sign.alias("sign"))
 
@@ -161,10 +161,9 @@ def mlp_embeddings_udf(docs: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:
     """(id, emb: array<bigint>[MLP_OUT]) — the encoder output: per-word
     (bucket, sign) arrays built JVM-side feed ``make_mlp_embed_udf``."""
-    from pii_redactor_spark.functions.rules import words_col
     pre = (
         docs
-        .withColumn("_words", words_col(F.col(text_col)))
+        .withColumn("_words", text_hash.words(F.col(text_col)))
         .withColumn("_sigs", F.transform(
             F.col("_words"), lambda w: _word_sig(w, MLP_IN)))
         .withColumn("_b", F.transform(F.col("_sigs"), lambda s: s["bucket"]))
@@ -178,28 +177,17 @@ def mlp_embeddings_udf(docs: DataFrame, text_col: str = "text",
 # DuckDB oracle pieces
 # ---------------------------------------------------------------------------
 
-_ML_FOLD_SQL = (
-    "list_sum(list_transform(range(8), i -> "
-    "CAST(strpos('0123456789abcdef', substr(md5('ml:' || w), "
-    "CAST(i+1 AS INT), 1)) - 1 AS BIGINT) * "
-    "CAST(power(16, 7 - i) AS BIGINT)))"
-)
-_ML_SIGN_SQL = (
-    "CASE WHEN (strpos('0123456789abcdef', substr(md5('ml:' || w), 9, 1))"
-    " - 1) % 2 = 0 THEN 1 ELSE -1 END"
-)
-
-
 def mlp_embed_cte(table: str = "documents", text_col: str = "text",
                   id_col: str = "doc_id") -> str:
     """WITH-prefix ending in ``emb`` = (id, e: BIGINT[MLP_OUT]) — the
     whole network re-expressed relationally: per-word (bucket, sign)
     rows, one SUM per hidden unit, relu via greatest, output layer as
     literal linear combinations."""
-    from pii_redactor_spark.operators.dedup import _WORDS_SQL
     w1, b1, w2 = mlp_weights()
     dim, hid, out = len(w1), len(b1), w2.shape[1]
-    words = _WORDS_SQL.format(t=text_col)
+    words = text_hash.WORDS_SQL.format(t=text_col)
+    fold = text_hash.md5_int_sql("'ml:' || w", 8)
+    digit9 = text_hash.md5_int_sql("'ml:' || w", 1, 9)
     wt_rows = ", ".join(
         "({}, {})".format(i, ", ".join(str(int(w1[i][j]))
                                        for j in range(hid)))
@@ -216,8 +204,9 @@ def mlp_embed_cte(table: str = "documents", text_col: str = "text",
 WITH wt(bucket, {wt_cols}) AS (VALUES {wt_rows}),
 base AS (SELECT {id_col}, {words} AS ws FROM {table}),
 perword AS (
-  SELECT {id_col}, CAST({_ML_FOLD_SQL} % {dim} AS INT) AS bucket,
-         CAST({_ML_SIGN_SQL} AS BIGINT) AS sign
+  SELECT {id_col}, CAST({fold} % {dim} AS INT) AS bucket,
+         CAST(CASE WHEN {digit9} % 2 = 0 THEN 1 ELSE -1 END AS BIGINT)
+           AS sign
   FROM (SELECT {id_col}, unnest(ws) AS w FROM base)),
 contrib AS (
   SELECT b.{id_col}, {sums}

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pii_redactor_spark.functions import text_hash
 from pii_redactor_spark.kernels.corpora import SEED_CORPORA
 
 N_BUCKETS = 1 << 15
@@ -160,7 +161,7 @@ def make_langid_udf():
 # engine-reproducible discipline of kernels/quality_clf.py: the NB
 # char-BIGRAM log-likelihoods are quantized to BIGINT (x 1e6), bigram
 # buckets come from the first-8-hex-chars md5 fold (reproducible in
-# DuckDB via the strpos fold), per-language scores are exact BIGINT
+# DuckDB via text_hash), per-language scores are exact BIGINT
 # sums, and argmax takes the first maximum in sorted-language order
 # (the oracle's >=-CASE chain). Zero shuffle: bigram bucketing is a JVM
 # projection over the scan, the score sums one Arrow pass. The UDF
@@ -204,9 +205,8 @@ def fit_langid_expr(dim: int = LANGID_EXPR_DIM
 
 
 def _lg_bucket_expr(bg, dim: int):
-    m = F.md5(F.concat(F.lit("lg:"), bg))
-    return F.pmod(F.conv(F.substring(m, 1, 8), 16, 10).cast("bigint"),
-                  F.lit(dim)).cast("int")
+    h = text_hash.md5_int(F.concat(F.lit("lg:"), bg), 8)
+    return F.pmod(h, F.lit(dim)).cast("int")
 
 
 def make_langid_score_udf(dim: int = LANGID_EXPR_DIM):
@@ -290,7 +290,7 @@ def langid_expr_oracle_sql(table: str = "documents",
                            extra_cols: tuple[str, ...] = (),
                            dim: int = LANGID_EXPR_DIM) -> str:
     """DuckDB twin: bigrams via range+substr over lower(text), the
-    'lg:' strpos md5 fold, one SUM per language off a VALUES weight
+    'lg:' md5-prefix fold, one SUM per language off a VALUES weight
     table (every bucket row present, so the join drops nothing), and
     the same >=-CASE argmax chain."""
     langs, W = fit_langid_expr(dim)
@@ -300,12 +300,7 @@ def langid_expr_oracle_sql(table: str = "documents",
         for b in range(dim))
     wt_cols = ", ".join(f"w_{lang}" for lang in langs)
     sums = ", ".join(f"SUM(wt.w_{lang}) AS s_{lang}" for lang in langs)
-    fold = (
-        "list_sum(list_transform(range(8), i -> "
-        "CAST(strpos('0123456789abcdef', substr(md5('lg:' || bg), "
-        "CAST(i+1 AS INT), 1)) - 1 AS BIGINT) * "
-        "CAST(power(16, 7 - i) AS BIGINT)))"
-    )
+    fold = text_hash.md5_int_sql("'lg:' || bg", 8)
     whens = []
     for i in range(len(langs) - 1):
         conds = " AND ".join(

@@ -38,6 +38,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.functions import text_hash
 from pii_redactor_spark.kernels.corpora import SEED_CORPORA
 
 CLF_DIM = 512          # hash buckets
@@ -198,20 +199,15 @@ def clf_weights() -> tuple[np.ndarray, int]:
 # ---------------------------------------------------------------------------
 
 def _bucket_expr(word: Column, dim: int) -> Column:
-    m = F.md5(F.concat(F.lit("qc:"), F.lower(word)))
-    return F.pmod(F.conv(F.substring(m, 1, 8), 16, 10).cast("bigint"),
-                  F.lit(dim)).cast("int")
+    h = text_hash.md5_int(F.concat(F.lit("qc:"), F.lower(word)), 8)
+    return F.pmod(h, F.lit(dim)).cast("int")
 
 
-# DuckDB twin of _bucket_expr's first-8-hex-chars md5 fold (the strpos
-# fold over `w`) — the ONE copy every oracle builder that buckets words
-# must use (a stale duplicate silently breaks oracle parity).
-FOLD_SQL = (
-    "list_sum(list_transform(range(8), i -> "
-    "CAST(strpos('0123456789abcdef', substr(md5('qc:' || lower(w)), "
-    "CAST(i+1 AS INT), 1)) - 1 AS BIGINT) * "
-    "CAST(power(16, 7 - i) AS BIGINT)))"
-)
+def _bucket_sql(w: str, dim: int) -> str:
+    """DuckDB twin of ``_bucket_expr`` — the one copy every oracle that
+    buckets words uses (a stale duplicate silently breaks parity)."""
+    h = text_hash.md5_int_sql(f"'qc:' || lower({w})", 8)
+    return f"CAST({h} % {dim} AS INT)"
 
 
 def quality_clf_columns(docs: DataFrame, text_col: str = "text",
@@ -232,10 +228,9 @@ def quality_clf_columns(docs: DataFrame, text_col: str = "text",
     bias = b_scaled / _SCALE
     w_lit = F.expr(
         "array({})".format(",".join(f"{int(v)}L" for v in w_scaled)))
-    from pii_redactor_spark.functions.rules import words_col
     pre = (
         docs
-        .withColumn("_words", words_col(F.col(text_col)))
+        .withColumn("_words", text_hash.words(F.col(text_col)))
         .withColumn("_buckets", F.transform(
             F.col("_words"), lambda w: _bucket_expr(w, dim)))
         .withColumn("_n", F.size("_buckets"))
@@ -281,10 +276,9 @@ def nb_bucket_counts(docs: DataFrame, label_col: str,
     the NB fit's sufficient statistics in one aggregation pass.
     count-FILTER form on both engines so the outputs stay BIGINT.
     Explode hygiene per CLAUDE.md: explode_outer + null-filter."""
-    from pii_redactor_spark.functions.rules import words_col
     per_word = (
         docs
-        .withColumn("_words", words_col(F.col(text_col)))
+        .withColumn("_words", text_hash.words(F.col(text_col)))
         .withColumn("_buckets", F.transform(
             F.col("_words"), lambda w: _bucket_expr(w, dim)))
         .select(F.col(label_col).alias("_y"),
@@ -363,22 +357,20 @@ def quality_clf_oracle_sql(table: str = "documents",
                            text_col: str = "text",
                            id_col: str = "doc_id",
                            threshold: float = CLF_THRESHOLD) -> str:
-    """Same arithmetic in DuckDB: unnest words, md5 strpos-fold bucket,
+    """Same arithmetic in DuckDB: unnest words, md5-prefix bucket,
     join a VALUES weight table, exact BIGINT sum per doc, one double
     division chain, round 6 (+0.0 canonicalizes -0.0)."""
-    from pii_redactor_spark.operators.dedup import _WORDS_SQL
     w_scaled, b_scaled = clf_weights()
     dim = len(w_scaled)
     bias = b_scaled / _SCALE
-    words = _WORDS_SQL.format(t=text_col)
-    fold = FOLD_SQL
+    words = text_hash.WORDS_SQL.format(t=text_col)
     wt_rows = ", ".join(f"({i}, {int(v)})" for i, v in enumerate(w_scaled))
     return f"""
 WITH wt(bucket, wgt) AS (VALUES {wt_rows}),
 base AS (
   SELECT {id_col}, {words} AS ws FROM {table}),
 perword AS (
-  SELECT {id_col}, CAST({fold} % {dim} AS INT) AS bucket
+  SELECT {id_col}, {_bucket_sql('w', dim)} AS bucket
   FROM (SELECT {id_col}, unnest(ws) AS w FROM base)),
 contrib AS (
   SELECT p.{id_col}, SUM(wt.wgt) AS s
@@ -403,14 +395,12 @@ def nb_counts_oracle_sql(label_sql: str, table: str = "documents",
     """DuckDB twin of ``nb_bucket_counts``: same word split, same md5
     bucket fold, COUNT-FILTER per class (stays BIGINT on both engines).
     ``label_sql`` is a boolean expression over ``table``'s columns."""
-    from pii_redactor_spark.operators.dedup import _WORDS_SQL
-    words = _WORDS_SQL.format(t=text_col)
-    fold = FOLD_SQL
+    words = text_hash.WORDS_SQL.format(t=text_col)
     return f"""
 WITH base AS (
   SELECT ({label_sql}) AS y, {words} AS ws FROM {table}),
 perword AS (
-  SELECT y, CAST({fold} % {dim} AS INT) AS bucket
+  SELECT y, {_bucket_sql('w', dim)} AS bucket
   FROM (SELECT y, unnest(ws) AS w FROM base))
 SELECT bucket,
        COUNT(*) FILTER (WHERE y) AS n_pos,

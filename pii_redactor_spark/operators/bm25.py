@@ -54,8 +54,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pii_redactor_spark.functions.rules import words_col
-from pii_redactor_spark.operators.dedup import _WORDS_SQL
+from pii_redactor_spark.functions import text_hash
 
 # Fixed seed query: "how do I make a hash join scan fast" against the
 # synthetic systems-vocabulary corpus — two high-df terms (join, hash),
@@ -93,7 +92,7 @@ def _corpus_stats(docs: DataFrame, text_col: str,
                   terms: tuple[str, ...]) -> tuple[int, int, list[int]]:
     """One aggregation pass -> (N, total_words, df per term). Output is
     a single row regardless of corpus size (the bounded-collect rule)."""
-    w = words_col(F.coalesce(F.col(text_col), F.lit("")))
+    w = text_hash.words(F.coalesce(F.col(text_col), F.lit("")))
     base = docs.select(w.alias("_w")).select(
         F.col("_w"), F.size("_w").cast("bigint").alias("_dl"))
     aggs = [F.count(F.lit(1)).alias("_n"),
@@ -114,7 +113,7 @@ def bm25_topk(docs: DataFrame, text_col: str = "text",
     """Top-``topk`` documents by integer BM25 relevance to the fixed
     seed query. Returns ``(doc_id, n_words, bm25_q)``."""
     n, total, dfs = _corpus_stats(docs, text_col, terms)
-    w = words_col(F.coalesce(F.col(text_col), F.lit("")))
+    w = text_hash.words(F.coalesce(F.col(text_col), F.lit("")))
     scored = docs.select(F.col(id_col), w.alias("_w"))
     scored = scored.withColumn("n_words",
                                F.size("_w").cast("bigint"))
@@ -142,8 +141,7 @@ def bm25_oracle_sql(table: str = "documents", text_col: str = "text",
     DuckDB's own ``ln`` (libm — the parity pair of the Python
     ``math.log`` the Spark plan's literals came from), then the same
     integer contribution arithmetic with ``//``."""
-    words = _WORDS_SQL.format(t=f"trim(coalesce({text_col}, ''))")
-    # _WORDS_SQL already trims; double-trim is idempotent
+    words = text_hash.WORDS_SQL.format(t=f"coalesce({text_col}, '')")
     df_cols = ",\n    ".join(
         f"CAST(sum(CASE WHEN list_contains(_w, '{t}') THEN 1 ELSE 0 END)"
         f" AS BIGINT) AS _df_{i}" for i, t in enumerate(terms))

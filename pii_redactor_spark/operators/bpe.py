@@ -36,6 +36,8 @@ from collections import Counter
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.functions import text_hash
+
 BPE_MERGES = 12   # merge-table size on the synthetic corpus
 _GAP = "§"   # word-gap sentinel (never appears in corpus text)
 
@@ -43,10 +45,10 @@ _GAP = "§"   # word-gap sentinel (never appears in corpus text)
 def word_counts_df(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(w, n) word-frequency table — ONE exploded hash-groupBy count
     (map-side partials). Shared by the BPE fit and q_vocab."""
-    from pii_redactor_spark.functions.rules import words_col
     return (
         docs
-        .select(F.explode_outer(words_col(F.col(text_col))).alias("w"))
+        .select(F.explode_outer(text_hash.words(F.col(text_col)))
+                .alias("w"))
         .where(F.col("w").isNotNull())
         .groupBy("w").agg(F.count("*").alias("n"))
     )

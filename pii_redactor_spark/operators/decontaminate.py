@@ -26,18 +26,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pii_redactor_spark.functions.rules import (
-    hashed_ngrams_col, word_hashes_col, words_col)
+from pii_redactor_spark.functions import text_hash
 
 DECONTAM_N = 8  # GPT-3 used 13-grams; 8 suits the short synthetic docs
 
 
 def _distinct_grams(df: DataFrame, text_col: str, n: int) -> DataFrame:
     return (
-        df.withColumn("_w", words_col(F.col(text_col)))
-        .withColumn("_wh", word_hashes_col(F.col("_w")))
-        .withColumn("_g",
-                    F.array_distinct(hashed_ngrams_col(F.col("_wh"), n)))
+        df.withColumn("_w", text_hash.words(F.col(text_col)))
+        .withColumn("_wh", text_hash.word_hashes_col(F.col("_w")))
+        .withColumn("_g", F.array_distinct(
+            text_hash.hashed_ngrams_col(F.col("_wh"), n)))
     )
 
 

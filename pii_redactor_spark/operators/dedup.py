@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.functions import text_hash
+
 # MinHash: H signatures grouped into B bands of R rows (H = B*R).
 # Round-4 widening (round-3 verdict item 4): 16 bands x 8 rows — the
 # production S-curve for a ~0.8-Jaccard dedup threshold. Candidate
@@ -49,16 +51,10 @@ LSH_ROWS = 8
 SHINGLE_K = 3      # word 3-shingles
 SIMHASH_BITS = 60  # 15 hex chars -> signed-bigint-safe in Spark AND DuckDB
 
-HEX_DIGITS = "0123456789abcdef"
-
 
 # ---------------------------------------------------------------------------
 # Shared building blocks (Spark side)
 # ---------------------------------------------------------------------------
-
-def words_expr(text: Column) -> Column:
-    return F.filter(F.split(F.trim(text), r"\s+"), lambda w: w != "")
-
 
 def shingles_expr(words: Column, k: int = SHINGLE_K) -> Column:
     """Word k-shingles joined by single spaces; documents shorter than k
@@ -83,12 +79,6 @@ def minhash_masks(h: int = MINHASH_H) -> tuple[int, ...]:
         int(hashlib.md5(f"minhash:{i}".encode()).hexdigest()[:15], 16)
         for i in range(h)
     )
-
-
-def word_hash60(w: Column) -> Column:
-    """First 60 bits of md5(input) as a signed bigint (conv parses hex).
-    Signed-64-safe in both Spark and DuckDB; also used for shingles."""
-    return F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("bigint")
 
 
 def make_minhash_udf(h: int = MINHASH_H, bands: int = LSH_BANDS,
@@ -161,9 +151,9 @@ def with_shingle_hashes(docs: DataFrame, text_col: str = "text"
     is materialized once and shared by the shingle builder."""
     return (
         docs
-        .withColumn("_words", words_expr(F.col(text_col)))
-        .withColumn("sh_set", F.array_distinct(
-            F.transform(shingles_expr(F.col("_words")), word_hash60)))
+        .withColumn("_words", text_hash.words(F.col(text_col)))
+        .withColumn("sh_set", F.array_distinct(F.transform(
+            shingles_expr(F.col("_words")), text_hash.word_hash60)))
         .drop("_words")
     )
 
@@ -299,17 +289,15 @@ def jaccard_pairs(docs: DataFrame, text_col: str = "text",
     )
 
 
-def components_from_edges(nodes: DataFrame, edges: DataFrame,
-                          max_iter: int = 30,
+def components_from_edges(edges: DataFrame, max_iter: int = 30,
                           stats: dict | None = None) -> DataFrame:
-    """Connected components over an explicit edge list: ``nodes`` has a
-    ``node`` column, ``edges`` has ``(id_a, id_b)``; returns
-    ``(node, component)`` with component = min node id of the cluster.
-    ``stats`` (optional dict) receives ``{"rounds": <executed rounds>}``.
-
-    Only edge endpoints carry labels inside the loop; every other node
-    is a singleton and keeps its own id through the final left join with
-    ``nodes``. Rounds (min-label + path-halving):
+    """Connected components over an explicit edge list ``(id_a, id_b)``:
+    returns ``(node, component)`` for every edge endpoint, with
+    component = min node id of the cluster. A node on no edge is a
+    singleton (its own component) and gets no row; only endpoints can
+    be duplicates. ``stats`` (optional dict) receives
+    ``{"rounds": <executed rounds>}``. Rounds (min-label +
+    path-halving):
 
     1. closed form: ``label(v) = least(v, min(neighbors(v)))`` — one
        groupBy over the undirected edges. Over identity labels the
@@ -345,13 +333,10 @@ def components_from_edges(nodes: DataFrame, edges: DataFrame,
     plan size; a production cluster run can swap in a snapshot write
     through tables.py for a durable cut.
 
-    The RETURNED frame is the lazy ``nodes`` left join over the last
-    round's checkpoint, which stays registered for ``release_caches``:
-    downstream consumers and the PLANS.md audit see a bounded
-    ExistingRDD scan, not the loop's lineage, and no extra action runs
-    just to materialize the result. The labels are broadcast: they hold
-    edge endpoints only, at most twice the non-representative ids that
-    ``dedup_corpus`` broadcasts anyway, so ``nodes`` never shuffles.
+    The RETURNED frame is the last round's checkpoint, registered for
+    ``release_caches``: downstream consumers and the PLANS.md audit see
+    a bounded ExistingRDD scan, not the loop's lineage, and no extra
+    action runs just to materialize the result.
     """
     from pii_redactor_spark.operators.cache import (
         register_local_checkpoint, unpersist_checkpoint)
@@ -415,8 +400,7 @@ def components_from_edges(nodes: DataFrame, edges: DataFrame,
     finally:
         unpersist_checkpoint(und)
     register_local_checkpoint(labels)
-    return nodes.join(F.broadcast(labels), "node", "left").select(
-        "node", F.coalesce("component", "node").alias("component"))
+    return labels
 
 
 def dedup_edges(docs: DataFrame, text_col: str = "text",
@@ -448,13 +432,17 @@ def dedup_components(docs: DataFrame, text_col: str = "text",
     rewrite (round-2 advice). The corpus rewrite job always verifies;
     the raw variant remains for candidate-graph analysis. Either way the
     edges come from one persisted signature frame (``dedup_edges``) and
-    the components from ``components_from_edges``.
+    the endpoint labels from ``components_from_edges``; every other
+    document is its own component. The labels are broadcast: they hold
+    edge endpoints only, so the documents never shuffle.
     """
-    nodes = docs.select(F.col(id_col).alias("node"))
     labels = components_from_edges(
-        nodes, dedup_edges(docs, text_col, id_col, verify_threshold),
+        dedup_edges(docs, text_col, id_col, verify_threshold),
         max_iter=max_iter)
-    return labels.select(F.col("node").alias(id_col), "component")
+    nodes = docs.select(F.col(id_col).alias("node"))
+    return nodes.join(F.broadcast(labels), "node", "left").select(
+        F.col("node").alias(id_col),
+        F.coalesce("component", "node").alias("component"))
 
 
 def dedup_components_oracle_sql(table: str = "documents",
@@ -502,7 +490,7 @@ def span_dup_stats(docs: DataFrame, n: int = SPAN_N,
     rounds differently in Spark BigDecimal HALF_UP vs DuckDB).
 
     Scale shape: the gram stream is |corpus| x ~n_words rows keyed by
-    the uniform 60-bit rot-xor gram hash (functions/rules.py — one md5
+    the uniform 60-bit rot-xor gram hash (functions/text_hash.py — one md5
     pass per word, shared with the quality rules / decontamination);
     the duplicate-gram table is ONE hash-groupBy on that key (map-side
     partials), the join back is co-partitioned on the same key, and
@@ -510,15 +498,13 @@ def span_dup_stats(docs: DataFrame, n: int = SPAN_N,
     no broadcast of anything corpus-sized — the suffix-array approach
     of the paper is replaced by the hash-join formulation that
     actually distributes."""
-    from pii_redactor_spark.functions.rules import (
-        hashed_ngrams_col, word_hashes_col, words_col)
     from pii_redactor_spark.operators.cache import registered_persist
     grams = registered_persist(
         docs
-        .withColumn("_w", words_col(F.col(text_col)))
-        .withColumn("_wh", word_hashes_col(F.col("_w")))
-        .withColumn("_g",
-                    F.array_distinct(hashed_ngrams_col(F.col("_wh"), n)))
+        .withColumn("_w", text_hash.words(F.col(text_col)))
+        .withColumn("_wh", text_hash.word_hashes_col(F.col("_w")))
+        .withColumn("_g", F.array_distinct(
+            text_hash.hashed_ngrams_col(F.col("_wh"), n)))
         .select(id_col, F.explode_outer("_g").alias("g"))
         .where(F.col("g").isNotNull())
     )
@@ -569,14 +555,12 @@ def span_dedup_rewrite(docs: DataFrame, n: int = SPAN_N,
     per the O(n^2) inlining trap). Per-doc mask cost is
     O(n_words x |dup positions|) — quadratic only for fully-duplicated
     docs, whose rewrite drops to nothing anyway."""
-    from pii_redactor_spark.functions.rules import (
-        hashed_ngrams_col, word_hashes_col, words_col)
     from pii_redactor_spark.operators.cache import registered_persist
     pre = registered_persist(
         docs
-        .withColumn("_w", words_col(F.col(text_col)))
-        .withColumn("_wh", word_hashes_col(F.col("_w")))
-        .withColumn("_g", hashed_ngrams_col(F.col("_wh"), n))
+        .withColumn("_w", text_hash.words(F.col(text_col)))
+        .withColumn("_wh", text_hash.word_hashes_col(F.col("_w")))
+        .withColumn("_g", text_hash.hashed_ngrams_col(F.col("_wh"), n))
         .select(id_col, "_w", "_g")
     )
     # Loud guard (round-4 ADVICE): a document with >= 2^20 words would
@@ -700,9 +684,9 @@ def simhash(docs: DataFrame, text_col: str = "text",
     ``make_simhash_udf``)."""
     pre = (
         docs
-        .withColumn("_words", words_expr(F.col(text_col)))
+        .withColumn("_words", text_hash.words(F.col(text_col)))
         .withColumn("_hashes",
-                    F.transform(F.col("_words"), word_hash60))
+                    text_hash.word_hashes_col(F.col("_words")))
     )
     return pre.select(id_col,
                       make_simhash_udf()(F.col("_hashes")).alias("simhash"))
@@ -711,11 +695,6 @@ def simhash(docs: DataFrame, text_col: str = "text",
 # ---------------------------------------------------------------------------
 # DuckDB oracle SQL (same math, relational form)
 # ---------------------------------------------------------------------------
-
-_WORDS_SQL = (
-    "list_filter(string_split_regex(trim({t}), '\\s+'), w -> w <> '')"
-)
-
 
 def _shingles_sql(words: str, k: int = SHINGLE_K) -> str:
     # DuckDB's array_to_string([]) is NULL where Spark's array_join gives
@@ -727,13 +706,6 @@ def _shingles_sql(words: str, k: int = SHINGLE_K) -> str:
         f"ELSE [CASE WHEN len({words}) = 0 THEN '' "
         f"ELSE array_to_string({words}, ' ') END] END"
     )
-
-
-_HASH60_FOLD_SQL = (
-    "list_sum(list_transform(range(15), i -> "
-    "CAST(strpos('0123456789abcdef', substr(md5({x}), CAST(i+1 AS INT), 1)) - 1 AS BIGINT) "
-    "* CAST(power(16, 14 - i) AS BIGINT)))"
-)
 
 
 def minhash_bands_oracle_sql(table: str = "documents",
@@ -749,8 +721,8 @@ def minhash_bands_oracle_sql(table: str = "documents",
         parts = " || '|' || ".join(
             f"CAST(s{b * LSH_ROWS + r} AS VARCHAR)" for r in range(LSH_ROWS))
         band_rows.append(f"({b}, md5({parts}))")
-    words = _WORDS_SQL.format(t=text_col)
-    fold = _HASH60_FOLD_SQL.format(x="s")
+    words = text_hash.WORDS_SQL.format(t=text_col)
+    fold = text_hash.word_hash60_sql("s")
     return f"""
 WITH base AS (
   SELECT {id_col},
@@ -783,7 +755,7 @@ def jaccard_pairs_oracle_sql(table: str = "documents",
                              id_col: str = "doc_id",
                              threshold: float = 0.8) -> str:
     pairs = lsh_pairs_oracle_sql(table, text_col, id_col)
-    words = _WORDS_SQL.format(t=text_col)
+    words = text_hash.WORDS_SQL.format(t=text_col)
     return f"""
 WITH pairs AS ({pairs}),
 ssets AS (
@@ -807,8 +779,8 @@ def simhash_oracle_sql(table: str = "documents", text_col: str = "text",
         f"> len(hashes) THEN {1 << b} ELSE 0 END)"
         for b in range(SIMHASH_BITS)
     )
-    words = _WORDS_SQL.format(t=text_col)
-    hash_fold = f"list_transform(words, w -> {_HASH60_FOLD_SQL.format(x='w')})"
+    words = text_hash.WORDS_SQL.format(t=text_col)
+    hash_fold = text_hash.word_hashes_sql("words")
     return f"""
 WITH base AS (
   SELECT {id_col}, {hash_fold} AS hashes
@@ -1207,7 +1179,7 @@ def dedup_against_oracle_sql(table: str = "documents",
     new_sub = f"(SELECT * FROM {table} WHERE {new_pred})"
     bands_old = minhash_bands_oracle_sql(old_sub, text_col, id_col)
     bands_new = minhash_bands_oracle_sql(new_sub, text_col, id_col)
-    words = _WORDS_SQL.format(t=text_col)
+    words = text_hash.WORDS_SQL.format(t=text_col)
     if verify_threshold is None:
         near = f"""
 old_b AS (SELECT DISTINCT band_idx, band_hash FROM ({bands_old})),

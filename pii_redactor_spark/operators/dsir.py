@@ -50,12 +50,10 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from pii_redactor_spark.functions.rules import words_col
+from pii_redactor_spark.functions import text_hash
 from pii_redactor_spark.kernels.quality_clf import (
-    CLF_DIM, FOLD_SQL as _FOLD_SQL, _bucket_expr, _positive_docs,
-    bucket_of)
+    CLF_DIM, _bucket_expr, _bucket_sql, _positive_docs, bucket_of)
 from pii_redactor_spark.operators.cache import registered_persist
-from pii_redactor_spark.operators.dedup import _WORDS_SQL
 
 DSIR_DIM = CLF_DIM       # share the hashed feature space (512 buckets)
 DSIR_ALPHA = 0.5         # Lidstone smoothing, both LMs
@@ -93,7 +91,8 @@ def raw_logprobs(docs: DataFrame, text_col: str = "text",
     obs = Observation()
     rows = (
         docs.observe(obs, F.count(F.lit(1)).alias("n"))
-        .select(F.explode_outer(words_col(F.col(text_col))).alias("w"))
+        .select(F.explode_outer(text_hash.words(F.col(text_col)))
+                .alias("w"))
         .where(F.col("w").isNotNull())
         .select(_bucket_expr(F.col("w"), dim).alias("bucket"))
         .groupBy("bucket").count()
@@ -119,7 +118,7 @@ def _scored_df(docs: DataFrame, text_col: str, id_col: str,
     lr_lit = F.expr("array({})".format(",".join(f"{v}L" for v in lr)))
     return registered_persist(
         docs
-        .withColumn("_words", words_col(F.col(text_col)))
+        .withColumn("_words", text_hash.words(F.col(text_col)))
         .withColumn("_buckets", F.transform(
             F.col("_words"), lambda w: _bucket_expr(w, dim)))
         # coalesce: NULL text folds to NULL, but the oracle's
@@ -185,13 +184,13 @@ def _scored_cte(table: str, text_col: str, id_col: str, dim: int) -> str:
     shared by the deterministic and Gumbel oracles."""
     lt = target_logprobs(dim)
     lt_rows = ", ".join(f"({b}, {v})" for b, v in enumerate(lt))
-    words = _WORDS_SQL.format(t=text_col)
+    words = text_hash.WORDS_SQL.format(t=text_col)
     return f"""
 WITH lt(bucket, lp) AS (VALUES {lt_rows}),
 base AS (
   SELECT {id_col}, {words} AS ws FROM {table}),
 perword AS (
-  SELECT {id_col}, CAST({_FOLD_SQL} % {dim} AS INT) AS bucket
+  SELECT {id_col}, {_bucket_sql('w', dim)} AS bucket
   FROM (SELECT {id_col}, unnest(ws) AS w FROM base)),
 rawc AS (
   SELECT bucket, COUNT(*) AS c FROM perword GROUP BY bucket),
@@ -251,9 +250,8 @@ def _gumbel_col(id_col: str):
     ranking so a last-ulp libm difference cannot flip the cut except
     exactly on a rounding boundary — the same tolerance class as every
     round(...,6) output in the contract)."""
-    v = F.conv(F.substring(
-        F.md5(F.concat(F.lit("g:"), F.col(id_col).cast("string"))),
-        1, 13), 16, 10).cast("bigint")
+    v = text_hash.md5_int(
+        F.concat(F.lit("g:"), F.col(id_col).cast("string")), 13)
     u = (v.cast("double") + F.lit(0.5)) / F.lit(_U_DENOM)
     return -F.log(-F.log(u))
 
@@ -282,12 +280,7 @@ def dsir_gumbel_oracle_sql(table: str = "documents",
                            frac: float = DSIR_FRAC,
                            dim: int = DSIR_DIM) -> str:
     pct = int(round(frac * 100))
-    ufold = (
-        "list_sum(list_transform(range(13), i -> "
-        f"CAST(strpos('0123456789abcdef', substr(md5('g:' || "
-        f"CAST({id_col} AS VARCHAR)), CAST(i+1 AS INT), 1)) - 1 AS BIGINT)"
-        " * CAST(power(16, 12 - i) AS BIGINT)))"
-    )
+    ufold = text_hash.md5_int_sql(f"'g:' || CAST({id_col} AS VARCHAR)", 13)
     return f"""
 {_scored_cte(table, text_col, id_col, dim)},
 keyed AS (

@@ -15,12 +15,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.functions import text_hash
 from pii_redactor_spark.operators.dedup import (
     SHINGLE_K,
-    _WORDS_SQL,
     _shingles_sql,
     shingles_expr,
-    words_expr,
 )
 
 WINNOW_WINDOW = 4
@@ -55,7 +54,7 @@ def fingerprints(docs: DataFrame, text_col: str = "text",
     ``array_to_string([])`` is NULL)."""
     pre = (
         docs
-        .withColumn("_words", words_expr(F.col(text_col)))
+        .withColumn("_words", text_hash.words(F.col(text_col)))
         .withColumn("_sh",
                     F.transform(shingles_expr(F.col("_words")), F.md5))
     )
@@ -72,7 +71,7 @@ def fingerprints_oracle_sql(table: str = "documents",
                             text_col: str = "text",
                             id_col: str = "doc_id",
                             w: int = WINNOW_WINDOW) -> str:
-    words = _WORDS_SQL.format(t=text_col)
+    words = text_hash.WORDS_SQL.format(t=text_col)
     return f"""
 WITH base AS (
   SELECT {id_col}, {text_col},

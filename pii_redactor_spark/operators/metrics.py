@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.functions import text_hash
+
 # Label-token grammar (reference: optimizer.py:86)
 LABEL_REGEX = r"\[([A-Z]+\d*)\]"
 
@@ -138,7 +140,7 @@ def dspy_token_f1(gold: Column | str, pred: Column | str) -> Column:
         t = F.lower(F.trim(F.col(c) if isinstance(c, str) else c))
         t = F.regexp_replace(t, _PUNCT_CLASS, "")
         t = F.regexp_replace(t, r"\b(a|an|the)\b", " ")
-        return F.filter(F.split(F.trim(t), r"\s+"), lambda w: w != "")
+        return text_hash.words(t)
     g, p = toks(gold), toks(pred)
     common = multiset_intersect_size(g, p).cast("double")
     precision = F.when(F.size(p) > 0, common / F.size(p)).otherwise(F.lit(0.0))

@@ -35,6 +35,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pii_redactor_spark.functions import text_hash
+
 MEDIA_META_SCHEMA = StructType([
     StructField("doc_id", LongType()),
     StructField("mime", StringType()),
@@ -172,19 +174,9 @@ def media_meta(docs: DataFrame) -> DataFrame:
     return extract_media_meta(pages_with_media(docs))
 
 
-def _fold_sql(h: str, start: int, n: int) -> str:
-    """Fold n hex chars of expression ``h`` starting at 1-based ``start``
-    into a BIGINT (DuckDB)."""
-    return (
-        f"list_sum(list_transform(range({n}), i -> "
-        f"CAST(strpos('0123456789abcdef', substr({h}, CAST({start}+i AS INT), 1)) - 1 AS BIGINT)"
-        f" * CAST(power(16, {n - 1} - i) AS BIGINT)))"
-    )
-
-
 def media_meta_oracle_sql(table: str = "documents") -> str:
     feat_terms = " + ".join(
-        f"(CAST({_fold_sql('h', 2 * i + 1, 2)} AS DOUBLE) / 255.0)"
+        f"(CAST({text_hash.hex_int_sql('h', 2, 2 * i + 1)} AS DOUBLE) / 255.0)"
         for i in range(FEATURE_DIM)
     )
     return f"""
@@ -198,9 +190,9 @@ WITH base AS (
          md5(text) AS h
   FROM {table})
 SELECT doc_id, mime, n_bytes,
-       CAST(16 + {_fold_sql('h', 1, 8)} % 1920 AS INT) AS width,
-       CAST(16 + {_fold_sql('h', 9, 8)} % 1080 AS INT) AS height,
-       round(CAST({_fold_sql('h', 17, 8)} % 36000 AS DOUBLE) / 100.0, 2)
+       CAST(16 + {text_hash.hex_int_sql('h', 8)} % 1920 AS INT) AS width,
+       CAST(16 + {text_hash.hex_int_sql('h', 8, 9)} % 1080 AS INT) AS height,
+       round(CAST({text_hash.hex_int_sql('h', 8, 17)} % 36000 AS DOUBLE) / 100.0, 2)
          AS duration_s,
        round({feat_terms}, 6) AS feature_checksum
 FROM base

@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pii_redactor_spark.functions import text_hash
+
 HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)"
 
 CAP_SALT_K = 16  # phase-1 fan-out; hot-partition bound = k * max_per_host
@@ -40,10 +42,7 @@ CAP_SALT_K = 16  # phase-1 fan-out; hot-partition bound = k * max_per_host
 def priority_expr(url: Column, seed: int) -> Column:
     """Deterministic 32-bit priority: first 8 hex chars of
     md5('<seed>:' || url) — reproducible in any engine."""
-    return F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{seed}:"), url)), 1, 8),
-        16, 10,
-    ).cast("bigint")
+    return text_hash.md5_int(F.concat(F.lit(f"{seed}:"), url), 8)
 
 
 def cap_per_host(df: DataFrame, url_col: str = "url",
@@ -92,11 +91,8 @@ def hash_split(df: DataFrame, id_col: str = "doc_id",
     membership here is a pure projection: stable under reordering,
     repartitioning, and corpus growth, and needs no rank at all).
     md5-fold so the DuckDB oracle reproduces the assignment."""
-    h = F.pmod(
-        F.conv(F.substring(
-            F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))),
-            1, 8), 16, 10).cast("bigint"),
-        F.lit(100))
+    h = F.pmod(text_hash.md5_int(
+        F.concat(F.lit(salt), F.col(id_col).cast("string")), 8), F.lit(100))
     return df.withColumn(
         part_col,
         F.when(h < train_pct, F.lit("train"))
@@ -130,10 +126,8 @@ def domain_mix(df: DataFrame, weights: dict[str, float],
     for g, w in sorted(weights.items()):
         w_expr = F.when(F.col(group_col) == g, F.lit(float(w))) \
             .otherwise(w_expr)
-    fold = F.pmod(
-        F.conv(F.substring(
-            F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))),
-            1, 8), 16, 10).cast("bigint"),
+    fold = F.pmod(text_hash.md5_int(
+        F.concat(F.lit(salt), F.col(id_col).cast("string")), 8),
         F.lit(MIX_RES))
     n_copies = (
         F.floor(w_expr).cast("int")
@@ -161,12 +155,7 @@ def domain_mix_oracle_sql(weights: dict[str, float],
     DECIMAL literals don't out-precision Spark's double arithmetic at
     the keep boundary (use binary-exact fractions — .5/.25/.125 steps —
     for engine-proof determinism either way)."""
-    fold = (
-        "list_sum(list_transform(range(8), i -> "
-        f"CAST(strpos('0123456789abcdef', substr(md5('{salt}' || {id_col}), "
-        "CAST(i+1 AS INT), 1)) - 1 AS BIGINT) * "
-        "CAST(power(16, 7 - i) AS BIGINT)))"
-    )
+    fold = text_hash.md5_int_sql(f"'{salt}' || {id_col}", 8)
     branches = " ".join(
         f"WHEN '{g}' THEN CAST({float(w)!r} AS DOUBLE)"
         for g, w in sorted(weights.items()))
@@ -195,11 +184,7 @@ def cap_per_host_oracle_sql(urls_cte: str, max_per_host: int = 100,
     """DuckDB twin over a CTE producing (doc_id, url) — single-window
     formulation; ``tiebreak_col`` mirrors the Spark side's total-order
     tie-breaker."""
-    fold = (
-        "list_sum(list_transform(range(8), i -> "
-        f"CAST(strpos('0123456789abcdef', substr(md5('{seed}:' || url), "
-        "CAST(i+1 AS INT), 1)) - 1 AS BIGINT) * CAST(power(16, 7 - i) AS BIGINT)))"
-    )
+    fold = text_hash.md5_int_sql(f"'{seed}:' || url", 8)
     tb = f", {tiebreak_col}" if tiebreak_col is not None else ""
     return f"""
 WITH urls AS ({urls_cte}),

@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.functions import text_hash
+
 ANN_PLANES = 32
 ANN_BANDS = 8   # OR-amplification: 8 bands x 4 bits
                 # (empirical on the synthetic clusters: recall 0.74 of the
@@ -713,10 +715,10 @@ EMBED_DIM = 64
 def _sig_from_md5(m: Column, dim: int) -> Column:
     """struct<bucket:int, sign:double> from a word's md5 hex digest:
     bucket from the first-8-hex-chars fold, sign ±1 from digit 9 parity
-    — both reproducible in DuckDB via the strpos fold. Takes the DIGEST
+    — both reproducible in DuckDB (``text_hash``). Takes the DIGEST
     (materialized once per word) so the hash isn't computed twice."""
-    h = F.conv(F.substring(m, 1, 8), 16, 10).cast("bigint")
-    d9 = F.conv(F.substring(m, 9, 1), 16, 10).cast("bigint")
+    h = text_hash.hex_int(m, 8)
+    d9 = text_hash.hex_int(m, 1, 9)
     return F.struct(
         F.pmod(h, F.lit(dim)).cast("int").alias("bucket"),
         F.when(F.pmod(d9, F.lit(2)) == 0, F.lit(1.0))
@@ -780,11 +782,10 @@ def text_embeddings(docs: DataFrame, text_col: str = "text",
     shuffle; all counts are small integers in doubles, so every engine
     sums them exactly. NULL text reads as '' (the zero vector, norm 0),
     as in the oracle, whose empty fold COALESCEs to 0."""
-    from pii_redactor_spark.functions.rules import words_col
     t = F.coalesce(F.col(text_col), F.lit(""))
     pre = (
         docs
-        .withColumn("_words", words_col(t))
+        .withColumn("_words", text_hash.words(t))
         .withColumn("_md5", F.transform(
             F.col("_words"),
             lambda w: F.md5(F.concat(F.lit("eb:"), w))))
@@ -825,23 +826,14 @@ def text_embedding_summary(docs: DataFrame, text_col: str = "text",
     )
 
 
-_FOLD8_W_SQL = (
-    "list_sum(list_transform(range(8), i -> "
-    "CAST(strpos('0123456789abcdef', substr(md5('eb:' || {w}), "
-    "CAST(i+1 AS INT), 1)) - 1 AS BIGINT) * CAST(power(16, 7 - i) AS BIGINT)))"
-)
-
-
 def text_embed_oracle_sql(table: str = "documents",
                           text_col: str = "text",
                           id_col: str = "doc_id",
                           dim: int = EMBED_DIM) -> str:
-    from pii_redactor_spark.operators.dedup import _WORDS_SQL
-    words = _WORDS_SQL.format(t=text_col)
-    fold = _FOLD8_W_SQL.format(w="w")
-    sign = ("CASE WHEN (strpos('0123456789abcdef', "
-            "substr(md5('eb:' || w), 9, 1)) - 1) % 2 = 0 "
-            "THEN 1.0 ELSE -1.0 END")
+    words = text_hash.WORDS_SQL.format(t=text_col)
+    fold = text_hash.md5_int_sql("'eb:' || w", 8)
+    digit9 = text_hash.md5_int_sql("'eb:' || w", 1, 9)
+    sign = f"CASE WHEN {digit9} % 2 = 0 THEN 1.0 ELSE -1.0 END"
     probe = ", ".join(
         f"{1.0 if int(hashlib.md5(f'pr:{i}'.encode()).hexdigest()[0], 16) % 2 == 0 else -1.0}"
         for i in range(dim))

@@ -25,8 +25,10 @@ Resume semantics: every completed stage's CURRENT snapshot carries
 ``lineage = {run_id, stage, complete: true}``; a re-run with the same
 ``run_id`` skips straight past completed stages (reading their committed
 snapshots), re-enters the quality stage's own bucket-level resume if it
-was mid-flight, and continues the chain. A different ``run_id`` rebuilds
-from scratch (new lineage roots via overwrite).
+was mid-flight, and continues the chain. The quality stage resumes from
+its output table's live lineage only (``run_resumable``). A different
+``run_id`` rebuilds from scratch: every stage commits a new lineage root
+by overwrite, the quality stage on its first bucket-group commit.
 
 Row counts: a stage's ``n_in`` is the previous stage's ``n_out``, and
 every ``n_out`` comes from the committed snapshot's manifest (rows read

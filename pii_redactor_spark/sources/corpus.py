@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from pii_redactor_spark.functions import text_hash
+
 CORPUS_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                  "text string, lang string")
 
@@ -89,19 +91,13 @@ def from_documents(docs: DataFrame) -> DataFrame:
     """Adapt the driver's ``documents`` table to the corpus shape.
     All columns are pure expressions of (doc_id, text, lang) — the
     mapping is deterministic and engine-independent."""
+    h = text_hash.md5_int(F.concat(F.lit("host:"), F.col("doc_id")), 8)
     host = F.when(
-        F.pmod(F.conv(F.substring(F.md5(F.concat(F.lit("host:"),
-                                                 F.col("doc_id"))), 1, 8),
-                      16, 10).cast("bigint"), F.lit(2)) == 0,
-        F.lit(HOT_HOST),
+        F.pmod(h, F.lit(2)) == 0, F.lit(HOT_HOST),
     ).otherwise(
         F.concat(
             F.lit("site"),
-            F.lpad(
-                F.pmod(F.conv(F.substring(
-                    F.md5(F.concat(F.lit("host:"), F.col("doc_id"))), 1, 8),
-                    16, 10).cast("bigint"), F.lit(len(COLD_HOSTS)))
-                .cast("string"), 2, "0"),
+            F.lpad(F.pmod(h, F.lit(len(COLD_HOSTS))).cast("string"), 2, "0"),
             F.lit(".example"),
         )
     )
@@ -110,9 +106,7 @@ def from_documents(docs: DataFrame) -> DataFrame:
     # md5-fold (not xxhash64) so the DuckDB oracle reproduces timestamps
     warc_ts = F.timestamp_seconds(
         F.lit(_BASE_TS) + F.pmod(
-            F.conv(F.substring(
-                F.md5(F.concat(F.lit("ts:"), F.col("doc_id"))), 1, 8),
-                16, 10).cast("bigint"),
+            text_hash.md5_int(F.concat(F.lit("ts:"), F.col("doc_id")), 8),
             F.lit(86_400 * 30)))
 
     @F.pandas_udf("binary")

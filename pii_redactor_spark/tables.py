@@ -27,10 +27,13 @@ EMULATION of the subset the pipeline needs:
   read a footer. Manifests written before these fields existed read and
   count through Spark as before.
 - **Resume**: the reference resumes by a cache-existence check
-  (reference: optimizer.py:33-35); here each processed bucket commits a
-  lineage row to a metrics table, and a restarted run anti-joins the done
-  buckets away (``remaining_buckets``) — per-partition lineage + metrics,
-  resumable mid-corpus.
+  (reference: optimizer.py:33-35); here each bucket group commits its
+  data and a ``{run_id, stage, buckets}`` lineage record in one snapshot,
+  and a restarted run anti-joins the buckets recorded in the live
+  lineage away (``remaining_buckets``) — resumable mid-corpus. A run_id
+  with no live lineage starts the table over: its first commit is an
+  overwrite (a new lineage root), so a new run never stacks on an old
+  one. Metrics rows are observability only.
 
 On a real cluster this module is replaced by the Iceberg catalog +
 ``writeTo(...).append()``; the pipeline code paths (bucket column, commit
@@ -174,29 +177,34 @@ class IcebergishTable:
                 buckets = [int(r) for r in raws]
             except ValueError:
                 buckets = raws
-        rows, schema = self._footer_facts(df.sparkSession, out,
-                                          partition_by is not None)
+        rows, schema = self._footer_facts(df, out, partition_by)
         return dir_name, sorted(buckets), rows, schema
 
-    def _footer_facts(self, spark: SparkSession, out: Path,
-                      partitioned: bool) -> tuple[int, str | None]:
+    def _footer_facts(self, df: DataFrame, out: Path,
+                      partition_by: str | None) -> tuple[int, str | None]:
         """(rows, read schema DDL) of a written data dir, from the Parquet
         footers on the driver. Partition columns get the type Spark's
         directory-name inference gives them: a read given only the data
         schema lists the directory (no job) and appends them. (A read
         makes every column nullable, so the footer's NOT NULLs are
-        harmless in the stored schema.)"""
+        harmless in the stored schema.) An empty frame writes no Parquet
+        file, so its dir records the frame's own schema, partition column
+        last as a read appends it: inferring a schema from no file fails
+        the table's next read."""
         metas = [pq.read_metadata(p) for p in _data_files(out)]
         rows = sum(m.num_rows for m in metas)
         footer = next((m.metadata[SPARK_SCHEMA_KEY] for m in metas
                        if m.metadata and SPARK_SCHEMA_KEY in m.metadata),
                       None)
         if footer is None:
-            return rows, None
-        schema = StructType.fromJson(json.loads(footer))
-        if partitioned:
-            schema = self._reader(spark, out).schema(schema) \
-                .parquet(str(out)).schema
+            schema = StructType(
+                [f for f in df.schema if f.name != partition_by]
+                + [f for f in df.schema if f.name == partition_by])
+        else:
+            schema = StructType.fromJson(json.loads(footer))
+            if partition_by is not None:
+                schema = self._reader(df.sparkSession, out).schema(schema) \
+                    .parquet(str(out)).schema
         ddl = schema.toDDL()
         # DDL drops field metadata: keep it only when it round-trips
         return rows, ddl if DataType.fromDDL(ddl) == schema else None
@@ -407,7 +415,7 @@ class MetricsTable(IcebergishTable):
     The rows are already on the driver, so ``log`` writes them with
     pyarrow as one Parquet file carrying Spark's row-schema footer key
     (Spark reads it with the same column types) and commits the manifest
-    — no Spark job. ``done_buckets`` reads them back the same way."""
+    — no Spark job."""
 
     def log(self, spark: SparkSession, rows: list[dict]) -> None:
         schema = _metrics_arrow_schema()
@@ -422,22 +430,6 @@ class MetricsTable(IcebergishTable):
                        compression="snappy", store_schema=False)
         self._commit_dir("append", dir_name, [], table.num_rows,
                          METRICS_DDL, None)
-
-    def done_buckets(self, spark: SparkSession, run_id: str,
-                     stage: str) -> list[int]:
-        snap = self.snapshot()
-        if snap is None:
-            return []
-        done: set[int] = set()
-        for d in snap.data_dirs:
-            for f in _data_files(self.data_root / d):
-                for r in pq.read_table(
-                        f, columns=["run_id", "stage", "bucket"]
-                ).to_pylist():
-                    if (r["run_id"] == run_id and r["stage"] == stage
-                            and r["bucket"] is not None):
-                        done.add(r["bucket"])
-        return sorted(done)
 
 
 def remaining_buckets(all_buckets: list[int], done: list[int]) -> list[int]:
@@ -463,10 +455,15 @@ def run_resumable(
 ) -> int:
     """Process the corpus bucket-group by bucket-group; each group's data
     AND its lineage record commit in ONE snapshot (atomic manifest flip),
-    so a restart with the same ``run_id`` skips exactly the committed
-    buckets — a crash anywhere between commits can never duplicate rows.
-    Metrics rows (with per-kernel timings when a ``KernelTimers`` is
-    passed) are logged after the data commit, purely for observability.
+    so a restart with the same ``run_id`` skips exactly the buckets the
+    output's live lineage records — a crash anywhere between commits can
+    never duplicate rows. A ``run_id`` with no bucket in that lineage
+    (a new run) OVERWRITES the table on its first commit, starting a new
+    lineage root, so it rebuilds rather than appending to another run's
+    rows. Metrics rows (with per-kernel timings when a ``KernelTimers``
+    is passed) are logged after the data commit, purely for
+    observability: they may name buckets whose data an overwrite has
+    since dropped, so resume never reads them.
     ``fail_after_commits`` injects a crash for tests.
 
     ``transform`` is applied ONCE, to the whole bucketed corpus; each
@@ -477,8 +474,7 @@ def run_resumable(
     Returns the number of bucket-groups processed in THIS invocation.
     """
     bucketed = with_bucket(pages, key_col, n_buckets)
-    done = sorted(set(output.lineage_done_buckets(run_id, stage))
-                  | set(metrics.done_buckets(spark, run_id, stage)))
+    done = output.lineage_done_buckets(run_id, stage)
     todo = remaining_buckets(list(range(n_buckets)), done)
     if not todo:
         return 0
@@ -497,10 +493,10 @@ def run_resumable(
         if has_keep:
             counts += [F.count_if((bucket == b) & F.col("keep"))
                        .alias(f"kept_{b}") for b in group]
-        output.append(full.filter(bucket.isin(group)).observe(obs, *counts),
-                      partition_by="bucket", lineage={
-                          "run_id": run_id, "stage": stage,
-                          "buckets": group})
+        commit = output.append if done or commits else output.overwrite
+        commit(full.filter(bucket.isin(group)).observe(obs, *counts),
+               partition_by="bucket", lineage={
+                   "run_id": run_id, "stage": stage, "buckets": group})
         got = obs.get
         stats = [{"bucket": b, "n_docs": got[f"n_{b}"],
                   "kept": got.get(f"kept_{b}")}

@@ -420,6 +420,52 @@ def test_build_token_summary_same_after_resume(spark, tmp_path):
         assert {k: got[k] for k in keys} == {k: whole[k] for k in keys}
 
 
+def test_build_new_run_id_replaces_quality_table(spark, tmp_path):
+    """A second run_id over the same output root rebuilds: the quality
+    stage's first commit overwrites, so r2's quality table holds each
+    dedup survivor once instead of stacking on r1's rows."""
+    from pii_redactor_spark.operators.cache import release_caches
+    from pii_redactor_spark.plans.build import build_job, stage_table
+
+    pages = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
+        .filter("doc_id < 80")
+    root = tmp_path / "rr"
+    first = build_job(spark, pages, root, run_id="r1")
+    release_caches()
+    second = build_job(spark, pages, root, run_id="r2")
+    release_caches()
+    for out in (first, second):
+        by_stage = {s["stage"]: s for s in out["stages"]}
+        assert not any(s["resumed"] for s in out["stages"])
+        assert by_stage["quality"]["n_in"] == by_stage["dedup"]["n_out"]
+        assert by_stage["quality"]["n_out"] == by_stage["dedup"]["n_out"]
+    assert second["stages"] == [
+        {**s, "snapshot": t["snapshot"]}
+        for s, t in zip(first["stages"], second["stages"])]
+    ids = [r["doc_id"] for r in
+           stage_table(root, "quality").read(spark).collect()]
+    assert len(ids) == len(set(ids))
+
+
+def test_build_completes_with_empty_bucket_groups(spark, tmp_path):
+    """Three docs leave most quality bucket groups empty; an empty
+    group's data dir (no Parquet file) reads back with its recorded
+    schema instead of failing schema inference."""
+    from pii_redactor_spark.operators.cache import release_caches
+    from pii_redactor_spark.plans.build import build_job, stage_table
+
+    pages = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
+        .filter("doc_id < 3")
+    out = build_job(spark, pages, tmp_path / "tiny", run_id="tiny")
+    release_caches()
+    by_stage = {s["stage"]: s for s in out["stages"]}
+    quality = stage_table(tmp_path / "tiny", "quality")
+    assert len(quality.snapshot().data_dirs) == 4     # 8 buckets / 2
+    assert quality.read(spark).count() == by_stage["quality"]["n_out"] \
+        == by_stage["dedup"]["n_out"]
+    assert by_stage["pack"]["n_out"] == by_stage["select"]["n_out"]
+
+
 def test_build_incremental_appends_diff_and_matches_scratch(
         spark, capsys, tmp_path):
     """Round-4 verdict item 2 (`cli build --incremental`): append a drop

@@ -124,10 +124,9 @@ def test_components_long_chain_bounded_plan(spark):
     from pii_redactor_spark.operators.cache import release_caches
     from pii_redactor_spark.operators.dedup import components_from_edges
     n = 50
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                   "id_a long, id_b long")
-    labels = components_from_edges(nodes, edges, max_iter=30)
+    labels = components_from_edges(edges, max_iter=30)
     rows = labels.collect()
     assert len(rows) == n
     assert all(r["component"] == 0 for r in rows)  # one cluster, min label
@@ -571,11 +570,10 @@ def test_components_one_job_per_round(spark):
     ``localCheckpoint`` call, so a round's group is that call plus the
     stop-test count that fills it. Before the rounds: the eager
     undirected-edge checkpoint; after them nothing (the result is a
-    lazy join over the last round's checkpoint). Executions that start
+    last round's checkpoint itself). Executions that start
     no job (bookkeeping) are not counted."""
     from pii_redactor_spark.operators.cache import release_caches
     n = 50
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                   "id_a long, id_b long")
     store = spark._jsparkSession.sharedState().statusStore()
@@ -592,8 +590,7 @@ def test_components_one_job_per_round(spark):
     before = {e[0] for e in executions()}
     try:
         st: dict = {}
-        labels = dedup.components_from_edges(nodes, edges, max_iter=4,
-                                             stats=st)
+        labels = dedup.components_from_edges(edges, max_iter=4, stats=st)
         assert st["rounds"] == 4  # the chain needs more than 4 rounds
         ran = [d for i, d, jobs in executions()
                if i not in before and jobs > 0]
@@ -625,17 +622,18 @@ def test_components_exhaustive_small_graphs(spark):
             g += 1
     assert g == 1099
     want = _uf_components(10 * g, edge_ids)
-    nodes = spark.createDataFrame([(v,) for v in node_ids], "node long")
     edges = spark.createDataFrame(edge_ids, "id_a long, id_b long")
-    got = {r["node"]: r["component"]
-           for r in dedup.components_from_edges(nodes, edges).collect()}
+    labels = {r["node"]: r["component"]
+              for r in dedup.components_from_edges(edges).collect()}
     release_caches()
+    # endpoints only: every other node is its own component
+    assert set(labels) == {v for e in edge_ids for v in e}
+    got = {v: labels.get(v, v) for v in node_ids}
     assert got == {v: want[v] for v in node_ids}
     path = spark.createDataFrame([(0, 3), (3, 2), (2, 4), (4, 1)],
                                  "id_a long, id_b long")
-    five = spark.createDataFrame([(i,) for i in range(5)], "node long")
     comp = {r["node"]: r["component"]
-            for r in dedup.components_from_edges(five, path).collect()}
+            for r in dedup.components_from_edges(path).collect()}
     release_caches()
     assert comp == {i: 0 for i in range(5)}
 
@@ -645,17 +643,15 @@ def test_components_clique_converges_in_one_round(spark):
     node the minimum, and the stop test sees it in the same round."""
     from pii_redactor_spark.operators.cache import release_caches
     n = 12
-    nodes = spark.createDataFrame([(i,) for i in range(n + 3)], "node long")
     edges = spark.createDataFrame(
         [(a, b) for a in range(3, 3 + n) for b in range(a + 1, 3 + n)],
         "id_a long, id_b long")
     st: dict = {}
     comp = {r["node"]: r["component"] for r in
-            dedup.components_from_edges(nodes, edges, stats=st).collect()}
+            dedup.components_from_edges(edges, stats=st).collect()}
     release_caches()
     assert st["rounds"] == 1
-    assert comp == {**{i: i for i in range(3)},
-                    **{i: 3 for i in range(3, 3 + n)}}
+    assert comp == {i: 3 for i in range(3, 3 + n)}
 
 
 def test_components_returned_plan_is_bounded_scan(spark):

@@ -52,8 +52,8 @@ def test_relu_actually_fires(docs):
     pre-activations go negative (so relu clips them) — if not, the MLP
     would collapse to one linear projection."""
     w1, b1, w2 = encoder.mlp_weights()
-    from pii_redactor_spark.functions.rules import words_col
-    rows = docs.select(words_col(F.col("text")).alias("ws")).collect()
+    from pii_redactor_spark.functions.text_hash import words
+    rows = docs.select(words(F.col("text")).alias("ws")).collect()
     clipped = total = 0
     for r in rows:
         x = np.zeros(len(w1), dtype=np.int64)

@@ -201,10 +201,12 @@ def test_cc_engines_match_union_find(spark, data):
         st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)),
         min_size=0, max_size=25))
     want = _uf_components(n, edges)
-    nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
     edf = spark.createDataFrame(
         [(a, b) for a, b in edges] or [(0, 0)], "id_a long, id_b long")
-    got = {r["node"]: r["component"]
-           for r in dedup.components_from_edges(nodes, edf).collect()}
+    labels = {r["node"]: r["component"]
+              for r in dedup.components_from_edges(edf).collect()}
     release_caches()
+    # endpoints only: every other node is its own component
+    assert set(labels) <= set(range(n)), (n, edges)
+    got = {i: labels.get(i, i) for i in range(n)}
     assert got == want, (n, edges)

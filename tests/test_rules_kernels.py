@@ -101,13 +101,14 @@ class TestQualityRules:
             assert r not in out[2]["reasons"]
 
     def test_ngrams_short_docs_empty(self, spark):
-        from pii_redactor_spark.functions.rules import ngrams_col, words_col
+        from pii_redactor_spark.functions.rules import ngrams_col
+        from pii_redactor_spark.functions.text_hash import words
         from pyspark.sql import functions as F
         df = spark.createDataFrame(
             [("one two",), ("",), ("a b c d e",)], "text string")
         out = df.select(
-            F.size(ngrams_col(words_col(F.col("text")), 5)).alias("n5"),
-            F.size(ngrams_col(words_col(F.col("text")), 3)).alias("n3"),
+            F.size(ngrams_col(words(F.col("text")), 5)).alias("n5"),
+            F.size(ngrams_col(words(F.col("text")), 3)).alias("n3"),
         ).collect()
         assert [(r["n5"], r["n3"]) for r in out] == [(0, 0), (0, 0), (1, 3)]
 

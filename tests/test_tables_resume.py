@@ -88,7 +88,7 @@ def test_resume_after_crash_no_reprocess_and_identical_output(
 
     out2 = IcebergishTable(tmp_path / "r2" / "out")
     met2 = MetricsTable(tmp_path / "r2" / "metrics")
-    done_after_crash = met2.done_buckets(spark, "run2", "scrub")
+    done_after_crash = out2.lineage_done_buckets("run2", "scrub")
     assert len(done_after_crash) == 4
     partial = out2.read(spark).count()
 
@@ -100,7 +100,7 @@ def test_resume_after_crash_no_reprocess_and_identical_output(
         .select("url", "doc_id", "keep", "bucket"),
         n_buckets=8, buckets_per_commit=2)
     assert n2 == 2  # 4 remaining buckets / 2 per commit
-    assert sorted(met2.done_buckets(spark, "run2", "scrub")) == list(range(8))
+    assert out2.lineage_done_buckets("run2", "scrub") == list(range(8))
 
     rows2 = {(r["url"], r["keep"]) for r in out2.read(spark).collect()}
     assert rows2 == ref_rows               # identical final output
@@ -415,9 +415,6 @@ def test_metrics_log_and_count_start_no_spark_jobs(spark, docs, tmp_path):
     _, jobs = _jobs_started(spark, lambda: met.log(spark, [
         {"run_id": "r", "stage": "other", "bucket": 5}]))
     assert jobs == []
-    done, jobs = _jobs_started(
-        spark, lambda: met.done_buckets(spark, "r", "scrub"))
-    assert done == [0, 1] and jobs == []
     n, jobs = _jobs_started(spark, lambda: met.count(spark))
     assert n == 3 and jobs == []
     t = IcebergishTable(tmp_path / "t")
@@ -445,10 +442,10 @@ def test_resumable_builds_transform_once_and_filters_below_udf(
     plans: list[str] = []
 
     class Capture(IcebergishTable):
-        def append(self, df, partition_by=None, lineage=None):
+        def _write_data_dir(self, df, partition_by):
             plans.append(df._jdf.queryExecution().executedPlan()
                          .toString())
-            return super().append(df, partition_by, lineage)
+            return super()._write_data_dir(df, partition_by)
 
     calls = []
 
