@@ -50,28 +50,6 @@ def lines_col(text: Column) -> Column:
     return F.filter(F.split(text, r"\n"), lambda l: F.trim(l) != "")
 
 
-def bigrams_col(words: Column) -> Column:
-    """Word bigrams as 'a b' strings (empty for <2 words)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.size(words) - 2),
-        lambda i: F.concat_ws(" ", F.element_at(words, i + 1),
-                              F.element_at(words, i + 2)),
-    )
-
-
-def ngrams_col(words: Column, n: int) -> Column:
-    """Word n-grams as space-joined strings; empty array for <n words
-    (guarded — F.sequence COUNTS DOWN when stop < start)."""
-    idx = F.sequence(F.lit(0), F.size(words) - n)
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(words, i + k + 1) for k in range(n)]),
-    )
-    return F.when(F.size(words) >= n, grams) \
-        .otherwise(F.array().cast("array<string>"))
-
-
 def quality_columns(
     text: Column | str,
     th: QualityThresholds | None = None,

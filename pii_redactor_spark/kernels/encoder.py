@@ -16,7 +16,7 @@ Architecture (all integer arithmetic until the caller converts):
     h_j    = relu(sum_w sign(w) * W1[bucket(w), j] + b1_j)
     e_k    = sum_j h_j * W2[j, k]
 
-Exact BIGINT everywhere, so the numpy iterator-pandas-UDF serving form
+Exact BIGINT everywhere, so the numpy iterator-Arrow-UDF serving form
 and the DuckDB oracle agree bit-for-bit — the engine-reproducibility
 discipline of kernels/quality_clf.py applied to a nonlinear model: relu
 is ``greatest(0, .)`` in both engines, and a linear layer is a sum of
@@ -36,11 +36,11 @@ from functools import lru_cache
 from typing import Iterator, Tuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pii_redactor_spark.functions import text_hash
+from pii_redactor_spark.functions import arrow_lists, text_hash
 
 MLP_IN = 64    # hashed-BoW buckets
 MLP_HID = 16
@@ -109,7 +109,7 @@ def _word_sig(w: Column, dim: int) -> Column:
 
 
 def make_mlp_embed_udf():
-    """Iterator pandas UDF: per-batch numpy scatter + two integer
+    """Iterator Arrow UDF: per-batch numpy scatter + two integer
     matmuls — identical bits to the oracle (tested in test_encoder).
     Takes the pre-computed (bucket, sign) arrays so the md5 hashing
     stays JVM-side (the simhash/BoW precedent). As expressions the
@@ -129,30 +129,21 @@ def make_mlp_embed_udf():
     w1, b1, w2 = mlp_weights()
     dim = len(w1)
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def mlp(batches: Iterator[Tuple[pd.Series, pd.Series]]
-            ) -> Iterator[pd.Series]:
+    @F.arrow_udf(ArrayType(LongType()))
+    def mlp(batches: Iterator[Tuple[pa.Array, pa.Array]]
+            ) -> Iterator[pa.Array]:
         for buckets, signs in batches:
-            n = len(buckets)
-            lens = np.array([0 if b is None else len(b) for b in buckets],
-                            dtype=np.int64)
-            x = np.zeros((n, dim), dtype=np.int64)
-            if lens.sum() > 0:
-                flatb = np.concatenate(
-                    [np.asarray(b, dtype=np.int64)
-                     for b in buckets if b is not None and len(b)])
-                flats = np.concatenate(
-                    [np.asarray(s, dtype=np.int64)
-                     for s in signs if s is not None and len(s)])
-                idx = np.repeat(np.arange(n), lens)
-                np.add.at(x, (idx, flatb), flats)
+            flatb, lens = arrow_lists.ragged(buckets, np.int64)
+            flats, _ = arrow_lists.ragged(signs, np.int64)
+            x = np.zeros((len(lens), dim), dtype=np.int64)
+            np.add.at(x, (np.repeat(np.arange(len(lens)), lens), flatb),
+                      flats)
             # NULL text keeps its zero row: the network emits the
             # bias-only activation, exactly like the oracle's
             # COALESCE(SUM, 0) — a None here would silently diverge on
             # NULL-text corpora
             h = np.maximum(x @ w1 + b1, 0)
-            e = h @ w2
-            yield pd.Series([list(row) for row in e])
+            yield arrow_lists.rows(h @ w2)
 
     return mlp
 

@@ -18,19 +18,14 @@ bincount into a doc-term matrix, one matmul against the weight matrix.
 from __future__ import annotations
 
 from functools import lru_cache
-from typing import Iterator
+from typing import Iterable, Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType
 
-from pii_redactor_spark.functions import text_hash
+from pii_redactor_spark.functions import arrow_lists, text_hash
 from pii_redactor_spark.kernels.corpora import SEED_CORPORA
 
 N_BUCKETS = 1 << 15
@@ -98,8 +93,10 @@ def fit_langid() -> tuple[list[str], np.ndarray, np.ndarray]:
     return langs, log_prior, log_lik
 
 
-def predict_lang_batch(texts: "pd.Series | list[str]") -> tuple[list[str | None], list[float | None]]:
-    """(predicted_lang, confidence=posterior margin) per text.
+def predict_lang_batch(texts: Iterable[str | None]
+                       ) -> tuple[list[str | None], list[float | None]]:
+    """(predicted_lang, confidence=posterior margin) per text — the
+    scorer the fused kernel pass (plans/pipeline.py) calls per batch.
 
     Sparse scoring: score[l] = prior[l] + Σ_g log_lik[l, idx_g] — a
     gather over the document's ~10^3 n-grams per language instead of a
@@ -134,29 +131,10 @@ def predict_lang_batch(texts: "pd.Series | list[str]") -> tuple[list[str | None]
     return preds, confs
 
 
-LANGID_RESULT_TYPE = StructType([
-    StructField("lang_pred", StringType()),
-    StructField("lang_conf", DoubleType()),
-])
-
-
-def make_langid_udf():
-    """Iterator pandas UDF: text -> struct<lang_pred, lang_conf>."""
-
-    @F.pandas_udf(LANGID_RESULT_TYPE)
-    def langid(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        fit_langid()  # warm the per-worker cache once
-        for texts in batches:
-            preds, confs = predict_lang_batch(texts)
-            yield pd.DataFrame({"lang_pred": preds, "lang_conf": confs})
-
-    return langid
-
-
 # ---------------------------------------------------------------------------
 # Oracle-gated language ID (q_langid).
 #
-# Same published shape as the pandas-UDF kernel above (fastText-style
+# Same published shape as the kernel above (fastText-style
 # hashed char-n-gram NB, Joulin et al. 2016) re-expressed with the
 # engine-reproducible discipline of kernels/quality_clf.py: the NB
 # char-BIGRAM log-likelihoods are quantized to BIGINT (x 1e6), bigram
@@ -164,8 +142,8 @@ def make_langid_udf():
 # DuckDB via text_hash), per-language scores are exact BIGINT
 # sums, and argmax takes the first maximum in sorted-language order
 # (the oracle's >=-CASE chain). Zero shuffle: bigram bucketing is a JVM
-# projection over the scan, the score sums one Arrow pass. The UDF
-# kernel stays the flagship-path scorer (wider 1-3 gram features +
+# projection over the scan, the score sums one Arrow pass. The kernel
+# above stays the flagship-path scorer (wider 1-3 gram features +
 # confidence); this form is what the contract oracle bit-checks. Both
 # fit the same embedded seed corpora and both score every seed
 # sentence to its true language (pinned in tests/test_rules_kernels.py).
@@ -220,31 +198,20 @@ def make_langid_score_udf(dim: int = LANGID_EXPR_DIM):
     folds over ~400-element arrays, allocation-bound like the simhash
     majority vote (measured 2.32 s vs ~0.6 s through this UDF at
     sf0.1)."""
-    from pyspark.sql.types import StringType
 
-    @F.pandas_udf(StringType())
-    def score(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.arrow_udf(StringType())
+    def score(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         langs, W = fit_langid_expr(dim)
         Wt = np.ascontiguousarray(W)            # L x dim int64
         for buckets in batches:
-            n = len(buckets)
-            lens = np.array([0 if b is None else len(b) for b in buckets],
-                            dtype=np.int64)
-            out = [None] * n
-            if lens.sum() > 0:
-                flat = np.concatenate(
-                    [np.asarray(b, dtype=np.int64)
-                     for b in buckets if b is not None and len(b)])
-                seg = np.zeros(len(buckets) + 1, dtype=np.int64)
-                np.cumsum(lens, out=seg[1:])
-                gathered = Wt[:, flat]          # L x total
-                sums = np.add.reduceat(gathered, seg[:-1], axis=1)
-                sums[:, lens == 0] = 0          # reduceat artifacts
-                best = np.argmax(sums, axis=0)
-                for i in range(n):
-                    if lens[i] > 0:
-                        out[i] = langs[int(best[i])]
-            yield pd.Series(out, index=buckets.index, dtype=object)
+            flat, lens = arrow_lists.ragged(buckets, np.int64)
+            nz, starts = arrow_lists.segments(lens)
+            out: list = [None] * len(lens)
+            if len(nz):
+                sums = np.add.reduceat(Wt[:, flat], starts, axis=1)
+                for i, best in zip(nz, np.argmax(sums, axis=0)):
+                    out[i] = langs[int(best)]
+            yield pa.array(out, type=pa.string())
 
     return score
 

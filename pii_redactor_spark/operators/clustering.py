@@ -334,20 +334,22 @@ def _lloyd_ctes(points: str, groups: list[str], dim: int,
     groups…, v) — the oracle of ``lloyd``. Each row takes the argmin
     (d2 ASC, cid ASC) over its group's centroids, each centroid moves to
     the DECIMAL mean of its rows, and a centroid no row chose keeps its
-    previous value (LEFT JOIN + COALESCE)."""
+    previous value (LEFT JOIN + COALESCE). Every CTE is MATERIALIZED:
+    inlined, each ``c{t}`` re-ran ``c{t-1}`` twice (once per reader),
+    so the chain's cost doubled with every iteration."""
     keys = ", ".join([*groups, "cid"])
     on = " ".join(["TRUE", *(f"AND p.{g} = k.{g}" for g in groups)])
     part = ", ".join(["p.vec_id", *(f"p.{g}" for g in groups)])
     d2 = _D2_SQL.format(a="p.v", b="k.cv")
     parts = []
     for t in range(1, iters + 1):
-        parts.append(f"""a{t} AS (
+        parts.append(f"""a{t} AS MATERIALIZED (
   SELECT * EXCLUDE (rn) FROM (
     SELECT p.*, k.cid,
            ROW_NUMBER() OVER (PARTITION BY {part}
              ORDER BY {d2} ASC, k.cid ASC) AS rn
     FROM {points} p JOIN c{t - 1} k ON {on}) WHERE rn = 1)""")
-        parts.append(f"""c{t} AS (
+        parts.append(f"""c{t} AS MATERIALIZED (
   SELECT {keys}, COALESCE(u.cv, p.cv) AS cv
   FROM c{t - 1} p LEFT JOIN (
     SELECT {keys}, {_means_sql('v', dim)} AS cv FROM a{t} GROUP BY {keys}) u

@@ -14,7 +14,7 @@ Scale shape (the part that matters at 100 TB):
 - benchmark sets are tiny (10^3..10^5 items) — their distinct gram-hash
   set BROADCASTS; the corpus is NEVER shuffled for the membership test,
   only its (rare) hit rows reach the per-doc aggregation;
-- n-grams reuse the quality rules' hashed form (functions/rules.py):
+- n-grams reuse the quality rules' hashed form (functions/text_hash.py):
   one md5 pass per word, integer rot-xor combination — the gram join
   key is a bigint, not a string;
 - the left join back to the corpus broadcasts the hit table (bounded by
@@ -43,8 +43,7 @@ def _distinct_grams(df: DataFrame, text_col: str, n: int) -> DataFrame:
 def contamination(corpus: DataFrame, benchmark: DataFrame,
                   n: int = DECONTAM_N, min_shared: int = 1,
                   text_col: str = "text", id_col: str = "doc_id",
-                  bench_text_col: str = "text",
-                  broadcast_grams: bool = True) -> DataFrame:
+                  bench_text_col: str = "text") -> DataFrame:
     """Corpus plus (shared_ngrams: bigint, contaminated: boolean).
 
     ``shared_ngrams`` counts DISTINCT hashed n-grams a document shares
@@ -53,18 +52,10 @@ def contamination(corpus: DataFrame, benchmark: DataFrame,
     never be flagged (their gram set is empty) — at n=8+ that matches
     the published methodology (too-short overlaps are noise).
 
-    ``broadcast_grams`` picks the join strategy, same answer either way:
-
-    - True (default): benchmark gram set broadcasts; the corpus NEVER
-      shuffles — right while the benchmark suite is 10^3..10^6 items
-      (the common case; GPT-3 decontaminated against eval sets).
-    - False: the bucketed scale path for when the benchmark side
-      outgrows executor memory (decontaminating against another
-      CORPUS, e.g. held-out test shards of the same crawl): both gram
-      streams SHUFFLE-HASH-join partitioned by the bigint gram key —
-      no sort, no broadcast, each task joins one hash bucket; the
-      hit table then joins back by id the same way. Linear in the
-      larger side, bounded per-task memory.
+    The benchmark gram set and the (rare) hit rows broadcast, so the
+    corpus NEVER shuffles — right while the benchmark suite is
+    10^3..10^6 items (the common case; GPT-3 decontaminated against
+    eval sets).
     """
     # explode_outer + null filter, NOT explode: Spark's
     # InferFiltersFromGenerate infers `size(_g) > 0` from a plain
@@ -82,17 +73,13 @@ def contamination(corpus: DataFrame, benchmark: DataFrame,
         .select(id_col, F.explode_outer("_g").alias("g"))
         .where(F.col("g").isNotNull())
     )
-    bench_side = (F.broadcast(bench_grams) if broadcast_grams
-                  else bench_grams.hint("shuffle_hash"))
     hits = (
-        corpus_grams.join(bench_side, "g")
+        corpus_grams.join(F.broadcast(bench_grams), "g")
         .groupBy(id_col)
         .agg(F.countDistinct("g").alias("shared_ngrams"))
     )
-    hits_side = F.broadcast(hits) if broadcast_grams \
-        else hits.hint("shuffle_hash")
     return (
-        corpus.join(hits_side, id_col, "left")
+        corpus.join(F.broadcast(hits), id_col, "left")
         .withColumn("shared_ngrams",
                     F.coalesce(F.col("shared_ngrams"), F.lit(0).cast("bigint")))
         .withColumn("contaminated",

@@ -31,11 +31,11 @@ from functools import lru_cache
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pii_redactor_spark.functions import text_hash
+from pii_redactor_spark.functions import arrow_lists, text_hash
 
 # MinHash: H signatures grouped into B bands of R rows (H = B*R).
 # Round-4 widening (round-3 verdict item 4): 16 bands x 8 rows — the
@@ -60,8 +60,8 @@ def shingles_expr(words: Column, k: int = SHINGLE_K) -> Column:
     """Word k-shingles joined by single spaces; documents shorter than k
     words contribute one whole-document shingle so no doc has an empty
     signature. NULL words (NULL text) give a NULL array, never
-    ``[NULL]``: a null element would float every list of its Arrow
-    batch (see ``make_minhash_udf``)."""
+    ``[NULL]``: the MinHash pass rejects a null element
+    (``arrow_lists.ragged``)."""
     n = F.size(words)
     full = F.transform(
         F.sequence(F.lit(0), n - k),
@@ -102,10 +102,8 @@ def make_minhash_udf(h: int = MINHASH_H, bands: int = LSH_BANDS,
     md5('|||…') bucket. Computing the keys here replaces a
     bands x rows element_at/cast/concat/md5 expression per row.
 
-    The sets must hold no NULL element: one null element anywhere in a
-    batch makes Arrow hand EVERY list of the batch to pandas as float64,
-    which rounds 60-bit hashes (``shingles_expr`` keeps NULL text a NULL
-    set for this reason)."""
+    The sets must hold no NULL element (``arrow_lists.ragged`` raises;
+    ``shingles_expr`` keeps NULL text a NULL set)."""
     from pyspark.sql.types import ArrayType, StringType
     masks = np.array(minhash_masks(h), dtype=np.int64)
 
@@ -114,31 +112,18 @@ def make_minhash_udf(h: int = MINHASH_H, bands: int = LSH_BANDS,
             map(str, sig[b * rows:(b + 1) * rows])).encode()).hexdigest()
             for b in range(bands)]
 
-    @F.pandas_udf(ArrayType(StringType()))
-    def minhash_np(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        null_keys = [None] * bands
+    @F.arrow_udf(ArrayType(StringType()))
+    def minhash_np(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         for hashes in batches:
-            n = len(hashes)
-            sets = [None if v is None else np.asarray(v, dtype=np.int64)
-                    for v in hashes]
-            lens = np.array([0 if v is None else len(v) for v in sets],
-                            dtype=np.int64)
-            key_col: list = [list(null_keys) for _ in range(n)]
-            if lens.sum() > 0:
-                flat = np.concatenate(
-                    [v for v in sets if v is not None and len(v)])
-                seg = np.zeros(n + 1, dtype=np.int64)
-                np.cumsum(lens, out=seg[1:])
-                nz = lens > 0
-                sigs = np.empty((int(nz.sum()), len(masks)),
-                                dtype=np.int64)
-                segs_nz = seg[:-1][nz]
-                for j, m in enumerate(masks):
-                    sigs[:, j] = np.minimum.reduceat(flat ^ m,
-                                                     segs_nz)
-                for i, sig in zip(np.flatnonzero(nz), sigs.tolist()):
+            flat, lens = arrow_lists.ragged(hashes, np.int64)
+            nz, starts = arrow_lists.segments(lens)
+            key_col: list = [[None] * bands] * len(lens)
+            if len(nz):
+                sigs = np.column_stack(
+                    [np.minimum.reduceat(flat ^ m, starts) for m in masks])
+                for i, sig in zip(nz, sigs.tolist()):
                     key_col[i] = _keys(sig)
-            yield pd.Series(key_col, index=hashes.index)
+            yield pa.array(key_col, type=pa.list_(pa.string()))
 
     return minhash_np
 
@@ -636,9 +621,8 @@ def span_dedup_rewrite(docs: DataFrame, n: int = SPAN_N,
 
 def make_simhash_udf():
     """Vectorized SimHash majority vote over pre-computed word-hash
-    arrays: an Arrow-batched iterator pandas UDF doing a vertical
-    popcount in numpy (one (words x 60) bit matrix + segmented
-    reduceat per batch).
+    arrays: an iterator Arrow UDF doing a vertical popcount in numpy
+    (one (words x 60) bit matrix + segmented reduceat per batch).
 
     Round-3 measurement (sf0.1 quiet window, identical outputs): the
     md5 word-hash base costs 0.36 s; completing the simhash costs
@@ -650,29 +634,22 @@ def make_simhash_udf():
     itself stays JVM-side (only the bigint arrays cross to Python)."""
     from pyspark.sql.types import LongType
 
-    @F.pandas_udf(LongType())
-    def simhash_np(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+    @F.arrow_udf(LongType())
+    def simhash_np(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         shifts = np.arange(SIMHASH_BITS, dtype=np.uint64)
         for hashes in batches:
-            isnull = hashes.isna().to_numpy()
-            lens = np.array([0 if n else len(h)
-                             for h, n in zip(hashes, isnull)], dtype=np.int64)
-            out = np.zeros(len(hashes), dtype=np.int64)
-            if lens.sum() > 0:
-                flat = np.concatenate(
-                    [np.asarray(h, dtype=np.uint64)
-                     for h, n in zip(hashes, isnull) if not n and len(h)])
+            flat, lens = arrow_lists.ragged(hashes, np.uint64)
+            nz, starts = arrow_lists.segments(lens)
+            # NULL or empty word arrays fold to 0, matching the oracle
+            # (its per-bit CASEs all fall through on null comparisons)
+            out = np.zeros(len(lens), dtype=np.int64)
+            if len(nz):
                 bits = ((flat[:, None] >> shifts) & 1).astype(np.int32)
-                seg = np.zeros(len(hashes) + 1, dtype=np.int64)
-                np.cumsum(lens, out=seg[1:])
-                counts = np.add.reduceat(bits, seg[:-1], axis=0)
-                counts[lens == 0] = 0  # reduceat artifacts on empty segments
-                maj = 2 * counts > lens[:, None]
-                out = (maj.astype(np.uint64) << shifts).sum(axis=1) \
+                counts = np.add.reduceat(bits, starts, axis=0)
+                maj = 2 * counts > lens[nz, None]
+                out[nz] = (maj.astype(np.uint64) << shifts).sum(axis=1) \
                     .astype(np.int64)
-            # null text folds to 0, matching the oracle (its per-bit
-            # CASEs all fall through on null comparisons)
-            yield pd.Series(out, index=hashes.index)
+            yield pa.array(out)
 
     return simhash_np
 

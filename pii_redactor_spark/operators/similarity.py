@@ -33,11 +33,11 @@ from functools import lru_cache
 from typing import Iterator, Tuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pii_redactor_spark.functions import text_hash
+from pii_redactor_spark.functions import arrow_lists, text_hash
 
 ANN_PLANES = 32
 ANN_BANDS = 8   # OR-amplification: 8 bands x 4 bits
@@ -370,11 +370,12 @@ def make_pq_encode_udf(codebook: list, d: int):
     from pyspark.sql.types import ArrayType, IntegerType
     cells_np = [np.array(cws, dtype=np.float64) for cws in codebook]
 
-    @F.pandas_udf(ArrayType(IntegerType()))
-    def enc(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in it:
-            V = np.array(s.tolist(), dtype=np.float64)
-            n = len(V)
+    @F.arrow_udf(ArrayType(IntegerType()))
+    def enc(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for vecs in it:
+            flat, lens = arrow_lists.ragged(vecs, np.float64)
+            n = len(lens)
+            V = flat.reshape(n, len(cells_np) * d)
             codes = np.empty((n, len(cells_np)), dtype=np.int32)
             for s_i, C in enumerate(cells_np):
                 X = V[:, s_i * d:(s_i + 1) * d]
@@ -383,7 +384,7 @@ def make_pq_encode_udf(codebook: list, d: int):
                     diff = X[:, j, None] - C[None, :, j]
                     acc += diff * diff
                 codes[:, s_i] = np.argmin(acc, axis=1) + 1
-            yield pd.Series(list(codes))
+            yield arrow_lists.rows(codes)
 
     return enc
 
@@ -587,16 +588,18 @@ WHERE round({_cos_sql('va', 'vb')}, 6) >= {threshold}
 def _pq_orthant_sql(table: str, m: int, d: int) -> str:
     """CTEs ``vecs``, ``subs`` (vec_id, m, v) and ``cells`` (m, cid, cv):
     the orthant codebook of ``pq_fit_cells``, one codeword per
-    (subspace, sign pattern), cid = the pattern."""
+    (subspace, sign pattern), cid = the pattern. ``subs`` and ``cells``
+    are MATERIALIZED, computed once for every reader (the fitted
+    oracle's Lloyd chain reads ``subs`` in each step)."""
     pattern = (f"list_sum(list_transform(range({d}), "
                "j -> CASE WHEN v[CAST(j + 1 AS INT)] > 0 "
                "THEN (1 << j) ELSE 0 END))")
     return f"""vecs AS ({_vecs_sql(table)}),
 sp AS (SELECT unnest(range({m})) AS m),
-subs AS (
+subs AS MATERIALIZED (
   SELECT vec_id, sp.m, list_slice(v, sp.m*{d} + 1, sp.m*{d} + {d}) AS v
   FROM vecs CROSS JOIN sp),
-cells AS (
+cells AS MATERIALIZED (
   SELECT m, pattern AS cid, {_means_sql('v', d)} AS cv
   FROM (SELECT m, v, {pattern} AS pattern FROM subs)
   GROUP BY m, pattern)"""
@@ -706,7 +709,7 @@ FROM ranked WHERE rnk <= {k}
 # Text → embedding (hashed signed bag-of-words random projection).
 # Bridges raw documents to the vector operators above: a deterministic,
 # engine-reproducible stand-in for a neural sentence encoder with the
-# same Spark plumbing (at production scale the pandas-UDF encoder slots
+# same Spark plumbing (at production scale the Arrow-UDF encoder slots
 # in here; everything downstream — ANN, near-dup — is unchanged).
 # ---------------------------------------------------------------------------
 EMBED_DIM = 64
@@ -746,28 +749,22 @@ def make_bow_embed_udf(dim: int = EMBED_DIM):
     rt = StructType([StructField("emb", ArrayType(DoubleType())),
                      StructField("norm", DoubleType())])
 
-    @F.pandas_udf(rt)
-    def bow(batches: Iterator[Tuple[pd.Series, pd.Series]]
-            ) -> Iterator[pd.DataFrame]:
+    @F.arrow_udf(rt)
+    def bow(batches: Iterator[Tuple[pa.Array, pa.Array]]
+            ) -> Iterator[pa.Array]:
         for buckets, signs in batches:
-            n = len(buckets)
-            lens = np.array([0 if b is None else len(b) for b in buckets],
-                            dtype=np.int64)
-            acc = np.zeros((n, dim))
-            if lens.sum() > 0:
-                flatb = np.concatenate(
-                    [np.asarray(b, dtype=np.int64)
-                     for b in buckets if b is not None and len(b)])
-                flats = np.concatenate(
-                    [np.asarray(s, dtype=np.float64)
-                     for s in signs if s is not None and len(s)])
-                doc_idx = np.repeat(np.arange(n), lens)
-                acc = np.bincount(doc_idx * dim + flatb, weights=flats,
-                                  minlength=n * dim).reshape(n, dim)
+            flatb, lens = arrow_lists.ragged(buckets, np.int64)
+            flats, _ = arrow_lists.ragged(signs, np.float64)
+            n = len(lens)
+            doc_idx = np.repeat(np.arange(n), lens)
+            acc = np.bincount(doc_idx * dim + flatb, weights=flats,
+                              minlength=n * dim).reshape(n, dim)
             norms = np.sqrt((acc * acc).sum(axis=1))
             safe = np.where(norms[:, None] > 0, norms[:, None], 1.0)
             emb = np.where(norms[:, None] > 0, acc / safe, acc)
-            yield pd.DataFrame({"emb": list(emb), "norm": norms})
+            yield pa.StructArray.from_arrays(
+                [arrow_lists.rows(emb), pa.array(norms)],
+                names=["emb", "norm"])
 
     return bow
 
@@ -1001,7 +998,8 @@ def ann_pq_fitted_oracle_sql(table: str = "embeddings", k: int = TOP_K,
     lloyd_ctes = ",\n".join(_lloyd_ctes("subs", ["m"], dim // m, iters))
     return f"""
 WITH {_pq_orthant_sql(table, m, dim // m)},
-c0 AS (SELECT m, CAST(ROW_NUMBER() OVER (PARTITION BY m ORDER BY cid) - 1
-                      AS INT) AS cid, cv FROM cells),
+c0 AS MATERIALIZED (
+  SELECT m, CAST(ROW_NUMBER() OVER (PARTITION BY m ORDER BY cid) - 1
+                 AS INT) AS cid, cv FROM cells),
 {lloyd_ctes},
 {_pq_search_sql(f"c{iters}", k, n_queries, refine)}"""

@@ -360,26 +360,6 @@ class TestDecontamination:
         assert plan.count("BroadcastHashJoin") == 2
         assert "SinglePartition" not in plan
 
-    def test_bucketed_path_same_answer_no_broadcast(self, spark):
-        # scale path for a benchmark side too big to broadcast: both
-        # joins become shuffle-hash partitioned by the bigint gram key
-        # (no sort, no broadcast), same rows bit-for-bit
-        from pii_redactor_spark.operators.decontaminate import contamination
-        docs = spark.read.parquet(
-            "/root/testdata/sf0.001/documents.parquet")
-        bench = docs.filter(F.col("doc_id") % 37 == 0) \
-            .select("doc_id", "text")
-        bucketed = contamination(docs, bench, broadcast_grams=False)
-        plan = bucketed._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan
-        assert plan.count("ShuffledHashJoin") == 2
-        assert "SinglePartition" not in plan
-        want = {r["doc_id"]: (r["shared_ngrams"], r["contaminated"])
-                for r in contamination(docs, bench).collect()}
-        got = {r["doc_id"]: (r["shared_ngrams"], r["contaminated"])
-               for r in bucketed.collect()}
-        assert got == want
-
 
 def test_hash_split_fractions_and_determinism(spark):
     from pii_redactor_spark.operators.sampling import hash_split

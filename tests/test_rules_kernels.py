@@ -10,7 +10,7 @@ from pii_redactor_spark.functions.rules import (
     QualityThresholds,
     with_quality,
 )
-from pii_redactor_spark.kernels.langid import make_langid_udf, predict_lang_batch
+from pii_redactor_spark.kernels.langid import predict_lang_batch
 from pii_redactor_spark.kernels.perplexity import make_perplexity_udf, perplexity_batch
 
 NATURAL_EN = ("The children walked to school in the morning and read their "
@@ -101,14 +101,15 @@ class TestQualityRules:
             assert r not in out[2]["reasons"]
 
     def test_ngrams_short_docs_empty(self, spark):
-        from pii_redactor_spark.functions.rules import ngrams_col
-        from pii_redactor_spark.functions.text_hash import words
+        from pii_redactor_spark.functions.text_hash import (
+            hashed_ngrams_col, word_hashes_col, words)
         from pyspark.sql import functions as F
         df = spark.createDataFrame(
             [("one two",), ("",), ("a b c d e",)], "text string")
+        wh = word_hashes_col(words(F.col("text")))
         out = df.select(
-            F.size(ngrams_col(words(F.col("text")), 5)).alias("n5"),
-            F.size(ngrams_col(words(F.col("text")), 3)).alias("n3"),
+            F.size(hashed_ngrams_col(wh, 5)).alias("n5"),
+            F.size(hashed_ngrams_col(wh, 3)).alias("n3"),
         ).collect()
         assert [(r["n5"], r["n3"]) for r in out] == [(0, 0), (0, 0), (1, 3)]
 
@@ -129,16 +130,6 @@ class TestLangid:
     def test_null_and_empty(self):
         preds, confs = predict_lang_batch([None, "", "   "])
         assert preds == [None, None, None]
-
-    def test_spark_udf(self, spark):
-        udf = make_langid_udf()
-        df = (
-            spark.createDataFrame(
-                [(l, t) for l, t in HELD_OUT.items()], "lang string, text string")
-            .withColumn("r", udf("text"))
-        )
-        rows = df.select("lang", "r.lang_pred").collect()
-        assert all(r["lang"] == r["lang_pred"] for r in rows)
 
 
 class TestPerplexity:
@@ -200,16 +191,13 @@ class TestKernelGoldenValues:
                         (414, 26.819225)]
 
     def test_langid_distribution_golden(self, spark):
-        # kernel (pandas-UDF) distribution pin — q_langid itself is now
-        # oracle-gated (expression form), so the kernel keeps its own pin
+        # the fused kernel's scorer keeps its own distribution pin —
+        # q_langid itself is oracle-gated (the char-bigram form)
         from collections import Counter
-
-        from pii_redactor_spark.kernels.langid import make_langid_udf
         docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        rows = docs.withColumn("pred", make_langid_udf()("text")) \
-            .select("pred.lang_pred").collect()
-        c = Counter(r["lang_pred"] for r in rows)
-        assert dict(c) == {"en": 486, "fr": 8, "es": 6}
+        preds, _ = predict_lang_batch(
+            [r["text"] for r in docs.select("text").collect()])
+        assert dict(Counter(preds)) == {"en": 486, "fr": 8, "es": 6}
 
     def test_langid_expr_distribution_golden(self, spark):
         from collections import Counter
