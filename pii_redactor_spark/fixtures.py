@@ -48,10 +48,6 @@ def golden_rows() -> list[dict]:
     return [dict(r) for r in load_raw()["golden"]]
 
 
-def scenario_rows() -> list[dict]:
-    return [dict(r) for r in load_raw()["scenarios"]]
-
-
 def fewshot_row_ids() -> list[str]:
     """The 25 excluded demo row ids (reference: examples.py:5-31)."""
     return [r["row_id"] for r in load_raw()["golden"]]

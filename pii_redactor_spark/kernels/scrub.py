@@ -350,6 +350,38 @@ ENTITY_TYPE = StructType([
     StructField("end", IntegerType()),
 ])
 
+
+def scrub_batch(
+    urls: Iterable[str | None],
+    texts: Iterable[str | None],
+    per_url: dict[str, list[tuple[str, str]]],
+    global_gaz: list[tuple[str, str]],
+    enable_regex: bool,
+) -> dict[str, list]:
+    """Scrub one UDF batch into the ``scrubbed_text`` / ``entities`` /
+    ``n_redactions`` columns, keyed by the result struct's field names.
+
+    A NULL text is NULL in all three columns; each row's tier-0
+    gazetteer is ``per_url[url]`` (empty when the url has none)."""
+    scrubbed_col: list[str | None] = []
+    ents_col: list[list[dict] | None] = []
+    n_col: list[int | None] = []
+    for url, text in zip(urls, texts):
+        if text is None:
+            scrubbed_col.append(None)
+            ents_col.append(None)
+            n_col.append(None)
+            continue
+        scrubbed, ents = scrub_text(
+            text, per_url.get(url, ()), enable_regex=enable_regex,
+            global_gazetteer=global_gaz)
+        scrubbed_col.append(scrubbed)
+        ents_col.append(ents)
+        n_col.append(len(ents))
+    return {"scrubbed_text": scrubbed_col, "entities": ents_col,
+            "n_redactions": n_col}
+
+
 SCRUB_RESULT_TYPE = StructType([
     StructField("scrubbed_text", StringType()),
     StructField("entities", ArrayType(ENTITY_TYPE)),
@@ -378,27 +410,7 @@ def make_scrub_udf(
         batches: Iterator[tuple[pd.Series, pd.Series]],
     ) -> Iterator[pd.DataFrame]:
         for urls, texts in batches:
-            scrubbed_col: list[str | None] = []
-            entities_col: list[list[dict] | None] = []
-            counts: list[int | None] = []
-            for url, text in zip(urls, texts):
-                if text is None:
-                    scrubbed_col.append(None)
-                    entities_col.append(None)
-                    counts.append(None)
-                    continue
-                gaz = per_url.get(url, ())
-                scrubbed, ents = scrub_text(
-                    text, gaz, enable_regex=enable_regex,
-                    global_gazetteer=global_gaz,
-                )
-                scrubbed_col.append(scrubbed)
-                entities_col.append(ents)
-                counts.append(len(ents))
-            yield pd.DataFrame({
-                "scrubbed_text": scrubbed_col,
-                "entities": entities_col,
-                "n_redactions": counts,
-            })
+            yield pd.DataFrame(
+                scrub_batch(urls, texts, per_url, global_gaz, enable_regex))
 
     return scrub

@@ -92,7 +92,6 @@ def make_fused_kernel_udf(
     by a previous job are cleared so default runs stay hermetic."""
     per_url = per_url_gazetteer or {}
     global_gaz = list(global_gazetteer or ())
-    regex_on = enable_regex
     accs = timers.acc if timers is not None else None
     arts = artifacts
 
@@ -109,7 +108,7 @@ def make_fused_kernel_udf(
             fit_langid, predict_lang_batch)
         from pii_redactor_spark.kernels.perplexity import (
             fit_charlm, perplexity_batch)
-        from pii_redactor_spark.kernels.scrub import scrub_text
+        from pii_redactor_spark.kernels.scrub import scrub_batch
         if arts is not None:
             _langid_mod.preload(arts["langid"])
             _ppl_mod.preload(arts["charlms"])
@@ -125,21 +124,8 @@ def make_fused_kernel_udf(
             # score each doc under ITS predicted language's LM
             ppls = perplexity_batch(texts, langs)
             t2 = perf_counter()
-            scrubbed_col: list[str | None] = []
-            ents_col: list[list[dict] | None] = []
-            n_col: list[int | None] = []
-            for url, text in zip(urls, texts):
-                if text is None:
-                    scrubbed_col.append(None)
-                    ents_col.append(None)
-                    n_col.append(None)
-                    continue
-                scrubbed, ents = scrub_text(
-                    text, per_url.get(url, ()),
-                    enable_regex=regex_on, global_gazetteer=global_gaz)
-                scrubbed_col.append(scrubbed)
-                ents_col.append(ents)
-                n_col.append(len(ents))
+            scrubbed = scrub_batch(
+                urls, texts, per_url, global_gaz, enable_regex)
             if accs is not None:
                 t3 = perf_counter()
                 accs["langid_s"].add(t1 - t0)
@@ -147,8 +133,7 @@ def make_fused_kernel_udf(
                 accs["scrub_s"].add(t3 - t2)
             yield pd.DataFrame({
                 "lang_pred": langs, "lang_conf": confs, "ppl": ppls,
-                "scrubbed_text": scrubbed_col, "entities": ents_col,
-                "n_redactions": n_col,
+                **scrubbed,
             })
 
     return kernels

@@ -77,16 +77,6 @@ def extract_text_udf():
     return extract
 
 
-def _host_for(doc_id: int) -> str:
-    """Skewed host assignment: ~half the corpus on one hot host; the rest
-    spread uniformly (by hash, not modulo, so bucket joins stay uniform
-    per host)."""
-    h = int(hashlib.md5(f"host:{doc_id}".encode()).hexdigest()[:8], 16)
-    if h % 2 == 0:
-        return HOT_HOST
-    return COLD_HOSTS[h % len(COLD_HOSTS)]
-
-
 def from_documents(docs: DataFrame) -> DataFrame:
     """Adapt the driver's ``documents`` table to the corpus shape.
     All columns are pure expressions of (doc_id, text, lang) — the
