@@ -90,7 +90,10 @@ def clear_preload() -> None:
 
 def bow_bucket(word: str, dim: int = MLP_IN) -> tuple[int, int]:
     """(bucket, sign) of one word — first-8-hex md5 fold + digit-9
-    parity, 'ml:' domain (the cross-engine recipe)."""
+    parity, 'ml:' domain (the cross-engine recipe). The pure-Python twin
+    of ``_word_sig``: serving never calls it; tests/test_encoder.py
+    builds the network's input with it to check driver-side that relu
+    clips some, but not all, hidden units on the corpus."""
     h = hashlib.md5(("ml:" + word).encode("utf-8")).hexdigest()
     return int(h[:8], 16) % dim, 1 if int(h[8], 16) % 2 == 0 else -1
 

@@ -304,7 +304,13 @@ def fit_quality_nb(docs: DataFrame, label_col: str,
     the score is the per-word AVERAGE log-odds — class priors do not
     survive length normalization (the same normalization CCNet applies
     to its LM scores), and the keep decision is "words on average favor
-    the positive class"."""
+    the positive class".
+
+    No served query fits with it yet (q_quality_clf serves
+    ``fit_quality_clf``'s driver-side fit); tests/test_quality_clf.py
+    pins the corpus-scale path: weights from one aggregation separate
+    >= 90% of the training docs and serve through
+    ``quality_clf_columns`` unchanged."""
     rows = nb_bucket_counts(docs, label_col, text_col, dim).collect()
     pos = np.zeros(dim)
     neg = np.zeros(dim)

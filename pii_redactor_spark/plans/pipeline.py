@@ -68,11 +68,6 @@ class KernelTimers:
     def snapshot(self) -> dict:
         return {k: a.value for k, a in self.acc.items()}
 
-    def delta_since(self, snap: dict | None) -> dict:
-        snap = snap or {k: 0.0 for k in self.KEYS}
-        return {k: round(a.value - snap[k], 6)
-                for k, a in self.acc.items()}
-
 
 def make_fused_kernel_udf(
     per_url_gazetteer: dict[str, list[tuple[str, str]]] | None = None,

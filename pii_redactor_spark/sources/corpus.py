@@ -4,12 +4,11 @@ The pipeline's canonical input is an Iceberg-style table of web pages::
 
     url:string, warc_ts:timestamp, html:binary, text:string, lang:string
 
-The sandbox has no real crawl, so this module synthesizes one
-**deterministically** (seeded, no wall clock, no RNG state outside the
-seed) at small scale for tests/benchmarks, and adapts the driver's
-``documents`` table into the same shape. The synthetic host distribution
-is deliberately skewed (one hot host with ~50% of pages) so the salting +
-AQE skew paths are exercised, per SURVEY §7.3.
+No real crawl ships with the project, so this module adapts the
+``documents`` table into that shape **deterministically** (hosts and
+timestamps derived from doc_id, no wall clock, no RNG). The host
+distribution is deliberately skewed (one hot host with ~50% of pages) so
+the salting + AQE skew paths are exercised, per SURVEY §7.3.
 
 Per-row invariant (north rule: "byte-identical extracted text per url"):
 ``html`` is a real HTML wrapping of the text, and ``extract_text``
@@ -19,13 +18,12 @@ from the binary payload — tested per url in test_corpus.py.
 
 from __future__ import annotations
 
-import hashlib
 import html as _html
 import re
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
@@ -115,28 +113,3 @@ def from_documents(docs: DataFrame) -> DataFrame:
         make_html(F.struct("url", "text")).alias("html"),
         "text", "lang",
     )
-
-
-def synthesize_corpus(spark: SparkSession, n_docs: int = 500,
-                      seed: int = 42) -> DataFrame:
-    """Fully self-contained deterministic corpus (no testdata needed):
-    seeded word-salad text per doc, skewed hosts, fixed timestamps."""
-    words = ("the quick brown fox lazy dog data spark query plan shuffle "
-             "partition column filter join window agg scan row value fast "
-             "slow merge sort hash table batch stream page host crawl").split()
-
-    def text_for(i: int) -> str:
-        h = int(hashlib.md5(f"{seed}:{i}".encode()).hexdigest(), 16)
-        n = 20 + h % 60
-        ws = [words[(h >> (j % 48)) % len(words) + 0] for j in range(n)]
-        # inject line structure deterministically
-        out = []
-        for j, w in enumerate(ws):
-            out.append(w)
-            if j % 11 == 10:
-                out.append("\n")
-        return " ".join(out).replace(" \n ", "\n")
-
-    rows = [(i, text_for(i), "en") for i in range(n_docs)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    return from_documents(docs)

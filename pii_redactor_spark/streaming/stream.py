@@ -387,7 +387,9 @@ def stream_progress_summary(query) -> dict:
 def log_stream_progress(spark: SparkSession, metrics: MetricsTable,
                         query, run_id: str = "stream") -> dict:
     """Commit the progress summary as a lineage/metrics row (dropped =
-    late rows excluded by the watermark)."""
+    late rows excluded by the watermark). No streaming job here calls it
+    yet; tests/test_streaming.py pins that a drop of 20 rows behind the
+    watermark logs n_docs 20 and dropped 20."""
     s = stream_progress_summary(query)
     metrics.log(spark, [{
         "run_id": run_id, "stage": "stream-progress", "bucket": None,

@@ -33,7 +33,9 @@ EMULATION of the subset the pipeline needs:
   lineage away (``remaining_buckets``) — resumable mid-corpus. A run_id
   with no live lineage starts the table over: its first commit is an
   overwrite (a new lineage root), so a new run never stacks on an old
-  one. Metrics rows are observability only.
+  one. The groups' data writes run concurrently (the write half of a
+  commit, ``DataDir``); the caller commits them in group order. Metrics
+  rows are observability only.
 
 On a real cluster this module is replaced by the Iceberg catalog +
 ``writeTo(...).append()``; the pipeline code paths (bucket column, commit
@@ -45,8 +47,10 @@ from __future__ import annotations
 import functools
 import json
 import os
+import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -56,6 +60,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType, StructType
+from pyspark.util import inheritable_thread_target
 
 CURRENT = "CURRENT"
 # the footer key Spark's Parquet writer stores its row schema under
@@ -96,6 +101,17 @@ class Snapshot:
             "total_rows": self.total_rows,
             "schemas": self.schemas,
         }
+
+
+@dataclass
+class DataDir:
+    """A data dir written under ``data/`` that no snapshot lists yet: the
+    write half of a commit. ``append``/``overwrite`` take one in place of
+    a frame and commit it as is."""
+    name: str
+    partitions: list              # partition values present, sorted
+    rows: int
+    schema: str | None            # Spark read schema DDL, if it round-trips
 
 
 def _data_files(path: Path) -> list[Path]:
@@ -155,13 +171,18 @@ class IcebergishTable:
         dir_name = f"d-{uuid.uuid4().hex[:12]}"
         return dir_name, self.data_root / dir_name
 
-    def _write_data_dir(self, df: DataFrame, partition_by: str | None
-                        ) -> tuple[str, list, int, str | None]:
+    def _write_data_dir(self, df: DataFrame,
+                        partition_by: str | None) -> DataDir:
         dir_name, out = self._new_dir()
         w = df.write.mode("overwrite")
         if partition_by is not None:
             w = w.partitionBy(partition_by)
-        w.parquet(str(out))
+        try:
+            w.parquet(str(out))
+        except BaseException:
+            # a failed write leaves no half-written dir behind
+            shutil.rmtree(out, ignore_errors=True)
+            raise
         # partition summary from the WRITTEN directory names (what Iceberg
         # reads from its manifests) — no extra distinct().collect() job
         # recomputing the input just to list bucket values
@@ -178,7 +199,11 @@ class IcebergishTable:
             except ValueError:
                 buckets = raws
         rows, schema = self._footer_facts(df, out, partition_by)
-        return dir_name, sorted(buckets), rows, schema
+        return DataDir(dir_name, sorted(buckets), rows, schema)
+
+    def discard(self, data: DataDir) -> None:
+        """Delete a data dir that was written but will not be committed."""
+        shutil.rmtree(self.data_root / data.name, ignore_errors=True)
 
     def _footer_facts(self, df: DataFrame, out: Path,
                       partition_by: str | None) -> tuple[int, str | None]:
@@ -209,43 +234,46 @@ class IcebergishTable:
         # DDL drops field metadata: keep it only when it round-trips
         return rows, ddl if DataType.fromDDL(ddl) == schema else None
 
-    def _commit_dir(self, op: str, dir_name: str, buckets: list,
-                    rows: int, schema: str | None,
+    def _commit_dir(self, op: str, data: DataFrame | DataDir,
+                    partition_by: str | None,
                     lineage: dict | None) -> Snapshot:
-        """Commit one new data dir: ``append`` keeps the parent's dirs,
-        ``overwrite`` starts a new lineage root."""
+        """Commit one new data dir, writing ``data`` first when it is a
+        frame: ``append`` keeps the parent's dirs, ``overwrite`` starts a
+        new lineage root."""
+        if isinstance(data, DataFrame):
+            data = self._write_data_dir(data, partition_by)
         parent = self.snapshot()
         base = parent if op == "append" else None
         schemas = dict((base.schemas or {}) if base else {})
-        if schema is not None:
-            schemas[schema] = schemas.get(schema, []) + [dir_name]
+        if data.schema is not None:
+            schemas[data.schema] = schemas.get(data.schema, []) + [data.name]
         snap = Snapshot(
             snapshot_id=(parent.snapshot_id + 1) if parent else 0,
             parent_id=parent.snapshot_id if parent else None,
             op=op,
-            data_dirs=(base.data_dirs if base else []) + [dir_name],
+            data_dirs=(base.data_dirs if base else []) + [data.name],
             partitions={**(base.partitions if base else {}),
-                        dir_name: buckets},
+                        data.name: data.partitions},
             ts=time.time(),
             lineage=lineage,
-            added_rows=rows,
-            total_rows=(rows if base is None
+            added_rows=data.rows,
+            total_rows=(data.rows if base is None
                         else None if base.total_rows is None
-                        else base.total_rows + rows),
+                        else base.total_rows + data.rows),
             schemas=schemas,
         )
         self._commit(snap)
         return snap
 
-    def append(self, df: DataFrame, partition_by: str | None = None,
+    def append(self, df: DataFrame | DataDir,
+               partition_by: str | None = None,
                lineage: dict | None = None) -> Snapshot:
-        return self._commit_dir(
-            "append", *self._write_data_dir(df, partition_by), lineage)
+        return self._commit_dir("append", df, partition_by, lineage)
 
-    def overwrite(self, df: DataFrame, partition_by: str | None = None,
+    def overwrite(self, df: DataFrame | DataDir,
+                  partition_by: str | None = None,
                   lineage: dict | None = None) -> Snapshot:
-        return self._commit_dir(
-            "overwrite", *self._write_data_dir(df, partition_by), lineage)
+        return self._commit_dir("overwrite", df, partition_by, lineage)
 
     def lineage_done_buckets(self, run_id: str, stage: str) -> list[int]:
         """Buckets recorded as committed for (run_id, stage) in snapshot
@@ -428,8 +456,8 @@ class MetricsTable(IcebergishTable):
         # readers and would double the file
         pq.write_table(table, out / f"part-00000-{dir_name}.parquet",
                        compression="snappy", store_schema=False)
-        self._commit_dir("append", dir_name, [], table.num_rows,
-                         METRICS_DDL, None)
+        self._commit_dir("append", DataDir(dir_name, [], table.num_rows,
+                                           METRICS_DDL), None, None)
 
 
 def remaining_buckets(all_buckets: list[int], done: list[int]) -> list[int]:
@@ -460,19 +488,42 @@ def run_resumable(
     never duplicate rows. A ``run_id`` with no bucket in that lineage
     (a new run) OVERWRITES the table on its first commit, starting a new
     lineage root, so it rebuilds rather than appending to another run's
-    rows. Metrics rows (with per-kernel timings when a ``KernelTimers``
-    is passed) are logged after the data commit, purely for
-    observability: they may name buckets whose data an overwrite has
-    since dropped, so resume never reads them.
-    ``fail_after_commits`` injects a crash for tests.
+    rows. ``fail_after_commits`` injects a crash for tests.
 
     ``transform`` is applied ONCE, to the whole bucketed corpus; each
     group commits that plan filtered to its buckets. The bucket filter is
     pushed below the kernels' ArrowEvalPython, so they still see only
     the group's rows, and the plan is built once instead of per group.
 
+    The groups' data writes run concurrently, at most
+    ``min(defaultParallelism, groups)`` at once: one group's job runs a
+    task per input partition, which on a small corpus leaves most slots
+    idle. Each write runs on a pool thread that carries the caller's
+    local properties (job group, scheduler pool, description). The
+    commits stay on the calling thread, in group order, through
+    ``output.overwrite``/``append``, so snapshots, lineage and resume
+    are those of one group after another.
+
+    On failure — a write raising, a commit raising, the injected crash —
+    no later group commits: queued writes are cancelled, every write
+    in flight is awaited, the data dirs written but not committed are
+    deleted, and the first error is raised once no pool thread is left.
+    The groups committed before it stay committed, so a rerun with the
+    same ``run_id`` resumes after them.
+
+    Metrics rows are logged after each data commit, purely for
+    observability: they may name buckets whose data an overwrite has
+    since dropped, so resume never reads them. A group's rows share the
+    wall time and the ``KernelTimers`` delta (when ``timers`` is passed)
+    since the previous logged commit, or since the call began: under
+    concurrent writes a group's own span overlaps the others', and these
+    intervals tile the call, so the rows of a run sum to at most its
+    wall time and to exactly its kernel time.
+
     Returns the number of bucket-groups processed in THIS invocation.
     """
+    t_mark = time.time()
+    k_mark = timers.snapshot() if timers is not None else None
     bucketed = with_bucket(pages, key_col, n_buckets)
     done = output.lineage_done_buckets(run_id, stage)
     todo = remaining_buckets(list(range(n_buckets)), done)
@@ -480,49 +531,71 @@ def run_resumable(
         return 0
     full = transform(bucketed) if transform is not None else bucketed
     has_keep = "keep" in full.columns
-    commits = 0
-    for i in range(0, len(todo), buckets_per_commit):
-        group = todo[i:i + buckets_per_commit]
-        t0 = time.time()
-        k0 = timers.snapshot() if timers is not None else None
+    bucket = F.col("bucket")
+    groups = [todo[i:i + buckets_per_commit]
+              for i in range(0, len(todo), buckets_per_commit)]
+
+    def write(group: list[int]) -> tuple[DataDir, dict]:
         # the write's own job counts each bucket's rows (observe), so no
         # second aggregation job and no persist to share the kernel pass
         obs = Observation()
-        bucket = F.col("bucket")
         counts = [F.count_if(bucket == b).alias(f"n_{b}") for b in group]
         if has_keep:
             counts += [F.count_if((bucket == b) & F.col("keep"))
                        .alias(f"kept_{b}") for b in group]
-        commit = output.append if done or commits else output.overwrite
-        commit(full.filter(bucket.isin(group)).observe(obs, *counts),
-               partition_by="bucket", lineage={
-                   "run_id": run_id, "stage": stage, "buckets": group})
-        got = obs.get
-        stats = [{"bucket": b, "n_docs": got[f"n_{b}"],
-                  "kept": got.get(f"kept_{b}")}
-                 for b in group if got[f"n_{b}"]]
-        elapsed = time.time() - t0
-        # the timer delta covers the WHOLE commit group; apportion it
-        # evenly across the group's bucket rows so summing the metrics
-        # table never double-counts kernel cost
-        kernel_s = {}
-        if timers is not None and stats:
-            delta = timers.delta_since(k0)
-            kernel_s = {k: round(v / len(stats), 6)
-                        for k, v in delta.items()}
-        metrics.log(spark, [
-            {
-                "run_id": run_id, "stage": stage, "bucket": r["bucket"],
-                "n_docs": r["n_docs"], "kept": r["kept"],
-                "dropped": (r["n_docs"] - r["kept"]) if r["kept"] is not None else None,
-                "scrubbed": r["n_docs"],
-                "elapsed_s": elapsed, "ts": time.time(),
-                **kernel_s,
-            }
-            for r in stats
-        ])
-        commits += 1
-        if fail_after_commits is not None and commits >= fail_after_commits:
-            raise RuntimeError(
-                f"injected failure after {commits} commits (test hook)")
+        data = output._write_data_dir(
+            full.filter(bucket.isin(group)).observe(obs, *counts), "bucket")
+        return data, obs.get
+
+    commits = 0
+    width = min(spark.sparkContext.defaultParallelism, len(groups))
+    with ThreadPoolExecutor(width, thread_name_prefix="run_resumable") as pool:
+        # wrapped per group: the wrapper copies the caller's local
+        # properties when it is made, and each thread gets its own copy
+        futures = [pool.submit(inheritable_thread_target(spark)(write), g)
+                   for g in groups]
+        try:
+            for group, fut in zip(groups, futures):
+                data, got = fut.result()
+                commit = output.append if done or commits else output.overwrite
+                commit(data, lineage={
+                    "run_id": run_id, "stage": stage, "buckets": group})
+                commits += 1
+                stats = [{"bucket": b, "n_docs": got[f"n_{b}"],
+                          "kept": got.get(f"kept_{b}")}
+                         for b in group if got[f"n_{b}"]]
+                if stats:
+                    n = len(stats)
+                    now = time.time()
+                    share = {"elapsed_s": (now - t_mark) / n}
+                    t_mark = now
+                    if timers is not None:
+                        k_now = timers.snapshot()
+                        share.update({k: round((v - k_mark[k]) / n, 6)
+                                      for k, v in k_now.items()})
+                        k_mark = k_now
+                    metrics.log(spark, [
+                        {
+                            "run_id": run_id, "stage": stage,
+                            "bucket": r["bucket"], "n_docs": r["n_docs"],
+                            "kept": r["kept"],
+                            "dropped": (r["n_docs"] - r["kept"])
+                            if r["kept"] is not None else None,
+                            "scrubbed": r["n_docs"], "ts": time.time(),
+                            **share,
+                        }
+                        for r in stats
+                    ])
+                if fail_after_commits is not None \
+                        and commits >= fail_after_commits:
+                    raise RuntimeError(f"injected failure after {commits} "
+                                       "commits (test hook)")
+        except BaseException:
+            for f in futures:
+                f.cancel()
+            for f in futures[commits:]:
+                # exception() waits for a write still in flight
+                if not f.cancelled() and f.exception() is None:
+                    output.discard(f.result()[0])
+            raise
     return commits

@@ -12,7 +12,6 @@ from pii_redactor_spark.sources.corpus import (
     extract_text_bytes,
     extract_text_udf,
     from_documents,
-    synthesize_corpus,
     wrap_html,
 )
 
@@ -68,15 +67,6 @@ def test_host_skew_present(corpus):
     total = sum(by.values())
     assert by[HOT_HOST] > 0.35 * total          # deliberately skewed
     assert len(by) > 5                          # plus a cold tail
-
-
-def test_synthesize_standalone(spark):
-    c = synthesize_corpus(spark, n_docs=100)
-    assert c.count() == 100
-    assert c.filter(F.col("text").isNull()).count() == 0
-    m = c.withColumn("e", extract_text_udf()(F.col("html"))) \
-        .filter(F.col("e") != F.col("text")).count()
-    assert m == 0
 
 
 def test_per_host_cap(spark, corpus):

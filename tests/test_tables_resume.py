@@ -199,25 +199,34 @@ def test_partition_summary_from_written_dirs(spark, tmp_path):
 
 
 def test_kernel_timers_breakdown_in_metrics(spark, docs, tmp_path):
+    """Each group's rows share the wall and kernel time since the
+    previous commit, so a run's rows sum to at most the call's wall time
+    and to exactly its kernel-timer delta."""
+    import time
+
     from pii_redactor_spark.plans.pipeline import KernelTimers
     out = IcebergishTable(tmp_path / "out")
     met = MetricsTable(tmp_path / "metrics")
     timers = KernelTimers(spark)
+    k0, t0 = timers.snapshot(), time.time()
     run_resumable(
-        spark, docs, out, met, run_id="kt", n_buckets=2,
-        buckets_per_commit=1, timers=timers,
+        spark, docs, out, met, run_id="kt", n_buckets=8,
+        buckets_per_commit=2, timers=timers,
         transform=lambda df: run_pipeline(df, allowed_langs=("en",),
                                           max_ppl=50.0, timers=timers)
         .select("url", "doc_id", "keep", "bucket"))
+    wall, k1 = time.time() - t0, timers.snapshot()
     rows = met.read(spark).filter(F.col("run_id") == "kt").collect()
-    assert rows
+    assert len(rows) == 8
     for r in rows:
         assert r["langid_s"] is not None and r["langid_s"] >= 0.0
         assert r["ppl_s"] is not None and r["ppl_s"] >= 0.0
         assert r["scrub_s"] is not None and r["scrub_s"] >= 0.0
-    # the kernels did measurable work overall
-    assert sum(r["langid_s"] + r["ppl_s"] + r["scrub_s"]
-               for r in rows) > 0.0
+    assert 0 < sum(r["elapsed_s"] for r in rows) <= wall
+    for k in KernelTimers.KEYS:
+        assert k1[k] - k0[k] > 0            # the kernels did measurable work
+        assert sum(r[k] for r in rows) == pytest.approx(k1[k] - k0[k],
+                                                        abs=1e-5)
 
 
 def test_metrics_lineage_rows(spark, docs, tmp_path):
@@ -307,6 +316,7 @@ def _jobs_started(spark, fn):
         out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
@@ -470,3 +480,99 @@ def test_resumable_builds_transform_once_and_filters_below_udf(
         assert all(len(lines[i]) - len(lines[i].lstrip(" :+-")) > depth
                    for i in filt), plan
     assert out.count(spark) == docs.count()
+
+
+def _sql_intervals(spark, after: int) -> list[tuple[int, str, int, int]]:
+    """(execution id, description, start ms, end ms) of every finished SQL
+    execution with an id above ``after`` that started a Spark job."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    out, it = [], store.executionsList().iterator()
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() > after and e.jobs().size() > 0:
+            out.append((e.executionId(), e.description(), e.submissionTime(),
+                        e.completionTime().get().getTime()))
+    return sorted(out)
+
+
+def _last_execution(spark) -> int:
+    ids = [i for i, *_ in _sql_intervals(spark, -1)]
+    return max(ids, default=-1)
+
+
+def test_group_writes_overlap_and_commit_in_order(spark, docs, tmp_path):
+    """The four group writes of a quality-shaped run are in flight
+    together on the local[4] session, carry the caller's job group, and
+    still commit one snapshot per group in group order."""
+    import threading
+    first = _last_execution(spark)
+    (out, _, n), jobs = _jobs_started(
+        spark, lambda: _run(spark, docs, tmp_path / "ov", "ov"))
+    assert n == 4
+    writes = _sql_intervals(spark, first)
+    # the pool threads carried the caller's job group (and with it the
+    # job description) to every write, and the writes are the only jobs
+    assert len(jobs) == 4
+    assert [d for _, d, _, _ in writes] == ["job probe"] * 4, writes
+    # every write starts before any write ends: all four overlap
+    assert max(s for *_, s, _ in writes) < min(e for *_, e in writes), writes
+    assert not [t for t in threading.enumerate()
+                if t.name.startswith("run_resumable")]
+    snaps = out.snapshots()
+    assert [s.snapshot_id for s in snaps] == [0, 1, 2, 3]
+    assert [s.op for s in snaps] == ["overwrite", "append", "append",
+                                     "append"]
+    assert [s.lineage["buckets"] for s in snaps] == [
+        [0, 1], [2, 3], [4, 5], [6, 7]]
+    assert [snaps[-1].partitions[d] for d in snaps[-1].data_dirs] == [
+        [0, 1], [2, 3], [4, 5], [6, 7]]
+
+
+def test_failed_group_write_commits_prefix_and_cleans_up(
+        spark, docs, tmp_path):
+    """A transform whose UDF raises on buckets 4-5 only: groups [0,1]
+    and [2,3] commit and nothing after them does; the call raises only
+    once every write has finished, with no pool thread or Spark job left
+    and no uncommitted data dir on disk; a rerun with the same run_id
+    completes the table."""
+    import threading
+
+    def good(df):
+        return df.select("url", "doc_id", "bucket",
+                         (F.col("doc_id") % 3 > 0).alias("keep"))
+
+    def bad(df):
+        @F.udf("boolean")
+        def keep(doc_id, b):
+            if b in (4, 5):
+                raise ValueError(f"poisoned bucket {b}")
+            return doc_id % 3 > 0
+
+        return df.select("url", "doc_id", "bucket",
+                         keep("doc_id", "bucket").alias("keep"))
+
+    def run(base, transform):
+        return run_resumable(
+            spark, docs, IcebergishTable(base), MetricsTable(tmp_path / "m"),
+            run_id="poison", n_buckets=8, buckets_per_commit=2,
+            transform=transform)
+
+    with pytest.raises(Exception, match="poisoned bucket"):
+        run(tmp_path / "out", bad)
+    assert not [t for t in threading.enumerate()
+                if t.name.startswith("run_resumable")]
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(spark.sparkContext.statusTracker().getActiveJobsIds()) == []
+    out = IcebergishTable(tmp_path / "out")
+    assert [s.lineage["buckets"] for s in out.snapshots()] == [[0, 1], [2, 3]]
+    assert out.lineage_done_buckets("poison", "scrub") == [0, 1, 2, 3]
+    assert {p.name for p in out.data_root.iterdir()} \
+        == set(out.snapshot().data_dirs)
+
+    assert run(tmp_path / "out", good) == 2
+    assert run(tmp_path / "ref", good) == 4
+    ref = IcebergishTable(tmp_path / "ref")
+    rows = [sorted(tuple(r) for r in t.read(spark).collect())
+            for t in (out, ref)]
+    assert rows[0] == rows[1] and len(rows[0]) == docs.count()
