@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from pii_redactor_spark.functions import text_hash
 from pii_redactor_spark.functions.rules import (
-    QualityThresholds, keep_decision, with_quality)
+    STOPWORDS, QualityThresholds, keep_decision, with_quality)
 from pii_redactor_spark.operators.metrics import with_hybrid_score
 from pii_redactor_spark.plans.pipeline import run_pipeline
 from pii_redactor_spark.session import ship_package
@@ -448,10 +448,7 @@ def q_token_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 # North-star quality rules over the documents corpus — pure Column
 # expressions (functions/rules.py) vs a relational DuckDB re-derivation.
 # ---------------------------------------------------------------------------
-_STOPWORD_SQL_LIST = (
-    "['the','be','to','of','and','a','in','that','have','i',"
-    "'it','for','not','on','with','he','as','you','do','at']"
-)
+_STOPWORD_SQL_LIST = "[" + ",".join(f"'{w}'" for w in STOPWORDS) + "]"
 
 # The n-gram arrays are the hashed word n-grams of functions/text_hash.py
 # on both sides, so the ratio values are bit-identical in both engines.
@@ -1136,7 +1133,8 @@ def q_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # methodology). The fake benchmark = every 37th doc; those docs (and any
 # near-verbatim relatives with >= 8 shared words in a row) flag.
 # ---------------------------------------------------------------------------
-_DECON_BENCH_PRED = "doc_id % 37 = 0"
+from pii_redactor_spark.plans.build import (  # noqa: E402
+    DEFAULT_BENCH_PRED, default_benchmark)
 
 
 def _decon_grams_sql(pred: str | None) -> str:
@@ -1154,7 +1152,7 @@ def _decon_grams_sql(pred: str | None) -> str:
     oracle=f"""
     WITH bg AS (SELECT DISTINCT g FROM
                   (SELECT unnest(gs) AS g
-                   FROM ({_decon_grams_sql(_DECON_BENCH_PRED)}))),
+                   FROM ({_decon_grams_sql(DEFAULT_BENCH_PRED)}))),
     cg AS (SELECT doc_id, unnest(gs) AS g FROM ({_decon_grams_sql(None)})),
     hits AS (SELECT c.doc_id, COUNT(DISTINCT c.g) AS shared_ngrams
              FROM cg c JOIN bg b ON c.g = b.g GROUP BY c.doc_id)
@@ -1167,8 +1165,7 @@ def _decon_grams_sql(pred: str | None) -> str:
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_redactor_spark.operators.decontaminate import contamination
     docs = _t(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 37 == 0).select("doc_id", "text")
-    return contamination(docs, bench).select(
+    return contamination(docs, default_benchmark(docs)).select(
         "doc_id", "shared_ngrams", "contaminated")
 
 

@@ -4,7 +4,9 @@ SimHash, langid scores, MLP and BoW embeddings, PQ encode): each is an
 plus one typed values buffer, and decides NULL and empty rows here
 only. Both are length-0 rows; a kernel writes its own NULL/zero output
 for them. A NULL element raises: through pandas, one anywhere in a batch
-turned every list of it into float64, rounding 60-bit hashes."""
+turned every list of it into float64, rounding 60-bit hashes. The
+grouped SemDeDup passes read each cluster's vectors through ``matrix``,
+where a NULL or ragged row raises instead."""
 
 from __future__ import annotations
 
@@ -22,6 +24,18 @@ def ragged(arr: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray]:
                          "Arrow batch; keep a NULL input a NULL list")
     lens = pc.list_value_length(arr).fill_null(0).to_numpy()
     return flat.to_numpy().astype(dtype, copy=False), lens.astype(np.int64)
+
+
+def matrix(arr: pa.Array, d: int) -> np.ndarray:
+    """The ``(n, d)`` float64 matrix of a list column whose every row
+    holds ``d`` values (zero-copy for a double list). ValueError on a
+    NULL row or a ragged row (lengths as ``ragged`` reads them: a NULL
+    row is 0) and on a NULL element."""
+    flat, lens = ragged(arr, np.float64)
+    if (lens != d).any():
+        raise ValueError(f"{int((lens != d).sum())} NULL or ragged list "
+                         f"row(s) where {d}-vectors are required")
+    return flat.reshape(len(arr), d)
 
 
 def segments(lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -50,10 +50,11 @@ from __future__ import annotations
 from typing import Callable, Iterable
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.functions import arrow_lists
 from pii_redactor_spark.operators.cache import registered_persist
 from pii_redactor_spark.operators.similarity import (
     _D2_SQL, EMB_DIM, _cos_sql, _d2, _means_sql, as_double)
@@ -264,40 +265,65 @@ def _cosine_hit_blocks(V: np.ndarray, tau: float, block: int):
         yield lo, hi, (C >= tau) | np.isnan(C)
 
 
-def _semdedup_flags_arrow(assigned: DataFrame, tau: float) -> DataFrame:
-    """Within-cluster dup flags via ONE grouped Arrow pass: each cid
-    group crosses to Python once and its pairwise cosines come from
-    ``_cosine_hit_blocks``. This is the sanctioned Arrow/numpy hop
-    (CLAUDE.md): 250k interpreted zip_with pairs at sf0.1 are
-    allocation-bound exactly like the simhash per-bit case.
+def rep_scan(blocks, cap: int, n_reps0: int) -> tuple[np.ndarray, list]:
+    """Keep-first-seen over ``_cosine_hit_blocks``' hits, in row order:
+    rows ``< n_reps0`` are the representatives already held; every later
+    row is a dup iff it hits a CURRENT representative, and a non-dup
+    joins them while they are fewer than ``cap``. Returns the dup flags
+    of the rows from ``n_reps0`` on and the representatives' rows."""
+    reps, dup = list(range(n_reps0)), []
+    for lo, hi, hit in blocks:
+        for i in range(max(lo, n_reps0), hi):
+            dup.append(bool(hit[i - lo, reps].any()))
+            if not dup[-1] and len(reps) < cap:
+                reps.append(i)
+    return np.array(dup, dtype=bool), reps
+
+
+def _any_earlier_hit(blocks) -> np.ndarray:
+    """Batch SemDeDup's step: row i is a dup iff a row j < i hits it."""
+    return np.concatenate([np.tril(hit, lo - 1).any(axis=1)
+                           for lo, _, hit in blocks])
+
+
+def assign_vectors(emb: DataFrame, cents: list[tuple[int, list[float]]]
+                   ) -> DataFrame:
+    """(vec_id, cid:int, v): every vector with its cluster under the
+    centroid artifact — what SemDeDup, its stream replay and the stream
+    group by cid."""
+    return _assign(_vecs(emb), _cents_literal(cents)).select(
+        "vec_id", F.col("cid").cast("int").alias("cid"), "v")
+
+
+def _cluster_flags(emb: DataFrame, cents: list[tuple[int, list[float]]],
+                   tau: float, step: Callable) -> DataFrame:
+    """(vec_id, cid:int, is_dup) via ONE grouped Arrow pass keyed on
+    cid: each cluster crosses to Python once, sorted by vec_id, as the
+    matrix ``arrow_lists.matrix`` reads off its Arrow buffer, and
+    ``step`` turns its ``_cosine_hit_blocks`` into the flags. This is
+    the sanctioned Arrow/numpy hop (CLAUDE.md): 250k interpreted
+    zip_with pairs at sf0.1 are allocation-bound like simhash's bits.
 
     The matrix is computed in SEM_BLOCK-row blocks against the id-sorted
     prefix (row i only needs columns j < i), so a runaway cluster costs
     bounded MEMORY per task; compute stays O(|cluster|^2) by the
     semantics — controlled by sizing k, which the SEM_CLUSTER_WARN log
     flags."""
+    block, dim = SEM_BLOCK, len(cents[0][1])
 
-    def flag(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        V = np.stack(pdf["v"].to_numpy())          # n x dim float64
-        n = len(V)
-        if n > SEM_CLUSTER_WARN:
+    def flag(table: pa.Table) -> pa.Table:
+        table = table.sort_by("vec_id")
+        V = arrow_lists.matrix(table.column("v").combine_chunks(), dim)
+        if len(V) > SEM_CLUSTER_WARN:
             import logging
             logging.getLogger(__name__).warning(
                 "semdedup: cluster of %d rows (> %d) — pair work is "
                 "quadratic per cluster; increase k so clusters shrink",
-                n, SEM_CLUSTER_WARN)
-        dup = np.zeros(n, dtype=bool)
-        for lo, hi, hit in _cosine_hit_blocks(V, tau, SEM_BLOCK):
-            # row i may only match columns j < i
-            mask = (np.arange(hi)[None, :]
-                    < np.arange(lo, hi)[:, None])
-            dup[lo:hi] = (hit & mask).any(axis=1)
-        return pd.DataFrame({"vec_id": pdf["vec_id"],
-                             "cid": pdf["cid"],
-                             "is_dup": dup})
+                len(V), SEM_CLUSTER_WARN)
+        return pa.table({"vec_id": table["vec_id"], "cid": table["cid"],
+                         "is_dup": step(_cosine_hit_blocks(V, tau, block))})
 
-    return assigned.groupBy("cid").applyInPandas(
+    return assign_vectors(emb, cents).groupBy("cid").applyInArrow(
         flag, "vec_id long, cid int, is_dup boolean")
 
 
@@ -311,16 +337,13 @@ def semdedup(emb: DataFrame, k: int = KM_K, iters: int = KM_ITERS,
     analogue of the paper's keep-one-per-dup-group).
 
     Shape: pairwise work happens ONLY within a cluster (one grouped
-    Arrow pass keyed on cid, ``_semdedup_flags_arrow``), so cost is
-    bounded by the per-cluster size, never all-pairs across the corpus.
+    Arrow pass keyed on cid, ``_cluster_flags``), so cost is bounded by
+    the per-cluster size, never all-pairs across the corpus.
     Output: (vec_id, cid:int, is_dup:boolean).
     """
     if cents is None:
         cents = kmeans_fit(emb, k, iters)
-    assigned = (
-        _assign(_vecs(emb), _cents_literal(cents))
-        .select("vec_id", F.col("cid").cast("int").alias("cid"), "v"))
-    return _semdedup_flags_arrow(assigned, tau)
+    return _cluster_flags(emb, cents, tau, _any_earlier_hit)
 
 
 # ---------------------------------------------------------------------------
@@ -506,32 +529,14 @@ def semdedup_stream_replay(emb: DataFrame, k: int = KM_K,
     Differs from batch ``semdedup`` exactly where the semantics differ:
     there a dup can itself flag later vectors; here only
     representatives (non-dups) do, and only the first ``cap``.
-    Cosines come from the same ``_cosine_hit_blocks`` as
-    ``_semdedup_flags_arrow`` (bit-equal to the oracle's left-to-right
-    list_sum); the rep-set evolution after that is pure boolean
-    sequencing, which the DuckDB oracle replays as a recursive CTE."""
-
-    def flag(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        V = np.stack(pdf["v"].to_numpy())
-        dup = np.zeros(len(V), dtype=bool)
-        reps: list[int] = []
-        for lo, hi, hit in _cosine_hit_blocks(V, tau, SEM_BLOCK):
-            for i in range(lo, hi):
-                isdup = bool(hit[i - lo, reps].any()) if reps else False
-                dup[i] = isdup
-                if not isdup and len(reps) < cap:
-                    reps.append(i)
-        return pd.DataFrame({"vec_id": pdf["vec_id"],
-                             "cid": pdf["cid"], "is_dup": dup})
-
+    Both run ``_cluster_flags`` (cosines bit-equal to the oracle's
+    left-to-right list_sum); the rep-set evolution is ``rep_scan``'s
+    boolean sequencing, which the stream also calls and the DuckDB
+    oracle replays as a recursive CTE."""
     if cents is None:
         cents = kmeans_fit(emb, k, iters)
-    assigned = (
-        _assign(_vecs(emb), _cents_literal(cents))
-        .select("vec_id", F.col("cid").cast("int").alias("cid"), "v"))
-    return assigned.groupBy("cid").applyInPandas(
-        flag, "vec_id long, cid int, is_dup boolean")
+    return _cluster_flags(emb, cents, tau,
+                          lambda blocks: rep_scan(blocks, cap, 0)[0])
 
 
 def semdedup_stream_oracle_sql(table: str = "embeddings", k: int = KM_K,

@@ -114,9 +114,12 @@ def url_gate(df: DataFrame) -> DataFrame:
             .drop("host", "path", "url_reasons", "url_keep"))
 
 
+DEFAULT_BENCH_PRED = "doc_id % 37 = 0"   # q_decontaminate's oracle too
+
+
 def default_benchmark(df: DataFrame) -> DataFrame:
     """The benchmark when none is given: every 37th doc of the input."""
-    return df.filter(F.col("doc_id") % 37 == 0).select("doc_id", "text")
+    return df.filter(DEFAULT_BENCH_PRED).select("doc_id", "text")
 
 
 def decontaminate_gate(df: DataFrame, bench: DataFrame) -> DataFrame:

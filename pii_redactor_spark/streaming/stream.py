@@ -24,9 +24,18 @@ event_type) which AQE-independent state-store partitioning shards by
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pii_redactor_spark.functions.arrow_lists import matrix
+from pii_redactor_spark.operators.clustering import (
+    SEM_BLOCK, SEM_STREAM_CAP, SEM_TAU, _cosine_hit_blocks, assign_vectors,
+    rep_scan)
+from pii_redactor_spark.operators.dedup import (
+    NEARDUP_STREAM_REPS, minhash_bands)
 from pii_redactor_spark.plans.pipeline import run_pipeline
 from pii_redactor_spark.tables import IcebergishTable, MetricsTable
 
@@ -101,8 +110,6 @@ def dedup_stream(
     engine's arbitrary-stateful-op surface: per-key GroupState,
     Arrow-batched user code, append-mode emission.
     """
-    import pandas as pd
-
     pages = (
         spark.readStream.schema(schema)
         .parquet(source_dir)
@@ -150,7 +157,7 @@ def neardup_stream(
     schema: str,
     out_dir: str,
     checkpoint_dir: str,
-    reps_per_bucket: int = 4,
+    reps_per_bucket: int = NEARDUP_STREAM_REPS,
 ):
     """Streaming NEAR-duplicate candidate detection — the batch
     MinHash-LSH self-join (operators/dedup.py lsh_candidate_pairs) as a
@@ -170,10 +177,6 @@ def neardup_stream(
 
     Output rows: (band_idx, band_hash, id_a, id_b) with id_a < id_b.
     """
-    import pandas as pd
-
-    from pii_redactor_spark.operators.dedup import minhash_bands
-
     pages = (
         spark.readStream.schema(schema)
         .parquet(source_dir)
@@ -188,15 +191,16 @@ def neardup_stream(
             [int(x) for x in state.get[0].split(",") if x]
             if state.exists else [])
         rows_a, rows_b = [], []
-        for pdf in pdfs:
-            for doc_id in sorted(int(v) for v in pdf["doc_id"]):
-                for r in reps:
-                    lo, hi = (r, doc_id) if r < doc_id else (doc_id, r)
-                    if lo != hi:
-                        rows_a.append(lo)
-                        rows_b.append(hi)
-                if len(reps) < reps_per_bucket:
-                    reps.append(doc_id)
+        # the key's whole micro-batch in id order: Spark hands it in
+        # chunks of at most maxRecordsPerBatch rows
+        for doc_id in sorted(int(v) for pdf in pdfs for v in pdf["doc_id"]):
+            for r in reps:
+                lo, hi = (r, doc_id) if r < doc_id else (doc_id, r)
+                if lo != hi:
+                    rows_a.append(lo)
+                    rows_b.append(hi)
+            if len(reps) < reps_per_bucket:
+                reps.append(doc_id)
         state.update((",".join(str(r) for r in reps),))
         if rows_a:
             yield pd.DataFrame({
@@ -225,8 +229,8 @@ def semdedup_stream(
     out_dir: str,
     checkpoint_dir: str,
     cents: list,
-    tau: float | None = None,
-    reps_per_cluster: int = 64,
+    tau: float = SEM_TAU,
+    reps_per_cluster: int = SEM_STREAM_CAP,
 ):
     """Streaming SemDeDup — the batch operator
     (operators/clustering.semdedup) at ingest time, completing the
@@ -247,59 +251,31 @@ def semdedup_stream(
     recall trade of capped streaming dedup; size the cap or k like the
     batch operator sizes clusters).
 
+    Each call stacks the stored representatives over the cluster's
+    whole id-sorted micro-batch (one ``matrix``) and runs the replay's
+    step on it (``_cosine_hit_blocks``, then ``rep_scan``).
+
     Output rows: (vec_id, cid, is_dup).
     """
-    import numpy as np
-    import pandas as pd
-
-    from pii_redactor_spark.operators.clustering import (
-        SEM_TAU, _assign, _cents_literal, _vecs)
-
-    t = SEM_TAU if tau is None else tau
     emb = spark.readStream.schema(schema).parquet(source_dir)
-    assigned = _assign(_vecs(emb), _cents_literal(cents)).select(
-        "vec_id", F.col("cid").cast("int").alias("cid"), "v")
+    assigned = assign_vectors(emb, cents)
+    dim = len(cents[0][1])
 
     out_type = "vec_id long, cid int, is_dup boolean"
     state_type = "flat array<double>, nreps int, dim int"
 
     def flag(key, pdfs, state):
-        if state.exists:
-            flat, nreps, dim = state.get
-            reps = (np.asarray(flat, dtype=np.float64)
-                    .reshape(nreps, dim) if nreps else
-                    np.zeros((0, max(dim, 1))))
-        else:
-            reps, dim = np.zeros((0, 1)), 0
-        out = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values("vec_id")
-            for vec_id, v in zip(pdf["vec_id"], pdf["v"]):
-                x = np.asarray(v, dtype=np.float64)
-                if reps.shape[0] == 0:
-                    dim = len(x)
-                    reps = np.zeros((0, dim))
-                xn = float(np.sqrt((x * x).sum()))
-                dup = False
-                if reps.shape[0]:
-                    dots = reps @ x
-                    norms = np.sqrt((reps * reps).sum(axis=1)) * xn
-                    with np.errstate(invalid="ignore",
-                                     divide="ignore"):
-                        cos = dots / norms
-                    # zero-norm cosine is NaN; the batch operator's
-                    # expression/oracle order NaN above every number,
-                    # i.e. >= tau — mirror it
-                    dup = bool(np.any((cos >= t) | np.isnan(cos)))
-                if not dup and reps.shape[0] < reps_per_cluster:
-                    reps = np.vstack([reps, x[None, :]])
-                out.append((int(vec_id), int(key[0]), dup))
+        # the key's whole micro-batch in id order: Spark hands it in
+        # chunks of at most maxRecordsPerBatch rows
+        pdf = pd.concat(list(pdfs)).sort_values("vec_id")
+        flat, nreps, _ = state.get if state.exists else ([], 0, dim)
+        V = np.concatenate([np.reshape(flat, (nreps, dim)),
+                            matrix(pa.array(pdf["v"]), dim)])
+        dup, reps = rep_scan(_cosine_hit_blocks(V, tau, SEM_BLOCK),
+                             reps_per_cluster, nreps)
         # plain Python floats: numpy scalars don't unpickle JVM-side
-        state.update(([float(x) for x in reps.reshape(-1)],
-                      int(reps.shape[0]), int(dim)))
-        if out:
-            yield pd.DataFrame(out,
-                               columns=["vec_id", "cid", "is_dup"])
+        state.update((V[reps].ravel().tolist(), len(reps), dim))
+        yield pdf[["vec_id", "cid"]].assign(is_dup=dup)
 
     flagged = assigned.groupBy("cid").applyInPandasWithState(
         flag, out_type, state_type, "append", "NoTimeout")

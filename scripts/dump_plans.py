@@ -43,6 +43,8 @@ def summarize(plan: str) -> list[str]:
             "inside it, incl. Arrow passes, execute ONCE at fill)")
     if "FlatMapGroupsInPandas" in plan or "MapInPandas" in plan:
         notes.append("mapInPandas stage")
+    if "FlatMapGroupsInArrow" in plan:
+        notes.append("grouped Arrow pass")
     if "PushedFilters: [" in plan and not re.search(
             r"PushedFilters: \[\]", plan):
         notes.append("filters pushed to scan")

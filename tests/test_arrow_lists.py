@@ -11,7 +11,8 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from pii_redactor_spark.functions.arrow_lists import ragged, segments
+from pii_redactor_spark.functions.arrow_lists import (
+    matrix, ragged, segments)
 
 PKG = Path(__file__).resolve().parent.parent / "pii_redactor_spark"
 
@@ -29,6 +30,17 @@ def test_ragged_lengths_and_null_element():
     with pytest.raises(ValueError):
         ragged(pa.array([[1, None, 3]], type=pa.list_(pa.int64())),
                np.int64)
+
+
+def test_matrix_reshapes_and_rejects_null_or_ragged_rows():
+    arr = pa.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]])
+    assert matrix(arr, 2).tolist() == [[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]]
+    assert matrix(arr.slice(1), 2).tolist() == [[3.0, 4.0], [5.0, 6.0]]
+    assert matrix(pa.array([], type=arr.type), 2).shape == (0, 2)
+    for bad in ([[1.0, 2.0], None], [[1.0, 2.0], [3.0]],
+                [[1.0, None], [3.0, 4.0]]):
+        with pytest.raises(ValueError):
+            matrix(pa.array(bad), 2)
 
 
 def test_trailing_empty_rows_match_oracles(sf_docs, oracle, spark):
@@ -53,12 +65,15 @@ def test_trailing_empty_rows_match_oracles(sf_docs, oracle, spark):
 
 def test_list_kernels_are_arrow_udfs_on_the_helper():
     """No module outside arrow_lists.py flattens list rows by hand, and
-    no list column reaches a pandas_udf: a per-row flattener is where a
-    NULL or empty row was decided six different ways."""
+    no list column reaches a pandas_udf or a grouped pandas pass: a
+    per-row flattener is where a NULL or empty row was decided six
+    different ways."""
     flatteners = (r"np\.concatenate\(\s*\[\s*np\.asarray\(",  # rows joined
                   r"0 if \w+ is None else len\(",        # per-row lens
                   r"np\.array\(\w+\.tolist\(\)",         # rows as a matrix
-                  r"\.isna\(\)\.to_numpy\(\)")           # per-row NULLs
+                  r"\.isna\(\)\.to_numpy\(\)",           # per-row NULLs
+                  r"np\.stack\(\w+\[",                     # frame rows stacked
+                  r"applyInPandas\(")                    # grouped pandas pass
     offenders = []
     for p in sorted(PKG.rglob("*.py")):
         if p.name == "arrow_lists.py":

@@ -135,7 +135,7 @@ def test_semdedup_pairwise_is_cluster_bounded(emb):
     keyed on cid (no nested-loop across clusters)."""
     plan = km.semdedup(emb)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
 
 
 def test_semdedup_arrow_matches_expression(emb, oracle):

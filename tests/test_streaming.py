@@ -276,6 +276,20 @@ def test_neardup_stream_equals_batch_replay(spark, tmp_path):
     assert got == want and want
 
 
+def _stream_flags(spark, tmp_path, drops, cents, **kw):
+    """Run semdedup_stream once per drop (one availableNow query each,
+    one checkpoint), returning the set of emitted (vec_id, cid, is_dup)."""
+    from pii_redactor_spark.streaming.stream import semdedup_stream
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    for drop in drops:
+        drop.orderBy("vec_id").coalesce(1).write.mode("append").parquet(src)
+        q = semdedup_stream(spark, src,
+                            "vec_id long, embedding array<float>, label int",
+                            out, str(tmp_path / "ck"), cents, **kw)
+        q.awaitTermination(180)
+    return {tuple(r) for r in spark.read.parquet(out).collect()}
+
+
 def test_semdedup_stream_equals_batch_replay(spark, tmp_path):
     """Same pin for the semantic selector: an id-ordered drop through
     semdedup_stream matches clustering.semdedup_stream_replay (the
@@ -283,20 +297,69 @@ def test_semdedup_stream_equals_batch_replay(spark, tmp_path):
     from pii_redactor_spark.operators.cache import release_caches
     from pii_redactor_spark.operators.clustering import (
         kmeans_fit, semdedup_stream_replay)
-    from pii_redactor_spark.streaming.stream import semdedup_stream
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = kmeans_fit(emb)
-    src = str(tmp_path / "in")
-    emb.orderBy("vec_id").coalesce(1).write.parquet(src)
-    q = semdedup_stream(spark, src,
-                        "vec_id long, embedding array<float>, label int",
-                        str(tmp_path / "out"), str(tmp_path / "ck"),
-                        cents)
-    q.awaitTermination(180)
-    got = {tuple(r) for r in spark.read.parquet(
-        str(tmp_path / "out")).collect()}
+    got = _stream_flags(spark, tmp_path, [emb], cents)
     want = {tuple(r) for r in
             semdedup_stream_replay(emb, cents=cents).collect()}
     release_caches()
     assert got == want and want
+
+
+def test_semdedup_stream_equals_replay_at_tau(spark, tmp_path):
+    """A two-vector cluster with tau set to the pair's cosine under the
+    oracle's arithmetic (left-to-right folds of the dot and both norms):
+    the second vector is a dup in the replay, and the stream must flag
+    it too. A BLAS dot over pairwise-summed norms lands just below tau
+    on this seeded pair."""
+    import numpy as np
+
+    from pii_redactor_spark.operators.clustering import (
+        semdedup_stream_replay)
+
+    rng = np.random.default_rng(0)
+    a = rng.normal(size=64).astype(np.float32)
+    b = (a + 0.5 * rng.normal(size=64)).astype(np.float32)
+    sa = sb = dot = 0.0
+    for x, y in zip(a.tolist(), b.tolist()):
+        sa, sb, dot = sa + x * x, sb + y * y, dot + x * y
+    tau = dot / (np.sqrt(sa) * np.sqrt(sb))
+    cents = [(0, [0.0] * 64)]
+    emb = spark.createDataFrame(
+        [(0, a.tolist(), 0), (1, b.tolist(), 0)],
+        "vec_id long, embedding array<float>, label int")
+    got = _stream_flags(spark, tmp_path, [emb], cents, tau=tau)
+    want = {tuple(r) for r in
+            semdedup_stream_replay(emb, tau=tau, cents=cents).collect()}
+    assert want == {(0, 0, False), (1, 0, True)}
+    assert got == want
+
+
+def test_semdedup_stream_equals_replay_across_drops(spark, tmp_path):
+    """Three id-ordered drops, each its own availableNow query on one
+    checkpoint, with Arrow batches of 7 rows so every cluster's
+    micro-batch reaches the state function in several chunks: the later
+    drops start from stored representatives, and the union of the flags
+    is the replay's."""
+    from pii_redactor_spark.operators.cache import release_caches
+    from pii_redactor_spark.operators.clustering import (
+        kmeans_fit, semdedup_stream_replay)
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    cents = kmeans_fit(emb)
+    drops = [emb.filter("vec_id < 150"),
+             emb.filter("vec_id >= 150 AND vec_id < 330"),
+             emb.filter("vec_id >= 330")]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = _stream_flags(spark, tmp_path, drops, cents)
+    finally:
+        spark.conf.set(key, old)
+    want = {tuple(r) for r in
+            semdedup_stream_replay(emb, cents=cents).collect()}
+    release_caches()
+    assert len(want) == 500 and any(r[2] for r in want)
+    assert got == want
