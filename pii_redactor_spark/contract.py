@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 
 from pii_redactor_spark.functions import text_hash
 from pii_redactor_spark.functions.rules import (
-    STOPWORDS, QualityThresholds, keep_decision, with_quality)
+    QualityThresholds, keep_decision, quality_stats_sql, rule_reasons_sql,
+    with_quality)
 from pii_redactor_spark.operators.metrics import with_hybrid_score
 from pii_redactor_spark.plans.pipeline import run_pipeline
 from pii_redactor_spark.session import ship_package
@@ -446,119 +447,30 @@ def q_token_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # North-star quality rules over the documents corpus — pure Column
-# expressions (functions/rules.py) vs a relational DuckDB re-derivation.
+# expressions (functions/rules.py) vs their DuckDB twins beside them.
 # ---------------------------------------------------------------------------
-_STOPWORD_SQL_LIST = "[" + ",".join(f"'{w}'" for w in STOPWORDS) + "]"
-
-# The n-gram arrays are the hashed word n-grams of functions/text_hash.py
-# on both sides, so the ratio values are bit-identical in both engines.
-_QUALITY_BASE_SQL = f"""
-WITH base AS (
-  SELECT doc_id, text, words, lines,
-         {text_hash.word_hashes_sql('words')} AS whashes
-  FROM (SELECT doc_id, text,
-          {text_hash.WORDS_SQL.format(t='text')} AS words,
-          list_filter(string_split(text, chr(10)), l -> trim(l) <> '') AS lines
-        FROM documents)),
-stats AS (
-  SELECT doc_id,
-    len(words) AS n_words,
-    CASE WHEN len(words) > 0
-         THEN CAST(list_sum(list_transform(words, w -> length(w))) AS DOUBLE) / len(words)
-         ELSE 0.0 END AS mean_word_len,
-    CASE WHEN len(words) > 0
-         THEN CAST(len(list_filter(words, w -> list_contains({_STOPWORD_SQL_LIST}, lower(w)))) AS DOUBLE) / len(words)
-         ELSE 0.0 END AS stopword_ratio,
-    CASE WHEN len(words) > 0
-         THEN CAST((length(text) - length(replace(text, '#', '')))
-                 + (length(text) - length(replace(text, '…', ''))) AS DOUBLE) / len(words)
-         ELSE 0.0 END AS symbol_word_ratio,
-    CASE WHEN len(words) > 0
-         THEN CAST(len(list_filter(words, w -> regexp_matches(w, '[A-Za-z]'))) AS DOUBLE) / len(words)
-         ELSE 0.0 END AS alpha_word_ratio,
-    1.0 - CAST(len(list_distinct(lines)) AS DOUBLE) / GREATEST(len(lines), 1) AS dup_line_ratio,
-    -- the all-bigrams-distinct shortcut mirrors the Spark branch
-    -- structure (functions/rules.py quality_columns) so results stay
-    -- bit-identical even under 60-bit n-gram hash collisions
-    CASE WHEN len(words) > 1 THEN
-      (CASE WHEN len(list_distinct(bigrams)) = len(bigrams) THEN 1.0 ELSE
-        CAST(list_max(list_transform(
-               list_distinct(bigrams),
-               b -> len(list_filter(bigrams, x -> x = b)))) AS DOUBLE) END)
-        / (len(words) - 1)
-      ELSE 0.0 END AS top_bigram_ratio,
-    CASE WHEN GREATEST(len(words) - 2, 0) > 0 THEN
-      (CASE WHEN len(list_distinct(bigrams)) = len(bigrams) THEN 1.0 ELSE
-        CAST(list_max(list_transform(
-               list_distinct(trigrams),
-               b -> len(list_filter(trigrams, x -> x = b)))) AS DOUBLE) END)
-        / (len(words) - 2)
-      ELSE 0.0 END AS top_trigram_ratio,
-    CASE WHEN GREATEST(len(words) - 3, 0) > 0 THEN
-      (CASE WHEN len(list_distinct(bigrams)) = len(bigrams) THEN 1.0 ELSE
-        CAST(list_max(list_transform(
-               list_distinct(quadgrams),
-               b -> len(list_filter(quadgrams, x -> x = b)))) AS DOUBLE) END)
-        / (len(words) - 3)
-      ELSE 0.0 END AS top_quadgram_ratio,
-    CASE WHEN len(list_distinct(bigrams)) = len(bigrams)
-              OR GREATEST(len(words) - 4, 0) = 0 THEN 0.0 ELSE
-      1.0 - CAST(len(list_distinct(fivegrams)) AS DOUBLE)
-            / (len(words) - 4)
-      END AS dup_5gram_ratio
-  FROM (SELECT *,
-          {text_hash.hashed_ngrams_sql('whashes', 2)} AS bigrams,
-          {text_hash.hashed_ngrams_sql('whashes', 3)} AS trigrams,
-          {text_hash.hashed_ngrams_sql('whashes', 4)} AS quadgrams,
-          {text_hash.hashed_ngrams_sql('whashes', 5)} AS fivegrams
-        FROM base))
-SELECT * FROM stats
-"""
+_QUALITY_STATS = (
+    "doc_id", "n_words", "mean_word_len", "stopword_ratio",
+    "symbol_word_ratio", "alpha_word_ratio", "dup_line_ratio",
+    "top_bigram_ratio", "top_trigram_ratio", "top_quadgram_ratio",
+    "dup_5gram_ratio")
 
 
-@register("q_quality_stats", oracle=_QUALITY_BASE_SQL)
+@register("q_quality_stats", oracle=f"""
+    SELECT {', '.join(_QUALITY_STATS)} FROM ({quality_stats_sql()})""")
 def q_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = with_quality(_t(spark, sf_dir, "documents"), "text")
-    return df.select(
-        "doc_id", "n_words", "mean_word_len", "stopword_ratio",
-        "symbol_word_ratio", "alpha_word_ratio", "dup_line_ratio",
-        "top_bigram_ratio", "top_trigram_ratio", "top_quadgram_ratio",
-        "dup_5gram_ratio",
-    )
+    return df.select(*_QUALITY_STATS)
 
 
-# the default-thresholds rule gate as one boolean SQL expression —
-# shared by q_quality_keep and q_datacard (a stale duplicate would
-# silently break whichever oracle wasn't updated)
-_RULES_KEEP_SQL = """(n_words >= 5 AND n_words <= 100000
-       AND mean_word_len >= 2.0 AND mean_word_len <= 12.0
-       AND symbol_word_ratio <= 0.1
-       AND alpha_word_ratio >= 0.7
-       AND stopword_ratio >= 0.02
-       AND dup_line_ratio <= 0.5
-       AND top_bigram_ratio <= 0.25
-       AND top_trigram_ratio <= 0.20
-       AND top_quadgram_ratio <= 0.18
-       AND dup_5gram_ratio <= 0.30)"""
+_REASONS_SQL, _KEEP_SQL, _N_REASONS_SQL = rule_reasons_sql()
 
 
 @register(
     "q_quality_keep",
     oracle=f"""
-    SELECT doc_id,
-      {_RULES_KEEP_SQL} AS keep,
-      CAST((CASE WHEN n_words < 5 THEN 1 ELSE 0 END)
-         + (CASE WHEN n_words > 100000 THEN 1 ELSE 0 END)
-         + (CASE WHEN mean_word_len < 2.0 OR mean_word_len > 12.0 THEN 1 ELSE 0 END)
-         + (CASE WHEN symbol_word_ratio > 0.1 THEN 1 ELSE 0 END)
-         + (CASE WHEN alpha_word_ratio < 0.7 THEN 1 ELSE 0 END)
-         + (CASE WHEN stopword_ratio < 0.02 THEN 1 ELSE 0 END)
-         + (CASE WHEN dup_line_ratio > 0.5 THEN 1 ELSE 0 END)
-         + (CASE WHEN top_bigram_ratio > 0.25 THEN 1 ELSE 0 END)
-         + (CASE WHEN top_trigram_ratio > 0.20 THEN 1 ELSE 0 END)
-         + (CASE WHEN top_quadgram_ratio > 0.18 THEN 1 ELSE 0 END)
-         + (CASE WHEN dup_5gram_ratio > 0.30 THEN 1 ELSE 0 END) AS INT) AS n_reasons
-    FROM ({_QUALITY_BASE_SQL})
+    SELECT doc_id, {_KEEP_SQL} AS keep, {_N_REASONS_SQL} AS n_reasons
+    FROM ({quality_stats_sql()})
     """,
 )
 def q_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -573,40 +485,27 @@ def q_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Common-Crawl-shaped corpus (input_hint: url, warc_ts, html:binary, text,
-# lang; sources/corpus.py): per-url byte-identity of html→extracted text.
-# html synthesis + xxhash64 timestamps are not DuckDB-reproducible →
-# rows-only check; byte-identity is asserted by the query itself
-# (match=true for every row) and in test_corpus.py.
+# lang; sources/corpus.py): url, host and warc_ts are md5-folds of doc_id
+# that from_documents_sql reproduces bit for bit.
 # ---------------------------------------------------------------------------
-def _id_hash_sql(salt: str) -> str:
-    """sources/corpus.py's and sampling.hash_split's id hash."""
-    return text_hash.md5_int_sql(f"'{salt}' || doc_id", 8)
+from pii_redactor_spark.sources.corpus import (  # noqa: E402
+    from_documents, from_documents_sql, html_bytes_sql)
 
 
 @register(
     "q_corpus_daily",
     oracle=f"""
-    WITH corpus AS (
-      SELECT doc_id,
-        CASE WHEN {_id_hash_sql('host:')} % 2 = 0
-             THEN 'bighost.example'
-             ELSE 'site' || lpad(CAST({_id_hash_sql('host:')} % 20 AS VARCHAR), 2, '0') || '.example'
-        END AS host,
-        to_timestamp(1700000000 + {_id_hash_sql('ts:')} % 2592000) AS warc_ts
-      FROM documents)
     SELECT CAST(date_trunc('day', warc_ts) AS DATE) AS crawl_day,
            host,
            COUNT(*) AS n_pages
-    FROM corpus
+    FROM ({from_documents_sql()})
     GROUP BY 1, 2
     """,
 )
 def q_corpus_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-day per-host page counts over the Common-Crawl-shaped corpus —
     # the partition layout (crawl day x host bucket) a real crawl table
-    # prunes on. warc_ts/host derivations are md5-folds shared with the
-    # oracle bit-for-bit (sources/corpus.py).
-    from pii_redactor_spark.sources.corpus import from_documents
+    # prunes on.
     corpus = from_documents(_t(spark, sf_dir, "documents"))
     return (
         corpus
@@ -618,38 +517,23 @@ def q_corpus_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# html synthesis runs in a pandas UDF, but its output is md5/template-
+# html synthesis runs in a pandas UDF, but its output is template-
 # reproducible, so the roundtrip check IS oracle-gated on scalars:
 # n_matched asserts byte-identical extraction per url (north rule
-# invariant) and sum_html_bytes pins the synthesized payload size
-# (fixed 151-byte template + url bytes + entity-escaped text bytes).
-_WRAP_HTML_FIXED_BYTES = 151  # len(wrap_html('', '')) — pinned in test_corpus
-
-
+# invariant) and sum_html_bytes pins the synthesized payload size.
 @register(
     "q_corpus_roundtrip",
     oracle=f"""
-    WITH corpus AS (
-      SELECT doc_id, text,
-        'https://' ||
-        CASE WHEN {_id_hash_sql('host:')} % 2 = 0
-             THEN 'bighost.example'
-             ELSE 'site' || lpad(CAST({_id_hash_sql('host:')} % 20 AS VARCHAR), 2, '0') || '.example'
-        END || '/doc/' || CAST(doc_id AS VARCHAR) AS url
-      FROM documents)
     SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
            CAST(SUM(CASE WHEN text IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
              AS n_matched,
-           CAST(SUM({_WRAP_HTML_FIXED_BYTES} + strlen(url)
-                    + strlen(replace(replace(replace(text, '&', '&amp;'),
-                                             '<', '&lt;'), '>', '&gt;')))
-                AS BIGINT) AS sum_html_bytes
-    FROM corpus
+           CAST(SUM({html_bytes_sql('url', 'text')}) AS BIGINT)
+             AS sum_html_bytes
+    FROM ({from_documents_sql()})
     """,
 )
 def q_corpus_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pii_redactor_spark.sources.corpus import (
-        extract_text_udf, from_documents)
+    from pii_redactor_spark.sources.corpus import extract_text_udf
     corpus = from_documents(_t(spark, sf_dir, "documents"))
     return (
         corpus
@@ -666,48 +550,25 @@ def q_corpus_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Full pipeline (langid + perplexity + scrub kernels). The kernel outputs
 # themselves have no DuckDB twin, but the flagship query IS hash-gated: it
-# selects the rule-derived decision columns (reproduced relationally from
-# _QUALITY_BASE_SQL) plus ``kernel_ran`` — a column derived from the fused
+# selects the rule-derived decision columns (reproduced by the rules'
+# SQL twins) plus ``kernel_ran`` — a column derived from the fused
 # kernel UDF's output (scrubbed_text IS NOT NULL), so Catalyst cannot prune
 # the kernel pass away and the oracle still reproduces its value
 # (text IS NOT NULL, the UDF's null-propagation contract). All columns are
 # scalar (no raw arrays — the driver canonicalizer requires hashable cells);
 # rule reasons ship as a sorted CSV string.
 # ---------------------------------------------------------------------------
-_RULE_CHECKS_SQL = [
-    ("too_few_words", "n_words < 5"),
-    ("too_many_words", "n_words > 100000"),
-    ("mean_word_len_out_of_range",
-     "mean_word_len < 2.0 OR mean_word_len > 12.0"),
-    ("symbol_ratio_high", "symbol_word_ratio > 0.1"),
-    ("alpha_ratio_low", "alpha_word_ratio < 0.7"),
-    ("stopword_ratio_low", "stopword_ratio < 0.02"),
-    ("dup_lines_high", "dup_line_ratio > 0.5"),
-    ("repeated_bigram_high", "top_bigram_ratio > 0.25"),
-    ("repeated_trigram_high", "top_trigram_ratio > 0.20"),
-    ("repeated_quadgram_high", "top_quadgram_ratio > 0.18"),
-    ("dup_5gram_high", "dup_5gram_ratio > 0.30"),
-]
-
-_RULE_REASONS_SQL = (
-    "list_sort(list_filter(["
-    + ", ".join(f"CASE WHEN {cond} THEN '{name}' END"
-                for name, cond in _RULE_CHECKS_SQL)
-    + "], x -> x IS NOT NULL))"
-)
-
-
 @register(
     "q_pipeline_full",
     oracle=f"""
-    SELECT 'doc://' || CAST(s.doc_id AS VARCHAR) AS url,
-           s.doc_id, d.lang,
-           (d.text IS NOT NULL) AS kernel_ran,
-           (len({_RULE_REASONS_SQL}) = 0) AS rule_keep,
-           CAST(len({_RULE_REASONS_SQL}) AS INT) AS n_rule_reasons,
-           COALESCE(array_to_string({_RULE_REASONS_SQL}, ','), '')
+    SELECT 'doc://' || CAST(doc_id AS VARCHAR) AS url,
+           doc_id, lang,
+           (text IS NOT NULL) AS kernel_ran,
+           {_KEEP_SQL} AS rule_keep,
+           {_N_REASONS_SQL} AS n_rule_reasons,
+           COALESCE(array_to_string(list_sort({_REASONS_SQL}), ','), '')
              AS rule_reasons_csv
-    FROM ({_QUALITY_BASE_SQL}) s JOIN documents d ON s.doc_id = d.doc_id
+    FROM ({quality_stats_sql()})
     """,
 )
 def q_pipeline_full(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -753,15 +614,19 @@ _WORSTK_FROZEN: dict[int, list[tuple[int, int]]] = {
               (2279, 184), (41, 134), (3184, 82), (3819, 188), (204, 55)],
 }
 
-_WORSTK_ORACLE = "\nUNION ALL\n".join(
-    f"""SELECT doc_id, n_chars FROM (VALUES {', '.join(
-        f'({d}, {c})' for d, c in rows)}) AS t(doc_id, n_chars)
+def _per_corpus(sql_by_checksum: dict[int, str]) -> str:
+    """One oracle per test corpus, each live only on the corpus whose
+    ``sum(n_chars)`` is its key (the others return no rows)."""
+    return "\nUNION ALL\n".join(
+        f"""SELECT * FROM ({sql})
     WHERE (SELECT sum(n_chars) FROM documents) = {chk}"""
-    for chk, rows in _WORSTK_FROZEN.items()
-)
+        for chk, sql in sql_by_checksum.items())
 
 
-@register("q_worstk_ppl", oracle=_WORSTK_ORACLE)
+@register("q_worstk_ppl", oracle=_per_corpus({
+    chk: f"""SELECT * FROM (VALUES {', '.join(f'({d}, {c})' for d, c in rows)})
+             AS t(doc_id, n_chars)"""
+    for chk, rows in _WORSTK_FROZEN.items()}))
 def q_worstk_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top-k worst documents by perplexity (SURVEY §2.6 bench query) —
     # TakeOrderedAndProject over a kernel column. The kernel column
@@ -778,9 +643,6 @@ def q_worstk_ppl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Token counting (whitespace + BPE-ish regex) — text-analysis op family.
-# ---------------------------------------------------------------------------
 # ---------------------------------------------------------------------------
 # O30 — deterministic positional split (reference: optimizer.py:80-81 list
 # slicing). Spark has no row order, so the split is pinned by a
@@ -986,6 +848,10 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # somewhere: media extension, blocked path, deep path, blocked host,
 # mixed-case canonicalization, query/fragment stripping.
 # ---------------------------------------------------------------------------
+from pii_redactor_spark.functions.url_rules import (  # noqa: E402
+    canonical_url, canonical_url_sql, host_of, url_rules_sql, with_url_rules)
+
+_URL_BLOCKED_HOSTS = ["blocked.example"]
 _DEEP = "/p" * 12
 _URL_CASES_SQL = f"""
 CASE CAST(doc_id % 6 AS INT)
@@ -994,52 +860,21 @@ CASE CAST(doc_id % 6 AS INT)
   WHEN 2 THEN 'https://shop.example/cart/item/' || doc_id || '?ref=abc#frag'
   WHEN 3 THEN 'HTTPS://MiXeD.Example/Path/' || doc_id || '/'
   WHEN 4 THEN 'https://deep.example{_DEEP}/' || doc_id
-  ELSE 'https://blocked.example/page/' || doc_id
+  ELSE 'https://{_URL_BLOCKED_HOSTS[0]}/page/' || doc_id
 END
 """
-
-_URL_BLOCKED_HOSTS = ["blocked.example"]
-
-from pii_redactor_spark.functions.url_rules import (  # noqa: E402
-    BLOCKED_EXTENSIONS as _BLOCKED_EXTS,
-)
-
-BLOCKED_EXT_SQL = "[" + ", ".join(f"'{e}'" for e in _BLOCKED_EXTS) + "]"
 
 
 @register(
     "q_url_filter",
     oracle=f"""
-    WITH urls AS (SELECT doc_id, {_URL_CASES_SQL} AS url FROM documents),
-    parts AS (
-      SELECT doc_id, url,
-        lower(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)) AS host,
-        regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+(/[^?#]*)?', 1) AS path,
-        lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme
-      FROM urls),
-    canon AS (
-      SELECT *,
-        CASE WHEN regexp_replace(path, '/+$', '') = '' THEN '/'
-             ELSE regexp_replace(path, '/+$', '') END AS cpath,
-        lower(regexp_extract(path, '\\.([A-Za-z0-9]+)$', 1)) AS ext,
-        len(list_filter(string_split(path, '/'), p -> p <> '')) AS depth
-      FROM parts)
-    SELECT doc_id, host, path,
-           scheme || '://' || host || cpath AS canonical,
-           (NOT (length(url) > 2048)
-            AND host <> ''
-            AND NOT list_contains({BLOCKED_EXT_SQL}, ext)
-            AND depth <= 10
-            AND NOT regexp_matches(lower(path), '{'|'.join(
-                t for t in ("/wp-admin", "/wp-login", "/cgi-bin", "/login",
-                            "/signup", "/cart", "/checkout"))}')
-            AND NOT list_contains(['blocked.example'], host)) AS url_keep
-    FROM canon
+    WITH urls AS (SELECT doc_id, {_URL_CASES_SQL} AS url FROM documents)
+    SELECT doc_id, host, path, {canonical_url_sql('url')} AS canonical,
+           url_keep
+    FROM ({url_rules_sql('urls', blocked_hosts=_URL_BLOCKED_HOSTS)})
     """,
 )
 def q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pii_redactor_spark.functions.url_rules import (
-        canonical_url, with_url_rules)
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_URL_CASES_SQL).alias("url"))
     return (
@@ -1054,24 +889,17 @@ def q_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with a deterministic md5 priority; hot host (≈50% of the corpus via the
 # skewed url mapping) gets clamped, cold hosts pass through.
 # ---------------------------------------------------------------------------
-_CORPUS_URLS_SQL = f"""
-SELECT doc_id,
-  'https://' ||
-  CASE WHEN {_id_hash_sql('host:')} % 2 = 0
-       THEN 'bighost.example'
-       ELSE 'site' || lpad(CAST({_id_hash_sql('host:')} % 20 AS VARCHAR), 2, '0') || '.example'
-  END || '/doc/' || doc_id AS url
-FROM documents
-"""
-
-
-@register(
-    "q_host_cap",
-    oracle=None,  # set below (needs the urls CTE)
+from pii_redactor_spark.operators.sampling import (  # noqa: E402
+    cap_per_host_oracle_sql as _cap_sql,
 )
+
+_CORPUS_URLS_SQL = f"SELECT doc_id, url FROM ({from_documents_sql()})"
+
+
+@register("q_host_cap", oracle=_cap_sql(_CORPUS_URLS_SQL, max_per_host=25,
+                                        tiebreak_col="doc_id"))
 def q_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_redactor_spark.operators.sampling import cap_per_host
-    from pii_redactor_spark.sources.corpus import from_documents
     corpus = from_documents(_t(spark, sf_dir, "documents")).select(
         F.col("url"),
         F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("bigint")
@@ -1080,14 +908,6 @@ def q_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cap_per_host(corpus, max_per_host=25,
                         tiebreak_col="doc_id").select(
         "doc_id", "url", "host")
-
-
-from pii_redactor_spark.operators.sampling import (  # noqa: E402
-    cap_per_host_oracle_sql as _cap_sql,
-)
-
-ORACLE_SQL["q_host_cap"] = _cap_sql(_CORPUS_URLS_SQL, max_per_host=25,
-                                    tiebreak_col="doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -1101,25 +921,18 @@ ORACLE_SQL["q_host_cap"] = _cap_sql(_CORPUS_URLS_SQL, max_per_host=25,
 @register(
     "q_host_rank",
     oracle=f"""
-    WITH urls AS ({_CORPUS_URLS_SQL})
-    SELECT doc_id,
-           lower(regexp_extract(url,
-             '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)) AS host,
-           CAST(ROW_NUMBER() OVER (
-             PARTITION BY lower(regexp_extract(url,
-               '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1))
-             ORDER BY doc_id) AS INT) AS rn
-    FROM urls
+    SELECT doc_id, host,
+           CAST(ROW_NUMBER() OVER (PARTITION BY host ORDER BY doc_id)
+                AS INT) AS rn
+    FROM ({from_documents_sql()})
     """,
 )
 def q_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pii_redactor_spark.operators.ranking import group_row_number
-    from pii_redactor_spark.operators.sampling import HOST_RE
-    from pii_redactor_spark.sources.corpus import from_documents
     corpus = from_documents(_t(spark, sf_dir, "documents")).select(
         F.regexp_extract("url", r"/doc/(\d+)$", 1).cast("bigint")
          .alias("doc_id"),
-        F.lower(F.regexp_extract("url", HOST_RE, 1)).alias("host"),
+        host_of("url").alias("host"),
     )
     return (
         group_row_number(corpus, "host", "doc_id", hot_threshold=50)
@@ -1133,37 +946,21 @@ def q_host_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # methodology). The fake benchmark = every 37th doc; those docs (and any
 # near-verbatim relatives with >= 8 shared words in a row) flag.
 # ---------------------------------------------------------------------------
+from pii_redactor_spark.operators.decontaminate import (  # noqa: E402
+    contamination, contamination_sql)
 from pii_redactor_spark.plans.build import (  # noqa: E402
     DEFAULT_BENCH_PRED, default_benchmark)
-
-
-def _decon_grams_sql(pred: str | None) -> str:
-    where = f"WHERE {pred}" if pred else ""
-    return f"""SELECT doc_id,
-      list_distinct({text_hash.hashed_ngrams_sql('whashes', 8)}) AS gs
-    FROM (SELECT doc_id, words,
-                 {text_hash.word_hashes_sql('words')} AS whashes
-          FROM (SELECT doc_id, {text_hash.WORDS_SQL.format(t='text')} AS words
-                FROM documents {where}))"""
 
 
 @register(
     "q_decontaminate",
     oracle=f"""
-    WITH bg AS (SELECT DISTINCT g FROM
-                  (SELECT unnest(gs) AS g
-                   FROM ({_decon_grams_sql(DEFAULT_BENCH_PRED)}))),
-    cg AS (SELECT doc_id, unnest(gs) AS g FROM ({_decon_grams_sql(None)})),
-    hits AS (SELECT c.doc_id, COUNT(DISTINCT c.g) AS shared_ngrams
-             FROM cg c JOIN bg b ON c.g = b.g GROUP BY c.doc_id)
-    SELECT d.doc_id,
-           COALESCE(h.shared_ngrams, 0) AS shared_ngrams,
-           COALESCE(h.shared_ngrams, 0) >= 1 AS contaminated
-    FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
+    SELECT doc_id, shared_ngrams, contaminated
+    FROM ({contamination_sql(
+        "documents", f"(SELECT * FROM documents WHERE {DEFAULT_BENCH_PRED})")})
     """,
 )
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pii_redactor_spark.operators.decontaminate import contamination
     docs = _t(spark, sf_dir, "documents")
     return contamination(docs, default_benchmark(docs)).select(
         "doc_id", "shared_ngrams", "contaminated")
@@ -1173,30 +970,8 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Cross-document duplicate spans (operators/dedup.py span_dup_stats —
 # Lee et al. 2022 ExactSubstr at hashed-8-gram granularity): fraction
 # of each doc's distinct word 8-grams occurring in >= 2 documents.
-# Same gram hashing as decontamination, so the oracle reuses
-# _decon_grams_sql.
 # ---------------------------------------------------------------------------
-@register(
-    "q_span_dedup",
-    oracle=f"""
-    WITH pg AS ({_decon_grams_sql(None)}),
-    grams AS (SELECT doc_id, unnest(gs) AS g FROM pg),
-    dup AS (SELECT g FROM grams GROUP BY g HAVING COUNT(*) >= 2),
-    per AS (
-      SELECT grams.doc_id, COUNT(*) AS n_grams,
-             COUNT(dup.g) AS n_dup_grams
-      FROM grams LEFT JOIN dup ON grams.g = dup.g
-      GROUP BY grams.doc_id)
-    SELECT d.doc_id,
-           CAST(COALESCE(per.n_grams, 0) AS INT) AS n_grams,
-           CAST(COALESCE(per.n_dup_grams, 0) AS INT) AS n_dup_grams,
-           CAST(CASE WHEN COALESCE(per.n_grams, 0) > 0
-                THEN CAST(per.n_dup_grams AS BIGINT) * 1000000
-                     // per.n_grams
-                ELSE 0 END AS BIGINT) AS dup_ppm
-    FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
-    """,
-)
+@register("q_span_dedup", oracle=_dd.span_dup_stats_oracle_sql())
 def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dd.span_dup_stats(_t(spark, sf_dir, "documents"))
 
@@ -1205,61 +980,9 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The REWRITE step (dedup.span_dedup_rewrite): remove every duplicated
 # n-gram occurrence except the globally first — the paper's
 # keep-one-copy semantics. Output pinned by md5 + length of the
-# rewritten text; the oracle re-derives first-owners with the same
-# BIGINT occurrence keys and rebuilds the text with identical
-# positional logic (lockstep unnest keeps the gram stream linear).
+# rewritten text.
 # ---------------------------------------------------------------------------
-@register(
-    "q_span_rewrite",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id, words,
-             {text_hash.word_hashes_sql('words')} AS whashes
-      FROM (SELECT doc_id, {text_hash.WORDS_SQL.format(t='text')} AS words
-            FROM documents)),
-    grams AS (SELECT doc_id, {text_hash.hashed_ngrams_sql('whashes', 8)} AS gs
-              FROM base),
-    occ AS (
-      SELECT doc_id,
-             CAST(unnest(range(len(gs))) AS BIGINT) AS pos,
-             unnest(gs) AS g
-      FROM grams),
-    owners AS (
-      SELECT g, MIN(doc_id * {_dd._SPAN_POS_LIM} + pos) AS mn,
-             COUNT(*) AS n
-      FROM occ GROUP BY g),
-    dup AS (
-      SELECT o.doc_id, o.pos FROM occ o JOIN owners w ON o.g = w.g
-      WHERE w.n >= 2 AND o.doc_id * {_dd._SPAN_POS_LIM} + o.pos <> w.mn),
-    cov AS (SELECT doc_id, list(pos) AS poss FROM dup GROUP BY doc_id),
-    rw AS (
-      SELECT b.doc_id, b.words,
-        CASE WHEN b.words IS NULL THEN NULL ELSE
-          list_transform(range(len(b.words)), i ->
-            CASE WHEN len(list_filter(
-                     COALESCE(c.poss, CAST([] AS BIGINT[])),
-                     p -> p <= i AND i <= p + 7)) > 0
-                 THEN NULL ELSE b.words[CAST(i + 1 AS INT)] END)
-        END AS kept
-      FROM base b LEFT JOIN cov c ON b.doc_id = c.doc_id),
-    fin AS (
-      -- DuckDB array_to_string([]) is NULL while Spark array_join([])
-      -- is '' — coalesce ONLY the non-null-kept (fully-removed) case
-      SELECT doc_id, words, kept,
-             CASE WHEN kept IS NULL THEN NULL
-                  ELSE COALESCE(array_to_string(
-                         list_filter(kept, x -> x IS NOT NULL), ' '), '')
-             END AS clean
-      FROM rw)
-    SELECT doc_id,
-           CAST(len(words) AS INT) AS n_words,
-           CAST(len(list_filter(kept, x -> x IS NULL)) AS INT)
-             AS n_removed,
-           md5(clean) AS cleaned_hash,
-           CAST(length(clean) AS INT) AS cleaned_len
-    FROM fin
-    """,
-)
+@register("q_span_rewrite", oracle=_dd.span_dedup_rewrite_oracle_sql())
 def q_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dd.span_dedup_rewrite(_t(spark, sf_dir, "documents"))
 
@@ -1269,20 +992,13 @@ def q_span_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # non-positional train/val/test splitter — membership is a projection,
 # stable under reordering and corpus growth (contrast O30).
 # ---------------------------------------------------------------------------
-@register(
-    "q_split_hash",
-    oracle=f"""
-    SELECT doc_id,
-           CASE WHEN {_id_hash_sql('split:')} % 100 < 80
-                  THEN 'train'
-                WHEN {_id_hash_sql('split:')} % 100 < 90
-                  THEN 'val'
-                ELSE 'test' END AS part
-    FROM documents
-    """,
-)
+from pii_redactor_spark.operators.sampling import (  # noqa: E402
+    hash_split, hash_split_sql)
+
+
+@register("q_split_hash", oracle=f"""
+    SELECT doc_id, part FROM ({hash_split_sql('documents')})""")
 def q_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pii_redactor_spark.operators.sampling import hash_split
     return hash_split(_t(spark, sf_dir, "documents")) \
         .select("doc_id", "part")
 
@@ -1368,12 +1084,21 @@ def q_text_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sim.text_embedding_summary(_t(spark, sf_dir, "documents"))
 
 
+# ---------------------------------------------------------------------------
+# Token counting (whitespace + BPE-ish regex) — text-analysis op family.
+# ---------------------------------------------------------------------------
+from pii_redactor_spark.operators.ranking import (  # noqa: E402
+    SEQ_TOKENS,  # noqa: F401  (perfbench reads the pack width from here)
+    pack, pack_oracle_sql, pack_rows, pack_rows_oracle_sql,
+    regex_token_count, regex_token_count_sql)
+
+
 @register(
     "q_token_count",
-    oracle=rf"""
+    oracle=f"""
     SELECT doc_id,
            len({text_hash.WORDS_SQL.format(t='text')}) AS ws_tokens,
-           len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS bpe_ish_tokens
+           {regex_token_count_sql('text')} AS bpe_ish_tokens
     FROM documents
     """,
 )
@@ -1382,9 +1107,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.size(text_hash.words(F.col("text"))).alias("ws_tokens"),
-        F.size(F.regexp_extract_all(
-            F.col("text"), F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0))
-         .alias("bpe_ish_tokens"),
+        regex_token_count(F.col("text")).alias("bpe_ish_tokens"),
     )
 
 
@@ -1497,21 +1220,7 @@ def q_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
 # batch-prep step. The global running sum uses ranking.global_prefix_sum
 # (bounded two-phase prefix scan, never Exchange SinglePartition).
 # ---------------------------------------------------------------------------
-from pii_redactor_spark.operators.ranking import (  # noqa: E402
-    BPE_RE, SEQ_TOKENS, pack, regex_token_count)
-
-_PACK_PRE_SQL = f"""
-    toks AS (
-      SELECT doc_id,
-             len(regexp_extract_all(text, '{BPE_RE}'))
-               AS n_tokens
-      FROM documents),
-    pre AS (
-      SELECT doc_id, n_tokens,
-             COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-               AS start_off
-      FROM toks)"""
+_TOKENS_SQL = f"SELECT doc_id, {regex_token_count_sql('text')} AS n_tokens FROM documents"
 
 
 def _pack_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1520,74 +1229,21 @@ def _pack_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", regex_token_count(F.col("text")).alias("n_tokens")))
 
 
-@register(
-    "q_pack",
-    oracle=f"""
-    WITH {_PACK_PRE_SQL}
-    SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
-           CAST(start_off AS BIGINT) AS start_off,
-           CAST(start_off // {SEQ_TOKENS} AS BIGINT) AS seq_idx,
-           CAST(CASE WHEN n_tokens > 0 THEN
-             (start_off + n_tokens - 1) // {SEQ_TOKENS}
-               - start_off // {SEQ_TOKENS} + 1
-           ELSE 0 END AS BIGINT) AS n_seqs
-    FROM pre
-    """,
-)
+@register("q_pack", oracle=pack_oracle_sql(_TOKENS_SQL))
 def q_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pack_docs(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
-# Materialized packed sequences (round-3 verdict item 5): explode the
-# per-doc span count into the rows a tokenizer writer consumes —
-# (seq_idx, doc_id, slice_start, slice_len), slice offsets within the
-# document's token stream. Bounded generate (explode of an integer
-# sequence, outer + null-filter per the InferFiltersFromGenerate rule),
-# pure integer arithmetic on both engines; row count = sum(n_seqs) and
-# per-seq_idx token sums hit SEQ_TOKENS exactly except the final
-# partial sequence (pinned in tests/test_pack.py).
+# Materialized packed sequences (round-3 verdict item 5): the rows a
+# tokenizer writer consumes — (seq_idx, doc_id, slice_start, slice_len)
+# (ranking.pack_rows); row count = sum(n_seqs) and per-seq_idx token sums
+# hit SEQ_TOKENS exactly except the final partial sequence (pinned in
+# tests/test_pack.py).
 # ---------------------------------------------------------------------------
-@register(
-    "q_pack_rows",
-    oracle=f"""
-    WITH {_PACK_PRE_SQL},
-    spans AS (
-      SELECT doc_id, n_tokens, CAST(start_off AS BIGINT) AS start_off,
-             unnest(range(CAST(start_off // {SEQ_TOKENS} AS BIGINT),
-                          CAST((start_off + n_tokens - 1) // {SEQ_TOKENS}
-                               + 1 AS BIGINT)))
-               AS seq_idx
-      FROM pre WHERE n_tokens > 0)
-    SELECT seq_idx, doc_id,
-           CAST(greatest(seq_idx * {SEQ_TOKENS} - start_off, 0) AS BIGINT)
-             AS slice_start,
-           CAST(least((seq_idx + 1) * {SEQ_TOKENS}, start_off + n_tokens)
-             - greatest(seq_idx * {SEQ_TOKENS}, start_off) AS BIGINT)
-             AS slice_len
-    FROM spans
-    """,
-)
+@register("q_pack_rows", oracle=pack_rows_oracle_sql(_TOKENS_SQL))
 def q_pack_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    b = SEQ_TOKENS
-    return (
-        _pack_docs(spark, sf_dir).where(F.col("n_tokens") > 0)
-        .withColumn("_seqs", F.sequence(
-            F.expr(f"start_off div {b}"),
-            F.expr(f"(start_off + n_tokens - 1) div {b}")))
-        .select("doc_id", "n_tokens", "start_off",
-                F.explode_outer("_seqs").alias("seq_idx"))
-        .where(F.col("seq_idx").isNotNull())
-        .select(
-            "seq_idx", "doc_id",
-            F.greatest(F.expr(f"seq_idx * {b} - start_off"),
-                       F.lit(0).cast("bigint")).alias("slice_start"),
-            (F.least(F.expr(f"(seq_idx + 1) * {b}"),
-                     F.col("start_off") + F.col("n_tokens"))
-             - F.greatest(F.expr(f"seq_idx * {b}"), F.col("start_off")))
-            .cast("bigint").alias("slice_len"),
-        )
-    )
+    return pack_rows(_pack_docs(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1598,12 +1254,13 @@ def q_pack_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shuffle on the canonical key (the same hash-groupBy shape as
 # q_dedup_exact).
 # ---------------------------------------------------------------------------
-_URL_DUP_SQL = """
+# one template, formatted per dialect: DuckDB `//` == Spark `div` on bigints
+_URL_DUP_CASES = """
 CASE CAST(doc_id % 4 AS INT)
-  WHEN 0 THEN 'https://news.example/story/' || (doc_id // 4)
-  WHEN 1 THEN 'HTTPS://News.Example/story/' || (doc_id // 4) || '/'
-  WHEN 2 THEN 'https://news.example/story/' || (doc_id // 4) || '?utm_source=feed'
-  ELSE 'https://news.example/story/' || (doc_id // 4) || '#top'
+  WHEN 0 THEN 'https://news.example/story/' || (doc_id {div} 4)
+  WHEN 1 THEN 'HTTPS://News.Example/story/' || (doc_id {div} 4) || '/'
+  WHEN 2 THEN 'https://news.example/story/' || (doc_id {div} 4) || '?utm_source=feed'
+  ELSE 'https://news.example/story/' || (doc_id {div} 4) || '#top'
 END
 """
 
@@ -1611,18 +1268,10 @@ END
 @register(
     "q_url_dedup",
     oracle=f"""
-    WITH urls AS (SELECT doc_id, {_URL_DUP_SQL} AS url FROM documents),
-    parts AS (
-      SELECT doc_id,
-        lower(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)) AS host,
-        regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]+(/[^?#]*)?', 1) AS path,
-        lower(regexp_extract(url, '^([a-zA-Z][a-zA-Z0-9+.-]*)://', 1)) AS scheme
-      FROM urls),
-    canon AS (
-      SELECT doc_id, scheme || '://' || host ||
-        CASE WHEN regexp_replace(path, '/+$', '') = '' THEN '/'
-             ELSE regexp_replace(path, '/+$', '') END AS canonical
-      FROM parts)
+    WITH canon AS (
+      SELECT doc_id, {canonical_url_sql(_URL_DUP_CASES.format(div='//'))}
+               AS canonical
+      FROM documents)
     SELECT doc_id, canonical,
            MIN(doc_id) OVER (PARTITION BY canonical) AS rep_id,
            doc_id <> MIN(doc_id) OVER (PARTITION BY canonical) AS is_dup
@@ -1630,19 +1279,10 @@ END
     """,
 )
 def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pii_redactor_spark.functions.url_rules import canonical_url
-    # Spark twin of _URL_DUP_SQL (DuckDB `//` == Spark `div` on bigints)
-    spark_case = """
-    CASE CAST(doc_id % 4 AS INT)
-      WHEN 0 THEN 'https://news.example/story/' || (doc_id div 4)
-      WHEN 1 THEN 'HTTPS://News.Example/story/' || (doc_id div 4) || '/'
-      WHEN 2 THEN 'https://news.example/story/' || (doc_id div 4) || '?utm_source=feed'
-      ELSE 'https://news.example/story/' || (doc_id div 4) || '#top'
-    END
-    """
     canon = (
         _t(spark, sf_dir, "documents")
-        .select("doc_id", F.expr(spark_case).alias("url"))
+        .select("doc_id", F.expr(_URL_DUP_CASES.format(div="div"))
+                .alias("url"))
         .select("doc_id", canonical_url("url").alias("canonical"))
     )
     reps = canon.groupBy("canonical").agg(F.min("doc_id").alias("rep_id"))
@@ -1720,14 +1360,8 @@ _BPE_FROZEN: dict[int, list[tuple[str, str]]] = {
               ("u", "p"), ("par", "k")],
 }
 
-_BPE_ORACLE = "\nUNION ALL\n".join(
-    f"""SELECT * FROM ({_bpe.bpe_oracle_sql(merges)})
-    WHERE (SELECT sum(n_chars) FROM documents) = {chk}"""
-    for chk, merges in _BPE_FROZEN.items()
-)
-
-
-@register("q_bpe", oracle=_BPE_ORACLE)
+@register("q_bpe", oracle=_per_corpus({
+    chk: _bpe.bpe_oracle_sql(merges) for chk, merges in _BPE_FROZEN.items()}))
 def q_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     merges = _bpe.fit_bpe_merges(_bpe.bpe_word_counts(docs))
@@ -1743,32 +1377,10 @@ def q_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # window-prefix CTE. Fitted merges ship via kernels/artifacts.py
 # save_bpe/load_bpe (round-trip tested).
 # ---------------------------------------------------------------------------
-def _pack_bpe_oracle_one(merges: list[tuple[str, str]]) -> str:
-    return f"""
-WITH b AS ({_bpe.bpe_oracle_sql(merges)}),
-pre AS (
-  SELECT doc_id, n_bpe_tokens AS n_tokens,
-         COALESCE(SUM(n_bpe_tokens) OVER (ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           AS start_off
-  FROM b)
-SELECT doc_id, n_tokens, CAST(start_off AS BIGINT) AS start_off,
-       CAST(start_off // {SEQ_TOKENS} AS BIGINT) AS seq_idx,
-       CAST(CASE WHEN n_tokens > 0 THEN
-         (start_off + n_tokens - 1) // {SEQ_TOKENS}
-           - start_off // {SEQ_TOKENS} + 1
-       ELSE 0 END AS BIGINT) AS n_seqs
-FROM pre"""
-
-
-_PACK_BPE_ORACLE = "\nUNION ALL\n".join(
-    f"""SELECT * FROM ({_pack_bpe_oracle_one(merges)})
-    WHERE (SELECT sum(n_chars) FROM documents) = {chk}"""
-    for chk, merges in _BPE_FROZEN.items()
-)
-
-
-@register("q_pack_bpe", oracle=_PACK_BPE_ORACLE)
+@register("q_pack_bpe", oracle=_per_corpus({
+    chk: pack_oracle_sql(f"SELECT doc_id, n_bpe_tokens AS n_tokens "
+                         f"FROM ({_bpe.bpe_oracle_sql(merges)})")
+    for chk, merges in _BPE_FROZEN.items()}))
 def q_pack_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     merges = _bpe.fit_bpe_merges(_bpe.bpe_word_counts(docs))
@@ -1818,13 +1430,11 @@ def q_ann_mlp(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_datacard",
     oracle=f"""
-    WITH q AS (
-      SELECT doc_id, {_RULES_KEEP_SQL} AS keep
-      FROM ({_QUALITY_BASE_SQL})),
+    WITH q AS (SELECT doc_id, {_KEEP_SQL} AS keep
+               FROM ({quality_stats_sql()})),
     clf AS ({_qclf.quality_clf_oracle_sql()}),
     toks AS (
-      SELECT doc_id, source, lang,
-             len(regexp_extract_all(text, '{BPE_RE}')) AS n_tokens
+      SELECT doc_id, source, lang, {regex_token_count_sql('text')} AS n_tokens
       FROM documents)
     SELECT t.source, t.lang,
            COUNT(*) AS n_docs,
@@ -1912,9 +1522,6 @@ def q_span_para(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pins what the streaming operators compute. test_streaming also
 # asserts stream output == replay on an ordered drop.
 # ---------------------------------------------------------------------------
-from pii_redactor_spark.operators import clustering as _km2  # noqa: E402
-
-
 @register("q_neardup_stream_twin",
           oracle=_dd.neardup_stream_oracle_sql())
 def q_neardup_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1922,9 +1529,9 @@ def q_neardup_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register("q_semdedup_stream_twin",
-          oracle=_km2.semdedup_stream_oracle_sql())
+          oracle=_km.semdedup_stream_oracle_sql())
 def q_semdedup_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _km2.semdedup_stream_replay(_t(spark, sf_dir, "embeddings"))
+    return _km.semdedup_stream_replay(_t(spark, sf_dir, "embeddings"))
 
 
 # ---------------------------------------------------------------------------

@@ -14,7 +14,9 @@ test documents and exposed as parameters.
 
 from __future__ import annotations
 
+import operator
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -26,6 +28,8 @@ STOPWORDS = [
     "the", "be", "to", "of", "and", "a", "in", "that", "have", "i",
     "it", "for", "not", "on", "with", "he", "as", "you", "do", "at",
 ]
+SYMBOLS = "#…"       # Gopher's symbol characters, counted per word
+ALPHA_RE = "[A-Za-z]"  # a word holding a match counts as alphabetic
 
 
 @dataclass(frozen=True)
@@ -118,7 +122,7 @@ def quality_columns(
         F.lit(1.0)
         - F.size(F.array_distinct(fivegrams)).cast("double") / sz5)
     n_lines = F.greatest(F.size(lines), F.lit(1))
-    alpha_words = F.size(F.filter(words, lambda w: w.rlike("[A-Za-z]")))
+    alpha_words = F.size(F.filter(words, lambda w: w.rlike(ALPHA_RE)))
     return {
         "n_words": n_words,
         "mean_word_len": F.when(
@@ -131,7 +135,7 @@ def quality_columns(
         ).otherwise(F.lit(0.0)),
         "symbol_word_ratio": F.when(
             n_words > 0,
-            (F.length(t) - F.length(F.translate(t, "#…", ""))).cast("double") / n_words,
+            (F.length(t) - F.length(F.translate(t, SYMBOLS, ""))).cast("double") / n_words,
         ).otherwise(F.lit(0.0)),
         "alpha_word_ratio": F.when(
             n_words > 0, alpha_words.cast("double") / n_words
@@ -193,6 +197,51 @@ def toxicity_hit(text: Column | str, toxicity_words: list[str]) -> Column:
     )) > 0
 
 
+def toxicity_hit_sql(text: str, toxicity_words: list[str]) -> str:
+    """DuckDB twin of ``toxicity_hit``."""
+    if not toxicity_words:
+        return "false"
+    lst = ", ".join(f"'{w.lower()}'" for w in toxicity_words)
+    words = text_hash.WORDS_SQL.format(t=text)
+    return (f"(len(list_intersect(list_transform({words}, w -> lower(w)), "
+            f"[{lst}])) > 0)")
+
+
+# The Gopher keep decision, one row per bound: (reason, statistic, side,
+# QualityThresholds field). A "lo" bound fires below the field's value,
+# a "hi" bound above it; a reason with two rows fires on either. The
+# Spark gate, its SQL twin and fit_thresholds are all read off this table.
+RULES: tuple[tuple[str, str, str, str], ...] = (
+    ("too_few_words", "n_words", "lo", "min_words"),
+    ("too_many_words", "n_words", "hi", "max_words"),
+    ("mean_word_len_out_of_range", "mean_word_len", "lo", "min_mean_word_len"),
+    ("mean_word_len_out_of_range", "mean_word_len", "hi", "max_mean_word_len"),
+    ("symbol_ratio_high", "symbol_word_ratio", "hi", "max_symbol_word_ratio"),
+    ("alpha_ratio_low", "alpha_word_ratio", "lo", "min_alpha_word_ratio"),
+    ("stopword_ratio_low", "stopword_ratio", "lo", "min_stopword_ratio"),
+    ("dup_lines_high", "dup_line_ratio", "hi", "max_dup_line_ratio"),
+    ("repeated_bigram_high", "top_bigram_ratio", "hi", "max_top_bigram_ratio"),
+    ("repeated_trigram_high", "top_trigram_ratio", "hi", "max_top_trigram_ratio"),
+    ("repeated_quadgram_high", "top_quadgram_ratio", "hi", "max_top_quadgram_ratio"),
+    ("dup_5gram_high", "dup_5gram_ratio", "hi", "max_dup_5gram_ratio"),
+)
+RULE_STATS = tuple(dict.fromkeys(stat for _, stat, _, _ in RULES))
+
+
+def _rule_checks(th: QualityThresholds, bound, either, toxic) -> list:
+    """(reason, condition) per reason in RULES order: ``bound(stat, op,
+    value)`` builds one bound, ``either(conds)`` joins a reason's bounds,
+    ``toxic`` is the toxicity condition (appended when configured)."""
+    conds: dict[str, list] = {}
+    for reason, stat, side, field in RULES:
+        conds.setdefault(reason, []).append(
+            bound(stat, "<" if side == "lo" else ">", getattr(th, field)))
+    checks = [(r, either(cs)) for r, cs in conds.items()]
+    if th.toxicity_words:
+        checks.append(("toxicity", toxic))
+    return checks
+
+
 def keep_decision(th: QualityThresholds | None = None) -> tuple[Column, Column]:
     """(keep: boolean, reasons: array<string>) over the columns produced by
     ``quality_columns`` (+ ``is_toxic`` if toxicity is configured).
@@ -202,31 +251,28 @@ def keep_decision(th: QualityThresholds | None = None) -> tuple[Column, Column]:
     kept iff no rule fires; ``reasons`` lists the fired rules (the
     equivalent of the reference's feedback strings).
     """
-    th = th or QualityThresholds()
-    checks: list[tuple[str, Column]] = [
-        ("too_few_words", F.col("n_words") < th.min_words),
-        ("too_many_words", F.col("n_words") > th.max_words),
-        ("mean_word_len_out_of_range",
-         (F.col("mean_word_len") < th.min_mean_word_len)
-         | (F.col("mean_word_len") > th.max_mean_word_len)),
-        ("symbol_ratio_high", F.col("symbol_word_ratio") > th.max_symbol_word_ratio),
-        ("alpha_ratio_low", F.col("alpha_word_ratio") < th.min_alpha_word_ratio),
-        ("stopword_ratio_low", F.col("stopword_ratio") < th.min_stopword_ratio),
-        ("dup_lines_high", F.col("dup_line_ratio") > th.max_dup_line_ratio),
-        ("repeated_bigram_high",
-         F.col("top_bigram_ratio") > th.max_top_bigram_ratio),
-        ("repeated_trigram_high",
-         F.col("top_trigram_ratio") > th.max_top_trigram_ratio),
-        ("repeated_quadgram_high",
-         F.col("top_quadgram_ratio") > th.max_top_quadgram_ratio),
-        ("dup_5gram_high", F.col("dup_5gram_ratio") > th.max_dup_5gram_ratio),
-    ]
-    if th.toxicity_words:
-        checks.append(("toxicity", F.col("is_toxic")))
+    checks = _rule_checks(
+        th or QualityThresholds(),
+        lambda stat, op, v: F.col(stat) < v if op == "<" else F.col(stat) > v,
+        lambda cs: reduce(operator.or_, cs), F.col("is_toxic"))
     reasons = F.array_compact(F.array(*[
         F.when(cond, F.lit(name)) for name, cond in checks
     ]))
     return F.size(reasons) == 0, reasons
+
+
+def rule_reasons_sql(th: QualityThresholds | None = None
+                     ) -> tuple[str, str, str]:
+    """DuckDB twin of ``keep_decision`` over ``quality_stats_sql``'s
+    columns: (reasons list in rule order, keep, n_reasons INT)."""
+    checks = _rule_checks(th or QualityThresholds(),
+                          lambda stat, op, v: f"{stat} {op} {v!r}",
+                          " OR ".join, "is_toxic")
+    reasons = ("list_filter(["
+               + ", ".join(f"CASE WHEN {cond} THEN '{name}' END"
+                           for name, cond in checks)
+               + "], x -> x IS NOT NULL)")
+    return reasons, f"(len({reasons}) = 0)", f"CAST(len({reasons}) AS INT)"
 
 
 def attach_quality_stats(df: DataFrame, text_col: str = "text",
@@ -263,15 +309,93 @@ def attach_quality_stats(df: DataFrame, text_col: str = "text",
         "_words", "_lines", "_whashes", "_bigrams", "_abd")
 
 
-def with_quality(df: DataFrame, text_col: str = "text",
-                 th: QualityThresholds | None = None) -> DataFrame:
-    """Attach rule stats + keep/reasons to a corpus DataFrame."""
+def with_rule_stats(df: DataFrame, text_col: str = "text",
+                    th: QualityThresholds | None = None) -> DataFrame:
+    """``attach_quality_stats`` plus the ``is_toxic`` flag when ``th``
+    lists toxicity words: every column ``keep_decision`` reads."""
     th = th or QualityThresholds()
     df = attach_quality_stats(df, text_col, th)
     if th.toxicity_words:
         df = df.withColumn("is_toxic", toxicity_hit(text_col, list(th.toxicity_words)))
+    return df
+
+
+def with_quality(df: DataFrame, text_col: str = "text",
+                 th: QualityThresholds | None = None) -> DataFrame:
+    """Attach rule stats + keep/reasons to a corpus DataFrame."""
     keep, reasons = keep_decision(th)
-    return df.withColumn("keep", keep).withColumn("reasons", reasons)
+    return (with_rule_stats(df, text_col, th)
+            .withColumn("keep", keep).withColumn("reasons", reasons))
+
+
+def quality_stats_sql(table: str = "documents", text_col: str = "text",
+                      th: QualityThresholds | None = None) -> str:
+    """DuckDB twin of ``with_rule_stats``: every column of ``table`` plus
+    the statistics of ``quality_columns`` (and ``is_toxic`` when ``th``
+    lists toxicity words). The n-gram arrays are the hashed word n-grams
+    of functions/text_hash.py, so the ratios are bit-identical in both
+    engines; the all-bigrams-distinct shortcut mirrors the Spark branch
+    structure so results stay equal even under 60-bit hash collisions."""
+    th = th or QualityThresholds()
+    stopwords = "[" + ",".join(f"'{w}'" for w in STOPWORDS) + "]"
+    toxic = (f", {toxicity_hit_sql(text_col, list(th.toxicity_words))}"
+             " AS is_toxic" if th.toxicity_words else "")
+
+    symbols = " + ".join(
+        f"(length({text_col}) - length(replace({text_col}, '{c}', '')))"
+        for c in SYMBOLS)
+
+    def per_word(count: str) -> str:
+        return (f"CASE WHEN len(_words) > 0 THEN CAST({count} AS DOUBLE) "
+                f"/ len(_words) ELSE 0.0 END")
+
+    def top(n: int, grams: str) -> str:
+        sz = f"GREATEST(len(_words) - {n - 1}, 0)"
+        return f"""CASE WHEN {sz} > 0 THEN
+      (CASE WHEN len(list_distinct(_bigrams)) = len(_bigrams) THEN 1.0 ELSE
+        CAST(list_max(list_transform(
+               list_distinct({grams}),
+               b -> len(list_filter({grams}, x -> x = b)))) AS DOUBLE) END)
+        / ({sz})
+      ELSE 0.0 END"""
+
+    grams = ", ".join(
+        f"{text_hash.hashed_ngrams_sql('_whashes', n)} AS _{name}"
+        for n, name in ((2, "bigrams"), (3, "trigrams"), (4, "quadgrams"),
+                        (5, "fivegrams")))
+    return f"""
+WITH base AS (
+  SELECT *, {text_hash.word_hashes_sql('_words')} AS _whashes
+  FROM (SELECT *,
+          {text_hash.WORDS_SQL.format(t=text_col)} AS _words,
+          list_filter(string_split({text_col}, chr(10)),
+                      l -> trim(l) <> '') AS _lines
+        FROM {table})),
+grams AS (SELECT *, {grams} FROM base)
+SELECT * EXCLUDE (_words, _lines, _whashes, _bigrams, _trigrams,
+                  _quadgrams, _fivegrams),
+    len(_words) AS n_words,
+    {per_word("list_sum(list_transform(_words, w -> length(w)))")}
+      AS mean_word_len,
+    {per_word(f"len(list_filter(_words, w -> list_contains({stopwords}, lower(w))))")}
+      AS stopword_ratio,
+    {per_word(symbols)} AS symbol_word_ratio,
+    {per_word(f"len(list_filter(_words, w -> regexp_matches(w, '{ALPHA_RE}')))")}
+      AS alpha_word_ratio,
+    CASE WHEN _lines IS NOT NULL
+         THEN CAST(COALESCE(list_sum(list_transform(_lines, l -> length(l))), 0) AS DOUBLE)
+              / GREATEST(len(_lines), 1) END AS mean_line_len,
+    1.0 - CAST(len(list_distinct(_lines)) AS DOUBLE) / GREATEST(len(_lines), 1) AS dup_line_ratio,
+    {top(2, '_bigrams')} AS top_bigram_ratio,
+    {top(3, '_trigrams')} AS top_trigram_ratio,
+    {top(4, '_quadgrams')} AS top_quadgram_ratio,
+    CASE WHEN len(list_distinct(_bigrams)) = len(_bigrams)
+              OR GREATEST(len(_words) - 4, 0) = 0 THEN 0.0 ELSE
+      1.0 - CAST(len(list_distinct(_fivegrams)) AS DOUBLE)
+            / (len(_words) - 4)
+      END AS dup_5gram_ratio{toxic}
+FROM grams
+"""
 
 
 # --------------------------------------------------------------------------

@@ -23,7 +23,7 @@ module spells them out:
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 NGRAM_ROT_STEP = 7  # per-position rotation makes the xor order-sensitive
@@ -129,3 +129,26 @@ def hashed_ngrams_sql(whashes: str, n: int) -> str:
     return (f"CASE WHEN len({whashes}) >= {n} THEN "
             f"list_transform(range(len({whashes}) - {n} + 1), i -> {expr}) "
             f"WHEN {whashes} IS NOT NULL THEN CAST([] AS BIGINT[]) END")
+
+
+def distinct_ngrams(df: DataFrame, text_col: str, n: int) -> DataFrame:
+    """``df`` plus ``_g``: the DISTINCT hashed word ``n``-grams of
+    ``text_col`` (decontamination and span dedup compare gram sets). The
+    words and word hashes are materialized in their own projections:
+    ``hashed_ngrams_col`` reads the hashes once per gram position."""
+    return (
+        df.withColumn("_w", words(F.col(text_col)))
+        .withColumn("_wh", word_hashes_col(F.col("_w")))
+        .withColumn("_g", F.array_distinct(
+            hashed_ngrams_col(F.col("_wh"), n)))
+        .drop("_w", "_wh")
+    )
+
+
+def distinct_ngrams_sql(table: str, text_col: str, n: int) -> str:
+    """DuckDB twin of ``distinct_ngrams``: every column of ``table``
+    plus ``_g``."""
+    return f"""SELECT * EXCLUDE (_wh),
+       list_distinct({hashed_ngrams_sql('_wh', n)}) AS _g
+FROM (SELECT * EXCLUDE (_w), {word_hashes_sql('_w')} AS _wh
+      FROM (SELECT *, {WORDS_SQL.format(t=text_col)} AS _w FROM {table}))"""

@@ -31,15 +31,6 @@ from pii_redactor_spark.functions import text_hash
 DECONTAM_N = 8  # GPT-3 used 13-grams; 8 suits the short synthetic docs
 
 
-def _distinct_grams(df: DataFrame, text_col: str, n: int) -> DataFrame:
-    return (
-        df.withColumn("_w", text_hash.words(F.col(text_col)))
-        .withColumn("_wh", text_hash.word_hashes_col(F.col("_w")))
-        .withColumn("_g", F.array_distinct(
-            text_hash.hashed_ngrams_col(F.col("_wh"), n)))
-    )
-
-
 def contamination(corpus: DataFrame, benchmark: DataFrame,
                   n: int = DECONTAM_N, min_shared: int = 1,
                   text_col: str = "text", id_col: str = "doc_id",
@@ -64,12 +55,12 @@ def contamination(corpus: DataFrame, benchmark: DataFrame,
     # the rule skips outer generates, and the null filter on the OUTPUT
     # column is equivalent and cheap)
     bench_grams = (
-        _distinct_grams(benchmark, bench_text_col, n)
+        text_hash.distinct_ngrams(benchmark, bench_text_col, n)
         .select(F.explode_outer("_g").alias("g"))
         .where(F.col("g").isNotNull()).distinct()
     )
     corpus_grams = (
-        _distinct_grams(corpus, text_col, n)
+        text_hash.distinct_ngrams(corpus, text_col, n)
         .select(id_col, F.explode_outer("_g").alias("g"))
         .where(F.col("g").isNotNull())
     )
@@ -85,3 +76,25 @@ def contamination(corpus: DataFrame, benchmark: DataFrame,
         .withColumn("contaminated",
                     F.col("shared_ngrams") >= F.lit(min_shared))
     )
+
+
+def contamination_sql(corpus: str, benchmark: str, n: int = DECONTAM_N,
+                      min_shared: int = 1, text_col: str = "text",
+                      id_col: str = "doc_id",
+                      bench_text_col: str = "text") -> str:
+    """DuckDB twin of ``contamination`` over the tables (or parenthesized
+    queries) ``corpus`` and ``benchmark``."""
+    grams = text_hash.distinct_ngrams_sql
+    return f"""
+WITH bg AS (SELECT DISTINCT g FROM
+              (SELECT unnest(_g) AS g
+               FROM ({grams(benchmark, bench_text_col, n)}))),
+cg AS (SELECT {id_col}, unnest(_g) AS g
+       FROM ({grams(corpus, text_col, n)})),
+hits AS (SELECT c.{id_col}, COUNT(DISTINCT c.g) AS shared_ngrams
+         FROM cg c JOIN bg b ON c.g = b.g GROUP BY c.{id_col})
+SELECT d.*,
+       COALESCE(h.shared_ngrams, 0) AS shared_ngrams,
+       COALESCE(h.shared_ngrams, 0) >= {min_shared} AS contaminated
+FROM {corpus} d LEFT JOIN hits h ON d.{id_col} = h.{id_col}
+"""

@@ -485,11 +485,7 @@ def span_dup_stats(docs: DataFrame, n: int = SPAN_N,
     actually distributes."""
     from pii_redactor_spark.operators.cache import registered_persist
     grams = registered_persist(
-        docs
-        .withColumn("_w", text_hash.words(F.col(text_col)))
-        .withColumn("_wh", text_hash.word_hashes_col(F.col("_w")))
-        .withColumn("_g", F.array_distinct(
-            text_hash.hashed_ngrams_col(F.col("_wh"), n)))
+        text_hash.distinct_ngrams(docs, text_col, n)
         .select(id_col, F.explode_outer("_g").alias("g"))
         .where(F.col("g").isNotNull())
     )
@@ -514,6 +510,28 @@ def span_dup_stats(docs: DataFrame, n: int = SPAN_N,
                    "ELSE 0 END").cast("bigint").alias("dup_ppm"),
         )
     )
+
+
+def span_dup_stats_oracle_sql(table: str = "documents", n: int = SPAN_N,
+                              text_col: str = "text",
+                              id_col: str = "doc_id") -> str:
+    """DuckDB twin of ``span_dup_stats``."""
+    return f"""
+WITH grams AS (SELECT {id_col}, unnest(_g) AS g
+               FROM ({text_hash.distinct_ngrams_sql(table, text_col, n)})),
+dup AS (SELECT g FROM grams GROUP BY g HAVING COUNT(*) >= 2),
+per AS (
+  SELECT grams.{id_col}, COUNT(*) AS n_grams, COUNT(dup.g) AS n_dup_grams
+  FROM grams LEFT JOIN dup ON grams.g = dup.g
+  GROUP BY grams.{id_col})
+SELECT d.{id_col},
+       CAST(COALESCE(per.n_grams, 0) AS INT) AS n_grams,
+       CAST(COALESCE(per.n_dup_grams, 0) AS INT) AS n_dup_grams,
+       CAST(CASE WHEN COALESCE(per.n_grams, 0) > 0
+            THEN CAST(per.n_dup_grams AS BIGINT) * 1000000 // per.n_grams
+            ELSE 0 END AS BIGINT) AS dup_ppm
+FROM {table} d LEFT JOIN per ON d.{id_col} = per.{id_col}
+"""
 
 
 _SPAN_POS_LIM = 1 << 20  # occurrence key = doc_id * LIM + position
@@ -617,6 +635,61 @@ def span_dedup_rewrite(docs: DataFrame, n: int = SPAN_N,
         F.when(F.col("_w").isNotNull(), F.length("_clean"))
         .cast("int").alias("cleaned_len"),
     )
+
+
+def span_dedup_rewrite_oracle_sql(table: str = "documents",
+                                  n: int = SPAN_N, text_col: str = "text",
+                                  id_col: str = "doc_id") -> str:
+    """DuckDB twin of ``span_dedup_rewrite``: first owners from the same
+    BIGINT occurrence keys, the text rebuilt with the same positional
+    logic (lockstep unnest keeps the gram stream linear)."""
+    lim = _SPAN_POS_LIM
+    return f"""
+WITH base AS (
+  SELECT {id_col}, words,
+         {text_hash.word_hashes_sql('words')} AS whashes
+  FROM (SELECT {id_col}, {text_hash.WORDS_SQL.format(t=text_col)} AS words
+        FROM {table})),
+grams AS (SELECT {id_col}, {text_hash.hashed_ngrams_sql('whashes', n)} AS gs
+          FROM base),
+occ AS (
+  SELECT {id_col},
+         CAST(unnest(range(len(gs))) AS BIGINT) AS pos,
+         unnest(gs) AS g
+  FROM grams),
+owners AS (
+  SELECT g, MIN({id_col} * {lim} + pos) AS mn, COUNT(*) AS n
+  FROM occ GROUP BY g),
+dup AS (
+  SELECT o.{id_col}, o.pos FROM occ o JOIN owners w ON o.g = w.g
+  WHERE w.n >= 2 AND o.{id_col} * {lim} + o.pos <> w.mn),
+cov AS (SELECT {id_col}, list(pos) AS poss FROM dup GROUP BY {id_col}),
+rw AS (
+  SELECT b.{id_col}, b.words,
+    CASE WHEN b.words IS NULL THEN NULL ELSE
+      list_transform(range(len(b.words)), i ->
+        CASE WHEN len(list_filter(
+                 COALESCE(c.poss, CAST([] AS BIGINT[])),
+                 p -> p <= i AND i <= p + {n - 1})) > 0
+             THEN NULL ELSE b.words[CAST(i + 1 AS INT)] END)
+    END AS kept
+  FROM base b LEFT JOIN cov c ON b.{id_col} = c.{id_col}),
+fin AS (
+  -- DuckDB array_to_string([]) is NULL while Spark array_join([])
+  -- is '' — coalesce ONLY the non-null-kept (fully-removed) case
+  SELECT {id_col}, words, kept,
+         CASE WHEN kept IS NULL THEN NULL
+              ELSE COALESCE(array_to_string(
+                     list_filter(kept, x -> x IS NOT NULL), ' '), '')
+         END AS clean
+  FROM rw)
+SELECT {id_col},
+       CAST(len(words) AS INT) AS n_words,
+       CAST(len(list_filter(kept, x -> x IS NULL)) AS INT) AS n_removed,
+       md5(clean) AS cleaned_hash,
+       CAST(length(clean) AS INT) AS cleaned_len
+FROM fin
+"""
 
 
 def make_simhash_udf():
@@ -1066,18 +1139,12 @@ def dedup_against(new_docs: DataFrame, old_docs: DataFrame,
     map-side combines, output bounded by distinct-key count, NEVER a
     broadcast of the corpus. The NEW side joins co-partitioned on the
     same keys (AQE skew-join splits a viral page's hot hash or band).
-    Nothing here recomputes the old corpus' signatures when they are
-    already materialized — pass the stored band table through
-    ``minhash_bands`` interface parity (same schema) to skip the
-    recompute in a real pipeline.
-
     The within-corpus twin is ``exact_dedup``/``dedup_components``;
-    this is the append-mode building block the incremental build's
-    recompute-by-semantics dedup stage can swap to when the old side's
-    survivors are already committed.
+    this is the building block of the incremental build's
+    ``dedup_mode="append"`` dedup stage.
 
     ``old_hashes`` / ``old_bands`` — pre-materialized old-side key
-    tables (``doc_hashes(new_docs)`` / ``minhash_bands`` schemas: a
+    tables (``doc_hashes(old_docs)`` / ``minhash_bands`` schemas: a
     ``_h`` column; ``(band_idx, band_hash, id)`` rows). When an
     incremental pipeline stores these per increment (the build's
     append-mode dedup does), each new drop costs signature work over

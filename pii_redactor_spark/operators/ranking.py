@@ -293,6 +293,11 @@ def regex_token_count(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(BPE_RE), 0))
 
 
+def regex_token_count_sql(text: str) -> str:
+    """DuckDB twin of ``regex_token_count``."""
+    return f"len(regexp_extract_all({text}, '{BPE_RE}'))"
+
+
 def pack(toks: DataFrame, n_rows: int | None = None) -> DataFrame:
     """(doc_id, n_tokens, start_off, seq_idx, n_seqs) from (doc_id,
     n_tokens): ``start_off`` is the document's offset in the doc_id-ordered
@@ -313,3 +318,67 @@ def pack(toks: DataFrame, n_rows: int | None = None) -> DataFrame:
                - F.expr(f"start_off div {b}") + F.lit(1))
         .otherwise(F.lit(0)).cast("bigint").alias("n_seqs"),
     )
+
+
+def pack_oracle_sql(tokens_sql: str) -> str:
+    """DuckDB twin of ``pack`` over the query ``tokens_sql`` giving
+    (doc_id, n_tokens): the prefix sum is the single-window form."""
+    b = SEQ_TOKENS
+    return f"""
+WITH pre AS (
+  SELECT doc_id, n_tokens,
+         COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+           AS start_off
+  FROM ({tokens_sql}))
+SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
+       CAST(start_off AS BIGINT) AS start_off,
+       CAST(start_off // {b} AS BIGINT) AS seq_idx,
+       CAST(CASE WHEN n_tokens > 0 THEN
+         (start_off + n_tokens - 1) // {b} - start_off // {b} + 1
+       ELSE 0 END AS BIGINT) AS n_seqs
+FROM pre"""
+
+
+def pack_rows(packed: DataFrame) -> DataFrame:
+    """The writer rows of ``pack``'s output: one (seq_idx, doc_id,
+    slice_start, slice_len) row per sequence a document spans, the slice
+    offsets within the document's token stream. A bounded generate
+    (explode_outer + null filter, per the InferFiltersFromGenerate rule)
+    and integer arithmetic; every sequence but the last holds exactly
+    SEQ_TOKENS tokens."""
+    b = SEQ_TOKENS
+    return (
+        packed.where(F.col("n_tokens") > 0)
+        .withColumn("_seqs", F.sequence(
+            F.expr(f"start_off div {b}"),
+            F.expr(f"(start_off + n_tokens - 1) div {b}")))
+        .select("doc_id", "n_tokens", "start_off",
+                F.explode_outer("_seqs").alias("seq_idx"))
+        .where(F.col("seq_idx").isNotNull())
+        .select(
+            "seq_idx", "doc_id",
+            F.greatest(F.expr(f"seq_idx * {b} - start_off"),
+                       F.lit(0).cast("bigint")).alias("slice_start"),
+            (F.least(F.expr(f"(seq_idx + 1) * {b}"),
+                     F.col("start_off") + F.col("n_tokens"))
+             - F.greatest(F.expr(f"seq_idx * {b}"), F.col("start_off")))
+            .cast("bigint").alias("slice_len"),
+        )
+    )
+
+
+def pack_rows_oracle_sql(tokens_sql: str) -> str:
+    """DuckDB twin of ``pack_rows(pack(toks))`` over the query
+    ``tokens_sql`` giving (doc_id, n_tokens)."""
+    b = SEQ_TOKENS
+    return f"""
+WITH spans AS (
+  SELECT p.doc_id, p.n_tokens, p.start_off,
+         unnest(range(p.seq_idx, p.seq_idx + p.n_seqs)) AS seq_idx
+  FROM ({pack_oracle_sql(tokens_sql)}) p WHERE p.n_tokens > 0)
+SELECT seq_idx, doc_id,
+       CAST(greatest(seq_idx * {b} - start_off, 0) AS BIGINT) AS slice_start,
+       CAST(least((seq_idx + 1) * {b}, start_off + n_tokens)
+         - greatest(seq_idx * {b}, start_off) AS BIGINT) AS slice_len
+FROM spans"""

@@ -33,8 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pii_redactor_spark.functions import text_hash
-
-HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)"
+from pii_redactor_spark.functions.url_rules import host_of, host_sql
 
 CAP_SALT_K = 16  # phase-1 fan-out; hot-partition bound = k * max_per_host
 
@@ -63,7 +62,7 @@ def cap_per_host(df: DataFrame, url_col: str = "url",
     Pass ``tiebreak_col`` (e.g. a unique doc id) whenever ``url_col``
     can repeat within a host (round-2 advice); with unique urls the
     default ordering is already total."""
-    host = F.lower(F.regexp_extract(F.col(url_col), HOST_RE, 1))
+    host = host_of(url_col)
     order = ["priority", url_col] + (
         [tiebreak_col] if tiebreak_col is not None else [])
     w1 = Window.partitionBy("host", "_salt").orderBy(*order)
@@ -81,9 +80,15 @@ def cap_per_host(df: DataFrame, url_col: str = "url",
     )
 
 
+SPLIT_SALT = "split:"
+SPLIT_TRAIN_PCT = 80
+SPLIT_VAL_PCT = 10
+
+
 def hash_split(df: DataFrame, id_col: str = "doc_id",
-               salt: str = "split:",
-               train_pct: int = 80, val_pct: int = 10,
+               salt: str = SPLIT_SALT,
+               train_pct: int = SPLIT_TRAIN_PCT,
+               val_pct: int = SPLIT_VAL_PCT,
                part_col: str = "part") -> DataFrame:
     """Deterministic train/val/test split by id-hash percentile — the
     standard NON-positional corpus splitter (contrast O30's positional
@@ -98,6 +103,21 @@ def hash_split(df: DataFrame, id_col: str = "doc_id",
         F.when(h < train_pct, F.lit("train"))
          .when(h < train_pct + val_pct, F.lit("val"))
          .otherwise(F.lit("test")))
+
+
+def hash_split_sql(table: str, id_col: str = "doc_id",
+                   salt: str = SPLIT_SALT,
+                   train_pct: int = SPLIT_TRAIN_PCT,
+                   val_pct: int = SPLIT_VAL_PCT,
+                   part_col: str = "part") -> str:
+    """DuckDB twin of ``hash_split``: every column of ``table`` plus
+    ``part_col``."""
+    h = text_hash.md5_int_sql(f"'{salt}' || {id_col}", 8) + " % 100"
+    return f"""SELECT *,
+  CASE WHEN {h} < {train_pct} THEN 'train'
+       WHEN {h} < {train_pct + val_pct} THEN 'val'
+       ELSE 'test' END AS {part_col}
+FROM {table}"""
 
 
 MIX_RES = 1_000_000  # fractional-keep resolution (md5-percentile grid)
@@ -189,11 +209,9 @@ def cap_per_host_oracle_sql(urls_cte: str, max_per_host: int = 100,
     return f"""
 WITH urls AS ({urls_cte}),
 ranked AS (
-  SELECT doc_id, url,
-         lower(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1)) AS host,
-         ROW_NUMBER() OVER (
-           PARTITION BY lower(regexp_extract(url, '^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)', 1))
-           ORDER BY {fold}, url{tb}) AS host_rank
-  FROM urls)
+  SELECT doc_id, url, host,
+         ROW_NUMBER() OVER (PARTITION BY host ORDER BY {fold}, url{tb})
+           AS host_rank
+  FROM (SELECT doc_id, url, {host_sql('url')} AS host FROM urls))
 SELECT doc_id, url, host FROM ranked WHERE host_rank <= {max_per_host}
 """

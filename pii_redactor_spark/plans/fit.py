@@ -22,38 +22,30 @@ from dataclasses import asdict
 from pyspark.sql import DataFrame, SparkSession
 
 from pii_redactor_spark.functions.rules import (
-    QualityThresholds, attach_quality_stats)
+    RULE_STATS, RULES, QualityThresholds, attach_quality_stats)
 from pii_redactor_spark.kernels import artifacts as _art
-
-STAT_COLS = ("n_words", "mean_word_len", "symbol_word_ratio",
-             "alpha_word_ratio", "stopword_ratio", "dup_line_ratio",
-             "top_bigram_ratio", "top_trigram_ratio",
-             "top_quadgram_ratio", "dup_5gram_ratio")
 
 
 def fit_thresholds(docs: DataFrame, text_col: str = "text",
                    lo: float = 0.005, hi: float = 0.995) -> QualityThresholds:
     """Derive rule thresholds from the validation slice's stat quantiles:
-    lower-bounded rules get the ``lo`` quantile, upper-bounded rules the
-    ``hi`` quantile (≈99% of validation docs pass each rule). One stats
-    job; quantiles exact (relativeError=0)."""
+    each lower bound in ``rules.RULES`` gets its statistic's ``lo``
+    quantile, each upper bound the ``hi`` quantile (≈99% of validation
+    docs pass each rule). Integer fields truncate (an upper one is at
+    least 1), the others round to 4 places. One stats job; quantiles
+    exact (relativeError=0)."""
     stats = attach_quality_stats(docs, text_col)
-    q = dict(zip(STAT_COLS, stats.stat.approxQuantile(
-        list(STAT_COLS), [lo, hi], 0.0)))
-    return QualityThresholds(
-        min_words=int(q["n_words"][0]),
-        max_words=max(int(q["n_words"][1]), 1),
-        min_mean_word_len=round(q["mean_word_len"][0], 4),
-        max_mean_word_len=round(q["mean_word_len"][1], 4),
-        max_symbol_word_ratio=round(q["symbol_word_ratio"][1], 4),
-        min_alpha_word_ratio=round(q["alpha_word_ratio"][0], 4),
-        min_stopword_ratio=round(q["stopword_ratio"][0], 4),
-        max_dup_line_ratio=round(q["dup_line_ratio"][1], 4),
-        max_top_bigram_ratio=round(q["top_bigram_ratio"][1], 4),
-        max_top_trigram_ratio=round(q["top_trigram_ratio"][1], 4),
-        max_top_quadgram_ratio=round(q["top_quadgram_ratio"][1], 4),
-        max_dup_5gram_ratio=round(q["dup_5gram_ratio"][1], 4),
-    )
+    q = dict(zip(RULE_STATS, stats.stat.approxQuantile(
+        list(RULE_STATS), [lo, hi], 0.0)))
+    defaults = QualityThresholds()
+    fitted = {}
+    for _, stat, side, field in RULES:
+        v = q[stat][0 if side == "lo" else 1]
+        if isinstance(getattr(defaults, field), int):
+            fitted[field] = int(v) if side == "lo" else max(int(v), 1)
+        else:
+            fitted[field] = round(v, 4)
+    return QualityThresholds(**fitted)
 
 
 def fit_job(spark: SparkSession, docs: DataFrame, artifacts_dir: str,

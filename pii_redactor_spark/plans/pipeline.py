@@ -31,9 +31,8 @@ from pyspark.sql.types import (
 
 from pii_redactor_spark.functions.rules import (
     QualityThresholds,
-    attach_quality_stats,
     keep_decision,
-    toxicity_hit,
+    with_rule_stats,
 )
 
 KERNEL_RESULT_TYPE = StructType([
@@ -159,16 +158,14 @@ def run_pipeline(
     fused = make_fused_kernel_udf(per_url_gazetteer, enable_regex,
                                   global_gazetteer, timers=timers,
                                   artifacts=artifacts)
-    df = attach_quality_stats(
+    df = with_rule_stats(
         pages
         .withColumn("_k", fused(F.col(url_col), F.col(text_col)))
         .select("*", "_k.*")
         .drop("_k"),
         text_col, th,
     )
-    if th.toxicity_words:
-        df = df.withColumn("is_toxic", toxicity_hit(text_col, list(th.toxicity_words)))
-    rule_keep, rule_reasons = keep_decision(th)
+    _, rule_reasons = keep_decision(th)
 
     extra_checks: list[tuple[str, Column]] = []
     if allowed_langs:

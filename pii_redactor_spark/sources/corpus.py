@@ -33,8 +33,11 @@ CORPUS_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                  "text string, lang string")
 
 HOT_HOST = "bighost.example"
-COLD_HOSTS = [f"site{i:02d}.example" for i in range(20)]
+# cold host i is f"{prefix}{i:02d}{suffix}"
+_COLD_PREFIX, _COLD_SUFFIX = "site", ".example"
+COLD_HOSTS = [f"{_COLD_PREFIX}{i:02d}{_COLD_SUFFIX}" for i in range(20)]
 _BASE_TS = 1_700_000_000  # fixed epoch anchor (2023-11-14T22:13:20Z)
+_TS_SPAN = 86_400 * 30    # warc_ts spreads over 30 days from _BASE_TS
 
 
 def wrap_html(text: str, title: str) -> bytes:
@@ -49,6 +52,15 @@ def wrap_html(text: str, title: str) -> bytes:
         "<footer>footer boilerplate</footer></body></html>"
     )
     return page.encode("utf-8")
+
+
+def html_bytes_sql(url: str, text: str) -> str:
+    """DuckDB twin of ``len(wrap_html(text, url))`` for a url that needs
+    no escaping: the empty template plus the url and escaped text bytes."""
+    body = text
+    for c, esc in (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;")):
+        body = f"replace({body}, '{c}', '{esc}')"
+    return f"({len(wrap_html('', ''))} + strlen({url}) + strlen({body}))"
 
 
 _PRE_RE = re.compile(r"<pre>(.*?)</pre>", re.DOTALL)
@@ -84,9 +96,9 @@ def from_documents(docs: DataFrame) -> DataFrame:
         F.pmod(h, F.lit(2)) == 0, F.lit(HOT_HOST),
     ).otherwise(
         F.concat(
-            F.lit("site"),
+            F.lit(_COLD_PREFIX),
             F.lpad(F.pmod(h, F.lit(len(COLD_HOSTS))).cast("string"), 2, "0"),
-            F.lit(".example"),
+            F.lit(_COLD_SUFFIX),
         )
     )
     url = F.concat(F.lit("https://"), host, F.lit("/doc/"),
@@ -95,7 +107,7 @@ def from_documents(docs: DataFrame) -> DataFrame:
     warc_ts = F.timestamp_seconds(
         F.lit(_BASE_TS) + F.pmod(
             text_hash.md5_int(F.concat(F.lit("ts:"), F.col("doc_id")), 8),
-            F.lit(86_400 * 30)))
+            F.lit(_TS_SPAN)))
 
     @F.pandas_udf("binary")
     def make_html(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
@@ -113,3 +125,20 @@ def from_documents(docs: DataFrame) -> DataFrame:
         make_html(F.struct("url", "text")).alias("html"),
         "text", "lang",
     )
+
+
+def from_documents_sql(table: str = "documents") -> str:
+    """DuckDB twin of ``from_documents``'s url and warc_ts (the html
+    payload has none): every column of ``table`` plus host, url and
+    warc_ts."""
+    h = text_hash.md5_int_sql("'host:' || doc_id", 8)
+    ts = text_hash.md5_int_sql("'ts:' || doc_id", 8)
+    return f"""SELECT *, 'https://' || host || '/doc/' || doc_id AS url
+FROM (SELECT *,
+        CASE WHEN {h} % 2 = 0 THEN '{HOT_HOST}'
+             ELSE '{_COLD_PREFIX}'
+                  || lpad(CAST({h} % {len(COLD_HOSTS)} AS VARCHAR), 2, '0')
+                  || '{_COLD_SUFFIX}'
+        END AS host,
+        to_timestamp({_BASE_TS} + {ts} % {_TS_SPAN}) AS warc_ts
+      FROM {table})"""
