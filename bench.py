@@ -336,13 +336,15 @@ def run_skew(sf_dir: str, repl: int = 130, salt_k: int = 16) -> dict:
     from pyspark.sql import functions as F
 
     from pii_redactor_spark.sources.corpus import from_documents
-    from pii_redactor_spark.tables import hot_hosts, with_salted_host_key
+    from pii_redactor_spark.functions.url_rules import host_of
+    from pii_redactor_spark.operators.ranking import (
+        hot_hosts, with_salted_host_key)
 
     corpus_path, n_docs = _replicated_corpus(sf_dir, repl, n_parts=256)
     spark = get_spark(app_name="bench_skew", master="local[32]")
     try:
         pages = from_documents(spark.read.parquet(corpus_path))
-        host = F.parse_url("url", F.lit("HOST"))
+        host = host_of("url")
 
         def heavy_aggs():
             return [
@@ -381,9 +383,9 @@ def run_skew(sf_dir: str, repl: int = 130, salt_k: int = 16) -> dict:
         # bucket (hot/salt_k); phase 2 = per-host survivors, bounded by
         # salt_k * cap regardless of corpus size.
         from pii_redactor_spark.operators.sampling import (
-            CAP_SALT_K, HOST_RE, cap_per_host, priority_expr)
+            CAP_SALT_K, cap_per_host, priority_expr)
         cap = 100
-        chost = F.lower(F.regexp_extract("url", HOST_RE, 1))
+        chost = host_of("url")
         salt = F.pmod(priority_expr(F.col("url"), 42), F.lit(CAP_SALT_K))
         bucket_sizes = (
             pages.groupBy(chost.alias("h"), salt.alias("s")).count()

@@ -511,7 +511,7 @@ def q_corpus_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus
         .groupBy(
             F.date_trunc("day", "warc_ts").cast("date").alias("crawl_day"),
-            F.parse_url("url", F.lit("HOST")).alias("host"),
+            host_of("url").alias("host"),
         )
         .agg(F.count("*").alias("n_pages"))
     )

@@ -92,7 +92,8 @@ def with_url_rules(
                             lambda p: p != ""))
     checks: list[tuple[str, Column]] = [
         ("url_too_long", F.length(u) > MAX_URL_LEN),
-        ("no_host", host == ""),
+        # a NULL url has no host: the gate fails closed on it
+        ("no_host", F.coalesce(host, F.lit("")) == ""),
         ("blocked_extension", ext.isin(BLOCKED_EXTENSIONS)),
         ("path_too_deep", depth > MAX_PATH_DEPTH),
         ("blocked_path", F.lower(path).rlike(BLOCKED_PATH_RE)),
@@ -120,7 +121,7 @@ def url_rules_sql(table: str, url_col: str = "url",
     depth = f"len(list_filter(string_split({path}, '/'), p -> p <> ''))"
     checks = [
         ("url_too_long", f"length({url_col}) > {MAX_URL_LEN}"),
-        ("no_host", f"{host} = ''"),
+        ("no_host", f"coalesce({host}, '') = ''"),
         ("blocked_extension",
          f"list_contains({_sql_list(BLOCKED_EXTENSIONS)}, {ext})"),
         ("path_too_deep", f"{depth} > {MAX_PATH_DEPTH}"),

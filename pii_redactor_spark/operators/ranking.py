@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from pii_redactor_spark.functions.url_rules import host_of
 from pii_redactor_spark.operators.cache import registered_persist
 
 BOUNDARY_SAMPLE_TARGET = 100_000  # keys collected to pick bucket boundaries
@@ -216,6 +217,42 @@ def group_row_number(df: DataFrame, group_col: str, order_col: str,
         extra_order_cols=extra_order_cols, num_buckets=num_buckets,
         rn_name=rn_name, seed=seed)
     return cold_ranked.unionByName(hot_ranked)
+
+
+def hot_hosts(df: DataFrame, url_col: str = "url",
+              threshold: int = 10_000) -> list[str]:
+    """Hosts (``url_rules.host_of``) with more documents than
+    ``threshold``: the skew set, found by one count aggregate whose
+    output is collected, as ``group_row_number`` finds its hot
+    groups."""
+    return [
+        r["host"] for r in (
+            df.groupBy(host_of(url_col).alias("host")).count()
+            .filter(F.col("count") > threshold)
+            .collect()
+        ) if r["host"] is not None
+    ]
+
+
+def with_salted_host_key(df: DataFrame, url_col: str = "url",
+                         hot: list[str] | None = None,
+                         salt_k: int = 16,
+                         key_col: str = "host_key") -> DataFrame:
+    """Skew-salted host key (north rule: salting for skewed hosts).
+
+    Documents from a hot host get ``host#<salt>`` with salt =
+    pmod(xxhash64(url), k), splitting one pathological host across k
+    shuffle partitions; cold hosts keep their plain host so their
+    locality is preserved. Any host-keyed groupBy/join downstream
+    aggregates per (host, salt) first and re-merges per host — the
+    classic two-phase skew fix, complementing AQE's runtime skew-join
+    splitting."""
+    host = host_of(url_col)
+    salted = F.concat(host, F.lit("#"),
+                      F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_k))
+                      .cast("string"))
+    key = F.when(host.isin(hot), salted).otherwise(host) if hot else host
+    return df.withColumn(key_col, key)
 
 
 def global_prefix_sum(df: DataFrame, order_col: str, value_col: str,

@@ -3,7 +3,11 @@ lineage-tracked chain (the reference's ``--optimize`` is a single
 command, reference: main.py:66-75; the engine's is ``cli build``).
 
 Stages, each committing ONE snapshot-isolated table under
-``<output_root>/NN_<stage>`` plus a metrics/lineage row:
+``<output_root>/NN_<stage>`` plus a metrics/lineage row. The three
+stages that only drop rows (decontaminate, dedup, select) commit delete
+snapshots: the doc_ids they drop, against the table they read
+(tables.py), so the corpus text is stored twice in the whole chain
+(urlfilter's copy and quality's scrubbed one):
 
     urlfilter     C4-style pre-text URL gate (functions/url_rules.py)
     decontaminate GPT-3-appendix-C n-gram benchmark overlap drop
@@ -19,7 +23,7 @@ Stages, each committing ONE snapshot-isolated table under
 ``build_job`` runs the chain over a DataFrame; ``build_increment`` runs
 it over a growing IcebergishTable. Both call the same stage steps below
 (url default, url gate, decontaminate gate + default benchmark, scrub
-projection, DSIR cut, pack, token summary).
+projection, DSIR drops, pack, token summary).
 
 Resume semantics: every completed stage's CURRENT snapshot carries
 ``lineage = {run_id, stage, complete: true}``; a re-run with the same
@@ -128,6 +132,13 @@ def decontaminate_gate(df: DataFrame, bench: DataFrame) -> DataFrame:
             .drop("shared_ngrams", "contaminated"))
 
 
+def contaminated_ids(df: DataFrame, bench: DataFrame) -> DataFrame:
+    """The doc_ids ``decontaminate_gate`` drops."""
+    from pii_redactor_spark.operators.decontaminate import contamination
+    return contamination(df, bench).filter(F.col("contaminated")) \
+        .select("doc_id")
+
+
 def scrub_projection(df: DataFrame, thresholds=None,
                      artifacts=None) -> DataFrame:
     """The quality kernels + keep decision; ``text`` becomes the
@@ -141,11 +152,15 @@ def scrub_projection(df: DataFrame, thresholds=None,
                 "lang_pred", "ppl", "n_redactions", "keep", *tail)
 
 
-def dsir_cut(df: DataFrame, frac: float) -> DataFrame:
+def unselected_ids(kept: DataFrame, quality: DataFrame,
+                   frac: float) -> DataFrame:
+    """The doc_ids of ``quality`` that DSIR's top ``frac`` of the
+    ``kept`` rows does not select, the rows the quality gate dropped
+    included."""
     from pii_redactor_spark.operators.dsir import dsir_select
-    keep_ids = dsir_select(df, frac=frac) \
+    selected = dsir_select(kept, frac=frac) \
         .filter(F.col("selected")).select("doc_id")
-    return df.join(keep_ids, "doc_id", "left_semi")
+    return quality.select("doc_id").join(selected, "doc_id", "left_anti")
 
 
 def pack_tokens(df: DataFrame, n_rows: int) -> tuple[DataFrame, Observation]:
@@ -218,7 +233,7 @@ def build_job(
     mid-chain-kill test hook (run_resumable's fail_after_commits
     covers the intra-stage crash window)."""
     from pii_redactor_spark.operators.cache import release_caches
-    from pii_redactor_spark.plans.dedup_job import dedup_corpus
+    from pii_redactor_spark.plans.dedup_job import duplicate_ids
     from pii_redactor_spark.tables import run_resumable
 
     root = Path(output_root)
@@ -227,11 +242,13 @@ def build_job(
     current = with_doc_url(pages)
     n_prev: int | None = None   # the previous stage's n_out
 
-    def run_stage(name: str, step, count_input: bool = False) -> None:
+    def run_stage(name: str, step, count_input: bool = False,
+                  deletes_from: IcebergishTable | None = None) -> None:
         """Skip a stage this run completed, else commit ``step(current)``
         and free the operators' caches. ``count_input``: the input has
         no manifest count, so it is observed on the stage's own
-        passes."""
+        passes. ``deletes_from``: ``step`` returns the doc_ids it drops
+        from that table, committed as a delete snapshot."""
         nonlocal current, n_prev
         tbl = stage_table(root, name)
         resumed = bool(_lineage(tbl, run_id, name).get("complete"))
@@ -240,8 +257,11 @@ def build_job(
             t0 = time.time()
             src, seen = count_rows(current) if count_input \
                 else (current, None)
-            tbl.overwrite(step(src), lineage={
-                "run_id": run_id, "stage": name, "complete": True})
+            lineage = {"run_id": run_id, "stage": name, "complete": True}
+            if deletes_from is None:
+                tbl.overwrite(step(src), lineage=lineage)
+            else:
+                tbl.commit_deletes(deletes_from, step(src), "doc_id", lineage)
             n_in = seen.get["n"] if seen is not None else n_prev
         n_prev = tbl.count(spark)
         if not resumed:
@@ -259,9 +279,11 @@ def build_job(
                 f"injected failure after stage {name} (test hook)")
 
     run_stage("urlfilter", url_gate, count_input=True)
-    run_stage("decontaminate", lambda df: decontaminate_gate(
-        df, benchmark if benchmark is not None else default_benchmark(df)))
-    run_stage("dedup", dedup_corpus)
+    run_stage("decontaminate", lambda df: contaminated_ids(
+        df, benchmark if benchmark is not None else default_benchmark(df)),
+        deletes_from=stage_table(root, "urlfilter"))
+    run_stage("dedup", duplicate_ids,
+              deletes_from=stage_table(root, "decontaminate"))
 
     # quality: bucket-resumable inside the stage
     qtbl = stage_table(root, "quality")
@@ -279,8 +301,10 @@ def build_job(
     maybe_fail("quality")
 
     # select's input is the KEPT quality rows, which no manifest records:
-    # its count rides DSIR's raw-LM pass
-    run_stage("select", lambda df: dsir_cut(df, frac), count_input=True)
+    # its count rides DSIR's raw-LM pass. It deletes from the whole
+    # quality table, so its rows carry quality's keep column (true).
+    run_stage("select", lambda df: unselected_ids(df, qtbl.read(spark), frac),
+              count_input=True, deletes_from=qtbl)
     written = None   # the pack write's token aggregates, if it ran
 
     def pack_step(df: DataFrame) -> DataFrame:
@@ -479,12 +503,17 @@ def build_increment(
         release_caches()
         log_row("dedup", "recompute", pre_tbl.count(spark), n_out, t0)
 
-    def recompute(name: str, df: DataFrame, mode: str = "recompute") -> int:
-        n_out = stage_table(root, name).overwrite(df, lineage={
-            "run_id": run_id, "stage": name, "mode": mode,
-            "complete": True}).added_rows
+    def recompute(name: str, df: DataFrame, mode: str = "recompute",
+                  deletes_from: IcebergishTable | None = None) -> int:
+        """Commit ``df``, or with ``deletes_from`` the doc_ids ``df``
+        drops from that table; returns the rows the stage reads as."""
+        tbl = stage_table(root, name)
+        lineage = {"run_id": run_id, "stage": name, "mode": mode,
+                   "complete": True}
+        snap = tbl.overwrite(df, lineage=lineage) if deletes_from is None \
+            else tbl.commit_deletes(deletes_from, df, "doc_id", lineage)
         release_caches()
-        return n_out
+        return snap.total_rows
 
     t0 = time.time()
     kept_ids = dtbl.read(spark).select("doc_id")
@@ -493,9 +522,12 @@ def build_increment(
         mode="recompute-join-of-cached-scrub")
     log_row("quality", "recompute", None, n_q, t0)
     t0 = time.time()
-    current, seen = count_rows(stage_table(root, "quality").read(spark)
+    qtbl = stage_table(root, "quality")
+    current, seen = count_rows(qtbl.read(spark)
                                .filter(F.col("keep")).drop("keep"))
-    n_sel = recompute("select", dsir_cut(current, frac))
+    n_sel = recompute("select",
+                      unselected_ids(current, qtbl.read(spark), frac),
+                      deletes_from=qtbl)
     log_row("select", "recompute", seen.get["n"], n_sel, t0)
     t0 = time.time()
     rows, written = pack_tokens(stage_table(root, "select").read(spark),

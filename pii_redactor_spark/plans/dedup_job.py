@@ -8,9 +8,9 @@ The dedup path a training-data pipeline runs before training:
 2. keep exactly the representative (component == id) of each cluster,
    drop the rest.
 
-The build chain's dedup stage (plans/build.py) commits the result as a
-snapshot with its metrics/lineage row, so the pre-dedup corpus remains
-time-travelable.
+The build chain's dedup stage (plans/build.py) commits the dropped ids
+as a delete snapshot against its input table, with its metrics/lineage
+row, so the pre-dedup corpus remains time-travelable.
 """
 
 from __future__ import annotations
@@ -22,14 +22,13 @@ from pii_redactor_spark.operators.dedup import (
     components_from_edges, dedup_edges)
 
 
-def dedup_corpus(docs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id",
-                 verify_threshold: float | None = 0.8) -> DataFrame:
-    """Drop near-duplicates, keeping each cluster's min-id representative.
-    Only edge endpoints can be duplicates, so the non-representative ids
-    come from the components' endpoint labels alone (no second scan of
-    the corpus ids), and are broadcast-joined against the corpus as a
-    left-anti join — the corpus itself never shuffles.
+def duplicate_ids(docs: DataFrame, text_col: str = "text",
+                  id_col: str = "doc_id",
+                  verify_threshold: float | None = 0.8) -> DataFrame:
+    """The ids of the near-duplicates to drop: every doc but its
+    cluster's min-id representative. Only edge endpoints can be
+    duplicates, so they come from the components' endpoint labels alone
+    (no second scan of the corpus ids).
 
     Components are built over Jaccard-VERIFIED edges by default
     (round-2 advice): raw LSH band collisions include false positives,
@@ -38,8 +37,14 @@ def dedup_corpus(docs: DataFrame, text_col: str = "text",
     candidate-graph analysis."""
     labels = components_from_edges(
         dedup_edges(docs, text_col, id_col, verify_threshold))
-    dups = (
-        labels.filter(F.col("component") != F.col("node"))
-        .select(F.col("node").alias(id_col))
-    )
+    return (labels.filter(F.col("component") != F.col("node"))
+            .select(F.col("node").alias(id_col)))
+
+
+def dedup_corpus(docs: DataFrame, text_col: str = "text",
+                 id_col: str = "doc_id",
+                 verify_threshold: float | None = 0.8) -> DataFrame:
+    """``docs`` less its ``duplicate_ids``, broadcast-joined as a
+    left-anti join: the corpus itself never shuffles."""
+    dups = duplicate_ids(docs, text_col, id_col, verify_threshold)
     return docs.join(F.broadcast(dups), id_col, "left_anti")

@@ -26,6 +26,21 @@ EMULATION of the subset the pipeline needs:
   job: a ``spark.read.parquet`` without a schema runs a one-task job to
   read a footer. Manifests written before these fields existed read and
   count through Spark as before.
+- **Delete snapshots**: a stage that only drops rows commits what it
+  drops, not a copy of what it keeps (Iceberg v2's row-level equality
+  deletes). The snapshot's one data dir is a single Parquet file of the
+  dropped keys, sorted (a sorted id column is the best case for
+  Parquet's RLE and delta encodings), and its ``base`` names the base
+  table by a path relative to this one and pins the base snapshot, so a
+  later overwrite of the base leaves the delete snapshot's rows intact.
+  A read is the pinned base read less the keys (a left-anti join; Spark
+  broadcasts the small key file by its size statistics); a base may be
+  a delete snapshot itself, and a chain reads as one anti-join against
+  the union of its keys. The count is the base's minus the keys', both
+  from manifests.
+- **Codec**: every data file is written with ``PARQUET_CODEC`` (zstd):
+  the table text is the bulk of what a build stores, and zstd keeps it
+  in about two thirds of snappy's bytes.
 - **Resume**: the reference resumes by a cache-existence check
   (reference: optimizer.py:33-35); here each bucket group commits its
   data and a ``{run_id, stage, buckets}`` lineage record in one snapshot,
@@ -63,6 +78,7 @@ from pyspark.sql.types import DataType, StructType
 from pyspark.util import inheritable_thread_target
 
 CURRENT = "CURRENT"
+PARQUET_CODEC = "zstd"
 # the footer key Spark's Parquet writer stores its row schema under
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
@@ -71,7 +87,7 @@ SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 class Snapshot:
     snapshot_id: int
     parent_id: int | None
-    op: str                       # "append" | "overwrite"
+    op: str                       # "append" | "overwrite" | "delete"
     data_dirs: list[str]          # dirs valid at this snapshot (cumulative)
     partitions: dict[str, list]   # data_dir -> bucket values present
     ts: float
@@ -87,6 +103,10 @@ class Snapshot:
     # Spark read schema (DDL) -> the data dirs written with it, each
     # schema stored once; a dir in no list is read by inference
     schemas: dict[str, list[str]] | None = None
+    # a delete snapshot's base, {"table": path relative to this table,
+    # "snapshot_id": pinned base snapshot, "key": key column}; its one
+    # data dir holds the deleted keys
+    base: dict | None = None
 
     def to_json(self) -> dict:
         return {
@@ -100,6 +120,7 @@ class Snapshot:
             "added_rows": self.added_rows,
             "total_rows": self.total_rows,
             "schemas": self.schemas,
+            "base": self.base,
         }
 
 
@@ -174,7 +195,7 @@ class IcebergishTable:
     def _write_data_dir(self, df: DataFrame,
                         partition_by: str | None) -> DataDir:
         dir_name, out = self._new_dir()
-        w = df.write.mode("overwrite")
+        w = df.write.mode("overwrite").option("compression", PARQUET_CODEC)
         if partition_by is not None:
             w = w.partitionBy(partition_by)
         try:
@@ -235,32 +256,37 @@ class IcebergishTable:
         return rows, ddl if DataType.fromDDL(ddl) == schema else None
 
     def _commit_dir(self, op: str, data: DataFrame | DataDir,
-                    partition_by: str | None,
-                    lineage: dict | None) -> Snapshot:
+                    partition_by: str | None, lineage: dict | None,
+                    base: dict | None = None,
+                    total_rows: int | None = None) -> Snapshot:
         """Commit one new data dir, writing ``data`` first when it is a
         frame: ``append`` keeps the parent's dirs, ``overwrite`` starts a
-        new lineage root."""
+        new lineage root, ``delete`` starts one holding the deleted keys
+        of ``base`` (``total_rows`` is then the rows it reads as)."""
         if isinstance(data, DataFrame):
             data = self._write_data_dir(data, partition_by)
         parent = self.snapshot()
-        base = parent if op == "append" else None
-        schemas = dict((base.schemas or {}) if base else {})
+        prev = parent if op == "append" else None
+        schemas = dict((prev.schemas or {}) if prev else {})
         if data.schema is not None:
             schemas[data.schema] = schemas.get(data.schema, []) + [data.name]
+        if op != "delete":
+            total_rows = (data.rows if prev is None
+                          else None if prev.total_rows is None
+                          else prev.total_rows + data.rows)
         snap = Snapshot(
             snapshot_id=(parent.snapshot_id + 1) if parent else 0,
             parent_id=parent.snapshot_id if parent else None,
             op=op,
-            data_dirs=(base.data_dirs if base else []) + [data.name],
-            partitions={**(base.partitions if base else {}),
+            data_dirs=(prev.data_dirs if prev else []) + [data.name],
+            partitions={**(prev.partitions if prev else {}),
                         data.name: data.partitions},
             ts=time.time(),
             lineage=lineage,
             added_rows=data.rows,
-            total_rows=(data.rows if base is None
-                        else None if base.total_rows is None
-                        else base.total_rows + data.rows),
+            total_rows=total_rows,
             schemas=schemas,
+            base=base,
         )
         self._commit(snap)
         return snap
@@ -274,6 +300,25 @@ class IcebergishTable:
                   partition_by: str | None = None,
                   lineage: dict | None = None) -> Snapshot:
         return self._commit_dir("overwrite", df, partition_by, lineage)
+
+    def commit_deletes(self, base: IcebergishTable, keys: DataFrame,
+                       key: str, lineage: dict | None = None) -> Snapshot:
+        """Commit ``base`` at its current snapshot less the rows whose
+        ``key`` is in ``keys``, as a new lineage root that stores only
+        the keys: one Parquet file sorted by key. ``keys`` must hold
+        distinct keys of ``base``'s rows, so the manifest count is the
+        base's less the file's. ``repartition(1)``, not ``coalesce(1)``:
+        a coalesce would run the plan that computes the keys in one
+        task."""
+        pinned = base.snapshot()
+        data = self._write_data_dir(
+            keys.select(key).repartition(1).sortWithinPartitions(key), None)
+        return self._commit_dir(
+            "delete", data, None, lineage,
+            base={"table": os.path.relpath(base.base, self.base),
+                  "snapshot_id": pinned.snapshot_id, "key": key},
+            total_rows=None if pinned.total_rows is None
+            else pinned.total_rows - data.rows)
 
     def lineage_done_buckets(self, run_id: str, stage: str) -> list[int]:
         """Buckets recorded as committed for (run_id, stage) in snapshot
@@ -326,15 +371,42 @@ class IcebergishTable:
             return 0
         if snap.total_rows is not None:
             return snap.total_rows
-        return self._read_dirs(spark, snap, snap.data_dirs).count()
+        return self.read(spark).count()
+
+    def base_table(self, snap: Snapshot) -> IcebergishTable:
+        """The table a delete snapshot's keys are deleted from."""
+        return IcebergishTable(self.base / snap.base["table"])
+
+    @staticmethod
+    def without_keys(rows: DataFrame, keys: DataFrame,
+                     key: str) -> DataFrame:
+        """``rows`` less those whose ``key`` is in ``keys``, in ``rows``'
+        column order (a USING join would move the key first)."""
+        gone = keys.select(F.col(key).alias("_deleted"))
+        return rows.join(gone, rows[key] == gone["_deleted"], "left_anti")
 
     def read(self, spark: SparkSession,
              snapshot_id: int | None = None) -> DataFrame | None:
-        """Snapshot-isolated read: only dirs listed in the manifest."""
+        """Snapshot-isolated read: only dirs listed in the manifest; a
+        delete snapshot reads its pinned base less its keys. A chain of
+        delete snapshots reads its first full base less the union of
+        the chain's keys: one anti-join (one broadcast) per key column,
+        not one per link."""
         snap = self.snapshot(snapshot_id)
         if snap is None:
             return None
-        return self._read_dirs(spark, snap, snap.data_dirs)
+        tbl, gone = self, {}
+        while snap.base is not None:
+            key = snap.base["key"]
+            gone.setdefault(key, []).append(
+                tbl._read_dirs(spark, snap, snap.data_dirs).select(key))
+            base = tbl.base_table(snap)
+            tbl, snap = base, base.snapshot(snap.base["snapshot_id"])
+        rows = tbl._read_dirs(spark, snap, snap.data_dirs)
+        for key, keys in gone.items():
+            rows = self.without_keys(
+                rows, functools.reduce(DataFrame.union, keys), key)
+        return rows
 
     def read_incremental(self, spark: SparkSession,
                          since_snapshot_id: int | None) -> DataFrame | None:
@@ -348,6 +420,9 @@ class IcebergishTable:
         cur = self.snapshot()
         if cur is None:
             return None
+        if cur.base is not None:
+            raise ValueError(f"{self.base}: a delete snapshot has no "
+                             "incremental read")
         old = self.snapshot(since_snapshot_id) \
             if since_snapshot_id is not None else None
         old_dirs = set(old.data_dirs) if old else set()
@@ -372,50 +447,6 @@ def with_bucket(df: DataFrame, key_col: str, n_buckets: int,
     partitioning on url): bucket = pmod(xxhash64(key), n)."""
     return df.withColumn(
         bucket_col, F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)))
-
-
-def host_expr(url_col: str = "url"):
-    """Host component of a url (parse_url is JVM-side)."""
-    return F.parse_url(F.col(url_col), F.lit("HOST"))
-
-
-def hot_hosts(df: DataFrame, url_col: str = "url",
-              threshold: int = 10_000) -> list[str]:
-    """Hosts with more documents than ``threshold`` — the skew set. The
-    groupBy is a full aggregation but its output (distinct hosts over the
-    cut-off) is tiny and collected driver-side for broadcast."""
-    return [
-        r["host"] for r in (
-            df.select(host_expr(url_col).alias("host"))
-            .groupBy("host").count()
-            .filter(F.col("count") > threshold)
-            .collect()
-        ) if r["host"] is not None
-    ]
-
-
-def with_salted_host_key(df: DataFrame, url_col: str = "url",
-                         hot: list[str] | None = None,
-                         salt_k: int = 16,
-                         key_col: str = "host_key") -> DataFrame:
-    """Skew-salted host key (north rule: salting for skewed hosts).
-
-    Documents from a hot host get ``host#<salt>`` with salt =
-    pmod(xxhash64(url), k), splitting one pathological host across k
-    shuffle partitions; cold hosts keep their plain host so their
-    locality is preserved. Any host-keyed groupBy/join downstream
-    aggregates per (host, salt) first and re-merges per host — the
-    classic two-phase skew fix, complementing AQE's runtime skew-join
-    splitting."""
-    host = host_expr(url_col)
-    salted = F.concat(host, F.lit("#"),
-                      F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_k))
-                      .cast("string"))
-    if hot:
-        key = F.when(host.isin(hot), salted).otherwise(host)
-    else:
-        key = host
-    return df.withColumn(key_col, key)
 
 
 METRICS_DDL = ("run_id string, stage string, bucket long, n_docs long, "
@@ -455,7 +486,7 @@ class MetricsTable(IcebergishTable):
         # store_schema=False: the Arrow schema copy is only for Arrow
         # readers and would double the file
         pq.write_table(table, out / f"part-00000-{dir_name}.parquet",
-                       compression="snappy", store_schema=False)
+                       compression=PARQUET_CODEC, store_schema=False)
         self._commit_dir("append", DataDir(dir_name, [], table.num_rows,
                                            METRICS_DDL), None, None)
 

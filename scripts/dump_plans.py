@@ -2,11 +2,18 @@
 with the scale-relevant properties called out. Run after plan-affecting
 changes; tests/test_plans.py asserts the load-bearing properties in CI.
 
+Long plan lines are cut at 200 characters for reading, so each query
+also gets a fingerprint line: the sha256 of its whole plan with the
+expression and plan ids normalized. A changed literal deep in a
+projection changes the fingerprint, and tests/test_plans.py checks a
+few fingerprints against a fresh plan.
+
 Usage: python scripts/dump_plans.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 import sys
 from pathlib import Path
@@ -109,6 +116,18 @@ EDGE_PHASES = {
 }
 
 
+def fingerprint(plan: str) -> str:
+    """sha256 of the untruncated plan with the session counters
+    normalized: ``#N`` expression ids, ``plan_id=N`` exchange ids and
+    the ``x_N`` suffixes of lambda variable names."""
+    plan = re.sub(r"(lambda \w+?)_\d+(?=#)", r"\1_N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", re.sub(r"#\d+", "#N", plan))
+    return hashlib.sha256(plan.encode()).hexdigest()
+
+
+FINGERPRINT = "**Plan sha256:** "
+
+
 def _plan_block(plan: str) -> list[str]:
     # keep plans readable: cap very long lines (expression dumps)
     return (["```"]
@@ -135,6 +154,8 @@ def main() -> None:
             out.append(f"## {name}")
             out.append("")
             out.append("**Scale audit:** " + "; ".join(notes))
+            out.append("")
+            out.append(FINGERPRINT + fingerprint(plan))
             if name in ITERATIVE_NOTES:
                 out.append("")
                 out.append(f"**Iterative shape:** {ITERATIVE_NOTES[name]}")

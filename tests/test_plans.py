@@ -358,3 +358,35 @@ def test_badword_stats_is_pure_projection(spark, docs):
     plan = _plan(badword_stats(docs))
     assert "Exchange" not in plan
     assert "EvalPython" not in plan and "InPandas" not in plan
+
+
+def test_plans_md_fingerprints_match_fresh_plans(spark):
+    """PLANS.md's fingerprint lines equal fresh ones for a fixed subset
+    of queries (a scan filter, a broadcast anti-join, an Arrow kernel
+    pass, a regex-heavy projection, a shuffle), planned with the
+    session settings ``scripts/dump_plans.py`` uses."""
+    import re
+    import sys
+    from pathlib import Path
+
+    from pii_redactor_spark.contract import QUERIES
+    from pii_redactor_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+    root = Path(__file__).resolve().parents[1]
+    sys.path.insert(0, str(root / "scripts"))
+    from dump_plans import FINGERPRINT, fingerprint
+
+    md = (root / "PLANS.md").read_text()
+    names = ("q_lang_filter", "q_fewshot_anti", "q_langid",
+             "q_token_count", "q_lang_stats")
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(DEFAULT_SHUFFLE_PARTITIONS))
+    try:
+        for name in names:
+            want = re.search(rf"^## {name}\n(?:.*\n)*?"
+                             rf"{re.escape(FINGERPRINT)}(\w+)$", md, re.M)
+            assert want, name
+            got = fingerprint(_plan(QUERIES[name](spark, SF)))
+            assert got == want.group(1), name
+    finally:
+        spark.conf.set(key, old)

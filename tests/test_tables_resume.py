@@ -108,7 +108,8 @@ def test_resume_after_crash_no_reprocess_and_identical_output(
 
 
 def test_host_salting_splits_hot_hosts(spark):
-    from pii_redactor_spark.tables import hot_hosts, with_salted_host_key
+    from pii_redactor_spark.operators.ranking import (
+        hot_hosts, with_salted_host_key)
     # deliberately skewed synthetic corpus: 90% of urls on one host
     rows = [(f"https://bighost.example/page/{i}",) for i in range(900)]
     rows += [(f"https://site{i % 50}.example/p/{i}",) for i in range(100)]
@@ -320,12 +321,21 @@ def _jobs_started(spark, fn):
     return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _inferred(spark, tbl):
+def _inferred(spark, tbl, snapshot_id=None):
     """The table read as before manifests recorded schemas: every data
-    dir's schema inferred from its footers."""
+    dir's schema inferred from its footers. A delete snapshot reads its
+    pinned base the same way, less its keys, and its key file's stored
+    schema must equal the inferred one."""
     import dataclasses
-    snap = dataclasses.replace(tbl.snapshot(), schemas=None)
-    return tbl._read_dirs(spark, snap, snap.data_dirs)
+    stored = tbl.snapshot(snapshot_id)
+    snap = dataclasses.replace(stored, schemas=None)
+    df = tbl._read_dirs(spark, snap, snap.data_dirs)
+    if snap.base is None:
+        return df
+    assert tbl._read_dirs(spark, stored, snap.data_dirs).schema \
+        == df.schema, tbl.base.name
+    rows = _inferred(spark, tbl.base_table(snap), snap.base["snapshot_id"])
+    return tbl.without_keys(rows, df, snap.base["key"])
 
 
 def _rows(df):
@@ -391,6 +401,65 @@ def test_build_stage_tables_read_as_inferred(spark, tmp_path):
     for prev, st in zip(STAGE_ORDER[:3], STAGE_ORDER[1:4]):
         assert by[st]["n_in"] == by[prev]["n_out"]
     assert out["metrics_rows"] == tables[-1].read(spark).count()
+
+
+def _ids(df):
+    return sorted(r["doc_id"] for r in df.select("doc_id").collect())
+
+
+def test_delete_snapshot_chain_reads_and_counts(spark, docs, tmp_path):
+    """A delete snapshot reads its base less its keys, in the base's
+    column order; its base may be a delete snapshot itself; an empty key
+    set reads the whole base; and the manifest count, which starts no
+    Spark job, equals a Spark count of the read."""
+    base = IcebergishTable(tmp_path / "base")
+    base.overwrite(with_bucket(docs, "url", 4), partition_by="bucket")
+    all_ids = _ids(base.read(spark))
+    first = IcebergishTable(tmp_path / "first")
+    s = first.commit_deletes(base, docs.filter("doc_id % 3 = 0"), "doc_id")
+    assert (s.op, s.base) == ("delete", {
+        "table": "../base", "snapshot_id": 0, "key": "doc_id"})
+    chained = IcebergishTable(tmp_path / "chained")
+    chained.commit_deletes(
+        first, docs.filter("doc_id % 5 = 0 AND doc_id % 3 != 0"), "doc_id")
+    empty = IcebergishTable(tmp_path / "empty")
+    empty.commit_deletes(chained, docs.filter("doc_id < 0"), "doc_id")
+    want = [i for i in all_ids if i % 3 and i % 5]
+    for tbl in (chained, empty):
+        got = tbl.read(spark)
+        assert got.columns == base.read(spark).columns
+        assert _ids(got) == want
+        n, jobs = _jobs_started(spark, lambda: tbl.count(spark))
+        assert n == got.count() == len(want) and jobs == []
+    assert empty.snapshot().added_rows == 0
+    assert _ids(first.read(spark)) == [i for i in all_ids if i % 3]
+    with pytest.raises(ValueError, match="no incremental read"):
+        chained.read_incremental(spark, None)
+
+
+def test_delete_snapshot_pins_its_base(spark, docs, tmp_path):
+    """After a new run overwrites the base, the old delete snapshot
+    still reads the base rows it was committed against, and a new one
+    reads the new base."""
+    base = IcebergishTable(tmp_path / "base")
+    base.overwrite(docs.filter("doc_id < 60"))
+    dels = IcebergishTable(tmp_path / "dels")
+    old = dels.commit_deletes(base, docs.filter("doc_id < 10"), "doc_id")
+    base.overwrite(docs.filter("doc_id >= 40"))
+    dels.commit_deletes(base, docs.filter("doc_id >= 90"), "doc_id")
+    assert _ids(dels.read_at(spark, old.snapshot_id)) == _ids(docs.filter(
+        "doc_id >= 10 AND doc_id < 60"))
+    assert _ids(dels.read(spark)) == _ids(docs.filter(
+        "doc_id >= 40 AND doc_id < 90"))
+    assert dels.count(spark) == dels.read(spark).count()
+    # a manifest from before delete snapshots existed still loads
+    import json
+    p = base.manifest_dir / "snap-0.json"
+    d = json.loads(p.read_text())
+    d.pop("base")
+    p.write_text(json.dumps(d))
+    assert base.snapshot(0).base is None
+    assert dels.read_at(spark, old.snapshot_id).count() == 50
 
 
 def test_manifest_without_facts_reads_and_counts(spark, docs, tmp_path):

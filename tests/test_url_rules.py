@@ -55,6 +55,37 @@ def test_reasons_named(results):
     assert "no_host" in results["not-a-url"]["url_reasons"]
 
 
+def test_url_gate_fails_closed_on_null_url(spark, sf_docs,
+                                           with_adversarial, oracle):
+    """Over the case urls, the adversarial rows (no url) and explicit
+    NULL and '' urls: url_keep is never NULL, Spark equals the SQL twin,
+    every drop names a reason, and a NULL url drops as no_host like
+    ''."""
+    from pyspark.sql import functions as F
+
+    from pii_redactor_spark.functions.url_rules import url_rules_sql
+    urls = F.array(*[F.lit(u) for u, _, _ in CASES])
+    docs = sf_docs.filter("doc_id < 40").withColumn("url", F.element_at(
+        urls, (F.col("doc_id") % len(CASES) + 1).cast("int")))
+    extra = spark.createDataFrame(
+        [(90100, None, "null url"), (90101, "", "empty url")],
+        "doc_id long, url string, text string")
+    df = with_adversarial(docs).unionByName(extra,
+                                            allowMissingColumns=True)
+    blocked = ["blocked.example"]
+    out = with_url_rules(df, blocked_hosts=blocked) \
+        .select("doc_id", "url_reasons", "url_keep")
+    got, want = oracle(
+        "SELECT doc_id, url_reasons, url_keep FROM "
+        f"({url_rules_sql('docs', blocked_hosts=blocked)})", out, docs=df)
+    assert got == want
+    assert all(keep is not None for _, _, keep in got)
+    assert all(reasons for _, reasons, keep in got if not keep)
+    by_id = {i: (reasons, keep) for i, reasons, keep in got}
+    for doc_id in (90001, 90100, 90101):
+        assert by_id[doc_id] == (["no_host"], False), doc_id
+
+
 def test_url_dedup_collapses_canonical_variants(spark):
     """q_url_dedup: the four crawl variants of a page (host case,
     trailing slash, query string, fragment) share a canonical form —
