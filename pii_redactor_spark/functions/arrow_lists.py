@@ -4,7 +4,8 @@ SimHash, langid scores, MLP and BoW embeddings, PQ encode): each is an
 plus one typed values buffer, and decides NULL and empty rows here
 only. Both are length-0 rows; a kernel writes its own NULL/zero output
 for them. A NULL element raises: through pandas, one anywhere in a batch
-turned every list of it into float64, rounding 60-bit hashes. The
+turned every list of it into float64, rounding 60-bit hashes. The BoW
+and MLP embedders share one signed dense fold, ``signed_dense``. The
 grouped SemDeDup passes read each cluster's vectors through ``matrix``,
 where a NULL or ragged row raises instead."""
 
@@ -36,6 +37,17 @@ def matrix(arr: pa.Array, d: int) -> np.ndarray:
         raise ValueError(f"{int((lens != d).sum())} NULL or ragged list "
                          f"row(s) where {d}-vectors are required")
     return flat.reshape(len(arr), d)
+
+
+def signed_dense(buckets: np.ndarray, signs: np.ndarray, lens: np.ndarray,
+                 dim: int) -> np.ndarray:
+    """``(rows, dim)`` int64: each row's ±1 ``signs`` summed into its
+    ``buckets`` (flat, as ``ragged`` reads them); an empty row is zeros.
+    The sums are small integers, exact in bincount's float64."""
+    n = len(lens)
+    idx = np.repeat(np.arange(n), lens) * dim + buckets
+    acc = np.bincount(idx, weights=signs, minlength=n * dim)
+    return acc.astype(np.int64).reshape(n, dim)
 
 
 def segments(lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

@@ -280,12 +280,14 @@ def attach_quality_stats(df: DataFrame, text_col: str = "text",
     """Two-projection stats: materialize ``_words``/``_lines`` in their own
     Project so Catalyst's CollapseProject keeps them shared (non-cheap,
     multi-use expressions are not re-inlined), then derive all statistics
-    from the shared arrays. Temps are dropped."""
+    from the shared arrays. Temps are dropped. A NULL text reads as '':
+    no words and no lines, so it gets ''s verdict and reasons."""
     t = F.col(text_col)
     wh = F.col("_whashes")
+    empty = F.array().cast("array<string>")
     pre = (
-        df.withColumn("_words", text_hash.words(t))
-          .withColumn("_lines", lines_col(t))
+        df.withColumn("_words", F.coalesce(text_hash.words(t), empty))
+          .withColumn("_lines", F.coalesce(lines_col(t), empty))
           .withColumn("_whashes",
                       text_hash.word_hashes_col(F.col("_words")))
           .withColumn("_bigrams", text_hash.hashed_ngrams_col(wh, 2))
@@ -335,8 +337,10 @@ def quality_stats_sql(table: str = "documents", text_col: str = "text",
     lists toxicity words). The n-gram arrays are the hashed word n-grams
     of functions/text_hash.py, so the ratios are bit-identical in both
     engines; the all-bigrams-distinct shortcut mirrors the Spark branch
-    structure so results stay equal even under 60-bit hash collisions."""
+    structure so results stay equal even under 60-bit hash collisions.
+    A NULL text reads as '', as in ``attach_quality_stats``."""
     th = th or QualityThresholds()
+    text = f"COALESCE({text_col}, '')"
     stopwords = "[" + ",".join(f"'{w}'" for w in STOPWORDS) + "]"
     toxic = (f", {toxicity_hit_sql(text_col, list(th.toxicity_words))}"
              " AS is_toxic" if th.toxicity_words else "")
@@ -367,8 +371,8 @@ def quality_stats_sql(table: str = "documents", text_col: str = "text",
 WITH base AS (
   SELECT *, {text_hash.word_hashes_sql('_words')} AS _whashes
   FROM (SELECT *,
-          {text_hash.WORDS_SQL.format(t=text_col)} AS _words,
-          list_filter(string_split({text_col}, chr(10)),
+          {text_hash.WORDS_SQL.format(t=text)} AS _words,
+          list_filter(string_split({text}, chr(10)),
                       l -> trim(l) <> '') AS _lines
         FROM {table})),
 grams AS (SELECT *, {grams} FROM base)
@@ -382,9 +386,8 @@ SELECT * EXCLUDE (_words, _lines, _whashes, _bigrams, _trigrams,
     {per_word(symbols)} AS symbol_word_ratio,
     {per_word(f"len(list_filter(_words, w -> regexp_matches(w, '{ALPHA_RE}')))")}
       AS alpha_word_ratio,
-    CASE WHEN _lines IS NOT NULL
-         THEN CAST(COALESCE(list_sum(list_transform(_lines, l -> length(l))), 0) AS DOUBLE)
-              / GREATEST(len(_lines), 1) END AS mean_line_len,
+    CAST(COALESCE(list_sum(list_transform(_lines, l -> length(l))), 0) AS DOUBLE)
+      / GREATEST(len(_lines), 1) AS mean_line_len,
     1.0 - CAST(len(list_distinct(_lines)) AS DOUBLE) / GREATEST(len(_lines), 1) AS dup_line_ratio,
     {top(2, '_bigrams')} AS top_bigram_ratio,
     {top(3, '_trigrams')} AS top_trigram_ratio,

@@ -11,8 +11,8 @@ the same .npz hook).
 
 Architecture (all integer arithmetic until the caller converts):
 
-    x      = signed hashed-BoW counts (bucket/sign from the md5 recipe
-             shared with similarity._sig_from_md5, 'ml:' domain)
+    x      = signed hashed-BoW counts (text_hash.signed_buckets, the
+             signed feature the BoW embedder also reads, 'ml:' domain)
     h_j    = relu(sum_w sign(w) * W1[bucket(w), j] + b1_j)
     e_k    = sum_j h_j * W2[j, k]
 
@@ -31,13 +31,12 @@ changes the weight arrays.
 
 from __future__ import annotations
 
-import hashlib
 from functools import lru_cache
 from typing import Iterator, Tuple
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pii_redactor_spark.functions import arrow_lists, text_hash
@@ -45,10 +44,7 @@ from pii_redactor_spark.functions import arrow_lists, text_hash
 MLP_IN = 64    # hashed-BoW buckets
 MLP_HID = 16
 MLP_OUT = 16
-
-
-def _mdint(key: str) -> int:
-    return int(hashlib.md5(key.encode()).hexdigest()[:12], 16)
+ML_PREFIX = "ml:"
 
 
 @lru_cache(maxsize=1)
@@ -59,14 +55,15 @@ def mlp_weights() -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     fitted artifact via ``preload``."""
     if _PRELOADED is not None:
         return _PRELOADED
-    w1 = np.array([[(_mdint(f"mlp1:{i}:{j}") % 19) - 9
-                    for j in range(MLP_HID)] for i in range(MLP_IN)],
+    def small(key: str) -> int:
+        return text_hash.md5_int_py(key, 12) % 19 - 9
+
+    w1 = np.array([[small(f"mlp1:{i}:{j}") for j in range(MLP_HID)]
+                   for i in range(MLP_IN)], dtype=np.int64)
+    b1 = np.array([small(f"mlpb:{j}") for j in range(MLP_HID)],
                   dtype=np.int64)
-    b1 = np.array([(_mdint(f"mlpb:{j}") % 19) - 9
+    w2 = np.array([[small(f"mlp2:{j}:{k}") for k in range(MLP_OUT)]
                    for j in range(MLP_HID)], dtype=np.int64)
-    w2 = np.array([[(_mdint(f"mlp2:{j}:{k}") % 19) - 9
-                    for k in range(MLP_OUT)] for j in range(MLP_HID)],
-                  dtype=np.int64)
     return w1, b1, w2
 
 
@@ -88,32 +85,14 @@ def clear_preload() -> None:
         mlp_weights.cache_clear()
 
 
-def bow_bucket(word: str, dim: int = MLP_IN) -> tuple[int, int]:
-    """(bucket, sign) of one word — first-8-hex md5 fold + digit-9
-    parity, 'ml:' domain (the cross-engine recipe). The pure-Python twin
-    of ``_word_sig``: serving never calls it; tests/test_encoder.py
-    builds the network's input with it to check driver-side that relu
-    clips some, but not all, hidden units on the corpus."""
-    h = hashlib.md5(("ml:" + word).encode("utf-8")).hexdigest()
-    return int(h[:8], 16) % dim, 1 if int(h[8], 16) % 2 == 0 else -1
-
-
 # ---------------------------------------------------------------------------
 # Spark serving: JVM-side word bucketing, Arrow/numpy network
 # ---------------------------------------------------------------------------
 
-def _word_sig(w: Column, dim: int) -> Column:
-    m = F.md5(F.concat(F.lit("ml:"), w))
-    bucket = F.pmod(text_hash.hex_int(m, 8), F.lit(dim)).cast("int")
-    sign = F.when(
-        F.pmod(text_hash.hex_int(m, 1, 9), F.lit(2)) == 0,
-        F.lit(1).cast("bigint")).otherwise(F.lit(-1).cast("bigint"))
-    return F.struct(bucket.alias("bucket"), sign.alias("sign"))
-
-
 def make_mlp_embed_udf():
-    """Iterator Arrow UDF: per-batch numpy scatter + two integer
-    matmuls — identical bits to the oracle (tested in test_encoder).
+    """Iterator Arrow UDF: per-batch signed dense fold
+    (``arrow_lists.signed_dense``) + two integer matmuls — identical
+    bits to the oracle (tested in test_encoder).
     Takes the pre-computed (bucket, sign) arrays so the md5 hashing
     stays JVM-side (the simhash/BoW precedent). As expressions the
     MLP_HID hidden units are interpreted aggregate folds that rebuild
@@ -137,10 +116,8 @@ def make_mlp_embed_udf():
             ) -> Iterator[pa.Array]:
         for buckets, signs in batches:
             flatb, lens = arrow_lists.ragged(buckets, np.int64)
-            flats, _ = arrow_lists.ragged(signs, np.int64)
-            x = np.zeros((len(lens), dim), dtype=np.int64)
-            np.add.at(x, (np.repeat(np.arange(len(lens)), lens), flatb),
-                      flats)
+            flats, _ = arrow_lists.ragged(signs, np.float64)
+            x = arrow_lists.signed_dense(flatb, flats, lens, dim)
             # NULL text keeps its zero row: the network emits the
             # bias-only activation, exactly like the oracle's
             # COALESCE(SUM, 0) — a None here would silently diverge on
@@ -157,9 +134,8 @@ def mlp_embeddings_udf(docs: DataFrame, text_col: str = "text",
     (bucket, sign) arrays built JVM-side feed ``make_mlp_embed_udf``."""
     pre = (
         docs
-        .withColumn("_words", text_hash.words(F.col(text_col)))
-        .withColumn("_sigs", F.transform(
-            F.col("_words"), lambda w: _word_sig(w, MLP_IN)))
+        .withColumn("_sigs", text_hash.signed_buckets(
+            text_hash.words(F.col(text_col)), ML_PREFIX, MLP_IN))
         .withColumn("_b", F.transform(F.col("_sigs"), lambda s: s["bucket"]))
         .withColumn("_s", F.transform(F.col("_sigs"), lambda s: s["sign"]))
     )
@@ -180,15 +156,14 @@ def mlp_embed_cte(table: str = "documents", text_col: str = "text",
     w1, b1, w2 = mlp_weights()
     dim, hid, out = len(w1), len(b1), w2.shape[1]
     words = text_hash.WORDS_SQL.format(t=text_col)
-    fold = text_hash.md5_int_sql("'ml:' || w", 8)
-    digit9 = text_hash.md5_int_sql("'ml:' || w", 1, 9)
     wt_rows = ", ".join(
         "({}, {})".format(i, ", ".join(str(int(w1[i][j]))
                                        for j in range(hid)))
         for i in range(dim))
     wt_cols = ", ".join(f"c{j}" for j in range(hid))
     sums = ", ".join(
-        f"COALESCE(SUM(p.sign * wt.c{j}), 0) AS p{j}" for j in range(hid))
+        f"COALESCE(SUM(CAST(p.sign AS BIGINT) * wt.c{j}), 0) AS p{j}"
+        for j in range(hid))
     hcols = ", ".join(
         f"greatest(p{j} + {int(b1[j])}, 0) AS h{j}" for j in range(hid))
     ecols = ", ".join(
@@ -197,11 +172,7 @@ def mlp_embed_cte(table: str = "documents", text_col: str = "text",
     return f"""
 WITH wt(bucket, {wt_cols}) AS (VALUES {wt_rows}),
 base AS (SELECT {id_col}, {words} AS ws FROM {table}),
-perword AS (
-  SELECT {id_col}, CAST({fold} % {dim} AS INT) AS bucket,
-         CAST(CASE WHEN {digit9} % 2 = 0 THEN 1 ELSE -1 END AS BIGINT)
-           AS sign
-  FROM (SELECT {id_col}, unnest(ws) AS w FROM base)),
+perword AS ({text_hash.bucket_rows_sql('base', id_col, 'ws', ML_PREFIX, dim)}),
 contrib AS (
   SELECT b.{id_col}, {sums}
   FROM base b LEFT JOIN perword p ON b.{id_col} = p.{id_col}
@@ -211,12 +182,9 @@ hidden AS (SELECT {id_col}, {hcols} FROM contrib),
 emb AS (SELECT {id_col}, [{ecols}] AS e FROM hidden)"""
 
 
-def probe_vector(out_dim: int = MLP_OUT) -> list[int]:
-    """Fixed ±1 md5 probe — pins every output coordinate through one
-    exact BIGINT dot product (the text_embedding_summary trick)."""
-    return [1 if int(hashlib.md5(f"mp:{k}".encode()).hexdigest()[0],
-                     16) % 2 == 0 else -1
-            for k in range(out_dim)]
+# fixed ±1 probe: pins every output coordinate through one exact BIGINT
+# dot product (the text_embedding_summary trick)
+_PROBE = text_hash.parity_signs("mp:", MLP_OUT)
 
 
 def mlp_summary(docs: DataFrame, text_col: str = "text",
@@ -229,7 +197,7 @@ def mlp_summary(docs: DataFrame, text_col: str = "text",
     L2 norm with one sqrt)."""
     emb = mlp_embeddings_udf(docs, text_col, id_col)
     probe = F.expr("array({})".format(
-        ",".join(f"{v}L" for v in probe_vector())))
+        ",".join(f"{v}L" for v in _PROBE)))
     sq = F.aggregate(
         F.col("emb"), F.lit(0).cast("bigint"),
         lambda acc, x: acc + x * x)
@@ -248,7 +216,7 @@ def mlp_summary(docs: DataFrame, text_col: str = "text",
 def mlp_summary_oracle_sql(table: str = "documents",
                            text_col: str = "text",
                            id_col: str = "doc_id") -> str:
-    probe = ", ".join(str(v) for v in probe_vector())
+    probe = ", ".join(str(v) for v in _PROBE)
     return f"""
 {mlp_embed_cte(table, text_col, id_col)}
 SELECT {id_col},

@@ -138,8 +138,8 @@ def predict_lang_batch(texts: Iterable[str | None]
 # hashed char-n-gram NB, Joulin et al. 2016) re-expressed with the
 # engine-reproducible discipline of kernels/quality_clf.py: the NB
 # char-BIGRAM log-likelihoods are quantized to BIGINT (x 1e6), bigram
-# buckets come from the first-8-hex-chars md5 fold (reproducible in
-# DuckDB via text_hash), per-language scores are exact BIGINT
+# buckets are text_hash's hashed feature in the 'lg:' domain
+# (reproducible in DuckDB), per-language scores are exact BIGINT
 # sums, and argmax takes the first maximum in sorted-language order
 # (the oracle's >=-CASE chain). Zero shuffle: bigram bucketing is a JVM
 # projection over the scan, the score sums one Arrow pass. The kernel
@@ -149,20 +149,13 @@ def predict_lang_batch(texts: Iterable[str | None]
 # sentence to its true language (pinned in tests/test_rules_kernels.py).
 # ---------------------------------------------------------------------------
 LANGID_EXPR_DIM = 2048
+LG_PREFIX = "lg:"
 _EXPR_SCALE = 1_000_000
 
 
 def _char_bigrams(text: str) -> list[str]:
     lc = text.lower()
     return [lc[i:i + 2] for i in range(len(lc) - 1)]
-
-
-def bigram_bucket(bg: str, dim: int = LANGID_EXPR_DIM) -> int:
-    """First-8-hex-chars md5 fold of 'lg:' + bigram — the same
-    cross-engine bucket recipe as quality_clf.bucket_of."""
-    import hashlib
-    h = hashlib.md5(("lg:" + bg).encode("utf-8")).hexdigest()
-    return int(h[:8], 16) % dim
 
 
 @lru_cache(maxsize=1)
@@ -177,14 +170,9 @@ def fit_langid_expr(dim: int = LANGID_EXPR_DIM
     counts = np.ones((len(langs), dim), dtype=np.float64)  # +1 smoothing
     for i, lang in enumerate(langs):
         for bg in _char_bigrams(SEED_CORPORA[lang]):
-            counts[i, bigram_bucket(bg, dim)] += 1
+            counts[i, text_hash.hashed_bucket_py(bg, LG_PREFIX, dim)] += 1
     lik = np.log(counts / counts.sum(axis=1, keepdims=True))
     return langs, np.rint(lik * _EXPR_SCALE).astype(np.int64)
-
-
-def _lg_bucket_expr(bg, dim: int):
-    h = text_hash.md5_int(F.concat(F.lit("lg:"), bg), 8)
-    return F.pmod(h, F.lit(dim)).cast("int")
 
 
 def make_langid_score_udf(dim: int = LANGID_EXPR_DIM):
@@ -244,7 +232,8 @@ def langid_expr_columns(docs: "DataFrame", text_col: str = "text",
                 lambda a, b: F.concat(a, b)),
         ).otherwise(F.expr("CAST(array() AS array<string>)")))
         .withColumn("_bk", F.transform(
-            F.col("_bgs"), lambda bg: _lg_bucket_expr(bg, dim)))
+            F.col("_bgs"),
+            lambda bg: text_hash.hashed_bucket(bg, LG_PREFIX, dim)))
     )
     return pre.select(
         id_col, *extra_cols,
@@ -267,7 +256,8 @@ def langid_expr_oracle_sql(table: str = "documents",
         for b in range(dim))
     wt_cols = ", ".join(f"w_{lang}" for lang in langs)
     sums = ", ".join(f"SUM(wt.w_{lang}) AS s_{lang}" for lang in langs)
-    fold = text_hash.md5_int_sql("'lg:' || bg", 8)
+    bigrams = ("list_transform(range(1, length(lc)), "
+               "i -> substr(lc, CAST(i AS INT), 2))")
     whens = []
     for i in range(len(langs) - 1):
         conds = " AND ".join(
@@ -279,12 +269,7 @@ def langid_expr_oracle_sql(table: str = "documents",
     return f"""
 WITH wt(bucket, {wt_cols}) AS (VALUES {wt_rows}),
 base AS (SELECT {id_col}, {', '.join(extra_cols) + ', ' if extra_cols else ''}lower({text_col}) AS lc FROM {table}),
-bg AS (
-  SELECT {id_col},
-         unnest(list_transform(range(1, length(lc)),
-                i -> substr(lc, CAST(i AS INT), 2))) AS bg
-  FROM base),
-bk AS (SELECT {id_col}, CAST({fold} % {dim} AS INT) AS bucket FROM bg),
+bk AS ({text_hash.bucket_rows_sql('base', id_col, bigrams, LG_PREFIX, dim)}),
 contrib AS (
   SELECT bk.{id_col}, {sums}
   FROM bk JOIN wt USING (bucket) GROUP BY bk.{id_col})

@@ -17,12 +17,10 @@ component, built to this repo's constraints:
   (w * 1e6 as bigint), so both Spark and DuckDB sum per-word
   contributions in exact integer arithmetic — summation order cannot
   perturb the result, and the oracle hash is bit-identical.
-- **Serving is pure column expressions** — per-word md5 bucket fold
-  (the same engine-reproducible recipe as the text-embedding bridge,
-  operators/similarity.py:_sig_from_md5), an `element_at` lookup into
-  a constant-folded literal weight array, and a bigint `aggregate`
-  fold. Zero Python, zero shuffle in the hot path; the plan is a
-  projection over the scan.
+- **Serving is pure column expressions** — ``text_hash``'s hashed word
+  bucket and its exact BIGINT ``weighted_bucket_sum`` over a
+  constant-folded literal weight array. Zero Python, zero shuffle in
+  the hot path; the plan is a projection over the scan.
 
 The linear score (logit) is emitted instead of sigmoid(logit): sigmoid
 is monotone, so thresholding the logit is the same decision, and it
@@ -31,7 +29,6 @@ avoids cross-engine libm `exp` last-ulp differences in the oracle hash.
 
 from __future__ import annotations
 
-import hashlib
 from functools import lru_cache
 
 import numpy as np
@@ -42,6 +39,7 @@ from pii_redactor_spark.functions import text_hash
 from pii_redactor_spark.kernels.corpora import SEED_CORPORA
 
 CLF_DIM = 512          # hash buckets
+QC_PREFIX = "qc:"      # md5 domain of the lower-cased word features
 _SCALE = 1_000_000     # 6-decimal quantization of weights
 _ITERS = 5000
 _LR = 2.0
@@ -93,8 +91,7 @@ def _junk_docs() -> list[str]:
     for s in range(6):
         toks = []
         for i in range(40):
-            h = int(hashlib.md5(f"junk:{s}:{i}".encode()).hexdigest()[:12],
-                    16)
+            h = text_hash.md5_int_py(f"junk:{s}:{i}", 12)
             ln = 2 + h % 6
             toks.append("".join(
                 _JUNK_SYMBOLS[(h >> (3 * j + 4)) % len(_JUNK_SYMBOLS)]
@@ -110,8 +107,7 @@ def _junk_docs() -> list[str]:
     for s in range(4):
         toks = []
         for i in range(35):
-            h = int(hashlib.md5(f"mash:{s}:{i}".encode()).hexdigest()[:12],
-                    16)
+            h = text_hash.md5_int_py(f"mash:{s}:{i}", 12)
             ln = 3 + h % 5
             toks.append("".join(
                 "qwertyuiopasdfghjklzxcvbnm"[(h >> (2 * j + 3)) % 26]
@@ -124,8 +120,7 @@ def _junk_docs() -> list[str]:
         alph = ("!@#$%^&*()[]{}<>/?|0123456789" if s % 2
                 else "qwertyuiopasdfghjklzxcvbnm")
         for i in range(40):
-            h = int(hashlib.md5(f"xjunk:{s}:{i}".encode()).hexdigest()[:12],
-                    16)
+            h = text_hash.md5_int_py(f"xjunk:{s}:{i}", 12)
             ln = 2 + h % 7
             toks.append("".join(
                 alph[(h >> (2 * j + 3)) % len(alph)] for j in range(ln)))
@@ -138,10 +133,8 @@ def _junk_docs() -> list[str]:
 # ---------------------------------------------------------------------------
 
 def bucket_of(word: str, dim: int = CLF_DIM) -> int:
-    """First-8-hex-chars md5 fold — the same engine-reproducible recipe
-    as the text-embedding bridge (similarity.py:_sig_from_md5)."""
-    h = hashlib.md5(("qc:" + word.lower()).encode("utf-8")).hexdigest()
-    return int(h[:8], 16) % dim
+    """Python twin of ``word_bucket``, for this model's and DSIR's fits."""
+    return text_hash.hashed_bucket_py(word.lower(), QC_PREFIX, dim)
 
 
 def _features(doc: str, dim: int = CLF_DIM) -> np.ndarray:
@@ -198,16 +191,36 @@ def clf_weights() -> tuple[np.ndarray, int]:
 # Spark serving (expression-only)
 # ---------------------------------------------------------------------------
 
-def _bucket_expr(word: Column, dim: int) -> Column:
-    h = text_hash.md5_int(F.concat(F.lit("qc:"), F.lower(word)), 8)
-    return F.pmod(h, F.lit(dim)).cast("int")
+def word_bucket(word: Column, dim: int) -> Column:
+    """The feature bucket of one word (DSIR scores in the same space)."""
+    return text_hash.hashed_bucket(F.lower(word), QC_PREFIX, dim)
 
 
-def _bucket_sql(w: str, dim: int) -> str:
-    """DuckDB twin of ``_bucket_expr`` — the one copy every oracle that
-    buckets words uses (a stale duplicate silently breaks parity)."""
-    h = text_hash.md5_int_sql(f"'qc:' || lower({w})", 8)
-    return f"CAST({h} % {dim} AS INT)"
+def word_buckets(text: Column, dim: int) -> Column:
+    """array<int>: ``word_bucket`` of every word of ``text``."""
+    return F.transform(text_hash.words(text), lambda w: word_bucket(w, dim))
+
+
+def word_bucket_rows_sql(src: str, keys: str, ws: str, dim: int) -> str:
+    """DuckDB twin of ``word_bucket``: a (``keys``, bucket) row per word
+    of the list column ``ws`` of ``src``."""
+    return text_hash.bucket_rows_sql(
+        src, keys, f"list_transform({ws}, w -> lower(w))", QC_PREFIX, dim)
+
+
+def scored_words_sql(table: str, text_col: str, id_col: str, wt: str,
+                     dim: int) -> str:
+    """(id, n_words, s): the DuckDB twin of ``weighted_bucket_sum`` over
+    ``word_buckets``, weights in ``wt``, a (bucket, w) relation."""
+    words = text_hash.WORDS_SQL.format(t=text_col)
+    return f"""
+WITH base AS (SELECT {id_col}, {words} AS ws FROM {table}),
+contrib AS (
+  SELECT p.{id_col}, SUM(wt.w) AS s
+  FROM ({word_bucket_rows_sql('base', id_col, 'ws', dim)}) p
+  JOIN {wt} wt USING (bucket) GROUP BY p.{id_col})
+SELECT b.{id_col}, len(b.ws) AS n_words, COALESCE(c.s, 0) AS s
+FROM base b LEFT JOIN contrib c USING ({id_col})"""
 
 
 def quality_clf_columns(docs: DataFrame, text_col: str = "text",
@@ -224,26 +237,15 @@ def quality_clf_columns(docs: DataFrame, text_col: str = "text",
     (q_datacard) stay ONE projection instead of a corpus-sized
     self-join."""
     w_scaled, b_scaled = weights if weights is not None else clf_weights()
-    dim = len(w_scaled)
     bias = b_scaled / _SCALE
-    w_lit = F.expr(
-        "array({})".format(",".join(f"{int(v)}L" for v in w_scaled)))
-    pre = (
-        docs
-        .withColumn("_words", text_hash.words(F.col(text_col)))
-        .withColumn("_buckets", F.transform(
-            F.col("_words"), lambda w: _bucket_expr(w, dim)))
-        .withColumn("_n", F.size("_buckets"))
-        .withColumn("_s", F.aggregate(
-            F.col("_buckets"), F.lit(0).cast("bigint"),
-            lambda acc, bk: acc + F.element_at(w_lit, bk + 1)))
-    )
     logit = F.when(
         F.col("_n") > 0,
         F.col("_s").cast("double") / F.lit(float(_SCALE))
         / F.col("_n").cast("double") + F.lit(bias),
     ).otherwise(F.lit(bias))
-    return pre.select(
+    scored = text_hash.weighted_bucket_sum(
+        docs, word_buckets(F.col(text_col), len(w_scaled)), w_scaled)
+    return scored.select(
         id_col,
         *extra_cols,
         F.col("_n").alias("n_words"),
@@ -278,9 +280,7 @@ def nb_bucket_counts(docs: DataFrame, label_col: str,
     Explode hygiene per CLAUDE.md: explode_outer + null-filter."""
     per_word = (
         docs
-        .withColumn("_words", text_hash.words(F.col(text_col)))
-        .withColumn("_buckets", F.transform(
-            F.col("_words"), lambda w: _bucket_expr(w, dim)))
+        .withColumn("_buckets", word_buckets(F.col(text_col), dim))
         .select(F.col(label_col).alias("_y"),
                 F.explode_outer("_buckets").alias("bucket"))
         .where(F.col("bucket").isNotNull())
@@ -367,27 +367,18 @@ def quality_clf_oracle_sql(table: str = "documents",
     join a VALUES weight table, exact BIGINT sum per doc, one double
     division chain, round 6 (+0.0 canonicalizes -0.0)."""
     w_scaled, b_scaled = clf_weights()
-    dim = len(w_scaled)
     bias = b_scaled / _SCALE
-    words = text_hash.WORDS_SQL.format(t=text_col)
     wt_rows = ", ".join(f"({i}, {int(v)})" for i, v in enumerate(w_scaled))
+    sums = scored_words_sql(table, text_col, id_col, "wt", len(w_scaled))
     return f"""
-WITH wt(bucket, wgt) AS (VALUES {wt_rows}),
-base AS (
-  SELECT {id_col}, {words} AS ws FROM {table}),
-perword AS (
-  SELECT {id_col}, {_bucket_sql('w', dim)} AS bucket
-  FROM (SELECT {id_col}, unnest(ws) AS w FROM base)),
-contrib AS (
-  SELECT p.{id_col}, SUM(wt.wgt) AS s
-  FROM perword p JOIN wt USING (bucket) GROUP BY p.{id_col}),
+WITH wt(bucket, w) AS (VALUES {wt_rows}),
 scored AS (
-  SELECT b.{id_col}, len(b.ws) AS n_words,
-         CASE WHEN len(b.ws) > 0 THEN
-           CAST(c.s AS DOUBLE) / {float(_SCALE)} /
-           CAST(len(b.ws) AS DOUBLE) + {bias!r}
+  SELECT {id_col}, n_words,
+         CASE WHEN n_words > 0 THEN
+           CAST(s AS DOUBLE) / {float(_SCALE)} /
+           CAST(n_words AS DOUBLE) + {bias!r}
          ELSE {bias!r} END AS logit
-  FROM base b LEFT JOIN contrib c USING ({id_col}))
+  FROM ({sums}))
 SELECT {id_col}, n_words,
        round(logit, 6) + 0.0 AS q_logit,
        (round(logit, 6) + 0.0) >= {threshold!r} AS clf_keep
@@ -405,9 +396,7 @@ def nb_counts_oracle_sql(label_sql: str, table: str = "documents",
     return f"""
 WITH base AS (
   SELECT ({label_sql}) AS y, {words} AS ws FROM {table}),
-perword AS (
-  SELECT y, {_bucket_sql('w', dim)} AS bucket
-  FROM (SELECT y, unnest(ws) AS w FROM base))
+perword AS ({word_bucket_rows_sql('base', 'y', 'ws', dim)})
 SELECT bucket,
        COUNT(*) FILTER (WHERE y) AS n_pos,
        COUNT(*) FILTER (WHERE NOT y) AS n_neg

@@ -75,10 +75,7 @@ def shingles_expr(words: Column, k: int = SHINGLE_K) -> Column:
 def minhash_masks(h: int = MINHASH_H) -> tuple[int, ...]:
     """60-bit XOR masks, mask_i = first 15 hex chars of md5('minhash:i').
     Pure function — reproducible in any engine."""
-    return tuple(
-        int(hashlib.md5(f"minhash:{i}".encode()).hexdigest()[:15], 16)
-        for i in range(h)
-    )
+    return tuple(text_hash.md5_int_py(f"minhash:{i}", 15) for i in range(h))
 
 
 def make_minhash_udf(h: int = MINHASH_H, bands: int = LSH_BANDS,

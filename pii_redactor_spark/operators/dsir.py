@@ -52,7 +52,8 @@ from pyspark.sql import functions as F
 
 from pii_redactor_spark.functions import text_hash
 from pii_redactor_spark.kernels.quality_clf import (
-    CLF_DIM, _bucket_expr, _bucket_sql, _positive_docs, bucket_of)
+    CLF_DIM, _positive_docs, bucket_of, scored_words_sql, word_bucket,
+    word_bucket_rows_sql, word_buckets)
 from pii_redactor_spark.operators.cache import registered_persist
 
 DSIR_DIM = CLF_DIM       # share the hashed feature space (512 buckets)
@@ -67,18 +68,20 @@ def _qlog(num: float, den: float) -> int:
     return int(math.floor(math.log(num / den) * _SCALE + 0.5))
 
 
+def _lm_logprobs(counts: dict[int, int], dim: int) -> list[int]:
+    """Quantized Lidstone-smoothed log-probs of per-bucket counts."""
+    den = float(sum(counts.values())) + DSIR_ALPHA * dim
+    return [_qlog(float(counts.get(b, 0)) + DSIR_ALPHA, den)
+            for b in range(dim)]
+
+
 @lru_cache(maxsize=1)
 def target_logprobs(dim: int = DSIR_DIM) -> tuple[int, ...]:
     """Quantized BIGINT log-probs of the target LM (seed corpora) —
     the shipped model artifact."""
-    counts: Counter[int] = Counter()
-    for doc in _positive_docs():
-        for w in doc.split():
-            counts[bucket_of(w, dim)] += 1
-    total = sum(counts.values())
-    den = float(total) + DSIR_ALPHA * dim
-    return tuple(
-        _qlog(float(counts.get(b, 0)) + DSIR_ALPHA, den) for b in range(dim))
+    return tuple(_lm_logprobs(Counter(
+        bucket_of(w, dim) for doc in _positive_docs() for w in doc.split()),
+        dim))
 
 
 def raw_logprobs(docs: DataFrame, text_col: str = "text",
@@ -94,15 +97,12 @@ def raw_logprobs(docs: DataFrame, text_col: str = "text",
         .select(F.explode_outer(text_hash.words(F.col(text_col)))
                 .alias("w"))
         .where(F.col("w").isNotNull())
-        .select(_bucket_expr(F.col("w"), dim).alias("bucket"))
+        .select(word_bucket(F.col("w"), dim).alias("bucket"))
         .groupBy("bucket").count()
         .collect()
     )
     counts = {int(r["bucket"]): int(r["count"]) for r in rows}
-    total = sum(counts.values())
-    den = float(total) + DSIR_ALPHA * dim
-    return [_qlog(float(counts.get(b, 0)) + DSIR_ALPHA, den)
-            for b in range(dim)], obs.get["n"]
+    return _lm_logprobs(counts, dim), obs.get["n"]
 
 
 def _scored_df(docs: DataFrame, text_col: str, id_col: str,
@@ -115,26 +115,12 @@ def _scored_df(docs: DataFrame, text_col: str, id_col: str,
     lt = target_logprobs(dim)
     lq, n = raw_logprobs(docs, text_col, dim)
     lr = [lt[b] - lq[b] for b in range(dim)]
-    lr_lit = F.expr("array({})".format(",".join(f"{v}L" for v in lr)))
+    # NULL text scores 0 (the oracle's COALESCE(c.s, 0)) and gets a real
+    # `selected` boolean
     return registered_persist(
-        docs
-        .withColumn("_words", text_hash.words(F.col(text_col)))
-        .withColumn("_buckets", F.transform(
-            F.col("_words"), lambda w: _bucket_expr(w, dim)))
-        # coalesce: NULL text folds to NULL, but the oracle's
-        # COALESCE(c.s, 0) scores such a doc 0 and returns a real
-        # `selected` boolean — mirror it (round-3 ADVICE)
-        .withColumn("_s", F.coalesce(
-            F.aggregate(
-                F.col("_buckets"), F.lit(0).cast("bigint"),
-                lambda acc, bk: acc + F.element_at(lr_lit, bk + 1)),
-            F.lit(0).cast("bigint")))
-        .select(id_col,
-                # size(NULL) is -1 under Spark's legacy default; the
-                # oracle's len(NULL) is NULL — mirror the oracle
-                F.when(F.col("_buckets").isNotNull(),
-                       F.size("_buckets")).alias("n_words"),
-                F.col("_s").alias("_s"))
+        text_hash.weighted_bucket_sum(
+            docs, word_buckets(F.col(text_col), dim), lr)
+        .select(id_col, F.col("_n").alias("n_words"), "_s")
     ), n
 
 
@@ -189,9 +175,7 @@ def _scored_cte(table: str, text_col: str, id_col: str, dim: int) -> str:
 WITH lt(bucket, lp) AS (VALUES {lt_rows}),
 base AS (
   SELECT {id_col}, {words} AS ws FROM {table}),
-perword AS (
-  SELECT {id_col}, {_bucket_sql('w', dim)} AS bucket
-  FROM (SELECT {id_col}, unnest(ws) AS w FROM base)),
+perword AS ({word_bucket_rows_sql('base', id_col, 'ws', dim)}),
 rawc AS (
   SELECT bucket, COUNT(*) AS c FROM perword GROUP BY bucket),
 tot AS (SELECT COUNT(*) AS t FROM perword),
@@ -201,14 +185,8 @@ lq AS (
                        (CAST(t AS DOUBLE) + {DSIR_ALPHA * dim!r}))
                     * {_SCALE} + 0.5) AS BIGINT) AS lp
   FROM rawc, tot),
-contrib AS (
-  SELECT p.{id_col}, SUM(lt.lp - lq.lp) AS s
-  FROM perword p JOIN lt USING (bucket) JOIN lq USING (bucket)
-  GROUP BY p.{id_col}),
-scored AS (
-  SELECT b.{id_col}, len(b.ws) AS n_words,
-         COALESCE(c.s, 0) AS s
-  FROM base b LEFT JOIN contrib c USING ({id_col}))"""
+lr AS (SELECT bucket, lt.lp - lq.lp AS w FROM lt JOIN lq USING (bucket)),
+scored AS ({scored_words_sql(table, text_col, id_col, 'lr', dim)})"""
 
 
 def dsir_oracle_sql(table: str = "documents", text_col: str = "text",

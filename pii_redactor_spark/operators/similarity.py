@@ -28,7 +28,6 @@ fold in the same order with the same width.
 
 from __future__ import annotations
 
-import hashlib
 from functools import lru_cache
 from typing import Iterator, Tuple
 
@@ -53,17 +52,11 @@ N_QUERIES = 5  # query set = lowest N vec_ids
 @lru_cache(maxsize=None)
 def hyperplane_weights(planes: int = ANN_PLANES,
                        dim: int = EMB_DIM) -> tuple[tuple[int, ...], ...]:
-    """Deterministic ±1 hyperplanes: weight[p][d] = +1 iff the first hex
-    digit of md5(f'{p}:{d}') is even. Pure function of (p, d) — no RNG
-    state, reproducible in any engine or language."""
-    out = []
-    for p in range(planes):
-        row = []
-        for d in range(dim):
-            h = hashlib.md5(f"{p}:{d}".encode()).hexdigest()
-            row.append(1 if int(h[0], 16) % 2 == 0 else -1)
-        out.append(tuple(row))
-    return tuple(out)
+    """Deterministic ±1 hyperplanes: row p is
+    ``text_hash.parity_signs(f'{p}:', dim)``. Pure function of (p, d) —
+    no RNG state, reproducible in any engine or language."""
+    return tuple(tuple(text_hash.parity_signs(f"{p}:", dim))
+                 for p in range(planes))
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -713,26 +706,14 @@ FROM ranked WHERE rnk <= {k}
 # in here; everything downstream — ANN, near-dup — is unchanged).
 # ---------------------------------------------------------------------------
 EMBED_DIM = 64
-
-
-def _sig_from_md5(m: Column, dim: int) -> Column:
-    """struct<bucket:int, sign:double> from a word's md5 hex digest:
-    bucket from the first-8-hex-chars fold, sign ±1 from digit 9 parity
-    — both reproducible in DuckDB (``text_hash``). Takes the DIGEST
-    (materialized once per word) so the hash isn't computed twice."""
-    h = text_hash.hex_int(m, 8)
-    d9 = text_hash.hex_int(m, 1, 9)
-    return F.struct(
-        F.pmod(h, F.lit(dim)).cast("int").alias("bucket"),
-        F.when(F.pmod(d9, F.lit(2)) == 0, F.lit(1.0))
-        .otherwise(F.lit(-1.0)).alias("sign"),
-    )
+EB_PREFIX = "eb:"      # md5 domain of the embedder's word features
+PROBE_PREFIX = "pr:"   # md5 domain of the summary's ±1 probe
 
 
 def make_bow_embed_udf(dim: int = EMBED_DIM):
     """Vectorized bucket-fold for the signed-hash BoW projection: the
-    per-word (bucket, sign) pairs are scattered into (docs x dim)
-    accumulators with one ``np.bincount`` per Arrow batch.
+    per-word (bucket, sign) pairs are summed into (docs x dim)
+    accumulators by ``arrow_lists.signed_dense``.
 
     Round-3 measurement (sf0.1 quiet window, bit-identical outputs):
     expression fold 1.43 s vs THIS 0.56 s. The expression fold allocates
@@ -755,10 +736,7 @@ def make_bow_embed_udf(dim: int = EMBED_DIM):
         for buckets, signs in batches:
             flatb, lens = arrow_lists.ragged(buckets, np.int64)
             flats, _ = arrow_lists.ragged(signs, np.float64)
-            n = len(lens)
-            doc_idx = np.repeat(np.arange(n), lens)
-            acc = np.bincount(doc_idx * dim + flatb, weights=flats,
-                              minlength=n * dim).reshape(n, dim)
+            acc = arrow_lists.signed_dense(flatb, flats, lens, dim)
             norms = np.sqrt((acc * acc).sum(axis=1))
             safe = np.where(norms[:, None] > 0, norms[:, None], 1.0)
             emb = np.where(norms[:, None] > 0, acc / safe, acc)
@@ -773,21 +751,18 @@ def text_embeddings(docs: DataFrame, text_col: str = "text",
                     id_col: str = "doc_id",
                     dim: int = EMBED_DIM) -> DataFrame:
     """(id, emb: array<double>[dim], emb_norm) — L2-normalized
-    signed-hash BoW projection. Per-word (bucket, sign) is materialized
-    once JVM-side (nested HOFs re-evaluate unbound subtrees per
-    element); the dense fold runs through ``make_bow_embed_udf``. Zero
+    signed-hash BoW projection. Per-word (bucket, sign)
+    (``text_hash.signed_buckets``) is materialized once JVM-side (nested
+    HOFs re-evaluate unbound subtrees per element); the dense fold runs
+    through ``make_bow_embed_udf``. Zero
     shuffle; all counts are small integers in doubles, so every engine
     sums them exactly. NULL text reads as '' (the zero vector, norm 0),
     as in the oracle, whose empty fold COALESCEs to 0."""
     t = F.coalesce(F.col(text_col), F.lit(""))
     pre = (
         docs
-        .withColumn("_words", text_hash.words(t))
-        .withColumn("_md5", F.transform(
-            F.col("_words"),
-            lambda w: F.md5(F.concat(F.lit("eb:"), w))))
-        .withColumn("_ws", F.transform(F.col("_md5"),
-                                       lambda m: _sig_from_md5(m, dim)))
+        .withColumn("_ws", text_hash.signed_buckets(
+            text_hash.words(t), EB_PREFIX, dim))
         .withColumn("_b", F.transform(F.col("_ws"), lambda s: s["bucket"]))
         .withColumn("_s", F.transform(F.col("_ws"), lambda s: s["sign"]))
         .withColumn("_e", make_bow_embed_udf(dim)(F.col("_b"), F.col("_s")))
@@ -805,8 +780,7 @@ def text_embedding_summary(docs: DataFrame, text_col: str = "text",
     md5-derived ±1 probe vector — three values that pin the whole
     vector construction."""
     probe = F.expr("array({})".format(", ".join(
-        f"{1.0 if int(hashlib.md5(f'pr:{i}'.encode()).hexdigest()[0], 16) % 2 == 0 else -1.0}D"
-        for i in range(dim))))
+        f"{float(v)}D" for v in text_hash.parity_signs(PROBE_PREFIX, dim))))
     emb = text_embeddings(docs, text_col, id_col, dim)
     return (
         emb
@@ -828,18 +802,12 @@ def text_embed_oracle_sql(table: str = "documents",
                           id_col: str = "doc_id",
                           dim: int = EMBED_DIM) -> str:
     words = text_hash.WORDS_SQL.format(t=text_col)
-    fold = text_hash.md5_int_sql("'eb:' || w", 8)
-    digit9 = text_hash.md5_int_sql("'eb:' || w", 1, 9)
-    sign = f"CASE WHEN {digit9} % 2 = 0 THEN 1.0 ELSE -1.0 END"
     probe = ", ".join(
-        f"{1.0 if int(hashlib.md5(f'pr:{i}'.encode()).hexdigest()[0], 16) % 2 == 0 else -1.0}"
-        for i in range(dim))
+        f"{float(v)}" for v in text_hash.parity_signs(PROBE_PREFIX, dim))
     return f"""
 WITH base AS (
   SELECT {id_col},
-         list_transform({words},
-           w -> struct_pack(bucket := CAST({fold} % {dim} AS INT),
-                            sign := {sign})) AS ws
+         {text_hash.signed_buckets_sql(words, EB_PREFIX, dim)} AS ws
   FROM {table}),
 vecs AS (
   SELECT {id_col},

@@ -37,6 +37,8 @@ ADVERSARIAL_QUERIES = [
     "q_simhash", "q_langid", "q_mlp_embed", "q_text_embed", "q_fingerprint",
     "q_dedup_minhash_bands", "q_dedup_against", "q_dedup_against_verified",
     "q_neardup_stream_twin", "q_media_meta", "q_media_resize",
+    "q_quality_clf", "q_quality_tiers", "q_quality_nb_counts", "q_dsir",
+    "q_dsir_gumbel",
 ]
 SF_KEYED = ["q_bpe", "q_pack_bpe", "q_worstk_ppl"]
 

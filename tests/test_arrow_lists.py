@@ -12,7 +12,7 @@ import pyarrow as pa
 import pytest
 
 from pii_redactor_spark.functions.arrow_lists import (
-    matrix, ragged, segments)
+    matrix, ragged, segments, signed_dense)
 
 PKG = Path(__file__).resolve().parent.parent / "pii_redactor_spark"
 
@@ -30,6 +30,17 @@ def test_ragged_lengths_and_null_element():
     with pytest.raises(ValueError):
         ragged(pa.array([[1, None, 3]], type=pa.list_(pa.int64())),
                np.int64)
+
+
+def test_signed_dense_sums_signs_per_bucket():
+    buckets = pa.array([[1, 1, 3], None, [], [0]], type=pa.list_(pa.int32()))
+    signs = pa.array([[1.0, 1.0, -1.0], None, [], [-1.0]])
+    flatb, lens = ragged(buckets, np.int64)
+    flats, _ = ragged(signs, np.float64)
+    x = signed_dense(flatb, flats, lens, 4)
+    assert x.dtype == np.int64
+    assert x.tolist() == [[0, 2, 0, -1], [0] * 4, [0] * 4, [-1, 0, 0, 0]]
+    assert signed_dense(flatb[:0], flats[:0], lens[:0], 4).shape == (0, 4)
 
 
 def test_matrix_reshapes_and_rejects_null_or_ragged_rows():

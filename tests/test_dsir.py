@@ -83,11 +83,11 @@ def test_scoring_plan_has_no_window_or_shuffle(docs):
 def test_raw_lm_fit_is_single_bounded_aggregate(docs):
     from pyspark.sql import functions as F
     from pii_redactor_spark.functions.text_hash import words
-    from pii_redactor_spark.kernels.quality_clf import _bucket_expr
+    from pii_redactor_spark.kernels.quality_clf import word_bucket
     agg = (
         docs.select(F.explode_outer(words(F.col("text"))).alias("w"))
         .where(F.col("w").isNotNull())
-        .select(_bucket_expr(F.col("w"), dsir.DSIR_DIM).alias("bucket"))
+        .select(word_bucket(F.col("w"), dsir.DSIR_DIM).alias("bucket"))
         .groupBy("bucket").count()
     )
     plan = agg._jdf.queryExecution().executedPlan().toString()

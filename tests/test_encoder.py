@@ -52,13 +52,14 @@ def test_relu_actually_fires(docs):
     pre-activations go negative (so relu clips them) — if not, the MLP
     would collapse to one linear projection."""
     w1, b1, w2 = encoder.mlp_weights()
-    from pii_redactor_spark.functions.text_hash import words
+    from pii_redactor_spark.functions.text_hash import (
+        signed_bucket_py, words)
     rows = docs.select(words(F.col("text")).alias("ws")).collect()
     clipped = total = 0
     for r in rows:
         x = np.zeros(len(w1), dtype=np.int64)
         for w in r["ws"]:
-            bkt, sign = encoder.bow_bucket(w)
+            bkt, sign = signed_bucket_py(w, encoder.ML_PREFIX, len(w1))
             x[bkt] += sign
         pre = x @ w1 + b1
         clipped += int((pre < 0).sum())

@@ -363,8 +363,10 @@ def test_badword_stats_is_pure_projection(spark, docs):
 def test_plans_md_fingerprints_match_fresh_plans(spark):
     """PLANS.md's fingerprint lines equal fresh ones for a fixed subset
     of queries (a scan filter, a broadcast anti-join, an Arrow kernel
-    pass, a regex-heavy projection, a shuffle), planned with the
-    session settings ``scripts/dump_plans.py`` uses."""
+    pass, a regex-heavy projection, a shuffle, and the hashed-feature
+    kernels: the build's DSIR select, the quality classifier and the
+    BoW embedder), planned with the session settings
+    ``scripts/dump_plans.py`` uses."""
     import re
     import sys
     from pathlib import Path
@@ -377,7 +379,8 @@ def test_plans_md_fingerprints_match_fresh_plans(spark):
 
     md = (root / "PLANS.md").read_text()
     names = ("q_lang_filter", "q_fewshot_anti", "q_langid",
-             "q_token_count", "q_lang_stats")
+             "q_token_count", "q_lang_stats", "q_dsir", "q_quality_clf",
+             "q_text_embed")
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(DEFAULT_SHUFFLE_PARTITIONS))

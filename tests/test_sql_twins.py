@@ -150,6 +150,26 @@ def test_rules_match_twin_at_fitted_thresholds(spark, sf_docs, docs, oracle):
     assert keep == {True, False}
 
 
+def test_gopher_gate_reads_null_text_as_empty(docs, oracle):
+    """Over the adversarial rows: keep is never NULL, Spark equals the
+    SQL twin, every drop names a reason, and a NULL text gets the
+    verdict and reasons of '' (before, its NULL word count fired
+    neither too_few_words nor dup_lines_high)."""
+    sql, out = _quality(QualityThresholds())(docs)
+    got, want = oracle(sql, out, docs=docs)
+    assert got == want
+    cols = out.columns
+    rows = {r[0]: dict(zip(cols, r)) for r in got}
+    assert all(r["keep"] is not None for r in rows.values())
+    assert all(r["reasons"] for r in rows.values() if not r["keep"])
+    null, empty = rows[90001], rows[90002]
+    assert null["keep"] is empty["keep"] is False
+    assert null["reasons"] == empty["reasons"]
+    assert {"too_few_words", "dup_lines_high"} <= set(null["reasons"])
+    assert {k: v for k, v in null.items() if k != "doc_id"} == \
+        {k: v for k, v in empty.items() if k != "doc_id"}
+
+
 def test_url_rules_match_sql_twin(spark, with_adversarial, oracle):
     urls = with_adversarial(spark.createDataFrame(
         URLS, "doc_id long, text string")).withColumnRenamed("text", "url")
